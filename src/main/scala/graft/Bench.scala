@@ -233,7 +233,12 @@ object Bench {
       if (outliers.isEmpty) firstPass else {
         val redone = outliers.map { case (n, first) =>
           val t0 = System.nanoTime()
-          val ok = try { run(n); true } catch { case _: Throwable => false }
+          val ok = try { run(n); true } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] retry of $n failed: ${e.getMessage}")
+              errors += n
+              false
+          }
           val retry = (System.nanoTime() - t0) / 1e9
           if (ok) retimed(n) = (first, retry)
           n -> (if (ok) math.min(first, retry) else first)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.functions.{coalesce, typedlit}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -289,8 +290,11 @@ object MinHashQ {
 }
 
 object LangScoresQ {
+  /** Null text scores zero everywhere, like the chain's left join + fill(0). */
   def apply(normText: Column, profiles: Seq[(String, String, Long)],
             langs: Seq[String]): Column =
-    GraftSqlBridge.column(
-      LangTriScores(GraftSqlBridge.expression(normText), profiles, langs))
+    coalesce(
+      GraftSqlBridge.column(
+        LangTriScores(GraftSqlBridge.expression(normText), profiles, langs)),
+      typedlit(Seq.fill(langs.size)(0L)))
 }

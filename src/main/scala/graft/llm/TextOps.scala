@@ -866,7 +866,7 @@ object TextOps {
       graft.functions.LangScoresQ(normText(col(textCol)), TrigramProfiles, langs)
         .as("__sc"))
     val withScores = scored.select(col(id) +: langs.zipWithIndex.map {
-      case (l, i) => coalesce(element_at(col("__sc"), i + 1), lit(0L)).as(s"s_$l")
+      case (l, i) => element_at(col("__sc"), i + 1).as(s"s_$l")
     }: _*)
     val best = langs.map(l => col(s"s_$l")).reduce((a, b) => greatest(a, b))
     val pred = langs.foldRight(lit("und"): Column) { case (l, acc) =>

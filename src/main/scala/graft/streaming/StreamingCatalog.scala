@@ -39,26 +39,13 @@ object StreamingCatalog extends Catalog {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** events.parquet has shipped `ts` two ways across testdata generations:
-    * TIMESTAMP(NANOS) (ns-longs under nanosAsLong) and plain timestamp[us]
-    * (TIMESTAMP_NTZ). The base declared schema; [[replayStream]] swaps the
-    * `ts` field to whatever the footer actually carries.
-    */
-  private val rawSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** The raw event replay stream: watch the testdata dir filtered down to
     * the events table file (the file stream source wants a directory).
     * Streams must declare schemas up front, so peek at the batch reader's
     * footer-derived `ts` type (driver-side metadata read, no data scan) and
-    * declare the matching encoding; both generations normalize to
-    * session-local TimestampType exactly like Tables.events (the session
-    * zone is pinned to UTC, so the NTZ cast is a wall-clock no-op).
+    * declare [[Streams.eventSchema]] with that `ts` encoding; both
+    * generations then normalize like the batch read
+    * ([[graft.engine.Tables.normalizeEventTs]]).
     */
   private def replayStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -82,50 +69,16 @@ object StreamingCatalog extends Catalog {
         s"no events.parquet under $d after 10 s — cannot declare the " +
           "stream's ts encoding from its footer; refusing to guess"))
     }
-    val raw = s.readStream
-      .schema(StructType(rawSchema.map(f =>
+    graft.engine.Tables.normalizeEventTs(s.readStream
+      .schema(StructType(Streams.eventSchema.map(f =>
         if (f.name == "ts") f.copy(dataType = tsType) else f)))
       .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-    tsType match {
-      // integer div: a double round-trip would lose ns precision above 2^53
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _                => raw
-    }
+      .parquet(d))
   }
 
-  /** awaitTermination returns false on timeout — in that case the sink is
-    * partial and must never reach the verifier as if complete.
-    */
-  private def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery,
-                          timeoutMs: Long): Unit =
-    if (!q.awaitTermination(timeoutMs)) {
-      q.stop()
-      throw new IllegalStateException(s"stream replay timed out after $timeoutMs ms")
-    }
-
-  def replayEnriched(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
-    val base = graft.engine.TempDirs.create("graft-replay")
-    val q = EnrichCatalog.enrichedFrame(replayStream(s, d))
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    // per-batch profile to stderr: separates micro-batch cost (addBatch =
-    // the enrich+sink write) from fixed query overhead, so a slow replay is
-    // attributable from the log instead of re-instrumented (the r3 bench's
-    // 15 s replay reading proved to be machine variance — r4 re-measure ran
-    // the same code at 2 s — and this keeps the next drift diagnosable)
-    q.recentProgress.foreach { p =>
-      System.err.println(s"[replay] batch ${p.batchId}: rows=${p.numInputRows} " +
-        s"durationMs=${p.durationMs}")
-    }
-    s.read.parquet(s"$base/sink").orderBy("event_id")
-  }
+  def replayEnriched(s: SparkSession, d: String): DataFrame =
+    Replay.toParquet(EnrichCatalog.enrichedFrame(replayStream(s, d)),
+      graft.engine.TempDirs.create("graft-replay")).orderBy("event_id")
 
   /** documents.parquet schema for the doc-stream replay (file streams must
     * declare schemas).
@@ -144,10 +97,9 @@ object StreamingCatalog extends Catalog {
     * low-quality docs before they ever land in the corpus. Oracled with
     * the same quality formula as the batch curation gate.
     */
-  def replayDocQuality(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
-    val base = graft.engine.TempDirs.create("graft-doc-quality")
+  def replayDocQuality(s: SparkSession, d: String): DataFrame = {
     val text = col("text")
-    val q = s.readStream.schema(docSchema)
+    val scored = s.readStream.schema(docSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
       .select(col("doc_id"),
@@ -155,14 +107,8 @@ object StreamingCatalog extends Catalog {
         graft.llm.TextOps.qualityScore(text).as("quality_score"))
       .withColumn("passes_gate",
         col("n_tokens") >= 20 && col("quality_score") >= 0.5)
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    s.read.parquet(s"$base/sink").orderBy("doc_id")
+    Replay.toParquet(scored, graft.engine.TempDirs.create("graft-doc-quality"))
+      .orderBy("doc_id")
   }
 
   private val embSchema = StructType(Seq(
@@ -180,10 +126,8 @@ object StreamingCatalog extends Catalog {
     * separates fit (batch, control-plane) from encode (stream, data-plane).
     */
   def replayIvfPqEncode(s: SparkSession, d: String,
-                        model: graft.llm.Similarity.IvfPqModel,
-                        timeoutMs: Long = 300000): DataFrame = {
-    val base = graft.engine.TempDirs.create("graft-ivfpq-stream")
-    val q = s.readStream.schema(embSchema)
+                        model: graft.llm.Similarity.IvfPqModel): DataFrame = {
+    val encoded = s.readStream.schema(embSchema)
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(d)
       .transform(model.encode)
@@ -192,14 +136,8 @@ object StreamingCatalog extends Catalog {
       // array-typed artifact path is spec-tested in PipelineOpsSpec
       .select(col("vec_id"), col("cell"),
         array_join(col("codes").cast("array<string>"), ",").as("codes"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    s.read.parquet(s"$base/sink").orderBy("vec_id")
+    Replay.toParquet(encoded, graft.engine.TempDirs.create("graft-ivfpq-stream"))
+      .orderBy("vec_id")
   }
 
   /** The ANN index as a STREAM-MAINTAINED serving artifact — the other
@@ -218,35 +156,28 @@ object StreamingCatalog extends Catalog {
     * (embeddings pre-split, maxFilesPerTrigger=1).
     */
   def replayIvfPqIndex(s: SparkSession, d: String,
-                       model: graft.llm.Similarity.IvfPqModel,
-                       timeoutMs: Long = 300000): DataFrame = {
+                       model: graft.llm.Similarity.IvfPqModel): DataFrame = {
     val base = graft.engine.TempDirs.create("graft-ivfpq-index")
     val src = graft.engine.FixtureDirs("embeddings-split4", d) { tmp =>
       graft.engine.Tables(s, d).embeddings.repartition(4)
         .write.mode("overwrite").parquet(s"$tmp/emb")
     }
-    val q = s.readStream.schema(embSchema)
+    val emb = s.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$src/emb")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val enc = model.encode(batch)
-          .select(col("vec_id"), col("cell"),
-            array_join(col("codes").cast("array<string>"), ",").as("codes"))
-          .withColumn("batch_id", lit(id))
-        val merged = readLatest(base) match {
-          case None      => enc
-          case Some(dir) => graft.ops.Cdc.mergeNewest(
-            s.read.parquet(dir), enc, "vec_id", "batch_id", "cell")
-        }
-        merged.write.mode("overwrite").parquet(s"$base/v$id")
-        commitLatest(base, s"v$id")
-        ()
+    Replay.await(Replay.eachBatch(emb, s"$base/ckpt") { (batch, id) =>
+      val enc = model.encode(batch)
+        .select(col("vec_id"), col("cell"),
+          array_join(col("codes").cast("array<string>"), ",").as("codes"))
+        .withColumn("batch_id", lit(id))
+      val merged = readLatest(base) match {
+        case None      => enc
+        case Some(dir) => graft.ops.Cdc.mergeNewest(
+          s.read.parquet(dir), enc, "vec_id", "batch_id", "cell")
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
+      merged.write.mode("overwrite").parquet(s"$base/v$id")
+      commitLatest(base, s"v$id")
+    })
     s.read.parquet(readLatest(base).getOrElse(sys.error("no batch ran")))
       .select(col("vec_id"), col("cell"), col("codes"))
       .orderBy("vec_id")
@@ -291,9 +222,8 @@ object StreamingCatalog extends Catalog {
     * (ts, event_id) maximum regardless of how rows landed in batches —
     * which is exactly the batch QUALIFY row_number()=1 oracle.
     */
-  def replayUpsertSnapshot(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame =
-    upsertSnapshotRun(s, d,
-      graft.engine.TempDirs.create("graft-upsert-snap"), timeoutMs)
+  def replayUpsertSnapshot(s: SparkSession, d: String): DataFrame =
+    upsertSnapshotRun(s, d, graft.engine.TempDirs.create("graft-upsert-snap"))
 
   /** The resumable run: `base` carries the checkpoint, version dirs, and
     * `_LATEST` marker across invocations. `crashAtBatch`/`crashBeforeCommit`
@@ -302,7 +232,7 @@ object StreamingCatalog extends Catalog {
     * marker protocol exists for) or right after the commit.
     */
   private[graft] def upsertSnapshotRun(s: SparkSession, d: String, base: String,
-      timeoutMs: Long = 300000, crashAtBatch: Option[Long] = None,
+      crashAtBatch: Option[Long] = None,
       crashBeforeCommit: Boolean = false, feed: Boolean = false,
       crashBeforePublish: Boolean = false,
       maxFilesPerTrigger: Int = 2): DataFrame = {
@@ -312,57 +242,51 @@ object StreamingCatalog extends Catalog {
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-    val q = s.readStream.schema(Streams.eventSchema)
+    val ev = s.readStream.schema(Streams.eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(s"$src/ev")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = readLatest(base)
-        if (committed.contains(s"$base/v$id")) {
-          // this batch already committed its version — the crash landed
-          // between the marker commit and the CHECKPOINT commit, so the
-          // source replays it. The snapshot is done; only the feed
-          // publication may still be owed (the stage is complete by the
-          // protocol order below: marker == v_id implies the staged change
-          // set finished writing before the commit).
-          if (feed) publishChanges(base, id)
-        } else {
-          val newest = batch.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          val prev = committed.map(dir => s.read.parquet(dir))
-            .getOrElse(newest.limit(0))
-          val winners = graft.ops.Cdc.newestWinners(
-            prev, newest, "user_id", "ts", "event_id")
-          val merged = prev
-            .join(broadcast(winners.select("user_id")), Seq("user_id"), "left_anti")
-            .unionByName(winners)
-          // change-feed protocol (exactly-once publication on an
-          // at-least-once replay): stage the change set BEFORE the marker
-          // commit, publish by ONE atomic rename after it — a crash
-          // anywhere re-runs into either a full recompute (marker still at
-          // the prior version: identical rows overwrite the orphans) or
-          // the already-committed branch above (publish-if-absent)
-          if (feed)
-            graft.ops.Cdc.mergeChangeSet(prev, winners, "user_id")
-              .withColumn("version", lit(id))
-              .write.mode("overwrite").parquet(s"$base/stage/c$id")
-          merged.write.mode("overwrite").parquet(s"$base/v$id")
-          if (crashAtBatch.contains(id) && crashBeforeCommit)
-            throw new RuntimeException(s"injected crash before commit of v$id")
-          commitLatest(base, s"v$id")
-          if (crashAtBatch.contains(id) && crashBeforePublish)
-            throw new RuntimeException(
-              s"injected crash after commit, before publish of v$id")
-          if (feed) publishChanges(base, id)
-          if (crashAtBatch.contains(id) && !crashBeforeCommit && !crashBeforePublish)
-            throw new RuntimeException(s"injected crash after commit of v$id")
-        }
-        ()
+    Replay.await(Replay.eachBatch(ev, s"$base/ckpt") { (batch, id) =>
+      val committed = readLatest(base)
+      if (committed.contains(s"$base/v$id")) {
+        // this batch already committed its version — the crash landed
+        // between the marker commit and the CHECKPOINT commit, so the
+        // source replays it. The snapshot is done; only the feed
+        // publication may still be owed (the stage is complete by the
+        // protocol order below: marker == v_id implies the staged change
+        // set finished writing before the commit).
+        if (feed) publishChanges(base, id)
+      } else {
+        val newest = batch.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        val prev = committed.map(dir => s.read.parquet(dir))
+          .getOrElse(newest.limit(0))
+        val winners = graft.ops.Cdc.newestWinners(
+          prev, newest, "user_id", "ts", "event_id")
+        val merged = prev
+          .join(broadcast(winners.select("user_id")), Seq("user_id"), "left_anti")
+          .unionByName(winners)
+        // change-feed protocol (exactly-once publication on an
+        // at-least-once replay): stage the change set BEFORE the marker
+        // commit, publish by ONE atomic rename after it — a crash
+        // anywhere re-runs into either a full recompute (marker still at
+        // the prior version: identical rows overwrite the orphans) or
+        // the already-committed branch above (publish-if-absent)
+        if (feed)
+          graft.ops.Cdc.mergeChangeSet(prev, winners, "user_id")
+            .withColumn("version", lit(id))
+            .write.mode("overwrite").parquet(s"$base/stage/c$id")
+        merged.write.mode("overwrite").parquet(s"$base/v$id")
+        if (crashAtBatch.contains(id) && crashBeforeCommit)
+          throw new RuntimeException(s"injected crash before commit of v$id")
+        commitLatest(base, s"v$id")
+        if (crashAtBatch.contains(id) && crashBeforePublish)
+          throw new RuntimeException(
+            s"injected crash after commit, before publish of v$id")
+        if (feed) publishChanges(base, id)
+        if (crashAtBatch.contains(id) && !crashBeforeCommit && !crashBeforePublish)
+          throw new RuntimeException(s"injected crash after commit of v$id")
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
+    })
     s.read.parquet(readLatest(base).getOrElse(sys.error("no batch ran")))
       .select(col("user_id"), col("event_id"),
         graft.ops.Relational.tsStr(col("ts")).as("ts"),
@@ -407,8 +331,7 @@ object StreamingCatalog extends Catalog {
     * complete, in-order, and duplicate-free end to end. Crash-resume of
     * the publication protocol is fault-injected in `CdcSpec`.
     */
-  def replayChangeFeed(s: SparkSession, d: String,
-                       timeoutMs: Long = 300000): DataFrame = withStateParallelism(s, 4) {
+  def replayChangeFeed(s: SparkSession, d: String): DataFrame = withStateParallelism(s, 4) {
     // two sequential streams (upsert replay + feed tail): the replay-volume
     // shuffle/commit rationale of withStateParallelism applies twice over.
     // Gate-scale economy (round-9): 3 versions (8 files / mFPT=3 -> batches
@@ -417,7 +340,7 @@ object StreamingCatalog extends Catalog {
     // exactly as from 4, and each version costs 2 parquet writes + a merge,
     // so the feed replay is version-count-bound at fixture scale
     val base = graft.engine.TempDirs.create("graft-change-feed")
-    upsertSnapshotRun(s, d, base, timeoutMs, feed = true, maxFilesPerTrigger = 3)
+    upsertSnapshotRun(s, d, base, feed = true, maxFilesPerTrigger = 3)
     // one published directory per version: read through a one-level glob
     // so both the schema probe and the tailing stream list the c*/part
     // files (a bare dir-of-dirs path infers no schema)
@@ -426,15 +349,9 @@ object StreamingCatalog extends Catalog {
     // stat the literal glob string and log a WARN-level FileNotFoundException
     // ("feed/* does not exist") WITH a full stack trace before falling back
     // to normal glob resolution — benign and expected; the read succeeds.
-    val q = s.readStream.schema(s.read.parquet(feedDir).schema)
-      .parquet(feedDir)
-      .writeStream.format("parquet")
-      .option("path", s"$base/feedsink")
-      .option("checkpointLocation", s"$base/feedckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
+    Replay.await(Replay.appendParquet(
+      s.readStream.schema(s.read.parquet(feedDir).schema).parquet(feedDir),
+      s"$base/feedsink", s"$base/feedckpt"))
     val wv = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("version").desc)
     s.read.parquet(s"$base/feedsink")
@@ -451,23 +368,16 @@ object StreamingCatalog extends Catalog {
     * compliance pass runs in-flight at ingest instead of as a later
     * corpus rewrite. Oracled by the batch SQL.
     */
-  def replayPiiRedact(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
-    val base = graft.engine.TempDirs.create("graft-pii-stream")
+  def replayPiiRedact(s: SparkSession, d: String): DataFrame = {
     val red = graft.llm.Pii.redact(col("text"))
-    val q = graft.llm.PiiCatalog.augmented(
+    val redacted = graft.llm.PiiCatalog.augmented(
         s.readStream.schema(docSchema)
           .option("pathGlobFilter", "documents.parquet")
           .parquet(d))
       .select(col("doc_id"), length(red).cast("long").as("red_len"),
         md5(red).as("red_md5"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    s.read.parquet(s"$base/sink").orderBy("doc_id")
+    Replay.toParquet(redacted, graft.engine.TempDirs.create("graft-pii-stream"))
+      .orderBy("doc_id")
   }
 
   /** Streaming span-level decontamination — the ingest half of
@@ -482,7 +392,7 @@ object StreamingCatalog extends Catalog {
     * runs at ingest: quoted eval items are flagged with positions before
     * the doc ever lands in the corpus.
     */
-  def replaySpanDecontam(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replaySpanDecontam(s: SparkSession, d: String): DataFrame = {
     val base = graft.engine.TempDirs.create("graft-span-decontam")
     val benchSrc = graft.llm.CorpusCatalog.BenchmarkSource
     val bench = graft.engine.Tables(s, d).documents
@@ -491,21 +401,15 @@ object StreamingCatalog extends Catalog {
       graft.engine.Tables(s, d).documents.repartition(4)
         .write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    val q = s.readStream.schema(docSchema)
+    val docs = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$src/docs")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.Dedup.spanDecontam(
-            batch.filter(col("source") =!= benchSrc), bench, "doc_id", "text",
-            graft.llm.TextCatalog.DupSpanK, graft.llm.TextCatalog.WinnowW)
-          .write.mode("append").parquet(s"$base/sink")
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
+    Replay.await(Replay.eachBatch(docs, s"$base/ckpt") { (batch, _) =>
+      graft.llm.Dedup.spanDecontam(
+          batch.filter(col("source") =!= benchSrc), bench, "doc_id", "text",
+          graft.llm.TextCatalog.DupSpanK, graft.llm.TextCatalog.WinnowW)
+        .write.mode("append").parquet(s"$base/sink")
+    })
     s.read.parquet(s"$base/sink").orderBy("doc_id", "span_id")
   }
 
@@ -518,23 +422,16 @@ object StreamingCatalog extends Catalog {
     * refreshes per batch without restarting the query. Oracled as the same
     * batch join.
     */
-  def replayDimJoin(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
-    val base = graft.engine.TempDirs.create("graft-dim-join")
+  def replayDimJoin(s: SparkSession, d: String): DataFrame = {
     val dim = broadcast(graft.engine.Tables(s, d).nation
       .select(col("n_nationkey"), col("n_name").as("home_nation")))
-    val q = replayStream(s, d)
+    val joined = replayStream(s, d)
       .withColumn("n_nationkey", pmod(col("user_id"), lit(25L)).cast("int"))
       .join(dim, Seq("n_nationkey"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("home_nation"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    s.read.parquet(s"$base/sink").orderBy("event_id")
+    Replay.toParquet(joined, graft.engine.TempDirs.create("graft-dim-join"))
+      .orderBy("event_id")
   }
 
   /** Replay the corpus fingerprints through the stateful streaming
@@ -546,7 +443,7 @@ object StreamingCatalog extends Catalog {
     * EXACT (see the operator's scaladoc), so the oracle is the plain
     * quadratic SQL over the same simhash table.
     */
-  def replaySimHashDedup(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replaySimHashDedup(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.timestamp_micros
     val dir = graft.engine.FixtureDirs("simhash-fp", d) { tmp =>
       graft.llm.TextOps.simHashAgg(
@@ -562,19 +459,12 @@ object StreamingCatalog extends Catalog {
       StructField("doc_id", LongType),
       StructField("ts", TimestampType),
       StructField("fp", LongType)))
-    val sinkName = "graft_simhash_flags_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // see withStateParallelism: one flatMapGroupsWithState store/partition
-    withStateParallelism(s, 8) {
-      val q = Streams.simHashNearDupFlags(
-          s.readStream.schema(fpSchema).parquet(dir), "doc_id", "fp")
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
+    val flags = withStateParallelism(s, 8) {
+      Replay.toMemory(Streams.simHashNearDupFlags(
+        s.readStream.schema(fpSchema).parquet(dir), "doc_id", "fp").toDF(), "append")
     }
-    Streams.nearDupVerdicts(s.table(sinkName))
+    Streams.nearDupVerdicts(flags)
       .withColumnRenamed("event_id", "doc_id")
       .orderBy("doc_id")
   }
@@ -592,31 +482,23 @@ object StreamingCatalog extends Catalog {
     * against the exact batch side, and the oracle is the batch
     * `heavy_hitter_bounds` SQL verbatim.
     */
-  def replayHeavyHitters(s: SparkSession, d: String, k: Int, topM: Int,
-                         timeoutMs: Long = 300000): DataFrame = {
+  def replayHeavyHitters(s: SparkSession, d: String, k: Int, topM: Int): DataFrame = {
     val src = graft.engine.FixtureDirs("docs-split4", d) { tmp =>
       graft.engine.Tables(s, d).documents.select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(s"$tmp/docs")
     }
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val sinkName = "graft_stream_hh_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // see withStateParallelism: global agg state is ONE summary buffer
-    withStateParallelism(s, 8) {
-      val q = s.readStream.schema(docsSchema)
+    val sketch = withStateParallelism(s, 8) {
+      Replay.toMemory(s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$src/docs")
         .select(explode(graft.llm.TextOps.tokens(col("text"))).as("term"))
-        .agg(graft.functions.MgTopK(col("term"), k).as("sketch"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
+        .agg(graft.functions.MgTopK(col("term"), k).as("sketch")), "complete")
     }
     graft.llm.TextOps.heavyHitterFlags(
-      graft.engine.Tables(s, d).documents, "text", s.table(sinkName), k, topM)
+      graft.engine.Tables(s, d).documents, "text", sketch, k, topM)
   }
 
   /** Stage `df` as a single parquet FILE named `name` inside `tmp` with a
@@ -647,7 +529,7 @@ object StreamingCatalog extends Catalog {
     * horizon at every SF — the state-bound contract (a key's state expires
     * once the watermark proves no duplicate can still collide with it).
     */
-  def replayIngestDedup(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replayIngestDedup(s: SparkSession, d: String): DataFrame = {
     val dir = graft.engine.FixtureDirs("ingest-dedup", d) { tmp =>
       val docs = graft.engine.Tables(s, d).documents
         // +1: the initial watermark is epoch 0 with a strict late-row filter
@@ -665,20 +547,12 @@ object StreamingCatalog extends Catalog {
     val base = graft.engine.TempDirs.create("graft-ingest-dedup")
     // see withStateParallelism: dedup key-state commits x 2 batches
     withStateParallelism(s, 8) {
-      val q = Streams.dedupStream(
+      Replay.toParquet(Streams.dedupStream(
           s.readStream.schema(ingestSchema).option("maxFilesPerTrigger", "1")
             .parquet(dir),
           Seq("doc_id"))
-        .select(col("doc_id"), col("content_md5"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
-    }
-    s.read.parquet(s"$base/sink").orderBy("doc_id")
+        .select(col("doc_id"), col("content_md5")), base)
+    }.orderBy("doc_id")
   }
 
   /** The watermarked stream-stream interval join run as a REAL stream
@@ -691,27 +565,19 @@ object StreamingCatalog extends Catalog {
     * inequality join (inclusive bounds, unlike the batch `rangeJoin`'s
     * left-exclusive window).
     */
-  def replayRangeJoin(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replayRangeJoin(s: SparkSession, d: String): DataFrame = {
     val base = graft.engine.TempDirs.create("graft-range-join")
     val clicks = replayStream(s, d).filter(col("event_type") === "click")
     val errors = replayStream(s, d).filter(col("event_type") === "error")
     // see withStateParallelism: 4 stores/partition x per-batch commits
     withStateParallelism(s, 8) {
-      val q = Streams.joinWithinWindow(clicks, errors, "user_id", "4 hours")
+      Replay.toParquet(Streams.joinWithinWindow(clicks, errors, "user_id", "4 hours")
         .select(col("l_id").as("event_id"), col("user_id"),
           graft.ops.Relational.tsStr(col("l_ts")).as("ts"),
           col("r_id").as("err_event_id"),
           graft.ops.Relational.tsStr(col("r_ts")).as("err_ts"),
-          col("r_value").as("err_value"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
-    }
-    s.read.parquet(s"$base/sink").orderBy("event_id", "err_event_id")
+          col("r_value").as("err_value")), base)
+    }.orderBy("event_id", "err_event_id")
   }
 
   /** The streaming LEFT OUTER interval join run as a REAL stream — the
@@ -729,7 +595,7 @@ object StreamingCatalog extends Catalog {
     * rows themselves join nothing (user_id −1, far-future ts) and are
     * filtered from the sink by type.
     */
-  def replayLeftJoin(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replayLeftJoin(s: SparkSession, d: String): DataFrame = {
     val dir = sessionReplayDir(s, d)
     val base = graft.engine.TempDirs.create("graft-left-join")
     // maxFilesPerTrigger=2 folds the sentinel ladder into TWO batches:
@@ -741,7 +607,7 @@ object StreamingCatalog extends Catalog {
     // batch AFTER they arrived, on watermark passage — at 2/3 of the
     // 3-batch ladder's state-commit floor.
     def side(types: Seq[String]) =
-      s.readStream.schema(eventSchema).option("maxFilesPerTrigger", "2")
+      s.readStream.schema(Streams.eventSchema).option("maxFilesPerTrigger", "2")
         .parquet(dir).filter(col("event_type").isin(types: _*))
     // see withStateParallelism: 4 stores/partition x per-batch commits —
     // the real join work all lands in batch 1 (every real row is in the
@@ -754,7 +620,7 @@ object StreamingCatalog extends Catalog {
       // watermark froze at its batch-0 value, and the last 45 minutes of
       // unmatched clicks never flushed). The sentinels are user_id -1, so
       // the batch read-back below filters them without touching the plan.
-      val q = Streams.joinWithinWindow(
+      Replay.toParquet(Streams.joinWithinWindow(
           side(Seq("click", "flush")), side(Seq("error", "flush")),
           "user_id", "45 minutes", "leftOuter")
         .select(col("l_id").as("event_id"), col("user_id"),
@@ -762,17 +628,8 @@ object StreamingCatalog extends Catalog {
           col("l_value").as("click_value"),
           col("r_id").as("err_event_id"),
           graft.ops.Relational.tsStr(col("r_ts")).as("err_ts"),
-          col("r_value").as("err_value"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
-    }
-    s.read.parquet(s"$base/sink").filter(col("user_id") >= 0)
-      .orderBy("event_id", "err_event_id")
+          col("r_value").as("err_value")), base)
+    }.filter(col("user_id") >= 0).orderBy("event_id", "err_event_id")
   }
 
   /** Stage (once per JVM × source dir) the session-replay input: the
@@ -799,21 +656,12 @@ object StreamingCatalog extends Catalog {
           java.util.Arrays.asList(org.apache.spark.sql.Row(
             id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "flush",
             0.0, "{}")),
-          eventSchema)
+          Streams.eventSchema)
       val t0 = System.currentTimeMillis() - 240000
       stageFile(tmp, ev, "events.parquet", t0)
       stageFile(tmp, sentinel(-1L, 2L * 3600 * 1000), "flush1.parquet", t0 + 60000)
       stageFile(tmp, sentinel(-2L, 4L * 3600 * 1000), "flush2.parquet", t0 + 120000)
     }
-
-  /** Normalized event schema of the staged session-replay files. */
-  private val eventSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
 
   /** [[Streams.userSessions]] run as a REAL watermarked APPEND stream
     * inside the gate — the production sessionization shape where a session
@@ -831,29 +679,19 @@ object StreamingCatalog extends Catalog {
     * proving the append-mode emission is COMPLETE over the real sessions,
     * not just consistent on what it happened to emit.
     */
-  def replaySessionWindows(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replaySessionWindows(s: SparkSession, d: String): DataFrame = {
     val dir = sessionReplayDir(s, d)
     val base = graft.engine.TempDirs.create("graft-session-win")
     // see withStateParallelism: session-window state commits x 3 batches
     withStateParallelism(s, 8) {
-      val q = Streams.userSessions(
-          s.readStream.schema(eventSchema).option("maxFilesPerTrigger", "1")
+      Replay.toParquet(Streams.userSessions(
+          s.readStream.schema(Streams.eventSchema).option("maxFilesPerTrigger", "1")
             .parquet(dir),
           "30 minutes")
         .select(col("user_id"),
           graft.ops.Relational.tsStr(col("session_start")).as("session_start"),
-          col("n_events"), col("session_value"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, timeoutMs)
-    }
-    s.read.parquet(s"$base/sink")
-      .filter(col("user_id") >= 0)
-      .orderBy("user_id", "session_start")
+          col("n_events"), col("session_value")), base)
+    }.filter(col("user_id") >= 0).orderBy("user_id", "session_start")
   }
 
   /** The age-preferences view shape over the ENRICHED sink: the enriched
@@ -877,14 +715,13 @@ object StreamingCatalog extends Catalog {
     * foreachBatch consumer — enrich → append → recompute the view over the
     * entire sink each micro-batch — and return the view's final state.
     */
-  def replayViewRefresh(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame = {
+  def replayViewRefresh(s: SparkSession, d: String): DataFrame = {
     val base = graft.engine.TempDirs.create("graft-view-refresh")
     @volatile var state: DataFrame = null
-    val q = Streams.consumeWithViewRefresh(
+    Replay.await(Streams.consumeWithViewRefresh(
       s, replayStream(s, d), s"$base/sink", s"$base/ckpt",
       full => state = streamViewState(full),
-      Trigger.AvailableNow())
-    awaitOrFail(q, timeoutMs)
+      Trigger.AvailableNow()))
     require(state != null, "view refresh never ran — empty replay stream")
     state
   }
@@ -898,24 +735,15 @@ object StreamingCatalog extends Catalog {
     * that replaces per-batch full recompute once the sink outgrows the
     * refresh budget.
     */
-  private def replayCube(s: SparkSession, d: String, keys: Seq[String],
-                         timeoutMs: Long): DataFrame = {
+  private def replayCube(s: SparkSession, d: String, keys: Seq[String]): DataFrame = {
     val enriched = Streams.enriched(replayStream(s, d))
       .withColumn("category", col("event_type"))
-    val cube = Streams.incrementalCube(enriched, keys)
-    val sinkName = "graft_incr_cube_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = cube.writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitOrFail(q, timeoutMs)
-    s.table(sinkName)
+    Replay.toMemory(Streams.incrementalCube(enriched, keys), "complete")
   }
 
-  def replayIncrementalView(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame =
+  def replayIncrementalView(s: SparkSession, d: String): DataFrame =
     Views.preferencesFromCube(
-      replayCube(s, d, Seq("customer_segment", "category"), timeoutMs),
+      replayCube(s, d, Seq("customer_segment", "category")),
       "customer_segment", withRating = false)
 
   /** Top-3 ordered category arrays derived from the SAME maintained cube —
@@ -923,9 +751,9 @@ object StreamingCatalog extends Catalog {
     * incrementally-maintained state; array stringified at the oracle
     * boundary like v_location_preferences.
     */
-  def replayIncrementalTopK(s: SparkSession, d: String, timeoutMs: Long = 300000): DataFrame =
+  def replayIncrementalTopK(s: SparkSession, d: String): DataFrame =
     Views.topCategoriesFromCube(
-        replayCube(s, d, Seq("customer_segment", "category"), timeoutMs),
+        replayCube(s, d, Seq("customer_segment", "category")),
         "customer_segment", 3)
       .withColumn("top_categories", concat_ws(",", col("top_categories")))
 

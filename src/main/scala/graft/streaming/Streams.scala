@@ -79,14 +79,7 @@ object Streams {
   def startConsumer(spark: SparkSession, inDir: String, sinkDir: String,
                     checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("15 seconds")): StreamingQuery =
-    enriched(readEvents(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
+    Replay.appendParquet(enriched(readEvents(spark, inDir)), sinkDir, checkpointDir, trigger)
 
   /** Start the consumer AND refresh the analytic-view temp views over the
     * full sink table after every micro-batch (the reference's poll-refresh
@@ -109,19 +102,13 @@ object Streams {
                              sinkDir: String, checkpointDir: String,
                              refresh: DataFrame => Unit,
                              trigger: Trigger = Trigger.ProcessingTime("15 seconds")): StreamingQuery =
-    enriched(raw)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        // refresh against the CALLER's session: foreachBatch runs in an
-        // isolated session clone, where temp-view registrations would be
-        // invisible to the application
-        refresh(spark.read.parquet(sinkDir))
-      }
-      .start()
+    Replay.eachBatch(enriched(raw), checkpointDir, trigger) { (batch, _) =>
+      batch.write.mode("append").parquet(sinkDir)
+      // refresh against the CALLER's session: foreachBatch runs in an
+      // isolated session clone, where temp-view registrations would be
+      // invisible to the application
+      refresh(spark.read.parquet(sinkDir))
+    }
 
   /** Incremental event-time aggregation (the shape the dashboard's hourly
     * chart needs, streamlit_app.py:374-379): watermarked tumbling window,

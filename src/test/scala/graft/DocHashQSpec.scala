@@ -9,8 +9,8 @@ import graft.llm.TextOps
   * value-identical to the explode → aggregate chains they replaced (kept
   * here verbatim from the pre-round-13 TextOps as the executable spec).
   * Row-level equality via except() both ways, on the real documents fixture
-  * plus adversarial synthetic docs (empty text, single token, repeated
-  * tokens, multi-byte characters, punctuation-only).
+  * plus adversarial synthetic docs (empty text, null text, single token,
+  * repeated tokens, multi-byte and non-BMP characters, punctuation-only).
   */
 class DocHashQSpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +27,14 @@ class DocHashQSpec extends SparkSpec {
     (5L, "z z z z z z z z z z z z"),
     (6L, "¿dónde están las llaves? 的是了在我有 le la les"),
     (7L, "!!! ??? ,,, ..."),
-    (8L, "der die das und ist ein nicht schön")
+    (8L, "der die das und ist ein nicht schön"),
+    (9L, null),
+    // non-BMP code points (surrogate pairs in UTF-16): the kernels window by
+    // code point, the chains by Spark's substr
+    (10L, "𝕏 𝕏𝕏 the 𝕐𝕫 and 𝕏"),
+    (11L, "emoji 😀😃 party 🎉 de la 👍🏽 ok 😀😃"),
+    (12L, "a😀b c𝕏d 😀"),
+    (13L, "🎉🎉🎉")
   ).toDF("doc_id", "text")
 
   // the pre-round-13 simHashAgg, verbatim

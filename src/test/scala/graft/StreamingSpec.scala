@@ -374,12 +374,37 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a timed-out replay throws instead of verifying a partial sink") {
-    // timeoutMs=1 cannot cover even one micro-batch commit, so the replay
-    // must fail loudly rather than hand back whatever reached the sink
+    // 1 ms cannot cover even one micro-batch commit, so the shared await
+    // must fail loudly and stop the query rather than hand back whatever
+    // reached the sink
+    val base = Files.createTempDirectory("graft-timeout").toString
+    val in = s"$base/in"
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    addFile(mkEvents(0 until 30).toDF(), in, "a.parquet")
+    val q = Streams.startConsumer(spark, in, s"$base/sink", s"$base/ckpt",
+      Trigger.AvailableNow())
     val e = intercept[IllegalStateException] {
-      graft.streaming.StreamingCatalog.replayEnriched(spark, sf, timeoutMs = 1)
+      graft.streaming.Replay.await(q, timeoutMs = 1)
     }
     assert(e.getMessage.contains("timed out"))
+    assert(!q.isActive, "a timed-out replay must not keep running")
+  }
+
+  test("memory-sink replays leave no session temp view behind") {
+    def graftViews() = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_")).toSet
+    val before = graftViews()
+    val runs = Seq.fill(2)(
+      graft.streaming.StreamingCatalog.replayIncrementalView(spark, sf).collect().toSeq)
+    assert(graftViews() === before, "each replay must drop its memory-sink view")
+    val cube = Streams.incrementalCube(
+      Streams.enriched(graft.engine.Tables(spark, sf).events)
+        .withColumn("category", col("event_type")),
+      Seq("customer_segment", "category"))
+    val want = graft.shopping.Views.preferencesFromCube(
+      cube, "customer_segment", withRating = false).collect().toSeq
+    assert(want.nonEmpty)
+    runs.foreach(got => assert(got === want, "replay result equals the batch view"))
   }
 
   test("the gate's view-refresh replay equals the batch view over the same events") {
