@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * embarrassingly parallel: this expression applies all `merges` in rank
   * order to one row's token array inside a single scan, replacing
   * `merges.length` full shuffle-sort-and-materialize rounds
-  * ([[graft.llm.TextOps.bpeEncodeStatsFromMerges]]) with zero shuffles —
+  * (the loop path, `graft.llm.SpecForms.bpeEncodeStatsFromMerges` on the
+  * test side) with zero shuffles —
   * the per-token constant the encode pays no longer multiplies by the
   * vocabulary size. The loop path stays as the value oracle
   * (`FunctionsSpec` pins this kernel against it).

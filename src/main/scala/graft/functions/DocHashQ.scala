@@ -120,7 +120,7 @@ case class LangTriScores(child: Expression, profiles: Seq[(String, String, Long)
 }
 
 /** MinHash signature over a per-document DISTINCT gram array as one narrow
-  * codegen'd pass ([[graft.llm.Dedup.minhashSignatures]]'s kernel form,
+  * codegen'd pass (the kernel form of the shingle-row 64-min aggregate,
   * round-13): per gram, h = (60-bit md5 hash) mod p; sig_j = min over grams
   * of (h·a(j) + b(j)) mod p — exactly the j-th `min` aggregate of the
   * 64-column hash-aggregate chain, whose per-gram-row aggregate-buffer

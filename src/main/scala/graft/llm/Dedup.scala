@@ -119,23 +119,10 @@ object Dedup {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
-  private def permA(i: Int): Long = Math.floorMod(scramble(2L * i), P - 1) + 1
-  private def permB(i: Int): Long = Math.floorMod(scramble(2L * i + 1), P)
+  private[llm] def permA(i: Int): Long = Math.floorMod(scramble(2L * i), P - 1) + 1
+  private[llm] def permB(i: Int): Long = Math.floorMod(scramble(2L * i + 1), P)
 
-  /** MinHash signatures from shingle rows: ONE wide hash aggregate with K
-    * codegen'd `min` columns (sig_0 … sig_63) — partial-aggregated
-    * map-side, one exchange on the doc id. This is the EXECUTABLE SPEC
-    * form (tests pin the kernel against it); the pipeline paths use
-    * [[kernelSignatures]], which folds the identical math in one narrow
-    * pass per document.
-    */
-  def minhashSignatures(sh: DataFrame, id: String): DataFrame = {
-    val h = TextOps.hash60(col("shingle")) % P
-    val mins = (0 until K).map(i => min((h * permA(i) + permB(i)) % P).as(s"sig_$i"))
-    sh.groupBy(col(id)).agg(mins.head, mins.tail: _*)
-  }
-
-  /** [[minhashSignatures]] as one narrow codegen'd pass (round-13;
+  /** MinHash signatures as one narrow codegen'd pass (round-13;
     * optimization guide §2.4/§4): `(id, __sig array<long>[K])` straight off
     * the document scan — [[graft.functions.MinHashSig]] folds h·A_i+B_i
     * mod P mins over the per-doc distinct gram array, replacing the
@@ -143,7 +130,8 @@ object Dedup {
     * (which paid an aggregate-buffer probe plus 64 buffer updates per
     * shingle ROW). Docs with no gram (shorter than n tokens) are filtered,
     * mirroring the aggregate's absent group. Bit-identical mins —
-    * spec-pinned by DocHashQSpec.
+    * spec-pinned by DocHashQSpec against the aggregate form
+    * (`graft.llm.SpecForms.minhashSignatures`, test side).
     */
   private[graft] def kernelSignatures(df: DataFrame, id: String, textCol: String,
                                       n: Int): DataFrame =
@@ -152,9 +140,11 @@ object Dedup {
         (0 until K).map(permA), (0 until K).map(permB), P).as("__sig"))
       .filter(col("__sig").isNotNull)
 
-  /** `(id, band)` rows off the kernel signature array — same
-    * "band:sig,sig,sig,sig" keys as [[bandRows]] (longs render identically
-    * through concat_ws on both paths).
+  /** `(id, band)` rows off the kernel signature array: each signature
+    * emits its [[Bands]] keys "band,sig,sig,sig,sig" (the same keys the
+    * test-side `SpecForms.bandRows` builds off the aggregate columns —
+    * longs render identically through concat_ws on both paths); docs
+    * agreeing on any full band share a bucket.
     */
   private def bandRowsArr(sig: DataFrame, id: String): DataFrame = {
     val keys = (0 until Bands).map { b =>
@@ -172,25 +162,6 @@ object Dedup {
   private def kernelCandidates(df: DataFrame, id: String, textCol: String,
                                n: Int): DataFrame = {
     val keyed = bandRowsArr(kernelSignatures(df, id, textCol, n), id)
-    val a = keyed.select(col(id).as("id_a"), col("band"))
-    val b = keyed.select(col(id).as("id_b"), col("band"))
-    a.join(b, Seq("band")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** `(id, band)` rows: each signature emits its 16 band keys
-    * "band:sig,sig,sig,sig"; docs agreeing on any full band share a bucket.
-    */
-  def bandRows(sig: DataFrame, id: String): DataFrame = {
-    val keys = (0 until Bands).map { b =>
-      concat_ws(",", lit(b) +: (0 until Rows).map(r => col(s"sig_${b * Rows + r}")): _*)
-    }
-    sig.select(col(id), explode(array(keys: _*)).as("band"))
-  }
-
-  /** Candidate pairs (idA < idB) from the banded LSH self-join. */
-  def lshCandidates(sh: DataFrame, id: String): DataFrame = {
-    val keyed = bandRows(minhashSignatures(sh, id), id)
     val a = keyed.select(col(id).as("id_a"), col("band"))
     val b = keyed.select(col(id).as("id_b"), col("band"))
     a.join(b, Seq("band")).filter(col("id_a") < col("id_b"))

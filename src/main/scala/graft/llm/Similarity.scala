@@ -194,8 +194,7 @@ object Similarity {
       // whole auto-dedup tier's super-linear cost (k ∝ n makes it n²/target
       // SHUFFLED ROWS; as a projection the k·dim flops stay in-register)
       // null/mis-shaped vectors argmin to null; the not-null filter makes
-      // the declared null contract (row absent from the output) true on
-      // this path exactly as the table path's pre-argmin filter does —
+      // the declared null contract (row absent from the output) true —
       // in-codegen, no exchange added
       prepare(df, id, vec)
         .select(col(id),
@@ -310,14 +309,9 @@ object Similarity {
 
   def kmeansFit(df: DataFrame, id: String, vec: String, k: Int,
                 iters: Int = 5): KMeansModel = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val p = prepare(df, id, vec).select(col(id), col("q"), col("n2"))
       .localCheckpoint(false)
     val dim = p.select(size(col("q"))).head().getInt(0)
-
-    def centroidFrame(cs: Seq[(Int, Seq[Long])]) =
-      broadcast(cs.toDF("cid", "cq").withColumn("cn2", norm2Q(col("cq"))))
 
     // deterministic sample-based init (k-means||-style): ONE hash-sampled
     // pass pulls ~max(64k, 4096) vectors to the driver (bounded: sample ×
@@ -587,15 +581,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** Semantic dedup (the SemDeDup recipe): inside each cell, drop every
-    * vector that has a lower-id neighbor above the cosine threshold —
-    * near-identical embeddings collapse to their minimum-id representative.
-    * Returns one row per input vector: `(id, cell, dup_of, is_kept)` where
-    * `dup_of` is the minimum such neighbor (NULL for keepers). Built on
-    * [[cellNearDupPairs]], so the pair search never leaves a cell; the drop
-    * decision is one aggregate on the pair frame (tiny next to the corpus)
-    * plus a left join back — no collect, no all-pairs.
-    */
   /** Cell count for a scale-adaptive SemDeDup fit: k = ceil(n / target),
     * floored at `minK`. The pinned-k form degrades quadratically on
     * scale-up (10× vectors in the same k cells → up to 100× within-cell
@@ -606,22 +591,6 @@ object Similarity {
     */
   def cellCountFor(n: Long, target: Long, minK: Int = 8): Int =
     math.max(minK.toLong, (n + target - 1) / target).toInt
-
-  /** [[semanticDedup]] with the clustering built in at a scale-adaptive
-    * cell count ([[cellCountFor]]): fit deterministic integer k-means,
-    * assign, then dedup within the fitted cells. Returns
-    * `(id, cluster, dup_of, is_kept)` and the fitted model (so callers —
-    * and the gate oracle — can replay the assignment).
-    */
-  def semanticDedupAuto(df: DataFrame, id: String, vec: String,
-                        threshold: Double, targetCellSize: Long = 64L,
-                        iters: Int = 3): (KMeansModel, DataFrame) = {
-    val k = cellCountFor(df.count(), targetCellSize)
-    val model = kmeansFit(df, id, vec, k, iters)
-    val out = semanticDedup(df.join(model.assign(df), Seq(id)), id, vec,
-      "cluster", threshold)
-    (model, out)
-  }
 
   /** A fitted two-level hierarchical quantizer: coarse centroids plus
     * per-coarse-cell sub-centroid tables, with leaf cell ids
@@ -638,7 +607,7 @@ object Similarity {
                                    id: String, vec: String) {
     def assign(df: DataFrame): DataFrame =
       // same declared null contract as KMeansModel.assign: null vectors
-      // argmin to null and the row is dropped, matching the table path
+      // argmin to null and the row is dropped
       prepare(df, id, vec).select(col(id),
         graft.functions.NearestSubCellQ(col("q"),
           graft.functions.NearestCellQ(col("q"), coarse),
@@ -721,10 +690,10 @@ object Similarity {
   }
 
   /** [[semanticDedup]] over a [[hierarchicalFit]] quantizer — the same
-    * constant-occupancy leaf cells as [[semanticDedupAuto]] (so candidate
-    * pair volume stays linear in n) with assignment at n·2√k dots instead
-    * of n·k. Returns the model so the gate oracle can replay both argmin
-    * levels from the captured centroids.
+    * constant-occupancy leaf cells as a flat k ∝ n fit ([[cellCountFor]],
+    * so candidate pair volume stays linear in n) with assignment at n·2√k
+    * dots instead of n·k. Returns the model so the gate oracle can replay
+    * both argmin levels from the captured centroids.
     */
   def semanticDedupHier(df: DataFrame, id: String, vec: String,
                         threshold: Double, targetCellSize: Long = 64L,
@@ -752,8 +721,6 @@ object Similarity {
                                    subLevels: Seq[Seq[(Int, Int, Seq[Long])]],
                                    id: String, vec: String) {
     def depth: Int = 1 + subLevels.size
-    def leafCount: Int =
-      if (subLevels.isEmpty) root.size else subLevels.last.size
     private[llm] def nodeCol: Column =
       subLevels.foldLeft(graft.functions.NearestCellQ(col("q"), root): Column) {
         (parent, tbl) => graft.functions.NearestSubCellQ(col("q"), parent, tbl)
@@ -853,140 +820,6 @@ object Similarity {
       sub
     }
     TreeKMeansModel(root, subLevels, id, vec)
-  }
-
-  /** DataFrame-RESIDENT quantizer assignment — the big-model path. The
-    * expression kernels ([[graft.functions.NearestCellQ]] /
-    * [[graft.functions.NearestSubCellQ]]) carry the centroid tables inside
-    * the expression node: zero shuffle, k·dim flops in whole-stage codegen —
-    * the right plan while the MODEL fits a task binary. With k ∝ n leaves
-    * (the constant-occupancy scaling law of the semantic-dedup tier) the
-    * leaf level is O(n/target): at 10¹¹ vectors ≈ 5·10⁸ leaves × 64 dims ×
-    * 8 B ≈ 256 GB — no longer an expression payload, a driver collect, or a
-    * broadcast. This path keeps each level as a DataFrame
-    * `(parent, cid, cq, cn2)` and assigns by per-level equi-join on the
-    * parent node + argmin aggregate:
-    *
-    *  - join: rows `(id, q, node)` ⋈ level on `node = parent` — an
-    *    ordinary shuffle hash join; Spark broadcasts small levels on its
-    *    own, and the leaf level shuffles MODEL rows instead of holding
-    *    them on the driver (the whole point);
-    *  - score: `cn2 − 2·dot_q(q, cq)` — the exact integer comparison key
-    *    of the expression kernels ([[graft.functions.DotProductQ]]);
-    *  - argmin: `min(struct(score, cid, …))` per id — lexicographic struct
-    *    ordering IS (min score, then min cid) = the kernels'
-    *    strict-improvement lower-cid tie-break. Rows land on the argmin
-    *    aggregate already grouped by parent (every candidate of an id
-    *    shares the id's parent), so the map-side partial aggregate reduces
-    *    n·f scored rows to n before the exchange.
-    *
-    * Null/shape semantics match the kernels: a null/mis-shaped vector
-    * scores null against every centroid, is filtered before the argmin,
-    * and the id is absent from the output — the same explicit not-null
-    * filter the expression paths carry after their argmin projection.
-    * Spec-pinned ≡ [[KMeansModel.assign]] / [[HierKMeansModel.assign]] /
-    * [[TreeKMeansModel.assign]] in `PipelineOpsSpec` (including on a
-    * frame containing a null vector).
-    *
-    * Model-size envelope: expression path ≤ a few hundred MB of centroids
-    * (task-binary/broadcast bound); this path is bounded only by cluster
-    * storage — levels above the leaf usually still fit the expression
-    * kernels, so a hybrid (expressions down to the last broadcastable
-    * level, one table join for the leaf level) is the production shape;
-    * both ends of that hybrid are exactly these two code paths.
-    */
-  def assignViaCentroidTables(df: DataFrame, id: String, vec: String,
-                              levels: Seq[DataFrame]): DataFrame = {
-    require(levels.nonEmpty, "at least one centroid level")
-    def scoreCol: Column =
-      (col("cn2") - lit(2L) * graft.functions.DotQ(col("q"), col("cq"))).as("score")
-    // ROOT level: every row scores against every root centroid — the same
-    // per-row dot count the expression kernel reads. The root codebook is
-    // FANOUT-sized (never leaf-count-sized), so it broadcasts; an explicit
-    // broadcast cross join states that design (an equi-join on a constant
-    // parent key would constant-fold into the same nested-loop shape,
-    // minus the intent — and would shuffle everything to one partition if
-    // the broadcast were ever declined).
-    val first = tableArgmin(
-      prepare(df, id, vec).select(col(id), col("q"))
-        .crossJoin(broadcast(levels.head.drop("parent")))
-        .select(col(id), struct(scoreCol, col("cid"), col("q")).as("sc")), id)
-    levels.tail.foldLeft(first)(tableLevelStep(_, id, _))
-      .select(col(id), col("node").as("cluster"))
-  }
-
-  private def tableArgmin(scored: DataFrame, id: String): DataFrame =
-    scored.filter(col("sc.score").isNotNull)
-      .groupBy(col(id)).agg(min(col("sc")).as("w"))
-      .select(col(id), col("w.q").as("q"), col("w.cid").as("node"))
-
-  /** One table-resident level of [[assignViaCentroidTables]]: `cur` is
-    * `(id, q, node)`, `lvl` a `(parent, cid, cq, cn2)` centroid table;
-    * returns `(id, q, node)` at the child level. Shared by the all-table
-    * path and [[HierKMeansModel.assignHybrid]]'s leaf step.
-    *
-    * LEFT join + raise_error on the join-miss condition: an id whose
-    * assigned node has no children in the next level table is a
-    * malformed/incomplete levels input — an inner join would silently
-    * drop the row (the output shrinks with no signal). The check rides
-    * the SCORE expression (which the argmin's not-null filter always
-    * evaluates — a cid-side check could be pruned away with the struct),
-    * and is unambiguous there: every row entering a deeper level has
-    * non-null q (it survived the previous argmin), so a null cn2 can
-    * only mean a centroid-table gap. Fail-loud at zero extra jobs.
-    */
-  private def tableLevelStep(cur: DataFrame, id: String,
-                             lvl: DataFrame): DataFrame = {
-    // coalesce: concat null-propagates, and a null node would otherwise
-    // turn the fail-loud diagnostic into `[USER_RAISED_EXCEPTION] null`.
-    val checkedScore = when(col("cn2").isNull,
-      raise_error(concat(lit("assignViaCentroidTables: node "),
-        coalesce(cur("node").cast("string"), lit("null")),
-        lit(" has no children in the next centroid level"))))
-      .otherwise(col("cn2") - lit(2L) * graft.functions.DotQ(col("q"), col("cq")))
-      .as("score")
-    tableArgmin(cur.join(lvl, cur("node") === lvl("parent"), "left")
-      .select(cur(id).as(id), struct(checkedScore, col("cid"), col("q")).as("sc")), id)
-  }
-
-  /** The HYBRID evaluation strategy between [[HierKMeansModel.assign]]
-    * (both levels as broadcast expression kernels — fastest, but the
-    * model must fit the task-binary/broadcast envelope, a few hundred MB)
-    * and [[assignViaCentroidTables]] (every level a storage-resident
-    * table join — unbounded model, measured ~5–7× kernel cost): the
-    * COARSE level runs the [[graft.functions.NearestCellQ]] kernel (it is
-    * fanout-sized — √k centroids — and fits the envelope at any corpus
-    * size), and only the LEAF level, the one that actually grows with the
-    * corpus, pays the table join. This is the production shape SCALE.md
-    * names for 10¹¹-vector models: kernel speed wherever the level fits,
-    * table residency only where it can't.
-    */
-  def assignHybrid(df: DataFrame, id: String, vec: String,
-                   coarse: Seq[(Int, Seq[Long])],
-                   leafTable: DataFrame): DataFrame = {
-    val kernelCoarse = prepare(df, id, vec).select(col(id), col("q"),
-      graft.functions.NearestCellQ(col("q"), coarse).as("node"))
-    // Null/mis-shaped embeddings score to a null coarse node. The pure
-    // kernel and all-table paths both DROP such rows (the documented null
-    // contract); without this filter they would instead miss the leaf
-    // left-join and trip the centroid-gap raise_error, aborting the job —
-    // keep that check for genuine table gaps only.
-    tableLevelStep(kernelCoarse.filter(col("node").isNotNull), id, leafTable)
-      .select(col(id), col("node").as("cluster"))
-  }
-
-  /** Centroid-level DataFrames for [[assignViaCentroidTables]] from a
-    * captured in-memory model (the gate/spec entry point — a distributed
-    * fit would hand over its level frames directly). Root rows get
-    * parent 0, matching the assignment seed.
-    */
-  def centroidLevelTables(s: SparkSession, root: Seq[(Int, Seq[Long])],
-                          subLevels: Seq[Seq[(Int, Int, Seq[Long])]]): Seq[DataFrame] = {
-    import s.implicits._
-    def mk(rows: Seq[(Int, Int, Seq[Long])]): DataFrame =
-      rows.map { case (p, c, cq) => (p, c, cq, cq.map(x => x * x).sum) }
-        .toDF("parent", "cid", "cq", "cn2")
-    mk(root.map { case (c, cq) => (0, c, cq) }) +: subLevels.map(mk)
   }
 
   /** A fitted product quantizer: M per-subspace codebooks over the
@@ -1310,6 +1143,15 @@ object Similarity {
     TreeIvfPqModel(tree, pqFitCore(r, id, vec, m, ks, iters), id, vec)
   }
 
+  /** Semantic dedup (the SemDeDup recipe): inside each cell, drop every
+    * vector that has a lower-id neighbor above the cosine threshold —
+    * near-identical embeddings collapse to their minimum-id representative.
+    * Returns one row per input vector: `(id, cell, dup_of, is_kept)` where
+    * `dup_of` is the minimum such neighbor (NULL for keepers). Built on
+    * [[cellNearDupPairs]], so the pair search never leaves a cell; the drop
+    * decision is one aggregate on the pair frame (tiny next to the corpus)
+    * plus a left join back — no collect, no all-pairs.
+    */
   def semanticDedup(df: DataFrame, id: String, vec: String, cell: String,
                     threshold: Double): DataFrame = {
     val dupOf = cellNearDupPairs(df, id, vec, cell, threshold)

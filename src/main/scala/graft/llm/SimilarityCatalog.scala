@@ -53,50 +53,11 @@ object SimilarityCatalog extends Catalog {
           "label", NearDupCos)
         .orderBy("vec_id")),
 
-    // the scale-adaptive form: cells come from a k ∝ n k-means fit
-    // (constant target cell size — the knob the sf1 scaling run showed
-    // pinned-k lacks), so candidate volume stays linear on scale-up. The
-    // fit is deterministic; its centroids are captured for the oracle
-    // like ivf_kmeans_assign's (semanticAutoOracle below). The fit itself
-    // is memoized per (JVM, sfDir) — `embedding_near_dup_auto` consumes
-    // the SAME fit, the fit-once/consume-many shape (pcaFit's idiom).
-    // PINNED COMPARATOR — super-linear past ~10⁵ vectors (the flat k ∝ n
-    // assignment is n·k = n²/target dots; measured 56.7→253.7 s at
-    // 200k→632k, SCALE.md round 9): use semantic_dedup_hier / _tree /
-    // _bigmodel for real corpora.
-    "semantic_dedup_auto" -> ((s, d) => {
-      val model = autoFit(s, d)
-      autoCentroids = Some(model.centroids)
-      val df = Tables(s, d).embeddings
-      Similarity.semanticDedup(df.join(model.assign(df), Seq("vec_id")),
-          "vec_id", "embedding", "cluster", NearDupCos)
-        .orderBy("vec_id")
-    }),
-
-    // the near-dup PAIR search over the same scale-adaptive cells: the
-    // pinned-label `embedding_near_dup` above is a fixture-only shape
-    // (10× vectors in the same 10 cells → ~100× within-cell candidates —
-    // measured 20.7× at sf1); blocking on the shared k ∝ n fit instead
-    // holds per-cell pair volume, and so total candidate volume, linear
-    // in n. Same exact quantized cosine; oracle replays the captured
-    // centroids (nearDupAutoOracle below).
-    // PINNED COMPARATOR — super-linear past ~10⁵ vectors (shares the flat
-    // k ∝ n fit's n²/target assignment dots; measured 65.7→185.9 s at
-    // 200k→632k, SCALE.md round 9): use embedding_near_dup_hier / _tree
-    // for real corpora.
-    "embedding_near_dup_auto" -> ((s, d) => {
-      val model = autoFit(s, d)
-      nearDupAutoCentroids = Some(model.centroids)
-      val df = Tables(s, d).embeddings
-      Similarity.cellNearDupPairs(df.join(model.assign(df), Seq("vec_id")),
-          "vec_id", "embedding", "cluster", NearDupCos)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // the assignment-cost cure for the auto tier: the flat k ∝ n fit's
-    // nearest-cell pass is n·k dots = n²/target flops — measured 12.2× on
-    // 10× data at the sf1cr→sf10cr decade (SCALE.md) even with the pair
-    // volume held linear. A two-level quantizer (coarse √k cells, then √k
+    // the scale-adaptive SemDeDup: cells come from a k ∝ n fit (constant
+    // target cell size, so candidate volume stays linear on scale-up),
+    // and a flat k ∝ n fit's nearest-cell pass would be n·k dots =
+    // n²/target flops — measured 12.2× on 10× data at the sf1cr→sf10cr
+    // decade (SCALE.md). A two-level quantizer (coarse √k cells, then √k
     // sub-cells fitted per coarse cell in one grouped-Lloyd pass) reaches
     // the SAME leaf count and occupancy at n·2√k dots — the faiss-style
     // coarse-quantizer shape a 100 TB SemDeDup build actually runs. Both
@@ -111,56 +72,13 @@ object SimilarityCatalog extends Catalog {
         .orderBy("vec_id")
     }),
 
-    // the BIG-MODEL assignment path under the same two-level fit: the
-    // expression kernels carry centroids inside the plan (zero shuffle —
-    // right while the model fits a task binary); with k ∝ n leaves the
-    // leaf table is O(n/target) and stops fitting (~256 GB at 10^11
-    // vectors). This variant assigns via DataFrame-resident centroid
-    // tables — per-level equi-join on the parent node + argmin aggregate
-    // (Similarity.assignViaCentroidTables) — so the model lives in
-    // executors/storage, never on the driver. Same fit, same captured
-    // tables, same oracle SQL as semantic_dedup_hier: only the engine's
-    // evaluation strategy differs, which is exactly what the gate pins.
-    "semantic_dedup_bigmodel" -> ((s, d) => {
-      val model = hierFit(s, d)
-      bigModelCapture = Some((model.coarse, model.sub))
-      val df = Tables(s, d).embeddings
-      val assigned = Similarity.assignViaCentroidTables(df, "vec_id", "embedding",
-        Similarity.centroidLevelTables(s, model.coarse, Seq(model.sub)))
-      Similarity.semanticDedup(df.join(assigned, Seq("vec_id")),
-          "vec_id", "embedding", "cluster", NearDupCos)
-        .orderBy("vec_id")
-    }),
-
-    // the HYBRID assignment between the two evaluation-strategy ends
-    // above: coarse level through the broadcast expression kernel (it is
-    // fanout-sized, sqrt(k) centroids — fits the envelope at any corpus
-    // size), leaf level — the only one that grows with the corpus —
-    // through the storage-resident centroid-table join. The per-level
-    // cutover keeps kernel speed wherever the model level fits and pays
-    // table residency only where it can't: the production shape for
-    // 10^11-vector models (SCALE.md). Same fit, same verdicts, same
-    // oracle SQL as semantic_dedup_hier/_bigmodel.
-    "semantic_dedup_hybrid" -> ((s, d) => {
-      val model = hierFit(s, d)
-      hybridCapture = Some((model.coarse, model.sub))
-      val df = Tables(s, d).embeddings
-      val assigned = Similarity.assignHybrid(df, "vec_id", "embedding",
-        model.coarse,
-        Similarity.centroidLevelTables(s, model.coarse, Seq(model.sub)).last)
-      Similarity.semanticDedup(df.join(assigned, Seq("vec_id")),
-          "vec_id", "embedding", "cluster", NearDupCos)
-        .orderBy("vec_id")
-    }),
-
     // the near-dup PAIR search on the two-level quantizer's leaves: the
-    // flat-auto form above still pays the n·k assignment (measured 12.6×
-    // on 10× data at the sf1cr→sf10cr decade, SCALE.md) — blocking on the
-    // hierarchical fit's leaves keeps the SAME leaf count/occupancy (so
-    // pair volume stays linear) at n·2√k assignment dots, the shape the
-    // 100 TB run uses. The flat-auto form stays registered as the
-    // clustered-fixture precision variant. Oracle replays both captured
-    // argmin levels + the within-leaf pair scoring (nearDupHierOracle).
+    // pinned-label `embedding_near_dup` above is a fixture-only shape
+    // (10× vectors in the same 10 cells → ~100× within-cell candidates —
+    // measured 20.7× at sf1); blocking on the hierarchical fit's k ∝ n
+    // leaves holds per-cell pair volume linear at n·2√k assignment dots,
+    // the shape the 100 TB run uses. Oracle replays both captured argmin
+    // levels + the within-leaf pair scoring (nearDupHierOracle).
     "embedding_near_dup_hier" -> ((s, d) => {
       val model = hierFit(s, d)
       nearDupHierCapture = Some((model.coarse, model.sub))
@@ -287,31 +205,14 @@ object SimilarityCatalog extends Catalog {
           Dim, NearDupCos)
         .orderBy("vec_id")),
 
-    // the same pipeline at a scale-adaptive band width (bucket count
-    // tracks n — the fixed 4-bit banding holds 16 buckets per band forever
-    // and its spurious-collision verify cost grows quadratically; measured
-    // 56 s at sf1-constrate vs ~3 s for this form). The chosen width is
-    // captured for the oracle like the auto fits' centroids.
-    // PINNED COMPARATOR — super-linear past ~10⁵ vectors (the single-stage
-    // verify ships full vectors to every banded candidate; measured 12.8×
-    // on 3.16× data at 200k→632k from pair-payload spill, SCALE.md
-    // round 9): use semantic_dedup_srp_bucket for real corpora.
-    "semantic_dedup_srp_auto" -> ((s, d) => {
-      val (rpb, out) = Srp.semanticDedupSrpAuto(Tables(s, d).embeddings,
-        "vec_id", "embedding", Dim, NearDupCos)
-      srpAutoWidth = Some(rpb)
-      out.orderBy("vec_id")
-    }),
-
     // the WITHIN-BUCKET verify over the same banding — the round-10
     // production form. The candidate problem was payload, not compute:
     // instead of materializing the global pair list and joining ~0.5 KB
     // of vector onto each side of every pair (pairs x 1 KB -> spill), the
     // vectors ride the band rows (ONE shuffle of ~corpus volume) and the
     // exact cosine evaluates inside the band self-join's projection; only
-    // passing pairs reach the distinct. Verdict-identical to
-    // semantic_dedup_srp_auto at the same captured width (spec-pinned),
-    // so the oracle is the same band + verify replay. Measured
+    // passing pairs reach the distinct. The oracle is the band + verify
+    // replay at the captured width (srpDedupSqlAtWidth). Measured
     // 4.4/5.5/14.0 s at 200k/632k/2M -- sub-linear, the cheapest
     // TRAINING-FREE dedup at every measured point (SCALE.md round 10).
     "semantic_dedup_srp_bucket" -> ((s, d) => {
@@ -323,7 +224,7 @@ object SimilarityCatalog extends Catalog {
 
     // the training-free near-dup PAIR search: the within-bucket verify
     // emitting the passing pairs themselves -- the fit-free sibling of
-    // embedding_near_dup_auto/_hier/_tree (all of which need a k-means
+    // embedding_near_dup_hier/_tree (both of which need a k-means
     // build; this needs one sketch pass). Same declared band + verify
     // semantics as the srp dedups; oracle replays band -> exact cosine
     // at the captured width and emits the scored pairs.
@@ -332,27 +233,6 @@ object SimilarityCatalog extends Catalog {
         "vec_id", "embedding", Dim, NearDupCos)
       nearDupSrpWidth = Some(rpb)
       out.orderBy("id_a", "id_b")
-    }),
-
-    // the TWO-STAGE verify over the same banding (the round-9 fix for the
-    // measured srp-auto scale negative): stage 1 prunes banded candidates
-    // on the hamming distance of an independent prefilter sketch whose
-    // width AND tau derive from the verify threshold (Srp.preLongsFor /
-    // Srp.hammingTauFor at NearDupCos: 21 longs, tau 591 -- <1e-5
-    // true-pair loss AT the threshold; a fixed 2-long/tau-42 sketch sized
-    // for cos 0.85 would silently prune true pairs in the 0.35-0.6 band),
-    // stage 2 ships the full quantized vectors to SURVIVORS only.
-    // REGIME-LIMITED COMPARATOR (SCALE.md round 10): the prune only bites
-    // when bucket-mate cosine mass sits below tau's implied cosine (the
-    // SemDeDup/high-dim regime); on the d=64 fixtures at 632k+ most
-    // candidates survive and stage 2 pays the pair payload anyway (83 s
-    // at 632k) -- use semantic_dedup_srp_bucket for real corpora.
-    // Oracle replays sketch -> band -> hamming -> exact verify.
-    "semantic_dedup_srp_pre" -> ((s, d) => {
-      val (rpb, out) = Srp.semanticDedupSrpPrefilter(Tables(s, d).embeddings,
-        "vec_id", "embedding", Dim, NearDupCos)
-      srpPreWidth = Some(rpb)
-      out.orderBy("vec_id")
     }),
 
     // product quantization (Jégou et al., TPAMI 2011): M per-subspace
@@ -506,25 +386,9 @@ object SimilarityCatalog extends Catalog {
     */
   @volatile private var fittedCentroids: Option[Seq[(Int, Seq[Long])]] = None
 
-  /** Centroids of the last `semantic_dedup_auto` fit (captured separately
-    * so each capture-oracled query stands alone under a subset run).
-    */
-  @volatile private var autoCentroids: Option[Seq[(Int, Seq[Long])]] = None
-
-  /** Centroids of the last `embedding_near_dup_auto` fit (separate capture,
-    * same subset-run independence; the underlying fit is shared via
-    * [[autoFit]]).
-    */
-  @volatile private var nearDupAutoCentroids: Option[Seq[(Int, Seq[Long])]] = None
-
-  /** Captured band width of the last `semantic_dedup_srp_auto` run (rows
-    * per band) — the oracle replays the identical banding at this width.
-    */
-  @volatile private var srpAutoWidth: Option[Int] = None
-
-  /** Captured band width of the last `semantic_dedup_srp_bucket` run —
-    * verdict-identical to the srp-auto pipeline at the same width, so the
-    * oracle is the same band + verify replay at this capture.
+  /** Captured band width of the last `semantic_dedup_srp_bucket` run (rows
+    * per band) — the oracle replays the identical banding + verify at this
+    * width.
     */
   @volatile private var srpBucketWidth: Option[Int] = None
 
@@ -533,26 +397,6 @@ object SimilarityCatalog extends Catalog {
     * scored pairs.
     */
   @volatile private var nearDupSrpWidth: Option[Int] = None
-
-  /** Captured band width of the last `semantic_dedup_srp_pre` run — the
-    * oracle replays banding AND the hamming prefilter at this width
-    * (prefilter width and τ are pure functions of the verify threshold:
-    * [[Srp.preLongsFor]] / [[Srp.hammingTauFor]] at [[NearDupCos]]).
-    */
-  @volatile private var srpPreWidth: Option[Int] = None
-
-  /** Once-per-(JVM, sfDir) memo of the scale-adaptive k ∝ n k-means fit
-    * consumed by `semantic_dedup_auto` and `embedding_near_dup_auto` —
-    * fit once, consume many (bench repetitions measure the consumers).
-    */
-  private val autoFits =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.KMeansModel]
-  private def autoFit(s: SparkSession, d: String): Similarity.KMeansModel =
-    autoFits.getOrElseUpdate(d, {
-      val df = Tables(s, d).embeddings
-      Similarity.kmeansFit(df, "vec_id", "embedding",
-        Similarity.cellCountFor(df.count(), 64L), iters = 3)
-    })
 
   /** Captured two-level centroids of the last `semantic_dedup_hier` fit —
     * both argmin levels replay in the oracle (hierOracle).
@@ -567,24 +411,9 @@ object SimilarityCatalog extends Catalog {
   @volatile private var nearDupHierCapture:
     Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])] = None
 
-  /** Captured two-level centroids of the last `semantic_dedup_bigmodel`
-    * run (separate capture, same subset-run independence; fit shared via
-    * [[hierFit]] — the big-model query differs only in the ASSIGNMENT
-    * path, so its oracle is byte-identical to the hier one).
-    */
-  @volatile private var bigModelCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])] = None
-
-  /** Captured two-level centroids of the last `semantic_dedup_hybrid`
-    * run (kernel coarse + table leaf; verdicts identical to hier/bigmodel,
-    * so the oracle is the same hierDedupSql replay).
-    */
-  @volatile private var hybridCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])] = None
-
-  /** Once-per-(JVM, sfDir) memo of the hierarchical fit (same
-    * fit-once/consume-many shape as [[autoFit]] — bench repetitions
-    * measure assignment + dedup, not a re-fit).
+  /** Once-per-(JVM, sfDir) memo of the hierarchical fit — fit once,
+    * consume many (bench repetitions measure assignment + dedup, not a
+    * re-fit).
     */
   private val hierFits =
     scala.collection.concurrent.TrieMap.empty[String, Similarity.HierKMeansModel]
@@ -615,7 +444,7 @@ object SimilarityCatalog extends Catalog {
   @volatile private var pqCapture: Option[Seq[(Int, Int, Seq[Long])]] = None
 
   /** Once-per-(JVM, sfDir) memo of the PQ fit (same fit-once/consume-many
-    * shape as [[autoFit]] — bench repetitions measure encode + ADC sweep,
+    * shape as [[hierFit]] — bench repetitions measure encode + ADC sweep,
     * not a re-fit). Only the MODEL is memoized: a checkpointed codes frame
     * would not survive the gate harness's between-query unpersist hygiene,
     * and encode is one narrow pass.
@@ -740,51 +569,6 @@ object SimilarityCatalog extends Catalog {
       s"""WITH ${assignCtes(cs)}
          |SELECT vec_id, cluster FROM a
          |ORDER BY vec_id""".stripMargin
-  }
-
-  /** semantic_dedup_auto oracle: replay the captured-centroid assignment,
-    * then the same within-cell pair scoring / min-id dup collapse as the
-    * `semantic_dedup` oracle, blocked on the fitted cluster instead of the
-    * fixture label.
-    */
-  private def semanticAutoOracle: Option[(String, String)] = autoCentroids.map { cs =>
-    "semantic_dedup_auto" ->
-      s"""WITH ${assignCtes(cs)},
-         |pc AS (SELECT pn.vec_id, pn.q, pn.n2, a.cluster FROM pn JOIN a USING (vec_id)),
-         |sd_scored AS (
-         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
-         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-         |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
-         |sd_dup AS (
-         |  SELECT id_b AS vec_id, min(id_a) AS dup_of FROM sd_scored
-         |  WHERE CAST(dot AS DOUBLE) /
-         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-         |  GROUP BY id_b)
-         |SELECT pc.vec_id, pc.cluster, d.dup_of, d.dup_of IS NULL AS is_kept
-         |FROM pc LEFT JOIN sd_dup d USING (vec_id)
-         |ORDER BY pc.vec_id""".stripMargin
-  }
-
-  /** embedding_near_dup_auto oracle: replay the captured-centroid
-    * assignment, then the same within-cell pair scoring as the
-    * `embedding_near_dup` oracle, blocked on the fitted cluster instead of
-    * the fixture label.
-    */
-  private def nearDupAutoOracle: Option[(String, String)] = nearDupAutoCentroids.map { cs =>
-    "embedding_near_dup_auto" ->
-      s"""WITH ${assignCtes(cs)},
-         |pc AS (SELECT pn.vec_id, pn.q, pn.n2, a.cluster FROM pn JOIN a USING (vec_id)),
-         |nd_scored AS (
-         |  SELECT x.cluster, x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
-         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-         |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
-         |SELECT cluster, id_a, id_b,
-         |  CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS cosine
-         |FROM nd_scored
-         |WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-         |ORDER BY id_a, id_b""".stripMargin
   }
 
   val PcaIters = 3
@@ -955,46 +739,31 @@ object SimilarityCatalog extends Catalog {
        |pc AS (SELECT pn.vec_id, pn.q, pn.n2, h.cluster FROM pn JOIN h USING (vec_id))""".stripMargin
   }
 
-  /** The hier-dedup oracle SQL body, shared verbatim by the expression-path
-    * query (`semantic_dedup_hier`) and the big-model table-path query
-    * (`semantic_dedup_bigmodel`): the two queries differ ONLY in how the
-    * engine evaluates the argmin (native kernel vs join+aggregate), so
-    * the truth — replay of the captured centroid tables — is the same SQL.
+  /** semantic_dedup_hier oracle: the shared two-level leaf assignment
+    * chain, then the within-cell pair scoring / min-id dup collapse
+    * blocked on the LEAF cell.
     */
-  private def hierDedupSql(coarse: Seq[(Int, Seq[Long])],
-                           sub: Seq[(Int, Int, Seq[Long])]): String =
-    s"""WITH ${hierAssignCtes(coarse, sub)},
-       |sd_scored AS (
-       |  SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
-       |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-       |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-       |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
-       |sd_dup AS (
-       |  SELECT id_b AS vec_id, min(id_a) AS dup_of FROM sd_scored
-       |  WHERE CAST(dot AS DOUBLE) /
-       |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-       |  GROUP BY id_b)
-       |SELECT pc.vec_id, pc.cluster, d.dup_of, d.dup_of IS NULL AS is_kept
-       |FROM pc LEFT JOIN sd_dup d USING (vec_id)
-       |ORDER BY pc.vec_id""".stripMargin
-
-  private def bigModelOracle: Option[(String, String)] =
-    bigModelCapture.map { case (coarse, sub) =>
-      "semantic_dedup_bigmodel" -> hierDedupSql(coarse, sub)
-    }
-
-  private def hybridOracle: Option[(String, String)] =
-    hybridCapture.map { case (coarse, sub) =>
-      "semantic_dedup_hybrid" -> hierDedupSql(coarse, sub)
-    }
-
   private def hierOracle: Option[(String, String)] = hierCapture.map { case (coarse, sub) =>
-    "semantic_dedup_hier" -> hierDedupSql(coarse, sub)
+    "semantic_dedup_hier" ->
+      s"""WITH ${hierAssignCtes(coarse, sub)},
+         |sd_scored AS (
+         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
+         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
+         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
+         |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
+         |sd_dup AS (
+         |  SELECT id_b AS vec_id, min(id_a) AS dup_of FROM sd_scored
+         |  WHERE CAST(dot AS DOUBLE) /
+         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
+         |  GROUP BY id_b)
+         |SELECT pc.vec_id, pc.cluster, d.dup_of, d.dup_of IS NULL AS is_kept
+         |FROM pc LEFT JOIN sd_dup d USING (vec_id)
+         |ORDER BY pc.vec_id""".stripMargin
   }
 
   /** embedding_near_dup_hier oracle: the shared two-level leaf assignment
     * chain, then the same within-cell pair scoring as the
-    * `embedding_near_dup_auto` oracle, blocked on the LEAF cell.
+    * `embedding_near_dup` oracle, blocked on the LEAF cell.
     */
   private def nearDupHierOracle: Option[(String, String)] =
     nearDupHierCapture.map { case (coarse, sub) =>
@@ -1449,13 +1218,10 @@ object SimilarityCatalog extends Catalog {
            |ORDER BY query_id, nn_id""".stripMargin
     }
 
-  /** semantic_dedup_srp_auto oracle: the srp-dedup SQL at the CAPTURED
-    * band width — same sketch formula, wider band keys.
-    */
-  /** The srp-dedup SQL at a band width — shared by the srp-auto and
-    * srp-bucket oracles (the two queries differ only in WHERE the engine
-    * evaluates the verify; the declared band + verify semantics, and so
-    * the replay, are identical).
+  /** The srp-dedup SQL at a band width — shared by the fixed-width
+    * `semantic_dedup_srp` and the adaptive-width `semantic_dedup_srp_bucket`
+    * oracles (the declared band + verify semantics, and so the replay, are
+    * identical; only the width differs).
     */
   private def srpDedupSqlAtWidth(rpb: Int): String =
     s"""WITH $prepSql,
@@ -1477,10 +1243,6 @@ object SimilarityCatalog extends Catalog {
        |SELECT e.vec_id, d.dup_of, d.dup_of IS NULL AS is_kept
        |FROM embeddings e LEFT JOIN sdup d USING (vec_id)
        |ORDER BY e.vec_id""".stripMargin
-
-  private def srpAutoOracle: Option[(String, String)] = srpAutoWidth.map { rpb =>
-    "semantic_dedup_srp_auto" -> srpDedupSqlAtWidth(rpb)
-  }
 
   private def srpBucketOracle: Option[(String, String)] = srpBucketWidth.map { rpb =>
     "semantic_dedup_srp_bucket" -> srpDedupSqlAtWidth(rpb)
@@ -1507,75 +1269,6 @@ object SimilarityCatalog extends Catalog {
          |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** The prefilter-sketch CTE (`projp, smp, skp`): [[Srp.preSketches]]'
-    * `preLongs` packed longs, exact mirror — hyperplane indices offset
-    * [[Srp.PreOffset]], [[Srp.PreBitsPerLong]] bits per long, same sign
-    * family and zero-tie rule as the banding sketch. Reuses `ex` from the
-    * banding CTE chain.
-    * (The wide form — one sum column per prefilter bit — measures ~13×
-    * faster in DuckDB than the long unnest-join form at 1 323 bits.)
-    */
-  private def srpPreCtes(preLongs: Int): String = {
-    val nPre = preLongs * Srp.PreBitsPerLong
-    val projCols = (0 until nPre).map(j => s"t_$j").mkString(", ")
-    val projValues = (0 until Dim).map { d =>
-      s"($d, ${(0 until nPre).map(j => Srp.sign(Srp.PreOffset + j, d)).mkString(", ")})"
-    }.mkString(",\n    ")
-    val sums = (0 until nPre)
-      .map(j => s"CAST(sum(x * t_$j) AS BIGINT) AS pp_$j").mkString(",\n    ")
-    val packed = (0 until preLongs).map { l =>
-      (0 until Srp.PreBitsPerLong)
-        .map(i => s"(CASE WHEN pp_${l * Srp.PreBitsPerLong + i} > 0 " +
-          s"THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)")
-        .mkString(" + ") + s" AS pf_$l"
-    }.mkString(",\n    ")
-    s"""projp(dim, $projCols) AS (VALUES
-       |    $projValues),
-       |smp AS (SELECT vec_id,
-       |    $sums
-       |  FROM ex JOIN projp USING (dim) GROUP BY vec_id),
-       |skp AS (SELECT vec_id,
-       |    $packed
-       |  FROM smp)""".stripMargin
-  }
-
-  private def srpPreOracle: Option[(String, String)] = srpPreWidth.map { rpb =>
-    // width and tau are pure functions of the registered verify threshold
-    // (Srp.preLongsFor / Srp.hammingTauFor) — the oracle replays both
-    val preLongs = Srp.preLongsFor(NearDupCos)
-    val tau = Srp.hammingTauFor(preLongs * Srp.PreBitsPerLong, NearDupCos)
-    // DuckDB bit_count returns TINYINT — 21 popcounts summed overflow 127
-    val ham = (0 until preLongs)
-      .map(l => s"CAST(bit_count(xor(sa.pf_$l, sb.pf_$l)) AS INTEGER)")
-      .mkString(" + ")
-    "semantic_dedup_srp_pre" ->
-      s"""WITH $prepSql,
-         |${srpSketchCtesWidth(rpb)},
-         |${srpPreCtes(preLongs)},
-         |scand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM bands a JOIN bands b ON a.b = b.b AND a.bv = b.bv
-         |    AND a.vec_id < b.vec_id),
-         |spre AS (SELECT scand.id_a, scand.id_b
-         |  FROM scand
-         |  JOIN skp sa ON sa.vec_id = scand.id_a
-         |  JOIN skp sb ON sb.vec_id = scand.id_b
-         |  WHERE $ham <= $tau),
-         |ssc AS (
-         |  SELECT spre.id_a, spre.id_b, x.n2 AS na, y.n2 AS nb,
-         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-         |  FROM spre
-         |  JOIN pn x ON x.vec_id = spre.id_a
-         |  JOIN pn y ON y.vec_id = spre.id_b),
-         |sdup AS (SELECT id_b AS vec_id, min(id_a) AS dup_of FROM ssc
-         |  WHERE CAST(dot AS DOUBLE) /
-         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-         |  GROUP BY id_b)
-         |SELECT e.vec_id, d.dup_of, d.dup_of IS NULL AS is_kept
-         |FROM embeddings e LEFT JOIN sdup d USING (vec_id)
-         |ORDER BY e.vec_id""".stripMargin
-  }
-
   private def srpOracle: String = {
     s"""$srpSketchCtes,
        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS nn_id
@@ -1592,33 +1285,12 @@ object SimilarityCatalog extends Catalog {
   }
 
   def oracleSql: Map[String, String] =
-    kmeansOracle.toMap ++ purityOracle.toMap ++ semanticAutoOracle.toMap ++
-      nearDupAutoOracle.toMap ++ srpAutoOracle.toMap ++ srpBucketOracle.toMap ++
-      nearDupSrpOracle.toMap ++ srpPreOracle.toMap ++
-      hierOracle.toMap ++ bigModelOracle.toMap ++ hybridOracle.toMap ++
-      nearDupHierOracle.toMap ++ nearDupTreeOracle.toMap ++
+    kmeansOracle.toMap ++ purityOracle.toMap ++ srpBucketOracle.toMap ++
+      nearDupSrpOracle.toMap ++ hierOracle.toMap ++ nearDupHierOracle.toMap ++
+      nearDupTreeOracle.toMap ++
       pqOracles ++ ivfPqOracle ++ ivfPqIndexOracle.toMap ++
       treeIvfPqOracle.toMap ++ annRecallOracle.toMap ++ Map(
-    "semantic_dedup_srp" ->
-      s"""WITH $prepSql,
-         |$srpSketchCtes,
-         |scand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM bands a JOIN bands b ON a.b = b.b AND a.bv = b.bv
-         |    AND a.vec_id < b.vec_id),
-         |ssc AS (
-         |  SELECT scand.id_a, scand.id_b, x.n2 AS na, y.n2 AS nb,
-         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-         |  FROM scand
-         |  JOIN pn x ON x.vec_id = scand.id_a
-         |  JOIN pn y ON y.vec_id = scand.id_b),
-         |sdup AS (SELECT id_b AS vec_id, min(id_a) AS dup_of FROM ssc
-         |  WHERE CAST(dot AS DOUBLE) /
-         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-         |  GROUP BY id_b)
-         |SELECT e.vec_id, d.dup_of, d.dup_of IS NULL AS is_kept
-         |FROM embeddings e LEFT JOIN sdup d USING (vec_id)
-         |ORDER BY e.vec_id""".stripMargin,
+    "semantic_dedup_srp" -> srpDedupSqlAtWidth(Srp.RowsPerBand),
 
     "embedding_pca" ->
       s"""WITH $pcaCtes

@@ -120,15 +120,13 @@ object Srp {
     * .SrpSketchQ]] long PER BAND over the SAME declared hyperplane family
     * `j = b·rowsPerBand + i` the packed layout reads, so the two paths
     * produce IDENTICAL band keys wherever both are defined (spec-pinned)
-    * and the wide path is a strict extension, not a second family. The
-    * prefilter sketch family starts at [[PreOffset]] = 256, clear of the
-    * banding family's maximum index [[Bands]]·63 − 1 = 251, so prefilter
-    * bits stay independent of band bits at every width.
+    * and the wide path is a strict extension, not a second family.
     */
   def bandedRows(df: DataFrame, id: String, vec: String, dim: Int,
                  rowsPerBand: Int): DataFrame = {
-    require(rowsPerBand >= 1 && rowsPerBand <= PreBitsPerLong,
-      s"band width must be in 1..$PreBitsPerLong bits, got $rowsPerBand")
+    // one sketch long per band at most: 63 usable (non-sign) bits
+    require(rowsPerBand >= 1 && rowsPerBand <= 63,
+      s"band width must be in 1..63 bits, got $rowsPerBand")
     if (rowsPerBand <= 15)
       bandRows(sketches(df, id, vec, dim, Bands * rowsPerBand), id, rowsPerBand)
     else bandedRowsWide(df, id, vec, dim, rowsPerBand)
@@ -160,7 +158,7 @@ object Srp {
     * blocked on SRP band buckets instead of learned cells — the shape for
     * when even a k ∝ n k-means fit is too expensive. The adaptive fit's
     * nearest-cell ASSIGNMENT alone costs n·k integer dots, quadratic once
-    * k tracks n (measured: `semantic_dedup_auto` 11.4× on 10× data at
+    * k tracks n (measured: the flat k ∝ n fit's dedup 11.4× on 10× data at
     * sf1); sketching is ONE narrow pass with no training, and bucket
     * volume tracks data density. Candidates = vectors sharing any band
     * bucket, verified by exact integer cosine at τ, collapsed to the
@@ -172,19 +170,6 @@ object Srp {
   def semanticDedupSrp(df: DataFrame, id: String, vec: String, dim: Int,
                        threshold: Double): DataFrame =
     semanticDedupSrpWidth(df, id, vec, dim, threshold, RowsPerBand)
-
-  /** [[semanticDedupSrp]] at a scale-adaptive band width
-    * ([[rowsPerBandFor]]): bucket count tracks n, so bucket occupancy —
-    * and spurious-candidate volume — stays ~constant per vector as the
-    * corpus grows. Returns the chosen width with the verdict frame so the
-    * gate oracle can replay the identical banding.
-    */
-  def semanticDedupSrpAuto(df: DataFrame, id: String, vec: String, dim: Int,
-                           threshold: Double,
-                           targetBucket: Long = 64L): (Int, DataFrame) = {
-    val rpb = rowsPerBandFor(df.count(), targetBucket)
-    (rpb, semanticDedupSrpWidth(df, id, vec, dim, threshold, rpb))
-  }
 
   def semanticDedupSrpWidth(df: DataFrame, id: String, vec: String, dim: Int,
                             threshold: Double, rowsPerBand: Int): DataFrame = {
@@ -210,95 +195,14 @@ object Srp {
       .select(col(id), col("dup_of"), col("dup_of").isNull.as("is_kept"))
   }
 
-  /** The prefilter sketch: [[preLongsFor]] additional longs of
-    * [[PreBitsPerLong]] SRP bits each (hyperplane indices offset past the
-    * banding sketch's, same declared [[sign]] family), joined at 8 B
-    * apiece where the full quantized vector costs ~0.5 KB. Why a separate
-    * sketch at all: the BANDING sketch cannot prefilter — a banded
-    * candidate already agrees on rpb of its ≤63 bits, and the conditional
-    * hamming mean of a random direction over the remaining bits sits
-    * almost exactly at any sane τ (measured: ~45% of spurious candidates
-    * survive, and the stage-2 payload stays the bottleneck).
-    */
-  val PreBitsPerLong = 63
-
-  /** First hyperplane index of the prefilter family — clear of the
-    * banding family's maximum possible index ([[Bands]]·63 − 1 = 251 at
-    * the uncapped width), so no prefilter bit ever repeats a banding bit
-    * at ANY band width.
-    */
-  val PreOffset = 256
-
-  /** How far (in σ of the RANDOM-pair hamming distribution) τ must sit
-    * below the random mean for the prune to bite: 3.7σ ⇒ a spurious
-    * banded candidate survives with P ≈ 10⁻⁴ (out of ~80 M banded
-    * candidates at 632k vectors, ~10⁴ spurious survivors reach the exact
-    * verify instead of ~36 M).
-    */
-  val PreRandomGapSigmas = 3.7
-
-  /** Per-bit disagreement probability of a pair at exactly cosine
-    * `threshold` under the SRP family: p = arccos(threshold)/π — the same
-    * collision identity the banding S-curve uses. The TRUE-pair loss
-    * bound below is computed at this p, i.e. at the worst admissible pair
-    * (any pair above the threshold flips strictly fewer bits in
-    * expectation).
-    */
-  def flipProbFor(threshold: Double): Double = math.acos(threshold) / math.Pi
-
-  /** Hamming prefilter bound over `totalPreBits` independent prefilter
-    * bits at a given verify threshold: τ = ⌈mean + 4.5σ⌉ of the TRUE-pair
-    * distribution Binomial(totalPreBits, [[flipProbFor]](threshold))
-    * (declared, replayed in the oracle) — a true pair AT the threshold is
-    * pruned with probability < 10⁻⁵. τ must be derived from the operator's
-    * actual threshold: the first cut hardcoded p = arccos(0.85)/π while
-    * the catalog verifies at cos 0.35, where a true pair flips bits with
-    * p ≈ 0.386 (mean ≈ 48.7 over 126 bits, far above that τ = 42) — true
-    * pairs in roughly the cos 0.35–0.6 band were silently pruned, and the
-    * gate could not see it because the oracle replays the same τ.
-    */
-  def hammingTauFor(totalPreBits: Int, threshold: Double): Int = {
-    val p = flipProbFor(threshold)
-    math.ceil(totalPreBits * p + 4.5 * math.sqrt(totalPreBits * p * (1 - p))).toInt
-  }
-
-  /** Prefilter width (in [[PreBitsPerLong]]-bit longs) for a verify
-    * threshold: the smallest width whose τ (true-pair mean + 4.5σ) still
-    * sits ≥ [[PreRandomGapSigmas]] σ below the random-direction mean —
-    * solve 0.5·z·√B ≤ (0.5 − p)·B − 4.5·√(B·p(1−p)) for the bit count B.
-    * Lower thresholds need wider sketches (the two binomials are closer):
-    * cos 0.85 → 2 longs (126 bits, τ 42 — the original fixed width was
-    * exactly this point), cos 0.5 → 10, cos 0.35 → 21 (168 B — still 3×
-    * under the full vector, and the prune is what keeps the pair frame
-    * off the wire). Safety does NOT depend on the width (τ tracks the
-    * true-pair distribution at any B); width only buys prune power.
-    */
-  def preLongsFor(threshold: Double): Int = {
-    val p = flipProbFor(threshold)
-    require(threshold > 0 && p < 0.5,
-      s"hamming prefilter needs a cosine threshold in (0, 1), got $threshold")
-    val s = (4.5 * math.sqrt(p * (1 - p)) + 0.5 * PreRandomGapSigmas) / (0.5 - p)
-    math.max(1, math.ceil(s * s / PreBitsPerLong).toInt)
-  }
-
-  /** `(id, pf_0 … pf_{preLongs−1})`: the prefilter sketch columns —
-    * `preLongs` independent [[graft.functions.SrpSketchQ]] longs whose
-    * hyperplane indices start at [[PreOffset]], past the banding family's
-    * maximum at any width, so no prefilter bit ever repeats a banding bit.
-    */
-  def preSketches(prepared: DataFrame, id: String, dim: Int,
-                  preLongs: Int): DataFrame = {
-    val cols = (0 until preLongs).map { l =>
-      val byBit = (0 until PreBitsPerLong).map(i =>
-        (0 until dim).map(d => sign(PreOffset + l * PreBitsPerLong + i, d)))
-      graft.functions.SrpSketchQ(col("q"), byBit).as(s"pf_$l")
-    }
-    prepared.select(col(id) +: cols: _*)
-  }
-
-  /** [[semanticDedupSrpAuto]] with the verify run WITHIN the band bucket —
-    * the round-10 production form, and the measured winner over both the
-    * pair-frame verify and the hamming-prefilter two-stage form. The pair
+  /** [[semanticDedupSrp]] at a scale-adaptive band width
+    * ([[rowsPerBandFor]]: bucket count tracks n, so bucket occupancy — and
+    * spurious-candidate volume — stays ~constant per vector as the corpus
+    * grows), with the verify run WITHIN the band bucket — the round-10
+    * production form, and the measured winner over both the pair-frame
+    * verify and a hamming-prefilter two-stage form. Returns the chosen
+    * width with the verdict frame so the gate oracle can replay the
+    * identical banding. The pair
     * problem was never compute (a banded candidate costs one 64-MAC dot,
     * ~2 s of arithmetic for 50 M candidates on this box) — it was
     * PAYLOAD: materializing the global candidate-pair list and then
@@ -311,8 +215,8 @@ object Srp {
     * [[semanticDedupSrpWidth]] bit-for-bit (same banding, same verify,
     * spec-pinned), so the oracle is the same band+verify replay. Measured
     * (SCALE.md round 10): 4.4/5.5/14.0 s at 200k/632k/2M — sub-linear,
-    * vs 23/299/— single-stage and 15/83/— prefilter two-stage; the
-    * cheapest TRAINING-FREE dedup at every measured point.
+    * vs 23/299/— pair-frame and 15/83/— prefilter two-stage; the cheapest
+    * TRAINING-FREE dedup at every measured point.
     */
   def semanticDedupSrpBucketAuto(df: DataFrame, id: String, vec: String,
                                  dim: Int, threshold: Double,
@@ -355,7 +259,7 @@ object Srp {
     * emitting the passing pairs themselves (`(id_a, id_b, cosine)`,
     * distinct, id_a < id_b): the SRP-banded, fit-free sibling of
     * [[Similarity.cellNearDupPairs]] over learned cells, completing the
-    * pair-tier matrix (flat-auto / hier / tree quantizers all need a
+    * pair-tier matrix (hier / tree quantizers both need a
     * k-means build; this needs none). Same declared band + verify
     * semantics as [[semanticDedupSrpWidth]], same scale shape as
     * [[semanticDedupSrpBucketWidth]]. Returns the captured width for the
@@ -405,92 +309,6 @@ object Srp {
         Similarity.cosineQ(Similarity.dotQ(col("qa"), col("qb")),
           col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
-
-  /** [[semanticDedupSrpAuto]] with a TWO-STAGE candidate verify — the fix
-    * for the measured srp-auto scale negative (SCALE.md round 9: the
-    * single-stage verify ships both full quantized vectors to every banded
-    * candidate, ~50 GB of join payload at 632k vectors → spill cascade,
-    * 12.8× wall on 3.16× data). Stage 1 joins the [[preLongsFor]]-long
-    * independent prefilter sketch ([[preSketches]]) and prunes on hamming
-    * distance ([[hammingTauFor]] — width AND τ derived from the operator's
-    * verify threshold, so the true-pair and random-direction distributions
-    * are ≥ (4.5 + [[PreRandomGapSigmas]])σ apart at ANY threshold, and
-    * survivors ≈ true pairs); stage 2 ships full vectors ONLY to survivors
-    * and verifies with the exact integer cosine, identical to the
-    * single-stage form. The prefilter is part of the operator's declared
-    * semantics (a true pair beyond τ is dropped — probability < 10⁻⁵ AT
-    * the dedup threshold, lower above it) and the oracle replays
-    * sketch → band → hamming → verify bit-for-bit, so the gate stays
-    * hash-exact.
-    *
-    * REGIME LIMIT, measured (SCALE.md round 10): the prune only bites
-    * when the bucket-mate cosine mass sits BELOW τ's implied cosine
-    * (≈ 0.17 at threshold 0.35) — the SemDeDup/high-dimension regime. On
-    * the d = 64 vec fixtures at n ≥ 632k, bucket-mates are conditioned on
-    * agreeing rpb sketch bits and their cosines center ≈ 0.2+, so ~2/3 of
-    * candidates survive τ and stage 2 pays the pair payload anyway
-    * (83 s at 632k). Use [[semanticDedupSrpBucketWidth]], whose cost does
-    * not depend on where the candidate mass sits, as the production form.
-    */
-  def semanticDedupSrpPrefilter(df: DataFrame, id: String, vec: String,
-                                dim: Int, threshold: Double,
-                                targetBucket: Long = 64L): (Int, DataFrame) = {
-    val rpb = rowsPerBandFor(df.count(), targetBucket)
-    (rpb, semanticDedupSrpPrefilterWidth(df, id, vec, dim, threshold, rpb))
-  }
-
-  /** The two-stage pipeline at an explicit band width; `tau` < 0 derives
-    * [[hammingTauFor]] at the verify threshold (an explicit
-    * τ ≥ preLongs·PreBitsPerLong disables pruning — the spec pins that
-    * degenerate form ≡ [[semanticDedupSrpWidth]]).
-    */
-  def semanticDedupSrpPrefilterWidth(df: DataFrame, id: String, vec: String,
-                                     dim: Int, threshold: Double,
-                                     rowsPerBand: Int, tau: Int = -1): DataFrame = {
-    val preLongs = preLongsFor(threshold)
-    val t = if (tau < 0) hammingTauFor(preLongs * PreBitsPerLong, threshold) else tau
-    val p = Similarity.prepare(df, id, vec)
-      .select(col(id), col("q"), col("n2")).localCheckpoint(false)
-    val bands0 = bandedRows(p, id, vec, dim, rowsPerBand).localCheckpoint(false)
-    // The prefilter sketch (one narrow codegen pass per vector) rides ON
-    // the band rows — PreLongs·8 B of extra payload on the n·Bands-row
-    // band frame — so the hamming prune evaluates INSIDE the band join's
-    // output projection. The candidate pair frame is never exchanged: the
-    // only pair-volume work is the in-partition popcount, and the distinct
-    // + exact verify see survivors only (≈ true pairs at the declared τ).
-    // The first cut of this operator joined the sketches onto the pair
-    // frame instead — three full pair-frame shuffles, measured 10.6× on
-    // 3.16× data at the 632k→2M step from spill alone.
-    val bandsPf = bands0
-      .join(preSketches(p, id, dim, preLongs), Seq(id))
-      .localCheckpoint(false)
-    val hamming = (0 until preLongs)
-      .map(l => bit_count(col(s"pa_$l").bitwiseXOR(col(s"pb_$l"))))
-      .reduce(_ + _)
-    val pre = bandsPf
-      .select(col(id).as("id_a") +: col("band") +:
-        (0 until preLongs).map(l => col(s"pf_$l").as(s"pa_$l")): _*)
-      .join(bandsPf.select(col(id).as("id_b") +: col("band") +:
-        (0 until preLongs).map(l => col(s"pf_$l").as(s"pb_$l")): _*),
-        Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(hamming <= t)
-      .select("id_a", "id_b").distinct()
-    // stage 2: full vectors for survivors only, exact integer cosine
-    val dupOf = pre
-      .join(p.select(col(id).as("id_a"), col("q").as("qa"), col("n2").as("na")),
-        Seq("id_a"))
-      .join(p.select(col(id).as("id_b"), col("q").as("qb"), col("n2").as("nb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Similarity.cosineQ(Similarity.dotQ(col("qa"), col("qb")),
-          col("na"), col("nb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .groupBy(col("id_b").as(id)).agg(min(col("id_a")).as("dup_of"))
-    df.select(col(id))
-      .join(dupOf, Seq(id), "left")
-      .select(col(id), col("dup_of"), col("dup_of").isNull.as("is_kept"))
   }
 
   def annTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,

@@ -263,7 +263,7 @@ object TextCatalog extends Catalog {
     // compression under the bpe_train_merges vocabulary — the memoized
     // trained-merge table applied by the native per-row kernel
     // (BpeCountQ), one codegen'd scan with zero shuffles; the loop form
-    // (bpeEncodeStatsFromMerges) stays as the spec-pinned value oracle
+    // (SpecForms.bpeEncodeStatsFromMerges, test side) is the value oracle
     "bpe_encode_stats" -> ((s, d) =>
       TextOps.bpeEncodeStatsKernel(Tables(s, d).documents, "doc_id", "text",
           bpeFit(s, d).map { case (_, a, b, _) => (a, b) })

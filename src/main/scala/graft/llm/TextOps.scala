@@ -622,36 +622,23 @@ object TextOps {
     encodeStatsFrom(df, id, textCol, toks)
   }
 
-  /** [[bpeEncodeStats]] from an ALREADY-TRAINED merge table — the
-    * fit-once/consume-many encode path: applying a known `(a, b)` list
-    * skips the per-round argmax aggregate+collect job the training loop
-    * pays (the only per-round work is the merge-application window chain),
-    * halving the encode's per-round job count. Output-identical to
-    * `bpeEncodeStats(df, id, textCol, merges.length)` when `merges` is the
-    * table [[bpeTrain]] learns on `df`.
-    */
-  def bpeEncodeStatsFromMerges(df: org.apache.spark.sql.DataFrame, id: String,
-                               textCol: String,
-                               merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
-    var toks = df.select(col(id), posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-      .localCheckpoint(false)
-    merges.foreach { case (a, b) => toks = applyMerge(toks, id, a, b) }
-    encodeStatsFrom(df, id, textCol, toks)
-  }
-
-  /** [[bpeEncodeStatsFromMerges]] through the native per-row kernel
-    * ([[graft.functions.BpeCountQ]]): encode under a FIXED merge table is
-    * per-document-local (the loop path's windows partition by the doc id),
+  /** [[bpeEncodeStats]] from an ALREADY-TRAINED merge table, through the
+    * native per-row kernel ([[graft.functions.BpeCountQ]]): encode under a
+    * FIXED merge table is per-document-local (the loop path's windows
+    * partition by the doc id),
     * so all merges apply inside ONE codegen'd scan — zero shuffles, no
     * per-round materialization, cost independent of the merge count's job
     * structure. Output-identical to the loop path (FunctionsSpec pins the
-    * kernel; LlmSpec pins this frame) — this is the production encode,
-    * the loop form is the relational value oracle.
+    * kernel against the test-side `SpecForms.bpeEncodeStatsFromMerges`) —
+    * this is the production encode, the loop form is the relational value
+    * oracle.
     */
   def bpeEncodeStatsKernel(df: org.apache.spark.sql.DataFrame, id: String,
                            textCol: String,
                            merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
     df.select(col(id), tokens(col(textCol)).as("__toks"))
+      // null text has no tokens and so no stats row, as in the loop path
+      .filter(col("__toks").isNotNull)
       .select(col(id),
         size(col("__toks")).cast("long").as("n_tokens_raw"),
         graft.functions.BpeCountQ(col("__toks"), merges).as("n_tokens_bpe"))
@@ -659,9 +646,9 @@ object TextOps {
         (col("n_tokens_raw") - col("n_tokens_bpe")).as("n_merges_applied"),
         (col("n_tokens_raw").cast("double") / col("n_tokens_bpe")).as("compression"))
 
-  private def encodeStatsFrom(df: org.apache.spark.sql.DataFrame, id: String,
-                              textCol: String,
-                              toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[llm] def encodeStatsFrom(df: org.apache.spark.sql.DataFrame, id: String,
+                                   textCol: String,
+                                   toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val raw = df.select(col(id), size(tokens(col(textCol))).cast("long").as("n_tokens_raw"))
     val enc = toks.groupBy(col(id)).agg(count(lit(1)).as("n_tokens_bpe"))
     raw.join(enc, Seq(id))
@@ -677,8 +664,8 @@ object TextOps {
     * strictly increasing), so skipping the rebuild removes one full sort
     * pass per round (measured ~15% of the round).
     */
-  private def applyMerge(toks: org.apache.spark.sql.DataFrame, id: String,
-                         a: String, b: String): org.apache.spark.sql.DataFrame = {
+  private[llm] def applyMerge(toks: org.apache.spark.sql.DataFrame, id: String,
+                              a: String, b: String): org.apache.spark.sql.DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(id).orderBy("pos")
     val wr = org.apache.spark.sql.expressions.Window.partitionBy(id, "run_id").orderBy("pos")
     val prv = lag(col("tok"), 1).over(w)

@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * nothing stale may linger there. `sbt test` therefore goes red the moment
   * a query is registered until the artifacts are regenerated
   * (`SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.Bench"` ×3
-  * and `tools/sf01_gate.py`).
+  * and `tools/sf01_gate.py`). The reverse direction is checked too: a
+  * query in the previous sf0.1 gate artifact that is no longer registered
+  * must have a row in `src/test/resources/retired_queries.tsv` naming its
+  * registered successor and the reason.
   *
   * Parsing is deliberately primitive (regex over the committed JSON text,
   * no schema assumptions beyond the `"name":<number>` pairs Bench prints
@@ -23,10 +26,14 @@ class ArtifactsSpec extends AnyFunSuite {
   private def read(f: java.io.File): String =
     new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
 
-  /** Latest round number among committed files matching `prefix<digits>suffix`. */
+  /** Round numbers, ascending, among committed files matching `re`. */
+  private def rounds(dir: java.io.File, re: scala.util.matching.Regex): Seq[Int] =
+    dir.listFiles().toSeq.flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
+      .sorted
+
+  /** Latest round number among committed files matching `re`. */
   private def latestRound(dir: java.io.File, re: scala.util.matching.Regex): Option[Int] =
-    dir.listFiles().flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .sorted.lastOption
+    rounds(dir, re).lastOption
 
   private val repo = new java.io.File(".")
   private val registered: Set[String] = SparkEntry.queries.keySet
@@ -56,16 +63,22 @@ class ArtifactsSpec extends AnyFunSuite {
     }
   }
 
-  private def checkGateArtifact(sfTag: String): Unit = {
-    val re = ("""^CORRECTNESS_""" + java.util.regex.Pattern.quote(sfTag) +
-      """_r(\d+)\.json$""").r
-    val round = latestRound(repo, re).getOrElse(fail(s"no committed $sfTag gate artifact"))
-    val f = new java.io.File(repo, s"CORRECTNESS_${sfTag}_r$round.json")
-    // gate artifact: {"counts": ..., "protocol": ..., "queries": {name: {...}}}
-    // — query names are exactly the object-valued keys minus the two
-    // structural wrappers
-    val keys = """"([A-Za-z0-9_.]+)"\s*:\s*\{""".r
+  private def gateRe(sfTag: String): scala.util.matching.Regex =
+    ("""^CORRECTNESS_""" + java.util.regex.Pattern.quote(sfTag) + """_r(\d+)\.json$""").r
+
+  /** Query names of a gate artifact: {"counts": ..., "protocol": ...,
+    * "queries": {name: {...}}} — exactly the object-valued keys minus the
+    * two structural wrappers.
+    */
+  private def gateNames(f: java.io.File): Set[String] =
+    """"([A-Za-z0-9_.]+)"\s*:\s*\{""".r
       .findAllMatchIn(read(f)).map(_.group(1)).toSet -- Set("counts", "queries")
+
+  private def checkGateArtifact(sfTag: String): Unit = {
+    val round = latestRound(repo, gateRe(sfTag))
+      .getOrElse(fail(s"no committed $sfTag gate artifact"))
+    val f = new java.io.File(repo, s"CORRECTNESS_${sfTag}_r$round.json")
+    val keys = gateNames(f)
     val missing = registered -- keys
     assert(missing.isEmpty,
       s"queries registered but absent from ${f.getName} — rerun tools/sf01_gate.py: $missing")
@@ -75,6 +88,26 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("every registered query is in the latest committed sf0.1 gate artifact") {
     checkGateArtifact("sf0.1")
+  }
+
+  test("every query dropped since the previous sf0.1 gate artifact is a declared retirement") {
+    // a query that leaves the registry must leave with a row in
+    // retired_queries.tsv (name, successor, reason) — never a silent drop.
+    // The previous gate artifact is the last committed registry snapshot.
+    val rs = rounds(repo, gateRe("sf0.1"))
+    assert(rs.size >= 2, "need two committed sf0.1 gate artifacts to compare")
+    val previous = gateNames(new java.io.File(repo, s"CORRECTNESS_sf0.1_r${rs(rs.size - 2)}.json"))
+    val rows = scala.io.Source.fromFile("src/test/resources/retired_queries.tsv", "UTF-8")
+      .getLines().drop(1).filter(_.nonEmpty).map(_.split("\t")).toSeq
+    assert(rows.forall(_.length == 3), "retired_queries.tsv rows are name, successor, reason")
+    val successor = rows.map(r => r(0) -> r(1)).toMap
+    val undeclared = previous -- registered -- successor.keySet
+    assert(undeclared.isEmpty,
+      s"queries dropped without a retired_queries.tsv row: $undeclared")
+    val revived = successor.keySet & registered
+    assert(revived.isEmpty, s"retired queries still registered: $revived")
+    val dangling = successor.values.toSet -- registered
+    assert(dangling.isEmpty, s"retirement successors not registered: $dangling")
   }
 
   test("test-report directory carries no report for a deleted spec") {

@@ -152,12 +152,45 @@ class DocHashQSpec extends SparkSpec {
   test("MinHashQ kernel signatures equal the 64-min aggregate chain (fixture + synth)") {
     import graft.llm.Dedup
     Seq(docs, synth).foreach { df =>
-      val viaAgg = Dedup.minhashSignatures(
+      val viaAgg = graft.llm.SpecForms.minhashSignatures(
         Dedup.shingleRows(df, "doc_id", "text"), "doc_id")
       val viaKernel = Dedup.kernelSignatures(df, "doc_id", "text", 3)
         .select(col("doc_id") +: (0 until 64).map(i =>
           element_at(col("__sig"), i + 1).as(s"sig_$i")): _*)
       assertRowsEqual(viaKernel, viaAgg)
+    }
+  }
+
+  // generated-document properties (DocGen): each kernel against its chain
+  test("property: SimHashDoc equals the 60-vote chain on generated documents") {
+    DocGen.check(spark) { df =>
+      assertRowsEqual(df.filter(col("text").isNotNull).select(col("doc_id"),
+        graft.functions.SimHashQ(TextOps.tokens(col("text"))).as("fp_simhash")),
+        chainSimHash(df))
+    }
+  }
+
+  test("property: RollingHashDoc equals the decimal-sum chain on generated documents") {
+    DocGen.check(spark) { df =>
+      assertRowsEqual(df.filter(col("text").isNotNull).select(col("doc_id"),
+        graft.functions.RollingHashQ(TextOps.tokens(col("text"))).as("fp_rolling")),
+        chainRolling(df))
+    }
+  }
+
+  test("property: LangTriScores equals the profile-join chain on generated documents") {
+    DocGen.check(spark) { df =>
+      assertRowsEqual(kernelLangScores(df), chainLangScores(df))
+    }
+  }
+
+  test("property: MinHashSig equals the 64-min aggregate on generated documents") {
+    import graft.llm.{Dedup, SpecForms}
+    DocGen.check(spark) { df =>
+      assertRowsEqual(Dedup.kernelSignatures(df, "doc_id", "text", 3)
+          .select(col("doc_id") +: (0 until 64).map(i =>
+            element_at(col("__sig"), i + 1).as(s"sig_$i")): _*),
+        SpecForms.minhashSignatures(Dedup.shingleRows(df, "doc_id", "text"), "doc_id"))
     }
   }
 

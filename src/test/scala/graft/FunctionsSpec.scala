@@ -341,9 +341,21 @@ class FunctionsSpec extends SparkSpec {
     val fast = graft.llm.TextOps
       .bpeEncodeStatsKernel(docs, "doc_id", "text", merges)
       .orderBy("doc_id").collect().toSeq
-    val ref = graft.llm.TextOps
+    val ref = graft.llm.SpecForms
       .bpeEncodeStatsFromMerges(docs, "doc_id", "text", merges)
       .orderBy("doc_id").collect().toSeq
     assert(fast === ref)
+  }
+
+  test("property: BpeEncodeCountQ stats equal the loop-path encode on generated documents") {
+    DocGen.check(spark) { df =>
+      val merges = graft.llm.TextOps.bpeTrainTable(df, "doc_id", "text", 3)
+        .map { case (_, a, b, _) => (a, b) }
+      val fast = graft.llm.TextOps.bpeEncodeStatsKernel(df, "doc_id", "text", merges)
+      val ref = graft.llm.SpecForms.bpeEncodeStatsFromMerges(df, "doc_id", "text", merges)
+      val (onlyFast, onlyRef) = (fast.except(ref).collect(), ref.except(fast).collect())
+      assert(onlyFast.isEmpty && onlyRef.isEmpty, s"kernel and loop encode diverge " +
+        s"under merges $merges: kernel-only ${onlyFast.toSeq}, loop-only ${onlyRef.toSeq}")
+    }
   }
 }

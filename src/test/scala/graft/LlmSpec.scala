@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.llm.{Curation, Dedup, Similarity, TextOps}
+import graft.llm.{Curation, Dedup, Similarity, SpecForms, TextOps}
 
 /** Cross-validation and property checks for the LLM-pipeline operators. */
 class LlmSpec extends SparkSpec {
@@ -38,7 +38,7 @@ class LlmSpec extends SparkSpec {
   test("identical texts get identical minhash signatures and jaccard 1.0") {
     val df = Seq((1L, "a b c d e f g"), (2L, "a b c d e f g"), (3L, "x y z w v u t"))
       .toDF("doc_id", "text")
-    val sig = Dedup.minhashSignatures(Dedup.shingleRows(df, "doc_id", "text"), "doc_id")
+    val sig = SpecForms.minhashSignatures(Dedup.shingleRows(df, "doc_id", "text"), "doc_id")
       .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
     assert(sig(1L) === sig(2L))
     assert(sig(1L) !== sig(3L))
@@ -448,7 +448,7 @@ class LlmSpec extends SparkSpec {
     val sample = Tables(spark, sf).documents.limit(80)
     val merges = TextOps.bpeTrainTable(sample, "doc_id", "text", 3)
       .map { case (_, a, b, _) => (a, b) }
-    val viaFit = TextOps.bpeEncodeStatsFromMerges(sample, "doc_id", "text", merges)
+    val viaFit = SpecForms.bpeEncodeStatsFromMerges(sample, "doc_id", "text", merges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val direct = TextOps.bpeEncodeStats(sample, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -485,7 +485,7 @@ class LlmSpec extends SparkSpec {
       Seq((1L, mid), (2L, near), (3L, base)).toDF("doc_id", "text")
     }.find { df =>
       val sh = Dedup.shingleRows(df, "doc_id", "text")
-      Dedup.lshCandidates(sh, "doc_id")
+      SpecForms.lshCandidates(sh, "doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         .contains((1L, 3L))
     }

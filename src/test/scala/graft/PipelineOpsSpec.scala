@@ -264,13 +264,13 @@ class PipelineOpsSpec extends SparkSpec {
   test("uncapped-width SRP dedup still collapses identical vectors") {
     // identical twins agree on every sketch bit, so they collide on every
     // band at ANY width — including past the old 15-bit packing ceiling —
-    // in both the single-stage and the two-stage prefilter pipelines
+    // in both the pair-frame and the within-bucket verify pipelines
     val base = (0 until 64).map(i => ((i * 37 % 19) - 9).toFloat / 10f)
     val far = (0 until 64).map(i => (((i * 53 + 7) % 17) - 8).toFloat / 9f)
     val df = Seq((1L, base), (2L, base), (9L, far)).toDF("vec_id", "embedding")
     for (pipeline <- Seq(
         Srp.semanticDedupSrpWidth(df, "vec_id", "embedding", 64, 0.85, 20),
-        Srp.semanticDedupSrpPrefilterWidth(df, "vec_id", "embedding", 64, 0.85, 20))) {
+        Srp.semanticDedupSrpBucketWidth(df, "vec_id", "embedding", 64, 0.85, 20))) {
       val out = pipeline.collect()
         .map(r => (r.getLong(0), Option(r.get(1)))).toMap
       assert(out(2L) === Some(1L) && out(1L) === None && out(9L) === None)
@@ -286,7 +286,7 @@ class PipelineOpsSpec extends SparkSpec {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
     val dup = df.select((col("vec_id") + 100).as("vec_id"), col("embedding"))
-    val (rpb, out) = Srp.semanticDedupSrpAuto(df.union(dup), "vec_id",
+    val (rpb, out) = Srp.semanticDedupSrpBucketAuto(df.union(dup), "vec_id",
       "embedding", 4, 0.999, targetBucket = 4L)
     assert(rpb >= Srp.RowsPerBand)
     val rows = out.collect()
@@ -425,155 +425,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture should contain at least one passing pair")
   }
 
-  test("srp two-stage prefilter: disabled-tau degenerates to the single-stage form") {
-    // tau >= totalBits disables pruning, so the two-stage pipeline must be
-    // EXACTLY the single-stage dedup — the prefilter only ever removes
-    // candidates, and stage 2 is byte-identical verify logic
-    import graft.llm.Srp
-    val rpb = Srp.rowsPerBandFor(emb.count(), 64L)
-    val single = Srp.semanticDedupSrpWidth(emb, "vec_id", "embedding", 64, 0.85, rpb)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
-    val noPrune = Srp.semanticDedupSrpPrefilterWidth(emb, "vec_id", "embedding",
-        64, 0.85, rpb, tau = Srp.preLongsFor(0.85) * Srp.PreBitsPerLong)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
-    assert(noPrune === single)
-  }
-
-  test("srp prefilter keeps identical twins and prunes a far pair") {
-    import graft.llm.Srp
-    // two identical vectors (hamming 0 — must survive any tau and dedup)
-    // plus an unrelated far vector
-    val base = (0 until 64).map(i => ((i * 37 % 19) - 9).toFloat / 10f)
-    val far = (0 until 64).map(i => (((i * 53 + 7) % 17) - 8).toFloat / 9f)
-    val df = Seq((1L, base), (2L, base), (9L, far))
-      .toDF("vec_id", "embedding")
-    val out = Srp.semanticDedupSrpPrefilterWidth(df, "vec_id", "embedding",
-        64, 0.85, 4)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toMap
-    assert(out(2L) === Some(1L), "identical twin collapses to the min id")
-    assert(out(1L) === None && out(9L) === None)
-    // width and tau follow the declared threshold-derived formulas:
-    // tau = mean + 4.5 sigma of Binomial(bits, arccos(threshold)/pi),
-    // width = smallest longs count keeping tau >= 3.7 sigma under the
-    // random-direction mean. cos 0.85 reproduces the original fixed
-    // point (2 longs, tau 42); the catalog's cos 0.35 needs 21 longs
-    // (the two binomials are closer) and tau 591.
-    assert(Srp.preLongsFor(0.85) === 2)
-    assert(Srp.hammingTauFor(2 * Srp.PreBitsPerLong, 0.85) === 42)
-    assert(Srp.preLongsFor(0.35) === 21)
-    assert(Srp.hammingTauFor(21 * Srp.PreBitsPerLong, 0.35) === 591)
-  }
-
-  test("srp prefilter keeps a true pair just above the verify threshold") {
-    // cos(v1, v2) ~ 0.45: inside the dedup band (NearDupCos = 0.35) but far
-    // below 0.85. Under a fixed-width prefilter sized for cos >= 0.85
-    // (126 bits, tau 42) this pair's expected hamming (~0.35/bit ~ 465)
-    // made it prune with near-certainty — a silent true-pair loss the gate
-    // could not see because the oracle replayed the same tau. The
-    // threshold-derived width/tau must keep it.
-    import graft.llm.Similarity
-    val v1 = (0 until 64).map(i =>
-      if (i < 32) ((i * 37 % 19) - 9).toFloat / 10f else 0f)
-    val w = (0 until 64).map(i =>
-      if (i >= 32) (((i * 53 + 7) % 17) - 8).toFloat / 9f else 0f)
-    val n1 = math.sqrt(v1.map(x => x.toDouble * x).sum).toFloat
-    val nw = math.sqrt(w.map(x => x.toDouble * x).sum).toFloat
-    val v2 = v1.zip(w).map { case (a, b) => 0.45f * a / n1 + 0.893f * b / nw }
-    val df = Seq((1L, v1.map(_ / n1)), (2L, v2)).toDF("vec_id", "embedding")
-    val out = Srp.semanticDedupSrpPrefilterWidth(df, "vec_id", "embedding",
-        64, 0.35, 1)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toMap
-    assert(out(2L) === Some(1L),
-      "a cos~0.45 pair must survive the threshold-derived prefilter")
-    assert(out(1L) === None)
-    // and the pair genuinely sits in the regime the old fixed tau pruned:
-    // its prefilter hamming is way beyond 42 yet under the derived 591
-    val pl = Srp.preLongsFor(0.35)
-    val pf = Srp.preSketches(
-        Similarity.prepare(df, "vec_id", "embedding"), "vec_id", 64, pl)
-      .orderBy("vec_id").collect()
-    val ham = (1 to pl).map(c =>
-      java.lang.Long.bitCount(pf(0).getLong(c) ^ pf(1).getLong(c))).sum
-    assert(ham > 42 && ham <= Srp.hammingTauFor(pl * Srp.PreBitsPerLong, 0.35),
-      s"pair hamming $ham should exceed the old fixed tau yet pass the derived one")
-  }
-
-  test("table-path assignment fails loudly on a gap in the centroid tables") {
-    // a node with no children in the next level table means the levels
-    // input is malformed/incomplete — the old inner join silently dropped
-    // every id assigned to that node; the left join + raise_error must
-    // surface it instead
-    val hier = Similarity.hierarchicalFit(emb, "vec_id", "embedding", 64L, 2)
-    val tables = Similarity.centroidLevelTables(spark, hier.coarse, Seq(hier.sub))
-    // pick a coarse cell that actually owns rows, then orphan it
-    val victim = Similarity.assignViaCentroidTables(emb, "vec_id", "embedding",
-      Seq(tables.head)).select("cluster").head().getInt(0)
-    val gapped = Seq(tables.head, tables(1).filter(col("parent") =!= victim))
-    val e = intercept[Throwable] {
-      Similarity.assignViaCentroidTables(emb, "vec_id", "embedding", gapped)
-        .collect()
-    }
-    def messages(t: Throwable): String =
-      if (t == null) "" else Option(t.getMessage).getOrElse("") + messages(t.getCause)
-    assert(messages(e).contains("no children in the next centroid level"))
-  }
-
-  test("table-path assignment equals the expression kernels on every model shape") {
-    // the big-model path (per-level equi-join on parent + argmin aggregate)
-    // must reproduce the native kernels' assignment EXACTLY — same integer
-    // comparison key, same lower-cid tie-break — at depth 1 (flat), 2
-    // (hier), and 3 (tree), because it is registered as the evaluation-
-    // strategy twin of the expression path, not an approximation
-    val flat = Similarity.kmeansFit(emb, "vec_id", "embedding",
-      Similarity.cellCountFor(emb.count(), 64L), iters = 2)
-    val hier = Similarity.hierarchicalFit(emb, "vec_id", "embedding", 64L, 2)
-    val tree = Similarity.treeFit(emb, "vec_id", "embedding", 64L, depth = 3, iters = 2)
-    def viaTables(root: Seq[(Int, Seq[Long])],
-                  subs: Seq[Seq[(Int, Int, Seq[Long])]]): Map[Long, Int] =
-      Similarity.assignViaCentroidTables(emb, "vec_id", "embedding",
-          Similarity.centroidLevelTables(spark, root, subs))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    def viaKernel(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaTables(flat.centroids, Nil) === viaKernel(flat.assign(emb)))
-    assert(viaTables(hier.coarse, Seq(hier.sub)) === viaKernel(hier.assign(emb)))
-    assert(viaTables(tree.root, tree.subLevels) === viaKernel(tree.assign(emb)))
-    // the HYBRID strategy (kernel coarse + table leaf) sits between the
-    // two ends and must equal both — same integer key, same tie-break
-    val viaHybrid = Similarity.assignHybrid(emb, "vec_id", "embedding",
-        hier.coarse,
-        Similarity.centroidLevelTables(spark, hier.coarse, Seq(hier.sub)).last)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaHybrid === viaKernel(hier.assign(emb)))
-    // and the table path is partitioning-invariant like everything else
-    val repart = Similarity.assignViaCentroidTables(emb.repartition(7),
-        "vec_id", "embedding",
-        Similarity.centroidLevelTables(spark, hier.coarse, Seq(hier.sub)))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(repart === viaKernel(hier.assign(emb)))
-  }
-
-  test("assignHybrid drops null-embedding rows like both pure paths") {
-    // the null contract: a null vector scores to a null coarse node, and
-    // every evaluation strategy must DROP that row (the kernel argmin's
-    // not-null filter does; the hybrid's leaf left-join would instead
-    // miss and trip the centroid-gap raise_error, aborting the job)
-    val hier = Similarity.hierarchicalFit(emb, "vec_id", "embedding", 64L, 2)
-    val leaf = Similarity.centroidLevelTables(spark, hier.coarse, Seq(hier.sub)).last
-    val dirty = emb.select(col("vec_id"), col("embedding"))
-      .unionByName(Seq((-1L, null.asInstanceOf[Array[Float]]))
-        .toDF("vec_id", "embedding"))
-    def canon(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val clean = canon(hier.assign(emb))
-    assert(canon(hier.assign(dirty)) === clean, "kernel path drops the null row")
-    assert(canon(Similarity.assignHybrid(dirty, "vec_id", "embedding",
-      hier.coarse, leaf)) === clean, "hybrid path drops it identically")
-    assert(canon(Similarity.assignViaCentroidTables(dirty, "vec_id", "embedding",
-      Similarity.centroidLevelTables(spark, hier.coarse, Seq(hier.sub)))) === clean,
-      "all-table path drops it identically")
-  }
-
   test("chunkedQueries slicing is exact: sliced topK == unsliced topK") {
     // the beyond-broadcast driver: per-query results are independent, so
     // any hash-slicing of the query set must reproduce the single-broadcast
@@ -696,21 +547,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got(3L) === ((None, true)), "cells block the pair search")
   }
 
-  test("semanticDedupAuto matches semanticDedup over its own fitted cells") {
-    val t = graft.engine.Tables(spark, sf)
-    val e = t.embeddings
-    val (model, auto) = Similarity.semanticDedupAuto(e, "vec_id", "embedding", 0.35)
-    val manual = Similarity.semanticDedup(
-      e.join(model.assign(e), Seq("vec_id")), "vec_id", "embedding", "cluster", 0.35)
-    assert(auto.orderBy("vec_id").collect().toSeq
-      === manual.orderBy("vec_id").collect().toSeq)
-    // k tracks corpus size at constant target cell size
-    assert(Similarity.cellCountFor(500L, 64L) === 8)
-    assert(Similarity.cellCountFor(5000L, 64L) === 79)
-    assert(Similarity.cellCountFor(10L, 64L) === 8, "floor holds for tiny corpora")
-    assert(model.centroids.size === Similarity.cellCountFor(e.count(), 64L))
-  }
-
   test("semanticDedupHier matches semanticDedup over its own fitted leaves") {
     val t = graft.engine.Tables(spark, sf)
     val e = t.embeddings
@@ -719,8 +555,12 @@ class PipelineOpsSpec extends SparkSpec {
       e.join(model.assign(e), Seq("vec_id")), "vec_id", "embedding", "cluster", 0.35)
     assert(hier.orderBy("vec_id").collect().toSeq
       === manual.orderBy("vec_id").collect().toSeq)
-    // the two-level split reaches the same leaf-count regime as the flat
-    // auto fit (k₁·k₂ ≥ k leaves available) at √k-sized argmin tables
+    // k tracks corpus size at constant target cell size
+    assert(Similarity.cellCountFor(500L, 64L) === 8)
+    assert(Similarity.cellCountFor(5000L, 64L) === 79)
+    assert(Similarity.cellCountFor(10L, 64L) === 8, "floor holds for tiny corpora")
+    // the two-level split reaches the same leaf-count regime as a flat
+    // k ∝ n fit (k₁·k₂ ≥ k leaves available) at √k-sized argmin tables
     val kTotal = Similarity.cellCountFor(e.count(), 64L)
     val k1 = math.max(2, math.ceil(math.sqrt(kTotal.toDouble)).toInt)
     assert(model.coarse.size === k1)
@@ -733,6 +573,10 @@ class PipelineOpsSpec extends SparkSpec {
     val leaves = model.sub.map(_._2).toSet
     assert(assigned.select("cluster").distinct().collect()
       .forall(r => leaves(r.getInt(0))))
+    // null contract: a null embedding argmins to null and its row is dropped
+    val dirty = e.select(col("vec_id"), col("embedding"))
+      .unionByName(Seq((-1L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
+    assert(model.assign(dirty).collect().toSet === assigned.collect().toSet)
   }
 
   test("hierarchical dedup collapses identical vectors across a real fit") {

@@ -37,8 +37,6 @@ class PlanAuditSpec extends SparkSpec {
         "embedding_contamination",
         "embedding_contamination_fixed", // fixed benchmark set broadcast
         "kmeans_label_purity", // broadcast centroid set in the fit/assign
-        "semantic_dedup_auto", // same broadcast centroid set (adaptive-k fit)
-        "embedding_near_dup_auto", // same shared adaptive-k centroid broadcast
         "tfidf_top_terms",  // broadcast of the 1-row corpus-count aggregate
         "bm25_top_terms",   // broadcast of the 1-row (n_docs, total_dl) stats
         "bm25_retrieval",   // same 1-row stats broadcast as bm25_top_terms
@@ -62,11 +60,7 @@ class PlanAuditSpec extends SparkSpec {
         "stream_heavy_hitters", // same flag shape over the stream summary
         "cooccurrence_lift",    // broadcast of the 1-row total-token count
         "association_rules",    // broadcast of the 1-row total-basket count
-        "approx_stats_bounds", // 1-row exact/sketch aggregates broadcast-joined
-        // root-codebook broadcast cross: every row scores against the
-        // fanout-sized root level (same dots/row as the expression kernel);
-        // deeper levels equi-join on the parent node
-        "semantic_dedup_bigmodel")
+        "approx_stats_bounds") // 1-row exact/sketch aggregates broadcast-joined
     val offenders = plans.collect {
       case (n, p) if p.contains("BroadcastNestedLoopJoin") && !intended(n) => n
     }

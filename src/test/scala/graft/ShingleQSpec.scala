@@ -81,6 +81,12 @@ class ShingleQSpec extends SparkSpec {
     }
   }
 
+  test("property: ShingleGrams equals the lead-window chain on generated documents") {
+    DocGen.check(spark) { df =>
+      Seq(2, 3).foreach(n => assertSetEqual(kernelShingles(df, n), chainShingles(df, n)))
+    }
+  }
+
   test("ShingleQ(non-distinct) positions match the window chain's (start, wtext)") {
     val k = 4
     val kern = docs.select(col("doc_id"),

@@ -63,8 +63,6 @@ class ViewsSpec extends SparkSpec {
     val rowsOnly = Set(
       "ivf_kmeans_assign",   // oracle appears only after the fit captures
       "kmeans_label_purity", // its centroids (same capture mechanism)
-      "semantic_dedup_auto", // same capture mechanism (adaptive-k fit)
-      "embedding_near_dup_auto", // same capture mechanism (shared auto fit)
       "semantic_dedup_hier",     // same capture mechanism (two-level fit)
       "pq_codes", "pq_topk",     // same capture mechanism (PQ codebooks)
       "ivfpq_topk",              // same capture mechanism (coarse + codebooks)
@@ -74,12 +72,8 @@ class ViewsSpec extends SparkSpec {
       "embedding_near_dup_tree", // same capture mechanism (depth-3 tree fit)
       "tree_ivfpq_topk",         // same capture mechanism (tree fit + codebooks)
       "ann_recall",              // needs BOTH pq and ivfpq captures
-      "semantic_dedup_srp_auto", // captures its chosen band width
-      "semantic_dedup_srp_bucket", // same capture mechanism (band width)
+      "semantic_dedup_srp_bucket", // captures its chosen band width
       "embedding_near_dup_srp",  // same capture mechanism (band width)
-      "semantic_dedup_srp_pre",  // same capture mechanism (band width)
-      "semantic_dedup_bigmodel", // same capture mechanism (level tables)
-      "semantic_dedup_hybrid",   // same capture mechanism (level tables)
       "pipeline_end_to_end")     // same capture mechanism (srp band width)
     // subset, not equality: the capture-based oracles APPEAR once another
     // test in the same JVM has run their fit, so `missing` legitimately

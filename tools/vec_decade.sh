@@ -5,8 +5,7 @@
 # /tmp. Fixtures from tools/gen_vecs.py (gitignored). Run on an IDLE box.
 set -e
 cd /root/repo
-HIER=embedding_near_dup_hier,semantic_dedup_hier,embedding_near_dup_tree,semantic_dedup_srp_auto,semantic_dedup_bigmodel
-FLAT=embedding_near_dup_auto,semantic_dedup_auto
+HIER=embedding_near_dup_hier,semantic_dedup_hier,embedding_near_dup_tree,semantic_dedup_srp_bucket
 
 run() { # dir tag queries
   SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_BENCH_ONLY="$3" \
@@ -18,5 +17,3 @@ run() { # dir tag queries
 run /root/repo/testdata_vec200k v200k_hier "$HIER"
 run /root/repo/testdata_vec632k v632k_hier "$HIER"
 run /root/repo/testdata_vec2m   v2m_hier   "$HIER"
-run /root/repo/testdata_vec200k v200k_flat "$FLAT"
-run /root/repo/testdata_vec632k v632k_flat "$FLAT"
