@@ -1,35 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
     // per-query timeout so one pathological plan cannot eat the whole gate:
     // each query runs in its own (daemon) thread under a cancellable job
     // group; on timeout its jobs are cancelled and the gate moves on,
     // recording the miss like any other per-query failure
     val timeoutMs = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_MS", "600000").toLong
-    // dev-only subset filter (comma-separated names); unset = the full gate
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val queries = SparkEntry.queries
+    SparkEntry.selected.foreach { name =>
       System.err.println(s"[verify] running $name")
       val t = new Thread(() => {
         spark.sparkContext.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -46,12 +34,7 @@ object Verify {
         spark.sparkContext.cancelJobGroupAndFutureJobs(s"verify-$name")
         t.join(30000)
       }
-      // session hygiene: drop this query's localCheckpoint blocks so ~190
-      // queries of pinned frames don't accumulate in one JVM (nothing is
-      // shared across queries; fixtures are disk-backed), and sweep its
-      // disposable streaming sink/checkpoint dirs (result already written)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.engine.TempDirs.sweep()
+      SparkEntry.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

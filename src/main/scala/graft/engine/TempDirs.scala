@@ -4,13 +4,14 @@ package graft.engine
   * chains that matter only until their query's RESULT has been consumed —
   * distinct from [[FixtureDirs]], whose directories are read-side inputs
   * that must live for the whole JVM. Replays create through here; the
-  * gate mains (Bench, Verify) call [[sweep]] after consuming each query.
+  * gate mains call [[sweep]] after consuming each query, through
+  * `SparkEntry.release`.
   *
   * Why sweeping is load-bearing: each streaming replay fsyncs dozens of
   * small checkpoint/sink files. Left on disk across a 200+-query session
   * (×3 trio runs), the accumulated dirty writeback measurably degrades
-  * every later durable write — the round-7 io-canary series shows small
-  * fsync'd writes inflating 3-12× late in bench sessions while compute
+  * every later durable write — SCALE.md "Round 7 / The I/O canary" measured
+  * small fsync'd writes inflating 3-12× late in bench sessions while compute
   * stays flat, and the worst streaming readings cluster exactly there.
   * Deleting a sink right after consumption also cancels writeback its
   * pages still owed, so prompt sweeping cuts real disk traffic, not just

@@ -192,10 +192,10 @@ object CorpusCatalog extends Catalog {
     }),
   )
 
-  /** Bench-side stage attribution for the composition gate: the same
-    * parameters as the `pipeline_end_to_end` catalog entry, replayed
-    * through [[Pipeline.stageTimings]] (forced stage boundaries). Not a
-    * registered query — it measures, it doesn't verify.
+  /** Stage attribution for the composition gate (perfbench's `pipeline.*_s`
+    * layer): the same parameters as the `pipeline_end_to_end` catalog entry,
+    * replayed through [[Pipeline.stageTimings]] (forced stage boundaries).
+    * Not a registered query — it measures, it doesn't verify.
     */
   def pipelineStageTimings(s: SparkSession, d: String): Seq[(String, Double)] = {
     val t = Tables(s, d)

@@ -48,18 +48,35 @@ class ArtifactsSpec extends AnyFunSuite {
     """"([A-Za-z0-9_.]+)"\s*:""".r.findAllMatchIn(span).map(_.group(1)).toSet
   }
 
-  test("every registered query is in the latest committed bench trio") {
+  /** The three runs of the latest committed bench trio. */
+  private def latestTrio: Seq[java.io.File] = {
     val re = """^BENCH_local_r(\d+)_run1\.json$""".r
     val round = latestRound(repo, re).getOrElse(fail("no committed bench trio found"))
-    (1 to 3).foreach { run =>
+    (1 to 3).map { run =>
       val f = new java.io.File(repo, s"BENCH_local_r${round}_run$run.json")
       assert(f.exists(), s"trio round $round is missing run $run")
+      f
+    }
+  }
+
+  test("every registered query is in the latest committed bench trio") {
+    latestTrio.foreach { f =>
       val names = queryNames(read(f))
       val missing = registered -- names
       assert(missing.isEmpty,
         s"queries registered but absent from ${f.getName} — regenerate the trio: $missing")
       val stale = names -- registered
       assert(stale.isEmpty, s"stale queries in ${f.getName}: $stale")
+    }
+  }
+
+  test("every run of the latest committed bench trio has no failed query") {
+    // a failed query still carries its name (with -1), so the name check
+    // above cannot see it; Bench lists every failure in "errors"
+    latestTrio.foreach { f =>
+      val errors = """"errors"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(read(f))
+        .getOrElse(fail(s"${f.getName} has no \"errors\":[...] list")).group(1)
+      assert(errors.trim.isEmpty, s"failed queries in ${f.getName}: [$errors]")
     }
   }
 

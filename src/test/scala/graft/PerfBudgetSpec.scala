@@ -50,15 +50,7 @@ class PerfBudgetSpec extends SparkSpec {
         }
       } ++ (budgets.keySet -- names).toSeq.sorted
         .map(n => s"$n: stale budget row (query removed) — regenerate")
-      // On breach, annotate with the scheduler probe so the failure itself
-      // says code-vs-box: budgets have false-failed under host contention
-      // (concurrent DuckDB gen, scheduler waves) and the adjudication was
-      // manual until now. An inflated spin wall here means re-run on an
-      // idle box before touching any plan.
-      if (over.nonEmpty) {
-        graft.engine.SchedProbe.warmup()
-        fail(over.mkString("", "\n", s"\n${graft.engine.SchedProbe.describe()}"))
-      } else succeed
+      if (over.nonEmpty) fail(over.mkString("\n")) else succeed
     }
   }
 }

@@ -17,7 +17,8 @@ val names: Seq[String] = sys.env.get("PROFILE_QUERIES") match {
 }
 
 spark.sparkContext.setLogLevel("WARN")
-// mirror Bench session shape
+// mirror the session shape of SparkEntry.session (master and partitions come
+// from the command line above)
 spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 case class StageRow(id: Int, name: String, tasks: Int, wallMs: Long, runMs: Long)
@@ -39,8 +40,7 @@ spark.sparkContext.addSparkListener(new SparkListener {
 def prof(name: String): Unit = {
   val fn = SparkEntry.queries(name)
   val times = (0 until reps).map { rep =>
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    graft.engine.TempDirs.sweep()
+    SparkEntry.release(spark)
     stages.clear(); jobs.clear()
     val t0 = System.nanoTime()
     val df = fn(spark, sf)

@@ -8,7 +8,7 @@ cd /root/repo
 HIER=embedding_near_dup_hier,semantic_dedup_hier,embedding_near_dup_tree,semantic_dedup_srp_bucket
 
 run() { # dir tag queries
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_BENCH_ONLY="$3" \
+  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$3" \
     sbt -batch 'runMain graft.Bench' 2>&1 | grep '"metric"' | sed 's/\[info\] //' \
     > "/tmp/BENCH_vec_$2.json"
   echo "== $2: $(python3 -c "import json;d=json.load(open('/tmp/BENCH_vec_$2.json'));print({k:round(v,2) for k,v in d['queries'].items()})")"
