@@ -484,35 +484,6 @@ object Dedup {
     df.join(losers, Seq(id), "left_anti")
   }
 
-  /** Connected components by ALTERNATING large-star / small-star rounds
-    * (the Kiveris et al. MapReduce construction) — the scale variant of
-    * [[dupClusters]]' min-label propagation. Propagation converges in
-    * O(component DIAMETER) rounds: a drift chain v₁~v₂~…~v_d (each
-    * revision a near-dup of the last — exactly how long-lived boilerplate
-    * mutates) costs d shuffle rounds, unbounded at corpus scale. The
-    * alternating rounds square away diameter in O(log² n) — each round,
-    * large-star hangs every node's strictly-larger neighbors onto its
-    * smallest neighbor (halving star depth), small-star compacts the
-    * smaller-endpoint fans the same way, and the fixpoint is a star
-    * forest: every node directly linked to its component minimum.
-    *
-    * Per round: two edge-keyed aggregates + joins over the EDGE frame
-    * only (canonical child>parent orientation, distinct-bounded, lineage
-    * truncated per round); the corpus appears once at the end for
-    * singleton labels. Returns `(id, cluster_id)` like [[dupClusters]] and
-    * fails loudly when not converged — never a silent approximation.
-    */
-  def dupClustersAlternating(df: DataFrame, id: String, textCol: String,
-                             threshold: Double, n: Int = 3,
-                             maxIter: Int = 30): DataFrame = {
-    val pairs = nearDupPairs(df, id, textCol, threshold, n)
-      .select(col("id_a"), col("id_b"))
-    val (roots, _) = ccAlternatingWithRounds(pairs, maxIter)
-    df.select(col(id))
-      .join(roots.withColumnRenamed("node", id), Seq(id), "left")
-      .select(col(id), coalesce(col("root"), col(id)).as("cluster_id"))
-  }
-
   /** The alternating-rounds core over a pair frame `(id_a, id_b)`:
     * returns (`(node, root)` for every non-singleton node, rounds run).
     * Exposed with the round count so tests can pin the convergence-rate
@@ -597,61 +568,26 @@ object Dedup {
 
   /** Near-dup clusters: connected components over the verified pair graph,
     * every doc labelled with the minimum id reachable from it (singletons
-    * label themselves). Min-label propagation: the driver loop only
-    * CONTROLS iterations (standard iterative-algorithm shape, like Pregel);
-    * each step is a join+aggregate over the label frame, and the edge frame
-    * is the verified pairs — orders of magnitude smaller than the corpus.
-    * Converges in O(cluster diameter) steps, bounded at `maxIter` — prefer
-    * [[dupClustersAlternating]] when duplicate families can chain (drift
-    * revisions), where diameter is unbounded.
+    * label themselves). Components come from ALTERNATING large-star /
+    * small-star rounds (the Kiveris et al. MapReduce construction,
+    * [[ccAlternatingWithRounds]]): min-label propagation converges in
+    * O(component DIAMETER) rounds, and a drift chain v₁~v₂~…~v_d (each
+    * revision a near-dup of the last — exactly how long-lived boilerplate
+    * mutates) costs d shuffle rounds, unbounded at corpus scale; the
+    * alternating rounds square away diameter in O(log² n). Each round runs
+    * over the EDGE frame only (tiny next to the corpus — the premise of
+    * the whole tier); the corpus appears once at the end, in the left
+    * join that labels singletons. Fails loudly when not converged within
+    * `maxIter` rounds — never a silent approximation.
     */
   def dupClusters(df: DataFrame, id: String, textCol: String,
                   threshold: Double, n: Int = 3, maxIter: Int = 20): DataFrame = {
     val pairs = nearDupPairs(df, id, textCol, threshold, n)
-      .select(col("id_a"), col("id_b")).localCheckpoint(false)
-    val edges = pairs
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .distinct().localCheckpoint(false)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-
-    // Propagate over EDGE NODES only: the label frame is bounded by the
-    // duplicate-pair graph (tiny next to the corpus — that's the premise of
-    // the whole tier), so every per-round join/shuffle moves pair-graph
-    // volume, not corpus volume. Singletons label themselves via one
-    // corpus-side left join AFTER convergence. At 100 TB this is the
-    // difference between rounds over the dup graph and rounds over the
-    // corpus. The symmetrized edge frame's src side covers every
-    // non-singleton node.
-    var labels = edges.select(col("src").as(id)).distinct()
-      .withColumn("cluster_id", col(id)).localCheckpoint(false)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.select(col(id).as("dst"), col("cluster_id").as("nl")), Seq("dst"))
-        .groupBy(col("src").as(id)).agg(min(col("nl")).as("nmin"))
-      val next = labels.join(neighborMin, Seq(id), "left")
-        .select(col(id), least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
-          .as("cluster_id"))
-        .localCheckpoint(false)
-      // existence check, not a count: isEmpty short-circuits at the first
-      // changed row, so the per-iteration convergence probe stops scanning
-      // as soon as it knows the answer
-      converged = next
-        .join(labels.select(col(id), col("cluster_id").as("prev")), Seq(id))
-        .filter(col("cluster_id") =!= col("prev")).isEmpty
-      labels = next
-      iter += 1
-    }
-    // an unconverged exit would return labels that disagree with the true
-    // transitive closure (and its oracle) with no signal — fail loudly; a
-    // duplicate chain with diameter > maxIter means maxIter was mis-sized
-    // for the corpus, not a tolerable approximation
-    require(converged,
-      s"dupClusters: min-label propagation not converged after $maxIter iterations")
+      .select(col("id_a"), col("id_b"))
+    val (roots, _) = ccAlternatingWithRounds(pairs, maxIter)
     df.select(col(id))
-      .join(labels.withColumnRenamed("cluster_id", "__cl"), Seq(id), "left")
-      .select(col(id), coalesce(col("__cl"), col(id)).as("cluster_id"))
+      .join(roots.withColumnRenamed("node", id), Seq(id), "left")
+      .select(col(id), coalesce(col("root"), col(id)).as("cluster_id"))
   }
 
   /** Cross-document duplicated passages — the chunk-level approximation of

@@ -58,16 +58,6 @@ object DedupCatalog extends Catalog {
       Dedup.dupClusters(Tables(s, d).documents, "doc_id", "text", JaccardThreshold)
         .orderBy("doc_id")),
 
-    // the same clusters via the alternating large-star/small-star rounds —
-    // the O(log² n)-round scale path for chain-shaped duplicate families,
-    // where min-label propagation needs O(diameter) shuffle rounds. Two
-    // independent distributed algorithms against one recursive-closure
-    // oracle.
-    "near_dup_clusters_ls" -> ((s, d) =>
-      Dedup.dupClustersAlternating(Tables(s, d).documents, "doc_id", "text",
-          JaccardThreshold)
-        .orderBy("doc_id")),
-
     // keep-BEST dedup: the cluster keeper is the highest-quality member,
     // not the lowest id — the production rule when near-dups differ in
     // quality (boilerplate copy vs clean original)
@@ -105,25 +95,6 @@ object DedupCatalog extends Catalog {
     }),
   )
 
-  /** Recursive-closure clusters truth, shared by both engine algorithms
-    * (min-label propagation and alternating large/small-star).
-    */
-  private val clustersOracleSql: String =
-    s"""WITH RECURSIVE ${OracleSql.jaccardPairsCtes},
-       |e AS (
-       |  SELECT id_a AS a, id_b AS b FROM pairs WHERE jaccard >= $JaccardThreshold
-       |  UNION
-       |  SELECT id_b, id_a FROM pairs WHERE jaccard >= $JaccardThreshold),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM e
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
-       |SELECT d.doc_id,
-       |  least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
-       |FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-       |GROUP BY d.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-
   def oracleSql: Map[String, String] = Map(
     "near_dup_pairs" ->
       s"""WITH ${OracleSql.jaccardPairsCtes}
@@ -149,11 +120,23 @@ object DedupCatalog extends Catalog {
          |WHERE doc_id NOT IN (SELECT id_b FROM pairs WHERE jaccard >= $JaccardThreshold)
          |ORDER BY doc_id""".stripMargin,
 
-    "near_dup_clusters" -> clustersOracleSql,
-
-    // independent engine algorithm, identical truth: the transitive
-    // closure doesn't care how the engine computed its components
-    "near_dup_clusters_ls" -> clustersOracleSql,
+    // recursive-closure truth: the transitive closure doesn't care how
+    // the engine computed its components
+    "near_dup_clusters" ->
+      s"""WITH RECURSIVE ${OracleSql.jaccardPairsCtes},
+         |e AS (
+         |  SELECT id_a AS a, id_b AS b FROM pairs WHERE jaccard >= $JaccardThreshold
+         |  UNION
+         |  SELECT id_b, id_a FROM pairs WHERE jaccard >= $JaccardThreshold),
+         |reach(a, b) AS (
+         |  SELECT a, b FROM e
+         |  UNION
+         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
+         |SELECT d.doc_id,
+         |  least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
+         |FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
+         |GROUP BY d.doc_id
+         |ORDER BY d.doc_id""".stripMargin,
 
     "near_dup_keep_best" ->
       s"""WITH RECURSIVE ${OracleSql.jaccardPairsCtes},

@@ -91,7 +91,7 @@ object Similarity {
 
   /** Beyond-broadcast driver for the query-set top-k scans. The top-k
     * entry points ([[cosineTopK]], [[l2TopK]], [[pqTopK]],
-    * [[IvfPqModel.topK]]) broadcast the WHOLE query frame — the right plan
+    * [[TreeIvfPqModel.topK]]) broadcast the WHOLE query frame — the right plan
     * while the query set fits the broadcast threshold (the operating
     * envelope of every gated registration; ~10 MB default ≈ 10k-100k
     * quantized query vectors depending on dim). When the query set
@@ -201,45 +201,6 @@ object Similarity {
           graft.functions.NearestCellQ(col("q"), centroids).as("cluster"))
         .filter(col("cluster").isNotNull)
 
-    /** Margin-based adaptive probe set: every cell whose squared distance
-      * is within `alpha`× the nearest cell's, capped at `maxProbes` (the
-      * nearest cell always probes). Queries near a cell boundary fan out;
-      * central queries stay single-probe — the probe budget concentrates
-      * where recall actually needs it, instead of a fixed width.
-      */
-    def assignAdaptive(df: DataFrame, alpha: Double, maxProbes: Int): DataFrame = {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val c = broadcast(centroids.toDF("cid", "cq").withColumn("cn2", norm2Q(col("cq"))))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(id)
-      val scored = prepare(df, id, vec)
-        .crossJoin(c)
-        .select(col(id), col("cid"),
-          (col("n2") - lit(2L) * dotQ(col("q"), col("cq")) + col("cn2")).as("dist"))
-        .withColumn("mind", min(col("dist")).over(w))
-      // the margin floor of 1 (the smallest nonzero quantized distance)
-      // keeps the filter meaningful when the query coincides with its
-      // centroid (mind = 0, where mind * alpha would collapse to 0 and
-      // break the alpha→∞ ≡ brute-force guarantee). The compare runs in
-      // DECIMAL, not DOUBLE: long distances reach dim·2^50 > 2^53, where a
-      // double round-trip loses low bits and can misclassify borderline
-      // cells. dist < 10^19 fits DECIMAL(19,0) exactly; alpha is rounded
-      // to 6 decimals (a probe-width dial, not a precise quantity), so the
-      // (19,0)×(13,6) product stays inside DECIMAL(33,6) — exact.
-      val withinMargin =
-        // alpha ≥ 1e18 passes every possible distance (dist < 2^63 ≤
-        // 1e18 × mind-floor), so ∞/MaxValue-style "unbounded" dials skip
-        // the decimal literal (whose precision would overflow) entirely
-        if (alpha >= 1e18) lit(true)
-        else col("dist").cast("decimal(19,0)") <=
-          greatest(col("mind"), lit(1L)).cast("decimal(19,0)") *
-            lit(BigDecimal(alpha).setScale(6, BigDecimal.RoundingMode.HALF_UP))
-      graft.ops.Relational.topKPerGroup(
-        scored.filter(col("dist") === col("mind") || withinMargin),
-        Seq(id), Seq(col("dist").asc, col("cid").asc), maxProbes)
-        .select(col(id), col("cid").as("cluster"))
-    }
-
     /** The `p` nearest cells per row (multi-probe assignment): `p` rows per
       * input id, deterministic ties on the lower cell id. `p = 1` reduces
       * to [[assign]].
@@ -257,14 +218,6 @@ object Similarity {
         .select(col(id), col("cid").as("cluster"))
     }
   }
-
-  /** End-to-end auto-IVF search: fit the coarse quantizer on the corpus,
-    * tag corpus and queries with their cells, then run the cell-pruned
-    * top-k — the full build-index-then-search path.
-    */
-  def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
-                  k: Int, cells: Int, iters: Int = 3): DataFrame =
-    ivfTopKMultiProbe(corpus, queries, id, vec, k, cells, probes = 1, iters)
 
   /** Multi-probe IVF: each query searches its `probes` nearest cells
     * instead of only the closest — the standard recall/cost dial (a true
@@ -286,26 +239,6 @@ object Similarity {
     val q = pq.join(model.assignTop(pq, probes), Seq(id))
     ivfTopK(c, q, id, vec, "cluster", k)
   }
-
-  /** Adaptive-probe IVF: probe width picked per query from the centroid
-    * distance margin ([[KMeansModel.assignAdaptive]]) instead of a fixed
-    * count — `alpha = 1` degenerates to single-probe, `alpha = ∞` with
-    * `maxProbes = cells` to exact brute force.
-    */
-  def ivfTopKAdaptive(corpus: DataFrame, queries: DataFrame, id: String,
-                      vec: String, k: Int, cells: Int, alpha: Double,
-                      maxProbes: Int, iters: Int = 3): DataFrame = {
-    val pc = prepare(corpus, id, vec)
-    val pq = prepare(queries, id, vec)
-    val model = kmeansFit(pc, id, vec, cells, iters)
-    val c = pc.join(model.assign(pc), Seq(id))
-    val q = pq.join(model.assignAdaptive(pq, alpha, maxProbes), Seq(id))
-    ivfTopK(c, q, id, vec, "cluster", k)
-  }
-
-  def kmeansAssign(df: DataFrame, id: String, vec: String, k: Int,
-                   iters: Int = 5): DataFrame =
-    kmeansFit(df, id, vec, k, iters).assign(df)
 
   def kmeansFit(df: DataFrame, id: String, vec: String, k: Int,
                 iters: Int = 5): KMeansModel = {
@@ -371,7 +304,7 @@ object Similarity {
       // one narrow pass: nearest-cell and posexplode over the SAME scan of
       // p (the vectors are already there — re-joining assignment() back to
       // p paid a hash join, i.e. two exchanges, per Lloyd round; same
-      // fold hierarchicalFit's loop uses)
+      // fold treeFit's per-level loop uses)
       val sums = p
         .select(graft.functions.NearestCellQ(col("q"), centroids).as("cluster"),
           posexplode(col("q")).as(Seq("dim", "x")))
@@ -592,125 +525,14 @@ object Similarity {
   def cellCountFor(n: Long, target: Long, minK: Int = 8): Int =
     math.max(minK.toLong, (n + target - 1) / target).toInt
 
-  /** A fitted two-level hierarchical quantizer: coarse centroids plus
-    * per-coarse-cell sub-centroid tables, with leaf cell ids
-    * `coarse·k₂ + j` (ascending within a cell — the tie-break order).
-    * `assign` is ONE narrow projection chaining the two native argmin
-    * kernels ([[graft.functions.NearestCellQ]] →
-    * [[graft.functions.NearestSubCellQ]]): n·(k₁+k₂) dots per pass
-    * instead of the flat fit's n·k — for k ∝ n leaf cells that is the
-    * difference between n²/target flops (measured 12× on 10× data at the
-    * sf1cr→sf10cr decade) and n·2√(n/target).
-    */
-  final case class HierKMeansModel(coarse: Seq[(Int, Seq[Long])],
-                                   sub: Seq[(Int, Int, Seq[Long])],
-                                   id: String, vec: String) {
-    def assign(df: DataFrame): DataFrame =
-      // same declared null contract as KMeansModel.assign: null vectors
-      // argmin to null and the row is dropped
-      prepare(df, id, vec).select(col(id),
-        graft.functions.NearestSubCellQ(col("q"),
-          graft.functions.NearestCellQ(col("q"), coarse),
-          sub).as("cluster"))
-        .filter(col("cluster").isNotNull)
-  }
-
-  /** Two-level hierarchical k-means at a scale-adaptive LEAF count
-    * (k = [[cellCountFor]], split √k × √k): fit the coarse level with
-    * [[kmeansFit]], then fit every coarse cell's k₂ sub-centroids
-    * SIMULTANEOUSLY — each grouped-Lloyd round is one corpus scan through
-    * the [[graft.functions.NearestSubCellQ]] kernel (each row argmins
-    * only its own cell's sub-table) plus one `(leaf, dim)` aggregate,
-    * exactly like the flat fit's rounds but at √k dots per row. This is
-    * the coarse-quantizer build a 100 TB corpus needs: constant leaf
-    * occupancy (so downstream pair volume stays linear, the SemDeDup
-    * requirement) WITHOUT the flat auto-k fit's n·k assignment flops.
-    *
-    * Determinism: the coarse fit is [[kmeansFit]]'s deterministic
-    * integer pipeline; sub-seeding takes each cell's first k₂ DISTINCT
-    * vectors in `(xxhash64(id), id)` order (partitioning-independent);
-    * updates are integer floor-divided sums; empty leaves keep their
-    * centroid. The driver sees only bounded control-plane data: the
-    * seeding collect is ≤ 4·k rows of dim longs (proportional to the
-    * centroid table itself), each Lloyd collect is ≤ k·dim rows.
-    */
-  def hierarchicalFit(df: DataFrame, id: String, vec: String,
-                      targetCellSize: Long = 64L, iters: Int = 3): HierKMeansModel = {
-    val n = df.count()
-    val kTotal = cellCountFor(n, targetCellSize)
-    val k1 = math.max(2, math.ceil(math.sqrt(kTotal.toDouble)).toInt)
-    val k2 = math.max(1L, (kTotal + k1 - 1L) / k1).toInt
-    val coarseModel = kmeansFit(df, id, vec, k1, iters)
-    // coarse assignment rides with the vector for every sub-Lloyd round —
-    // pin it once (the same diamond-reuse reason kmeansFit pins `p`)
-    val p = prepare(df, id, vec)
-      .select(col(id), col("q"),
-        graft.functions.NearestCellQ(col("q"), coarseModel.centroids).as("coarse"))
-      .localCheckpoint(false)
-    val dim = p.select(size(col("q"))).head().getInt(0)
-
-    // per-cell mass-proportional seeding (kmeansFit's rationale, scoped to
-    // the cell): first k₂ distinct vectors per coarse cell in scrambled-id
-    // order; the 4× candidate buffer absorbs duplicate embeddings. A cell
-    // whose candidates hold fewer distinct vectors seeds fewer leaves —
-    // balance degrades gracefully, exactness is unaffected.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("coarse")
-      .orderBy(xxhash64(col(id)), col(id))
-    val cand = p.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k2 * 4)
-      .select(col("coarse"), col("rn"), col("q"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toIndexedSeq))
-    var sub: Seq[(Int, Int, Seq[Long])] = cand.groupBy(_._1).toSeq.flatMap {
-      case (c, rows) =>
-        val seen = scala.collection.mutable.HashSet.empty[Seq[Long]]
-        rows.sortBy(_._2).iterator.map(_._3).filter(v => seen.add(v)).take(k2)
-          .zipWithIndex.map { case (v, j) => (c, c * k2 + j, v: Seq[Long]) }.toSeq
-    }.sortBy(t => (t._1, t._2))
-
-    for (_ <- 1 to iters) {
-      val sums = p.select(
-          graft.functions.NearestSubCellQ(col("q"), col("coarse"), sub).as("cluster"),
-          posexplode(col("q")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("nn"))
-        .collect()
-      val byLeaf = sums.groupBy(_.getInt(0))
-      sub = sub.map { case (c, leaf, prev) =>
-        byLeaf.get(leaf) match {
-          case Some(rows) =>
-            val comps = rows.map(r =>
-              r.getInt(1) -> Math.floorDiv(r.getLong(2), r.getLong(3))).toMap
-            (c, leaf, (0 until dim).map(comps))
-          case None => (c, leaf, prev) // empty leaf keeps its centroid
-        }
-      }
-    }
-    HierKMeansModel(coarseModel.centroids, sub, id, vec)
-  }
-
-  /** [[semanticDedup]] over a [[hierarchicalFit]] quantizer — the same
-    * constant-occupancy leaf cells as a flat k ∝ n fit ([[cellCountFor]],
-    * so candidate pair volume stays linear in n) with assignment at n·2√k
-    * dots instead of n·k. Returns the model so the gate oracle can replay
-    * both argmin levels from the captured centroids.
-    */
-  def semanticDedupHier(df: DataFrame, id: String, vec: String,
-                        threshold: Double, targetCellSize: Long = 64L,
-                        iters: Int = 3): (HierKMeansModel, DataFrame) = {
-    val model = hierarchicalFit(df, id, vec, targetCellSize, iters)
-    val out = semanticDedup(df.join(model.assign(df), Seq(id)), id, vec,
-      "cluster", threshold)
-    (model, out)
-  }
-
-  /** A depth-d tree quantizer — the log-depth generalization of
-    * [[HierKMeansModel]]: `levels(0)` is the root codebook
+  /** A depth-d tree quantizer: `root` is the root codebook
     * ([[graft.functions.NearestCellQ]]), each deeper level a
     * `(parent, child, centroid)` table scoped by the previous level's
     * argmin ([[graft.functions.NearestSubCellQ]]). Assignment chains the
     * d argmins in ONE narrow codegen projection — n·d·f dots for f^d
-    * leaves, against the 2-level form's n·2·√k and the flat form's n·k:
+    * leaves, against depth 2's n·2·√k and the flat form's n·k — for
+    * k ∝ n leaf cells that is the difference between n²/target flops
+    * (measured 12× on 10× data at the sf1cr→sf10cr decade) and n·d·f:
     * at a 100 TB corpus (~10^11 vectors, k = n/64 leaves) two levels read
     * ~80k dots per vector while depth-4 at fanout ~200 reads ~800 — the
     * only centroid-blocking shape that stays usable once √k itself is
@@ -726,23 +548,33 @@ object Similarity {
         (parent, tbl) => graft.functions.NearestSubCellQ(col("q"), parent, tbl)
       }
     def assign(df: DataFrame): DataFrame =
-      // same declared null contract as the flat/hier kernels
+      // same declared null contract as KMeansModel.assign: null vectors
+      // argmin to null and the row is dropped
       prepare(df, id, vec).select(col(id), nodeCol.as("cluster"))
         .filter(col("cluster").isNotNull)
   }
 
-  /** Depth-d grouped-Lloyd tree fit. Level 1 is [[kmeansFit]] at fanout
+  /** Depth-d grouped-Lloyd tree fit at a scale-adaptive LEAF count
+    * (kTotal = [[cellCountFor]]). Level 1 is [[kmeansFit]] at fanout
     * f = ⌈kTotal^(1/d)⌉ (or `fanouts`, when given); every deeper level
-    * fits ALL current nodes' f children simultaneously, exactly the
-    * [[hierarchicalFit]] recipe applied per level: mass-proportional
-    * seeding (first f distinct vectors per node in scrambled-id order, 4×
-    * candidate buffer), then `iters` rounds of one corpus scan + one
-    * (child, dim) hash aggregate with exact floor-div integer means —
-    * empty children keep their centroid, so the fit is deterministic and
-    * partitioning-invariant end to end and the gate oracle can replay
-    * every argmin level from the captured tables. With `fanouts =
-    * Seq(k1, k2)` matching [[hierarchicalFit]]'s split, the two fits are
-    * IDENTICAL (pinned in `PipelineOpsSpec`). Control plane stays
+    * fits ALL current nodes' f children simultaneously — each
+    * grouped-Lloyd round is one corpus scan through the
+    * [[graft.functions.NearestSubCellQ]] kernel (each row argmins only its
+    * own node's children) plus one `(child, dim)` aggregate, exactly like
+    * the flat fit's rounds but at f dots per row. This is the
+    * coarse-quantizer build a 100 TB corpus needs: constant leaf occupancy
+    * (so downstream pair volume stays linear, the SemDeDup requirement)
+    * WITHOUT the flat auto-k fit's n·k assignment flops. Depth 2 is the
+    * two-level (√k × √k) quantizer.
+    *
+    * Determinism: per-node mass-proportional seeding (first f distinct
+    * vectors per node in scrambled-id order, 4× candidate buffer — a node
+    * whose candidates hold fewer distinct vectors seeds fewer children;
+    * balance degrades gracefully, exactness is unaffected), then `iters`
+    * rounds with exact floor-div integer means — empty children keep their
+    * centroid, so the fit is deterministic and partitioning-invariant end
+    * to end and the gate oracle can replay every argmin level from the
+    * captured tables. Control plane stays
     * centroid-table-sized: the per-level candidate collect is ≤ 4·f·nodes
     * rows of dim longs — the next level's own table size, never corpus
     * rows. The assigned-node column is re-checkpointed per level (the
@@ -778,7 +610,8 @@ object Similarity {
     val dim = p.select(size(col("q"))).head().getInt(0)
 
     val subLevels = fs.tail.zipWithIndex.map { case (f, li) =>
-      // per-node mass-proportional seeding, hierarchicalFit's recipe
+      // per-node mass-proportional seeding (kmeansFit's rationale, scoped
+      // to the node)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("node")
         .orderBy(xxhash64(col(id)), col(id))
       val cand = p.withColumn("rn", row_number().over(w))
@@ -971,135 +804,29 @@ object Similarity {
   }
 
   /** A fitted IVF-PQ index (faiss's serving shape, with the inverted-
-    * multi-index twist): the TWO-LEVEL hierarchical quantizer is the
-    * coarse quantizer — corpus-side cell assignment costs n·2√k dots
-    * instead of the flat n·k = n²/target that the sf1→sf10 decade
-    * measured at 38× on 10× data — plus PQ codebooks fitted on the
-    * RESIDUALS `q − c[leaf]`, so the codebooks spend their resolution on
-    * the within-leaf geometry. The stored artifact per vector is
-    * `(leaf, M-int code word)`; a probe-p query touches only p leaves'
-    * code lists and scores them in the compressed domain.
-    */
-  final case class IvfPqModel(hier: HierKMeansModel, pq: PqModel,
-                              id: String, vec: String) {
-    /** The REAL fitted leaves `(leaf id, centroid)` — probe ranking runs
-      * over these, and `leaves.size` is the exact-search probe width.
-      */
-    def leaves: Seq[(Int, Seq[Long])] =
-      hier.sub.map { case (_, leaf, cq) => (leaf, cq) }
-
-    /** Dense leaf-centroid table for [[graft.functions.ResidualQ]]: leaf
-      * ids are `coarse·k₂ + j`, so a coarse cell that seeded fewer than k₂
-      * leaves leaves gaps — filled with zero placeholders that no argmin
-      * can ever produce (they are not in `sub`), purely to satisfy the
-      * dense-indexing contract.
-      */
-    private[llm] def leafTable: Seq[(Int, Seq[Long])] = {
-      val dim = hier.sub.head._3.length
-      val byLeaf = leaves.toMap
-      (0 to leaves.map(_._1).max).map(l =>
-        (l, byLeaf.getOrElse(l, Seq.fill(dim)(0L))))
-    }
-
-    /** The two-level corpus-side leaf assignment — one narrow projection. */
-    private def leafCol: Column =
-      graft.functions.NearestSubCellQ(col("q"),
-        graft.functions.NearestCellQ(col("q"), hier.coarse), hier.sub)
-
-    /** `(id, cell, codes)` — one narrow codegen'd projection chaining
-      * coarse argmin → sub argmin → residual → M sliced code argmins.
-      */
-    def encode(df: DataFrame): DataFrame =
-      prepare(df, id, vec)
-        .select(col(id), leafCol.as("cell"), col("q"))
-        .withColumn("q", graft.functions.ResidualQ(col("q"), col("cell"), leafTable))
-        .select(col(id), col("cell"), pq.codesCol.as("codes"))
-
-    /** ADC top-k over the coded corpus: each query ranks ALL real leaves
-      * exactly (queries are the small broadcast side — k dots per query is
-      * nothing there) and probes its `probes` nearest; its residual is
-      * taken AGAINST EACH PROBED LEAF, and only that leaf's code list is
-      * scored ([[graft.functions.PqAdcQ]] over the residual). Each corpus
-      * vector lives in exactly one leaf, so no duplicate results.
-      * Operating envelope: the probed query frame (queries × probes rows)
-      * must fit the broadcast threshold; beyond it, drive through
-      * [[chunkedQueries]].
-      */
-    def topK(codes: DataFrame, queries: DataFrame, probes: Int, k: Int): DataFrame =
-      ivfAdcTopK(codes, queries, id, vec, leaves, leafTable, pq, probes, k)
-  }
-
-  /** Shared ADC serving tail of every IVF-style index (two-level and
-    * tree-coarse): flat exact leaf ranking per query (queries are the
-    * small broadcast side — k dots per query is nothing there), per-probe
-    * residual, compressed-domain scoring of only the probed leaves' code
-    * lists. Each corpus vector lives in exactly one leaf → no duplicates.
-    */
-  private[llm] def ivfAdcTopK(codes: DataFrame, queries: DataFrame,
-                              id: String, vec: String,
-                              leaves: Seq[(Int, Seq[Long])],
-                              leafTable: Seq[(Int, Seq[Long])],
-                              pq: PqModel, probes: Int, k: Int): DataFrame = {
-    val km = KMeansModel(leaves, id, vec)
-    val pq2 = prepare(queries, id, vec)
-    val probed = pq2.join(km.assignTop(pq2, probes), Seq(id))
-      .select(col(id).as("query_id"), col("cluster").as("cell"),
-        graft.functions.ResidualQ(col("q"), col("cluster"), leafTable).as("rq"))
-    val scored = codes
-      .select(col(id).as("nn_id"), col("cell"), col("codes"))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"),
-        graft.functions.PqAdcQ(col("rq"), col("codes"), pq.codebooks).as("adc_dist"))
-    Relational.topKPerGroup(scored, Seq("query_id"),
-      Seq(col("adc_dist").asc, col("nn_id").asc), k)
-  }
-
-  /** IVF-PQ build: two-level [[hierarchicalFit]] (leaf count k ∝ n at
-    * constant target occupancy), then [[pqFitCore]] on the pinned residual
-    * frame — all three fits are the deterministic integer pipelines, so
-    * the whole index replays exactly in the oracle. Control plane stays
-    * codebook-sized; corpus rows never reach the driver.
-    */
-  def ivfPqFit(df: DataFrame, id: String, vec: String,
-               targetCellSize: Long = 64L, m: Int = 8, ks: Int = 16,
-               iters: Int = 3): IvfPqModel = {
-    val p = prepare(df, id, vec)
-    val hier = hierarchicalFit(p, id, vec, targetCellSize, iters)
-    val stub = IvfPqModel(hier, null, id, vec) // leafTable/leafCol only
-    val r = p
-      .select(col(id),
-        graft.functions.NearestSubCellQ(col("q"),
-          graft.functions.NearestCellQ(col("q"), hier.coarse), hier.sub).as("cell"),
-        col("q"))
-      .select(col(id),
-        graft.functions.ResidualQ(col("q"), col("cell"), stub.leafTable).as("q"))
-      .localCheckpoint(false)
-    IvfPqModel(hier, pqFitCore(r, id, vec, m, ks, iters), id, vec)
-  }
-
-  /** IVF-PQ with a depth-d TREE coarse quantizer — the log-depth build of
-    * [[IvfPqModel]]: corpus-side leaf assignment costs n·d·f dots (f =
-    * per-level fanout) instead of the two-level form's n·2√k, the shape
-    * that stays usable once √k itself is large (10^11 vectors, k = n/64:
-    * two levels ≈ 80k dots/vector, depth-4 at fanout ~200 ≈ 800). The
-    * serving tail is IDENTICAL to [[IvfPqModel]] — flat exact leaf ranking
-    * for the (tiny) query side, residual PQ codes per leaf, ADC over
-    * probed code lists — so the ONLY behavioral delta is corpus-side leaf
-    * routing: a deeper tree mis-routes more boundary vectors, which is a
-    * RECALL cost, not a correctness cost. That cost is measured, not
-    * assumed: `ann_recall` scores this pipeline against the exact-L2
-    * ground truth next to flat PQ and two-level IVF-PQ (the gate the
-    * round-9 BACKLOG required before any tree-coarse registration).
+    * multi-index twist): a depth-d [[TreeKMeansModel]] is the coarse
+    * quantizer — corpus-side leaf assignment costs n·d·f dots (f =
+    * per-level fanout) instead of the flat n·k = n²/target that the
+    * sf1→sf10 decade measured at 38× on 10× data — plus PQ codebooks
+    * fitted on the RESIDUALS `q − c[leaf]`, so the codebooks spend their
+    * resolution on the within-leaf geometry. The stored artifact per
+    * vector is `(leaf, M-int code word)`; a probe-p query touches only p
+    * leaves' code lists and scores them in the compressed domain. Depth
+    * only changes corpus-side leaf routing: a deeper tree mis-routes more
+    * boundary vectors, which is a RECALL cost, not a correctness cost —
+    * `ann_recall` scores depth 2 and depth 3 against the exact-L2 ground
+    * truth next to flat PQ.
     */
   final case class TreeIvfPqModel(tree: TreeKMeansModel, pq: PqModel,
                                   id: String, vec: String) {
     def leaves: Seq[(Int, Seq[Long])] =
       tree.subLevels.last.map { case (_, leaf, cq) => (leaf, cq) }
 
-    /** Dense leaf-centroid table for [[graft.functions.ResidualQ]] — same
-      * zero-placeholder fill contract as [[IvfPqModel.leafTable]] (gaps
-      * can never be produced by the argmin chain).
+    /** Dense leaf-centroid table for [[graft.functions.ResidualQ]]: leaf
+      * ids are `parent·f + j`, so a node that seeded fewer than f children
+      * leaves gaps — filled with zero placeholders that no argmin can ever
+      * produce (they are not in the last level's table), purely to satisfy
+      * the dense-indexing contract.
       */
     private[llm] def leafTable: Seq[(Int, Seq[Long])] = {
       val dim = leaves.head._2.length
@@ -1118,14 +845,37 @@ object Similarity {
         .withColumn("q", graft.functions.ResidualQ(col("q"), col("cell"), leafTable))
         .select(col(id), col("cell"), pq.codesCol.as("codes"))
 
-    def topK(codes: DataFrame, queries: DataFrame, probes: Int, k: Int): DataFrame =
-      ivfAdcTopK(codes, queries, id, vec, leaves, leafTable, pq, probes, k)
+    /** ADC top-k over the coded corpus: each query ranks ALL real leaves
+      * exactly (queries are the small broadcast side — k dots per query is
+      * nothing there) and probes its `probes` nearest; its residual is
+      * taken AGAINST EACH PROBED LEAF, and only that leaf's code list is
+      * scored ([[graft.functions.PqAdcQ]] over the residual). Each corpus
+      * vector lives in exactly one leaf, so no duplicate results.
+      * Operating envelope: the probed query frame (queries × probes rows)
+      * must fit the broadcast threshold; beyond it, drive through
+      * [[chunkedQueries]].
+      */
+    def topK(codes: DataFrame, queries: DataFrame, probes: Int, k: Int): DataFrame = {
+      val q = prepare(queries, id, vec)
+      val probed = q.join(KMeansModel(leaves, id, vec).assignTop(q, probes), Seq(id))
+        .select(col(id).as("query_id"), col("cluster").as("cell"),
+          graft.functions.ResidualQ(col("q"), col("cluster"), leafTable).as("rq"))
+      val scored = codes
+        .select(col(id).as("nn_id"), col("cell"), col("codes"))
+        .join(broadcast(probed), Seq("cell"))
+        .filter(col("nn_id") =!= col("query_id"))
+        .select(col("query_id"), col("nn_id"),
+          graft.functions.PqAdcQ(col("rq"), col("codes"), pq.codebooks).as("adc_dist"))
+      Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("adc_dist").asc, col("nn_id").asc), k)
+    }
   }
 
-  /** Tree-coarse IVF-PQ build: [[treeFit]] (leaf count k ∝ n at constant
-    * occupancy, reached in d argmin levels), then [[pqFitCore]] on the
-    * pinned residual frame — the same deterministic integer pipelines as
-    * [[ivfPqFit]], so the whole index replays exactly in the oracle.
+  /** IVF-PQ build: [[treeFit]] (leaf count k ∝ n at constant occupancy,
+    * reached in d argmin levels), then [[pqFitCore]] on the pinned
+    * residual frame — all fits are the deterministic integer pipelines, so
+    * the whole index replays exactly in the oracle. Control plane stays
+    * codebook-sized; corpus rows never reach the driver.
     */
   def treeIvfPqFit(df: DataFrame, id: String, vec: String,
                    targetCellSize: Long = 64L, depth: Int = 3, m: Int = 8,

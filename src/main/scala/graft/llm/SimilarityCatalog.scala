@@ -57,31 +57,31 @@ object SimilarityCatalog extends Catalog {
     // target cell size, so candidate volume stays linear on scale-up),
     // and a flat k ∝ n fit's nearest-cell pass would be n·k dots =
     // n²/target flops — measured 12.2× on 10× data at the sf1cr→sf10cr
-    // decade (SCALE.md). A two-level quantizer (coarse √k cells, then √k
+    // decade (SCALE.md). The depth-2 tree (coarse √k cells, then √k
     // sub-cells fitted per coarse cell in one grouped-Lloyd pass) reaches
     // the SAME leaf count and occupancy at n·2√k dots — the faiss-style
     // coarse-quantizer shape a 100 TB SemDeDup build actually runs. Both
     // argmin levels are native codegen'd kernels; the oracle replays the
-    // captured two-level centroid tables (hierOracle below).
+    // captured centroid tables (hierOracle below).
     "semantic_dedup_hier" -> ((s, d) => {
-      val model = hierFit(s, d)
-      hierCapture = Some((model.coarse, model.sub))
+      val model = treeFit(s, d, depth = 2)
+      hierCapture = Some((model.root, model.subLevels))
       val df = Tables(s, d).embeddings
       Similarity.semanticDedup(df.join(model.assign(df), Seq("vec_id")),
           "vec_id", "embedding", "cluster", NearDupCos)
         .orderBy("vec_id")
     }),
 
-    // the near-dup PAIR search on the two-level quantizer's leaves: the
+    // the near-dup PAIR search on the depth-2 tree's leaves: the
     // pinned-label `embedding_near_dup` above is a fixture-only shape
     // (10× vectors in the same 10 cells → ~100× within-cell candidates —
-    // measured 20.7× at sf1); blocking on the hierarchical fit's k ∝ n
-    // leaves holds per-cell pair volume linear at n·2√k assignment dots,
-    // the shape the 100 TB run uses. Oracle replays both captured argmin
-    // levels + the within-leaf pair scoring (nearDupHierOracle).
+    // measured 20.7× at sf1); blocking on the tree fit's k ∝ n leaves
+    // holds per-cell pair volume linear at n·2√k assignment dots, the
+    // shape the 100 TB run uses. Oracle replays both captured argmin
+    // levels + the within-leaf pair scoring (nearDupOracle).
     "embedding_near_dup_hier" -> ((s, d) => {
-      val model = hierFit(s, d)
-      nearDupHierCapture = Some((model.coarse, model.sub))
+      val model = treeFit(s, d, depth = 2)
+      nearDupHierCapture = Some((model.root, model.subLevels))
       val df = Tables(s, d).embeddings
       Similarity.cellNearDupPairs(df.join(model.assign(df), Seq("vec_id")),
           "vec_id", "embedding", "cluster", NearDupCos)
@@ -89,20 +89,17 @@ object SimilarityCatalog extends Catalog {
     }),
 
     // the LOG-DEPTH tree quantizer under the near-dup pair search: the
-    // two-level form's n·2√k assignment is itself n^1.5 once the data term
+    // depth-2 form's n·2√k assignment is itself n^1.5 once the data term
     // binds (k ∝ n keeps occupancy — and pair volume — constant, so the
     // per-vector √k grows); a depth-d tree reaches the same leaf count at
     // n·d·f dots, f = k^(1/d) — per-vector cost ~flat per decade once
     // depth tracks log n. Registered at depth 3 (the exponent step the
     // vec-decade measurement isolates); oracle replays all three captured
-    // argmin levels. SCOPE: the tree quantizer blocks near-dup PAIRS only —
-    // it does not front an ANN top-k index. A tree-coarse IVF-PQ pipeline
-    // would change recall (deeper trees mis-route more boundary queries),
-    // so any such registration must first extend the `ann_recall` gate to
-    // cover it; dedup blocking is recall-tolerant by construction (a missed
-    // boundary pair costs one surviving duplicate, not a wrong answer).
+    // argmin levels. Dedup blocking is recall-tolerant by construction (a
+    // missed boundary pair costs one surviving duplicate, not a wrong
+    // answer); the depth-3 ANN index is recall-gated by `ann_recall`.
     "embedding_near_dup_tree" -> ((s, d) => {
-      val model = treeFit(s, d)
+      val model = treeFit(s, d, depth = 3)
       nearDupTreeCapture = Some((model.root, model.subLevels))
       val df = Tables(s, d).embeddings
       Similarity.cellNearDupPairs(df.join(model.assign(df), Seq("vec_id")),
@@ -199,20 +196,15 @@ object SimilarityCatalog extends Catalog {
 
     // training-FREE semantic dedup: SRP band buckets replace the learned
     // cells — no k-means build at all, the scale path past the point where
-    // even k ∝ n assignment (n·k dots) is too expensive
-    "semantic_dedup_srp" -> ((s, d) =>
-      Srp.semanticDedupSrp(Tables(s, d).embeddings, "vec_id", "embedding",
-          Dim, NearDupCos)
-        .orderBy("vec_id")),
-
-    // the WITHIN-BUCKET verify over the same banding — the round-10
-    // production form. The candidate problem was payload, not compute:
-    // instead of materializing the global pair list and joining ~0.5 KB
-    // of vector onto each side of every pair (pairs x 1 KB -> spill), the
-    // vectors ride the band rows (ONE shuffle of ~corpus volume) and the
-    // exact cosine evaluates inside the band self-join's projection; only
-    // passing pairs reach the distinct. The oracle is the band + verify
-    // replay at the captured width (srpDedupSqlAtWidth). Measured
+    // even k ∝ n assignment (n·k dots) is too expensive. The verify runs
+    // WITHIN the band bucket — the round-10 production form. The candidate
+    // problem was payload, not compute: instead of materializing the
+    // global pair list and joining ~0.5 KB of vector onto each side of
+    // every pair (pairs x 1 KB -> spill), the vectors ride the band rows
+    // (ONE shuffle of ~corpus volume) and the exact cosine evaluates
+    // inside the band self-join's projection; only passing pairs reach the
+    // distinct. The oracle is the band + verify replay at the captured
+    // width (srpBucketOracle). Measured
     // 4.4/5.5/14.0 s at 200k/632k/2M -- sub-linear, the cheapest
     // TRAINING-FREE dedup at every measured point (SCALE.md round 10).
     "semantic_dedup_srp_bucket" -> ((s, d) => {
@@ -276,19 +268,19 @@ object SimilarityCatalog extends Catalog {
         .orderBy("query_id", "nn_id")
     }),
 
-    // the index-eval operator: recall@K of BOTH compressed-domain rankings
-    // (flat PQ and IVF-PQ) against the exact-L2 ground truth, zero-hit
-    // queries preserved — the accept/reject gate a production ANN build
-    // runs before swapping an index in. The oracle replays all three
-    // pipelines side by side in one statement.
+    // the index-eval operator: recall@K of the compressed-domain rankings
+    // (flat PQ, depth-2 and depth-3 IVF-PQ) against the exact-L2 ground
+    // truth, zero-hit queries preserved — the accept/reject gate a
+    // production ANN build runs before swapping an index in. The oracle
+    // replays all four pipelines side by side in one statement.
     "ann_recall" -> ((s, d) => {
       val t = Tables(s, d)
       val pqModel = pqFit(s, d)
       pqCapture = Some(pqModel.codebooks)
-      val ivf = ivfPqFit(s, d)
-      ivfPqCapture = Some((ivf.hier.coarse, ivf.hier.sub, ivf.pq.codebooks))
-      val tree = treeIvfPqFit(s, d)
-      treeIvfPqCapture = Some((tree.tree.root, tree.tree.subLevels, tree.pq.codebooks))
+      val ivf = treeIvfPqFit(s, d, depth = 2)
+      ivfPqCapture = Some(levelsOf(ivf))
+      val tree = treeIvfPqFit(s, d, depth = 3)
+      treeIvfPqCapture = Some(levelsOf(tree))
       // the exact ranking feeds all three recall arms, each of which reads
       // it twice (hit join + query-list distinct) — unpinned, the
       // broadcast-query × corpus L2 sweep re-executed SIX times per run
@@ -302,10 +294,10 @@ object SimilarityCatalog extends Catalog {
       val ivfR = Similarity.recallAtK(
         ivf.topK(ivf.encode(corpus(t)), queriesDf(t), IvfPqProbes, K), exact)
         .select(lit("ivfpq").as("method"), col("query_id"), col("n_hits"))
-      // the tree-coarse pipeline is recall-GATED here (BACKLOG contract:
-      // no tree-coarse ANN registration without its recall measured next
-      // to the two-level form's — deeper trees mis-route more boundary
-      // corpus vectors; the serving tail is identical)
+      // the depth-3 pipeline is recall-GATED here (BACKLOG contract: no
+      // deeper-tree ANN registration without its recall measured next to
+      // depth 2's — deeper trees mis-route more boundary corpus vectors;
+      // the serving tail is identical)
       val treeR = Similarity.recallAtK(
         tree.topK(tree.encode(corpus(t)), queriesDf(t), IvfPqProbes, K), exact)
         .select(lit("tivfpq").as("method"), col("query_id"), col("n_hits"))
@@ -313,18 +305,18 @@ object SimilarityCatalog extends Catalog {
     }),
 
     // the full faiss serving shape (with the inverted-multi-index twist):
-    // the TWO-LEVEL hierarchical quantizer is the coarse quantizer — the
-    // flat k ∝ n coarse assignment measured 38× on 10× data at the
-    // sf1→sf10 decade because encode pays n·k dots; two-level pays n·2√k
-    // for the same leaf count. PQ codebooks are fitted on the RESIDUALS
-    // q − c[leaf]; stored artifact = (leaf, M-int code word); a probe-2
-    // query touches two leaves' code lists and scores them in the
-    // compressed domain — cell pruning × ~32× less bytes per scored row.
-    // The oracle replays the two-level argmin, per-subspace residual
-    // encoding, leaf-ranked probe selection, and ADC — all exact integers.
+    // the depth-2 tree is the coarse quantizer — the flat k ∝ n coarse
+    // assignment measured 38× on 10× data at the sf1→sf10 decade because
+    // encode pays n·k dots; depth 2 pays n·2√k for the same leaf count.
+    // PQ codebooks are fitted on the RESIDUALS q − c[leaf]; stored
+    // artifact = (leaf, M-int code word); a probe-2 query touches two
+    // leaves' code lists and scores them in the compressed domain — cell
+    // pruning × ~32× less bytes per scored row. The oracle replays both
+    // argmin levels, per-subspace residual encoding, leaf-ranked probe
+    // selection, and ADC — all exact integers.
     "ivfpq_topk" -> ((s, d) => {
-      val model = ivfPqFit(s, d)
-      ivfPqCapture = Some((model.hier.coarse, model.hier.sub, model.pq.codebooks))
+      val model = treeIvfPqFit(s, d, depth = 2)
+      ivfPqCapture = Some(levelsOf(model))
       val t = Tables(s, d)
       model.topK(model.encode(corpus(t)), queriesDf(t), IvfPqProbes, K)
         .orderBy("query_id", "nn_id")
@@ -335,11 +327,11 @@ object SimilarityCatalog extends Catalog {
     // descends the depth-3 tree (n·d·f dots, the only coarse shape still
     // usable once √k is itself large — see TreeKMeansModel). Registered
     // TOGETHER with its recall gate: ann_recall scores this pipeline
-    // against exact-L2 next to flat PQ and two-level IVF-PQ, closing the
+    // against exact-L2 next to flat PQ and depth-2 IVF-PQ, closing the
     // round-9 BACKLOG condition for fronting an ANN index with the tree.
     "tree_ivfpq_topk" -> ((s, d) => {
-      val model = treeIvfPqFit(s, d)
-      treeIvfPqCapture = Some((model.tree.root, model.tree.subLevels, model.pq.codebooks))
+      val model = treeIvfPqFit(s, d, depth = 3)
+      treeIvfPqCapture = Some(levelsOf(model))
       val t = Tables(s, d)
       model.topK(model.encode(corpus(t)), queriesDf(t), IvfPqProbes, K)
         .orderBy("query_id", "nn_id")
@@ -352,8 +344,8 @@ object SimilarityCatalog extends Catalog {
     // (batch control plane) from encode (stream data plane). Oracled
     // against the same replayed index as the batch encode.
     "stream_ivfpq_encode" -> ((s, d) => {
-      val model = ivfPqFit(s, d)
-      ivfPqCapture = Some((model.hier.coarse, model.hier.sub, model.pq.codebooks))
+      val model = treeIvfPqFit(s, d, depth = 2)
+      ivfPqCapture = Some(levelsOf(model))
       graft.streaming.StreamingCatalog.replayIvfPqEncode(s, d, model)
     }),
 
@@ -364,8 +356,8 @@ object SimilarityCatalog extends Catalog {
     // artifact a reader can pin a consistent version of. Must equal the
     // batch rebuild — same oracle chain as stream_ivfpq_encode.
     "stream_ivfpq_index" -> ((s, d) => {
-      val model = ivfPqFit(s, d)
-      ivfPqIndexCapture = Some((model.hier.coarse, model.hier.sub, model.pq.codebooks))
+      val model = treeIvfPqFit(s, d, depth = 2)
+      ivfPqIndexCapture = Some(levelsOf(model))
       graft.streaming.StreamingCatalog.replayIvfPqIndex(s, d, model)
     }),
 
@@ -398,45 +390,44 @@ object SimilarityCatalog extends Catalog {
     */
   @volatile private var nearDupSrpWidth: Option[Int] = None
 
-  /** Captured two-level centroids of the last `semantic_dedup_hier` fit —
-    * both argmin levels replay in the oracle (hierOracle).
-    */
-  @volatile private var hierCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])] = None
+  /** A captured tree fit: root centroids and the deeper levels' tables. */
+  private type Levels = (Seq[(Int, Seq[Long])], Seq[Seq[(Int, Int, Seq[Long])]])
 
-  /** Captured two-level centroids of the last `embedding_near_dup_hier`
-    * run (separate capture, same subset-run independence; the underlying
-    * fit is shared via [[hierFit]]).
+  /** A captured IVF-PQ index: its tree's [[Levels]] plus the residual
+    * codebooks.
     */
-  @volatile private var nearDupHierCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])] = None
+  private type IvfPqLevels =
+    (Seq[(Int, Seq[Long])], Seq[Seq[(Int, Int, Seq[Long])]], Seq[(Int, Int, Seq[Long])])
 
-  /** Once-per-(JVM, sfDir) memo of the hierarchical fit — fit once,
+  private def levelsOf(m: Similarity.TreeIvfPqModel): IvfPqLevels =
+    (m.tree.root, m.tree.subLevels, m.pq.codebooks)
+
+  /** Captured depth-2 levels of the last `semantic_dedup_hier` fit — both
+    * argmin levels replay in the oracle (hierOracle).
+    */
+  @volatile private var hierCapture: Option[Levels] = None
+
+  /** Captured depth-2 levels of the last `embedding_near_dup_hier` run
+    * (separate capture, same subset-run independence; the underlying fit
+    * is shared via [[treeFit]]).
+    */
+  @volatile private var nearDupHierCapture: Option[Levels] = None
+
+  /** Captured depth-3 levels of the last `embedding_near_dup_tree` run —
+    * the oracle replays every argmin level (nearDupOracle).
+    */
+  @volatile private var nearDupTreeCapture: Option[Levels] = None
+
+  /** Once-per-(JVM, sfDir, depth) memo of the tree fit — fit once,
     * consume many (bench repetitions measure assignment + dedup, not a
     * re-fit).
     */
-  private val hierFits =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.HierKMeansModel]
-  private def hierFit(s: SparkSession, d: String): Similarity.HierKMeansModel =
-    hierFits.getOrElseUpdate(d,
-      Similarity.hierarchicalFit(Tables(s, d).embeddings, "vec_id", "embedding",
-        targetCellSize = 64L, iters = 3))
-
-  /** Captured level tables of the last `embedding_near_dup_tree` run —
-    * the oracle replays every argmin level (treeOracle).
-    */
-  @volatile private var nearDupTreeCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[Seq[(Int, Int, Seq[Long])]])] = None
-
-  /** Once-per-(JVM, sfDir) memo of the depth-3 tree fit (same
-    * fit-once/consume-many shape as [[hierFit]]).
-    */
   private val treeFits =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.TreeKMeansModel]
-  private def treeFit(s: SparkSession, d: String): Similarity.TreeKMeansModel =
-    treeFits.getOrElseUpdate(d,
+    scala.collection.concurrent.TrieMap.empty[(String, Int), Similarity.TreeKMeansModel]
+  private def treeFit(s: SparkSession, d: String, depth: Int): Similarity.TreeKMeansModel =
+    treeFits.getOrElseUpdate((d, depth),
       Similarity.treeFit(Tables(s, d).embeddings, "vec_id", "embedding",
-        targetCellSize = 64L, depth = 3, iters = 3))
+        targetCellSize = 64L, depth = depth, iters = 3))
 
   /** Captured codebooks of the last PQ fit — the pq_codes/pq_topk oracles
     * replay the per-subspace argmin and ADC scoring from them.
@@ -444,7 +435,7 @@ object SimilarityCatalog extends Catalog {
   @volatile private var pqCapture: Option[Seq[(Int, Int, Seq[Long])]] = None
 
   /** Once-per-(JVM, sfDir) memo of the PQ fit (same fit-once/consume-many
-    * shape as [[hierFit]] — bench repetitions measure encode + ADC sweep,
+    * shape as [[treeFit]] — bench repetitions measure encode + ADC sweep,
     * not a re-fit). Only the MODEL is memoized: a checkpointed codes frame
     * would not survive the gate harness's between-query unpersist hygiene,
     * and encode is one narrow pass.
@@ -456,52 +447,35 @@ object SimilarityCatalog extends Catalog {
       Similarity.pqFit(Tables(s, d).embeddings, "vec_id", "embedding",
         m = PqM, ks = PqKs, iters = 3))
 
-  /** Captured (coarse centroids, leaf sub-table, residual codebooks) of
-    * the last IVF-PQ fit — the ivfpq_topk oracle replays the whole index
-    * from them.
+  /** Captured depth-2 index of the last `ivfpq_topk` /
+    * `stream_ivfpq_encode` / `ann_recall` run — the oracles replay the
+    * whole index from it.
     */
-  @volatile private var ivfPqCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])],
-            Seq[(Int, Int, Seq[Long])])] = None
+  @volatile private var ivfPqCapture: Option[IvfPqLevels] = None
 
   /** Captured index of the last `stream_ivfpq_index` run (separate capture
     * so the query stands alone under a subset run; the fit is shared via
-    * [[ivfPqFit]]).
+    * [[treeIvfPqFit]]).
     */
-  @volatile private var ivfPqIndexCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])],
-            Seq[(Int, Int, Seq[Long])])] = None
+  @volatile private var ivfPqIndexCapture: Option[IvfPqLevels] = None
 
-  /** Once-per-(JVM, sfDir) memo of the IVF-PQ fit (model only — same
-    * hygiene rationale as [[pqFit]]). The leaf count is scale-adaptive
-    * (k ∝ n at constant target occupancy) but the coarse quantizer is the
-    * TWO-LEVEL hierarchy, so corpus-side assignment stays n·2√k dots.
+  /** Captured depth-3 index of the last `tree_ivfpq_topk` / `ann_recall`
+    * run — the oracles replay the depth-d argmin chain + residual ADC
+    * from it.
     */
-  private val ivfPqFits =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfPqModel]
-  private def ivfPqFit(s: SparkSession, d: String): Similarity.IvfPqModel =
-    ivfPqFits.getOrElseUpdate(d,
-      Similarity.ivfPqFit(Tables(s, d).embeddings, "vec_id", "embedding",
-        targetCellSize = 64L, m = PqM, ks = PqKs, iters = 3))
+  @volatile private var treeIvfPqCapture: Option[IvfPqLevels] = None
 
-  /** Captured (root, level tables, residual codebooks) of the last
-    * tree-coarse IVF-PQ fit — the tree_ivfpq_topk / ann_recall oracles
-    * replay the depth-d argmin chain + residual ADC from them.
-    */
-  @volatile private var treeIvfPqCapture:
-    Option[(Seq[(Int, Seq[Long])], Seq[Seq[(Int, Int, Seq[Long])]],
-            Seq[(Int, Int, Seq[Long])])] = None
-
-  /** Once-per-(JVM, sfDir) memo of the tree-coarse IVF-PQ fit (model only
-    * — same hygiene rationale as [[pqFit]]). Same depth-3 shape as
-    * [[treeFit]]: corpus-side assignment is n·d·f dots.
+  /** Once-per-(JVM, sfDir, depth) memo of the IVF-PQ fit (model only —
+    * same hygiene rationale as [[pqFit]]). The leaf count is
+    * scale-adaptive (k ∝ n at constant target occupancy) and corpus-side
+    * assignment costs n·d·f dots.
     */
   private val treeIvfPqFits =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.TreeIvfPqModel]
-  private def treeIvfPqFit(s: SparkSession, d: String): Similarity.TreeIvfPqModel =
-    treeIvfPqFits.getOrElseUpdate(d,
+    scala.collection.concurrent.TrieMap.empty[(String, Int), Similarity.TreeIvfPqModel]
+  private def treeIvfPqFit(s: SparkSession, d: String, depth: Int): Similarity.TreeIvfPqModel =
+    treeIvfPqFits.getOrElseUpdate((d, depth),
       Similarity.treeIvfPqFit(Tables(s, d).embeddings, "vec_id", "embedding",
-        targetCellSize = 64L, depth = 3, m = PqM, ks = PqKs, iters = 3))
+        targetCellSize = 64L, depth = depth, m = PqM, ks = PqKs, iters = 3))
 
   /** Centroids of the last `kmeans_label_purity` fit (captured separately so
     * either query oracles independently under a subset run).
@@ -701,90 +675,10 @@ object SimilarityCatalog extends Catalog {
     }
   }
 
-  /** semantic_dedup_hier oracle: replay BOTH captured argmin levels —
-    * coarse assignment via the shared assignCtes chain (ending in
-    * `a(vec_id, cluster)` = the coarse cell), then the sub-cell argmin
-    * scoped to each row's coarse cell (`scn.coarse = a.cluster`), with
-    * the same exact-integer comparison key and lower-cid tie-break as
-    * [[graft.functions.NearestSubCellQ]] — then the standard within-cell
-    * pair scoring / min-id dup collapse blocked on the LEAF cell.
-    */
-  /** The two-level leaf-assignment CTE chain shared by the hier dedup and
-    * hier near-dup-pair oracles: coarse argmin (assignCtes → `a`), then
-    * the sub-cell argmin scoped to the row's coarse cell — ends in
-    * `pc(vec_id, q, n2, cluster)` where cluster is the LEAF cell.
-    */
-  private def hierAssignCtes(coarse: Seq[(Int, Seq[Long])],
-                             sub: Seq[(Int, Int, Seq[Long])]): String = {
-    val subValues = sub.map { case (c, cid, cq) =>
-      s"($c, $cid, CAST([${cq.mkString(", ")}] AS BIGINT[]))"
-    }.mkString(",\n    ")
-    s"""${assignCtes(coarse)},
-       |sc(coarse, cid, cq) AS (VALUES
-       |    $subValues),
-       |scn AS (SELECT coarse, cid, cq,
-       |    CAST((SELECT sum(x * x) FROM (SELECT unnest(cq) AS x)) AS BIGINT) AS cn2
-       |  FROM sc),
-       |sub_scored AS (
-       |  SELECT pn.vec_id, scn.cid,
-       |    pn.n2 - 2 * (SELECT CAST(sum(x * y) AS BIGINT)
-       |                 FROM (SELECT unnest(pn.q) AS x, unnest(scn.cq) AS y))
-       |      + scn.cn2 AS dist
-       |  FROM pn JOIN a ON a.vec_id = pn.vec_id
-       |  JOIN scn ON scn.coarse = a.cluster),
-       |h AS (
-       |  SELECT vec_id, cid AS cluster FROM sub_scored
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dist ASC, cid ASC) = 1),
-       |pc AS (SELECT pn.vec_id, pn.q, pn.n2, h.cluster FROM pn JOIN h USING (vec_id))""".stripMargin
-  }
-
-  /** semantic_dedup_hier oracle: the shared two-level leaf assignment
-    * chain, then the within-cell pair scoring / min-id dup collapse
-    * blocked on the LEAF cell.
-    */
-  private def hierOracle: Option[(String, String)] = hierCapture.map { case (coarse, sub) =>
-    "semantic_dedup_hier" ->
-      s"""WITH ${hierAssignCtes(coarse, sub)},
-         |sd_scored AS (
-         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
-         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-         |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
-         |sd_dup AS (
-         |  SELECT id_b AS vec_id, min(id_a) AS dup_of FROM sd_scored
-         |  WHERE CAST(dot AS DOUBLE) /
-         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-         |  GROUP BY id_b)
-         |SELECT pc.vec_id, pc.cluster, d.dup_of, d.dup_of IS NULL AS is_kept
-         |FROM pc LEFT JOIN sd_dup d USING (vec_id)
-         |ORDER BY pc.vec_id""".stripMargin
-  }
-
-  /** embedding_near_dup_hier oracle: the shared two-level leaf assignment
-    * chain, then the same within-cell pair scoring as the
-    * `embedding_near_dup` oracle, blocked on the LEAF cell.
-    */
-  private def nearDupHierOracle: Option[(String, String)] =
-    nearDupHierCapture.map { case (coarse, sub) =>
-      "embedding_near_dup_hier" ->
-        s"""WITH ${hierAssignCtes(coarse, sub)},
-           |nd_scored AS (
-           |  SELECT x.cluster, x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
-           |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-           |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-           |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
-           |SELECT cluster, id_a, id_b,
-           |  CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS cosine
-           |FROM nd_scored
-           |WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-           |ORDER BY id_a, id_b""".stripMargin
-    }
-
-  /** Depth-d leaf-assignment CTE chain: the [[hierAssignCtes]] recipe
-    * applied per captured level — root argmin via assignCtes (`a`), then
-    * each level's argmin scoped to the previous level's node, identical
-    * comparison key and lower-cid tie-break as
+  /** Depth-d leaf-assignment CTE chain shared by the tree dedup and
+    * near-dup-pair oracles: root argmin via assignCtes (`a`), then each
+    * captured level's argmin scoped to the previous level's node, with the
+    * same exact-integer comparison key and lower-cid tie-break as
     * [[graft.functions.NearestSubCellQ]]. Ends in
     * `pc(vec_id, q, n2, cluster)` with cluster = the LEAF.
     */
@@ -822,12 +716,35 @@ object SimilarityCatalog extends Catalog {
     chain.toString
   }
 
-  /** embedding_near_dup_tree oracle: the depth-d leaf assignment chain,
-    * then the same within-leaf pair scoring as the hier near-dup oracle.
+  /** semantic_dedup_hier oracle: the depth-2 leaf assignment chain, then
+    * the within-cell pair scoring / min-id dup collapse blocked on the
+    * LEAF cell.
     */
-  private def nearDupTreeOracle: Option[(String, String)] =
-    nearDupTreeCapture.map { case (root, subLevels) =>
-      "embedding_near_dup_tree" ->
+  private def hierOracle: Option[(String, String)] = hierCapture.map { case (root, subLevels) =>
+    "semantic_dedup_hier" ->
+      s"""WITH ${treeAssignCtes(root, subLevels)},
+         |sd_scored AS (
+         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
+         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
+         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
+         |  FROM pc x JOIN pc y ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
+         |sd_dup AS (
+         |  SELECT id_b AS vec_id, min(id_a) AS dup_of FROM sd_scored
+         |  WHERE CAST(dot AS DOUBLE) /
+         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
+         |  GROUP BY id_b)
+         |SELECT pc.vec_id, pc.cluster, d.dup_of, d.dup_of IS NULL AS is_kept
+         |FROM pc LEFT JOIN sd_dup d USING (vec_id)
+         |ORDER BY pc.vec_id""".stripMargin
+  }
+
+  /** embedding_near_dup_hier / _tree oracle: the leaf assignment chain
+    * over the query's captured levels, then the same within-cell pair
+    * scoring as the `embedding_near_dup` oracle, blocked on the LEAF cell.
+    */
+  private def nearDupOracle(name: String, capture: Option[Levels]): Option[(String, String)] =
+    capture.map { case (root, subLevels) =>
+      name ->
         s"""WITH ${treeAssignCtes(root, subLevels)},
            |nd_scored AS (
            |  SELECT x.cluster, x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
@@ -928,125 +845,16 @@ object SimilarityCatalog extends Catalog {
              |ORDER BY query_id, nn_id""".stripMargin)
   }
 
-  /** ivfpq_topk oracle: replay the ENTIRE captured index — coarse argmin
-    * (exact key, lower-cid ties), per-subspace residual code assignment
-    * (the argmin over Σ((x−c)−y)² ≡ the kernel's cn2−2·dot key up to a
-    * per-(vec,m) constant), probe-P cell selection per query, and ADC
-    * partial sums over the probed cells — every step exact integers.
-    */
-  /** The complete IVF-PQ chain (two-level leaf assignment → residual
-    * encode → leaf-ranked probe selection → ADC partials), CTE names
-    * prefixed with `p` — ends in `${p}adc(query_id, nn_id, adc_dist)`.
-    * Corpus leaves come from the HIERARCHICAL argmin (coarse, then that
-    * cell's sub-table — mirror of NearestCellQ → NearestSubCellQ); query
-    * probes rank ALL real leaves flat (the query side is tiny on the
-    * engine side too).
-    */
-  private def ivfPqChainCtes(coarse: Seq[(Int, Seq[Long])],
-                             sub: Seq[(Int, Int, Seq[Long])],
-                             codebooks: Seq[(Int, Int, Seq[Long])],
-                             p: String): String = {
-    val ds = Dim / PqM
-    val coarseValues = coarse.map { case (cid, cq) =>
-      s"($cid, CAST([${cq.mkString(", ")}] AS BIGINT[]))"
-    }.mkString(",\n    ")
-    val leafValues = sub.map { case (c, leaf, cq) =>
-      s"($c, $leaf, CAST([${cq.mkString(", ")}] AS BIGINT[]))"
-    }.mkString(",\n    ")
-    s"""${p}c(cid, cq) AS (VALUES
-       |    $coarseValues),
-       |${p}cn AS (SELECT cid, cq,
-       |    CAST((SELECT sum(x * x) FROM (SELECT unnest(cq) AS x)) AS BIGINT) AS cn2
-       |  FROM ${p}c),
-       |${p}cscored AS (
-       |  SELECT pn.vec_id, cn.cid,
-       |    pn.n2 - 2 * (SELECT CAST(sum(x * y) AS BIGINT)
-       |                 FROM (SELECT unnest(pn.q) AS x, unnest(cn.cq) AS y))
-       |      + cn.cn2 AS dist
-       |  FROM pn CROSS JOIN ${p}cn cn),
-       |${p}ca0 AS (
-       |  SELECT vec_id, cid AS coarse FROM ${p}cscored
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dist ASC, cid ASC) = 1),
-       |${p}lt(coarse, cid, cq) AS (VALUES
-       |    $leafValues),
-       |${p}ltn AS (SELECT coarse, cid, cq,
-       |    CAST((SELECT sum(x * x) FROM (SELECT unnest(cq) AS x)) AS BIGINT) AS cn2
-       |  FROM ${p}lt),
-       |${p}lscored AS (
-       |  SELECT pn.vec_id, lt.cid,
-       |    pn.n2 - 2 * (SELECT CAST(sum(x * y) AS BIGINT)
-       |                 FROM (SELECT unnest(pn.q) AS x, unnest(lt.cq) AS y))
-       |      + lt.cn2 AS dist
-       |  FROM pn JOIN ${p}ca0 ca0 USING (vec_id)
-       |  JOIN ${p}ltn lt ON lt.coarse = ca0.coarse),
-       |${p}ca AS (
-       |  SELECT vec_id, cid AS cell FROM ${p}lscored
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dist ASC, cid ASC) = 1),
-       |${adcTailCtes(codebooks, p)}""".stripMargin
-  }
-
-  /** The shared ADC tail of every IVF-style oracle chain (residual encode
-    * → flat leaf-ranked probe selection → ADC partials): depends on
-    * `${p}ca(vec_id, cell)` (corpus leaf assignment) and
-    * `${p}ltn(cid, cq, cn2)` (leaf-centroid table) existing in the WITH
-    * scope — the mirror of [[Similarity.ivfAdcTopK]] being shared by the
-    * two-level and tree-coarse indexes on the engine side. Ends in
-    * `${p}adc(query_id, nn_id, adc_dist)`.
-    */
-  private def adcTailCtes(codebooks: Seq[(Int, Int, Seq[Long])],
-                          p: String): String = {
-    val ds = Dim / PqM
-    val cbValues = codebooks.map { case (m, code, cq) =>
-      s"($m, $code, CAST([${cq.mkString(", ")}] AS BIGINT[]))"
-    }.mkString(",\n    ")
-    s"""${p}cb(m, code, cq) AS (VALUES
-       |    $cbValues),
-       |${p}enc_scored AS (
-       |  SELECT pn.vec_id, cb.m, cb.code,
-       |    (SELECT CAST(sum((x - cc - y) * (x - cc - y)) AS BIGINT)
-       |     FROM (SELECT unnest(list_slice(pn.q, cb.m * $ds + 1, cb.m * $ds + $ds)) AS x,
-       |                  unnest(list_slice(lt.cq, cb.m * $ds + 1, cb.m * $ds + $ds)) AS cc,
-       |                  unnest(cb.cq) AS y)) AS dist
-       |  FROM pn JOIN ${p}ca ca USING (vec_id) JOIN ${p}ltn lt ON lt.cid = ca.cell
-       |  CROSS JOIN ${p}cb cb),
-       |${p}enc AS (
-       |  SELECT vec_id, m, code FROM ${p}enc_scored
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id, m
-       |    ORDER BY dist ASC, code ASC) = 1),
-       |${p}qscored AS (
-       |  SELECT pn.vec_id, lt.cid,
-       |    pn.n2 - 2 * (SELECT CAST(sum(x * y) AS BIGINT)
-       |                 FROM (SELECT unnest(pn.q) AS x, unnest(lt.cq) AS y))
-       |      + lt.cn2 AS dist
-       |  FROM pn CROSS JOIN ${p}ltn lt
-       |  WHERE pn.vec_id < $NumQueries),
-       |${p}qa AS (
-       |  SELECT vec_id AS query_id, cid AS cell FROM ${p}qscored
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dist ASC, cid ASC) <= $IvfPqProbes),
-       |${p}partial AS (
-       |  SELECT qa.query_id, ca.vec_id AS nn_id,
-       |    (SELECT CAST(sum((x - cc - y) * (x - cc - y)) AS BIGINT)
-       |     FROM (SELECT unnest(list_slice(qp.q, cb.m * $ds + 1, cb.m * $ds + $ds)) AS x,
-       |                  unnest(list_slice(lt.cq, cb.m * $ds + 1, cb.m * $ds + $ds)) AS cc,
-       |                  unnest(cb.cq) AS y)) AS pd
-       |  FROM ${p}qa qa
-       |  JOIN pn qp ON qp.vec_id = qa.query_id
-       |  JOIN ${p}ltn lt ON lt.cid = qa.cell
-       |  JOIN ${p}ca ca ON ca.cell = qa.cell
-       |  JOIN ${p}enc e ON e.vec_id = ca.vec_id
-       |  JOIN ${p}cb cb ON cb.m = e.m AND cb.code = e.code
-       |  WHERE ca.vec_id <> qa.query_id),
-       |${p}adc AS (SELECT query_id, nn_id, CAST(sum(pd) AS BIGINT) AS adc_dist
-       |  FROM ${p}partial GROUP BY query_id, nn_id)""".stripMargin
-  }
-
-  /** The complete TREE-coarse IVF-PQ chain: the depth-d leaf argmin chain
-    * (prefixed mirror of [[treeAssignCtes]] — identical comparison key and
-    * lower-cid tie-break per level) into `${p}ca`, the last level's table
-    * as `${p}ltn`, then the shared [[adcTailCtes]]. Ends in
+  /** The complete IVF-PQ chain, CTE names prefixed with `p`: the depth-d
+    * leaf argmin chain (prefixed mirror of [[treeAssignCtes]] — identical
+    * comparison key and lower-cid tie-break per level) into
+    * `${p}ca(vec_id, cell)`, the last level's table as `${p}ltn`, then the
+    * ADC tail — per-subspace residual encode (the argmin over
+    * Σ((x−c)−y)² ≡ the kernel's cn2−2·dot key up to a per-(vec,m)
+    * constant), probe-P leaf selection ranking ALL real leaves flat (the
+    * query side is tiny on the engine side too), and ADC partial sums over
+    * the probed leaves — the mirror of [[Similarity.TreeIvfPqModel]]'s
+    * encode/topK. Every step is exact integers. Ends in
     * `${p}adc(query_id, nn_id, adc_dist)`.
     */
   private def treeIvfPqChainCtes(root: Seq[(Int, Seq[Long])],
@@ -1098,66 +906,98 @@ object SimilarityCatalog extends Catalog {
       prev = s"${p}a$l"
     }
     val lastLevel = subLevels.size + 1
+    val ds = Dim / PqM
+    val cbValues = codebooks.map { case (m, code, cq) =>
+      s"($m, $code, CAST([${cq.mkString(", ")}] AS BIGINT[]))"
+    }.mkString(",\n    ")
     chain.append(s""",
       |${p}ca AS (SELECT vec_id, cluster AS cell FROM $prev),
       |${p}ltn AS (SELECT cid, cq, cn2 FROM ${p}scn$lastLevel),
-      |${adcTailCtes(codebooks, p)}""".stripMargin)
+      |${p}cb(m, code, cq) AS (VALUES
+      |    $cbValues),
+      |${p}enc_scored AS (
+      |  SELECT pn.vec_id, cb.m, cb.code,
+      |    (SELECT CAST(sum((x - cc - y) * (x - cc - y)) AS BIGINT)
+      |     FROM (SELECT unnest(list_slice(pn.q, cb.m * $ds + 1, cb.m * $ds + $ds)) AS x,
+      |                  unnest(list_slice(lt.cq, cb.m * $ds + 1, cb.m * $ds + $ds)) AS cc,
+      |                  unnest(cb.cq) AS y)) AS dist
+      |  FROM pn JOIN ${p}ca ca USING (vec_id) JOIN ${p}ltn lt ON lt.cid = ca.cell
+      |  CROSS JOIN ${p}cb cb),
+      |${p}enc AS (
+      |  SELECT vec_id, m, code FROM ${p}enc_scored
+      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m
+      |    ORDER BY dist ASC, code ASC) = 1),
+      |${p}qscored AS (
+      |  SELECT pn.vec_id, lt.cid,
+      |    pn.n2 - 2 * (SELECT CAST(sum(x * y) AS BIGINT)
+      |                 FROM (SELECT unnest(pn.q) AS x, unnest(lt.cq) AS y))
+      |      + lt.cn2 AS dist
+      |  FROM pn CROSS JOIN ${p}ltn lt
+      |  WHERE pn.vec_id < $NumQueries),
+      |${p}qa AS (
+      |  SELECT vec_id AS query_id, cid AS cell FROM ${p}qscored
+      |  QUALIFY row_number() OVER (PARTITION BY vec_id
+      |    ORDER BY dist ASC, cid ASC) <= $IvfPqProbes),
+      |${p}partial AS (
+      |  SELECT qa.query_id, ca.vec_id AS nn_id,
+      |    (SELECT CAST(sum((x - cc - y) * (x - cc - y)) AS BIGINT)
+      |     FROM (SELECT unnest(list_slice(qp.q, cb.m * $ds + 1, cb.m * $ds + $ds)) AS x,
+      |                  unnest(list_slice(lt.cq, cb.m * $ds + 1, cb.m * $ds + $ds)) AS cc,
+      |                  unnest(cb.cq) AS y)) AS pd
+      |  FROM ${p}qa qa
+      |  JOIN pn qp ON qp.vec_id = qa.query_id
+      |  JOIN ${p}ltn lt ON lt.cid = qa.cell
+      |  JOIN ${p}ca ca ON ca.cell = qa.cell
+      |  JOIN ${p}enc e ON e.vec_id = ca.vec_id
+      |  JOIN ${p}cb cb ON cb.m = e.m AND cb.code = e.code
+      |  WHERE ca.vec_id <> qa.query_id),
+      |${p}adc AS (SELECT query_id, nn_id, CAST(sum(pd) AS BIGINT) AS adc_dist
+      |  FROM ${p}partial GROUP BY query_id, nn_id)""".stripMargin)
     chain.toString
   }
 
-  private def ivfPqOracle: Map[String, String] =
-    ivfPqCapture.toSeq.flatMap { case (coarse, sub, codebooks) =>
-      Seq(
-        "ivfpq_topk" ->
-          s"""WITH $prepSql,
-             |${ivfPqChainCtes(coarse, sub, codebooks, "")}
-             |SELECT query_id, nn_id, adc_dist FROM adc
-             |QUALIFY row_number() OVER (PARTITION BY query_id
-             |  ORDER BY adc_dist ASC, nn_id ASC) <= $K
-             |ORDER BY query_id, nn_id""".stripMargin,
-        // the streamed encode must land the SAME stored artifact as the
-        // batch replay: leaf + code word per vector (DuckDB computes only
-        // the CTEs this SELECT references — the probe/ADC tail is unused)
-        "stream_ivfpq_encode" ->
-          s"""WITH $prepSql,
-             |${ivfPqChainCtes(coarse, sub, codebooks, "")}
-             |SELECT ca.vec_id, ca.cell,
-             |  string_agg(CAST(e.code AS VARCHAR), ',' ORDER BY e.m) AS codes
-             |FROM ca JOIN enc e USING (vec_id)
-             |GROUP BY ca.vec_id, ca.cell
-             |ORDER BY ca.vec_id""".stripMargin)
-    }.toMap
-
-  /** stream_ivfpq_index oracle: the stream-maintained snapshot must equal
-    * the batch rebuild — identical chain to the stream_ivfpq_encode oracle
-    * over this query's own capture.
+  /** ivfpq_topk / tree_ivfpq_topk oracle: the ENTIRE captured index
+    * replayed, then the per-query top-K on the ADC distance with the
+    * lower-nn_id tie-break.
     */
-  private def ivfPqIndexOracle: Option[(String, String)] =
-    ivfPqIndexCapture.map { case (coarse, sub, codebooks) =>
-      "stream_ivfpq_index" ->
-        s"""WITH $prepSql,
-           |${ivfPqChainCtes(coarse, sub, codebooks, "")}
-           |SELECT ca.vec_id, ca.cell,
-           |  string_agg(CAST(e.code AS VARCHAR), ',' ORDER BY e.m) AS codes
-           |FROM ca JOIN enc e USING (vec_id)
-           |GROUP BY ca.vec_id, ca.cell
-           |ORDER BY ca.vec_id""".stripMargin
-    }
+  private def ivfPqTopKSql(c: IvfPqLevels): String =
+    s"""WITH $prepSql,
+       |${treeIvfPqChainCtes(c._1, c._2, c._3, "")}
+       |SELECT query_id, nn_id, adc_dist FROM adc
+       |QUALIFY row_number() OVER (PARTITION BY query_id
+       |  ORDER BY adc_dist ASC, nn_id ASC) <= $K
+       |ORDER BY query_id, nn_id""".stripMargin
 
-  /** ann_recall oracle: BOTH captured indexes replayed side by side (the
-    * flat-PQ chain under `p_`, the IVF-PQ chain under `i_`), the exact-L2
+  /** stream_ivfpq_encode / stream_ivfpq_index oracle: the streamed encode
+    * and the stream-maintained snapshot must both land the SAME stored
+    * artifact as the batch replay — leaf + code word per vector (DuckDB
+    * computes only the CTEs this SELECT references; the probe/ADC tail is
+    * unused).
+    */
+  private def ivfPqEncodeSql(c: IvfPqLevels): String =
+    s"""WITH $prepSql,
+       |${treeIvfPqChainCtes(c._1, c._2, c._3, "")}
+       |SELECT ca.vec_id, ca.cell,
+       |  string_agg(CAST(e.code AS VARCHAR), ',' ORDER BY e.m) AS codes
+       |FROM ca JOIN enc e USING (vec_id)
+       |GROUP BY ca.vec_id, ca.cell
+       |ORDER BY ca.vec_id""".stripMargin
+
+  /** ann_recall oracle: all three captured indexes replayed side by side
+    * (the flat-PQ chain under `p_`, the depth-2 IVF-PQ chain under `i_`,
+    * the depth-3 one under `t_`), the exact-L2
     * ground truth as one scored self-join, hits counted per query with
     * zero-hit queries preserved — the same contract as
     * [[Similarity.recallAtK]].
     */
   private def annRecallOracle: Option[(String, String)] =
-    for { codebooks <- pqCapture; (coarse, sub, rcb) <- ivfPqCapture
+    for { codebooks <- pqCapture; (iroot, ilevels, icb) <- ivfPqCapture
           (troot, tlevels, tcb) <- treeIvfPqCapture } yield {
       "ann_recall" ->
         s"""WITH $prepSql,
            |${pqAssignCtes(codebooks, "p_")},
            |${pqAdcCtes("p_")},
-           |${ivfPqChainCtes(coarse, sub, rcb, "i_")},
+           |${treeIvfPqChainCtes(iroot, ilevels, icb, "i_")},
            |${treeIvfPqChainCtes(troot, tlevels, tcb, "t_")},
            |ex_scored AS (
            |  SELECT qv.vec_id AS query_id, cv.vec_id AS nn_id,
@@ -1203,49 +1043,30 @@ object SimilarityCatalog extends Catalog {
            |ORDER BY method, query_id""".stripMargin
     }
 
-  /** tree_ivfpq_topk oracle: the ENTIRE captured tree-coarse index
-    * replayed — depth-d argmin chain, residual code assignment, flat
-    * leaf-ranked probe selection, ADC partials — all exact integers.
+  /** semantic_dedup_srp_bucket oracle: the declared band + verify replay
+    * at the captured width.
     */
-  private def treeIvfPqOracle: Option[(String, String)] =
-    treeIvfPqCapture.map { case (root, subLevels, cb) =>
-      "tree_ivfpq_topk" ->
-        s"""WITH $prepSql,
-           |${treeIvfPqChainCtes(root, subLevels, cb, "")}
-           |SELECT query_id, nn_id, adc_dist FROM adc
-           |QUALIFY row_number() OVER (PARTITION BY query_id
-           |  ORDER BY adc_dist ASC, nn_id ASC) <= $K
-           |ORDER BY query_id, nn_id""".stripMargin
-    }
-
-  /** The srp-dedup SQL at a band width — shared by the fixed-width
-    * `semantic_dedup_srp` and the adaptive-width `semantic_dedup_srp_bucket`
-    * oracles (the declared band + verify semantics, and so the replay, are
-    * identical; only the width differs).
-    */
-  private def srpDedupSqlAtWidth(rpb: Int): String =
-    s"""WITH $prepSql,
-       |${srpSketchCtesWidth(rpb)},
-       |scand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM bands a JOIN bands b ON a.b = b.b AND a.bv = b.bv
-       |    AND a.vec_id < b.vec_id),
-       |ssc AS (
-       |  SELECT scand.id_a, scand.id_b, x.n2 AS na, y.n2 AS nb,
-       |    (SELECT CAST(sum(xx * yy) AS BIGINT)
-       |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
-       |  FROM scand
-       |  JOIN pn x ON x.vec_id = scand.id_a
-       |  JOIN pn y ON y.vec_id = scand.id_b),
-       |sdup AS (SELECT id_b AS vec_id, min(id_a) AS dup_of FROM ssc
-       |  WHERE CAST(dot AS DOUBLE) /
-       |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
-       |  GROUP BY id_b)
-       |SELECT e.vec_id, d.dup_of, d.dup_of IS NULL AS is_kept
-       |FROM embeddings e LEFT JOIN sdup d USING (vec_id)
-       |ORDER BY e.vec_id""".stripMargin
-
   private def srpBucketOracle: Option[(String, String)] = srpBucketWidth.map { rpb =>
-    "semantic_dedup_srp_bucket" -> srpDedupSqlAtWidth(rpb)
+    "semantic_dedup_srp_bucket" ->
+      s"""WITH $prepSql,
+         |${srpSketchCtesWidth(rpb)},
+         |scand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+         |  FROM bands a JOIN bands b ON a.b = b.b AND a.bv = b.bv
+         |    AND a.vec_id < b.vec_id),
+         |ssc AS (
+         |  SELECT scand.id_a, scand.id_b, x.n2 AS na, y.n2 AS nb,
+         |    (SELECT CAST(sum(xx * yy) AS BIGINT)
+         |     FROM (SELECT unnest(x.q) AS xx, unnest(y.q) AS yy)) AS dot
+         |  FROM scand
+         |  JOIN pn x ON x.vec_id = scand.id_a
+         |  JOIN pn y ON y.vec_id = scand.id_b),
+         |sdup AS (SELECT id_b AS vec_id, min(id_a) AS dup_of FROM ssc
+         |  WHERE CAST(dot AS DOUBLE) /
+         |    (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos
+         |  GROUP BY id_b)
+         |SELECT e.vec_id, d.dup_of, d.dup_of IS NULL AS is_kept
+         |FROM embeddings e LEFT JOIN sdup d USING (vec_id)
+         |ORDER BY e.vec_id""".stripMargin
   }
 
   private def nearDupSrpOracle: Option[(String, String)] = nearDupSrpWidth.map { rpb =>
@@ -1286,11 +1107,14 @@ object SimilarityCatalog extends Catalog {
 
   def oracleSql: Map[String, String] =
     kmeansOracle.toMap ++ purityOracle.toMap ++ srpBucketOracle.toMap ++
-      nearDupSrpOracle.toMap ++ hierOracle.toMap ++ nearDupHierOracle.toMap ++
-      nearDupTreeOracle.toMap ++
-      pqOracles ++ ivfPqOracle ++ ivfPqIndexOracle.toMap ++
-      treeIvfPqOracle.toMap ++ annRecallOracle.toMap ++ Map(
-    "semantic_dedup_srp" -> srpDedupSqlAtWidth(Srp.RowsPerBand),
+      nearDupSrpOracle.toMap ++ hierOracle.toMap ++
+      nearDupOracle("embedding_near_dup_hier", nearDupHierCapture).toMap ++
+      nearDupOracle("embedding_near_dup_tree", nearDupTreeCapture).toMap ++
+      pqOracles ++ annRecallOracle.toMap ++
+      ivfPqCapture.map(c => "ivfpq_topk" -> ivfPqTopKSql(c)).toMap ++
+      ivfPqCapture.map(c => "stream_ivfpq_encode" -> ivfPqEncodeSql(c)).toMap ++
+      ivfPqIndexCapture.map(c => "stream_ivfpq_index" -> ivfPqEncodeSql(c)).toMap ++
+      treeIvfPqCapture.map(c => "tree_ivfpq_topk" -> ivfPqTopKSql(c)).toMap ++ Map(
 
     "embedding_pca" ->
       s"""WITH $pcaCtes

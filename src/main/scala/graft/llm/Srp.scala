@@ -148,75 +148,28 @@ object Srp {
       .select(col(id), explode(array(keys: _*)).as("band"))
   }
 
-  /** SRP-bucketed approximate top-k: candidates from the band-bucket join
-    * (queries broadcast), exact integer-cosine re-rank, k per query with
-    * deterministic ties. Same output shape as [[Similarity.cosineTopK]];
-    * queries whose buckets hold fewer than k candidates return fewer rows
-    * (the recall dial is [[Bands]]).
-    */
   /** Training-free semantic dedup: SemDeDup verdicts with the pair search
-    * blocked on SRP band buckets instead of learned cells — the shape for
-    * when even a k ∝ n k-means fit is too expensive. The adaptive fit's
-    * nearest-cell ASSIGNMENT alone costs n·k integer dots, quadratic once
-    * k tracks n (measured: the flat k ∝ n fit's dedup 11.4× on 10× data at
-    * sf1); sketching is ONE narrow pass with no training, and bucket
-    * volume tracks data density. Candidates = vectors sharing any band
+    * blocked on SRP band buckets instead of learned cells — no k-means
+    * build, one narrow sketch pass. Candidates = vectors sharing any band
     * bucket, verified by exact integer cosine at τ, collapsed to the
-    * min-id keeper exactly like [[Similarity.semanticDedup]]. The recall
-    * dial is [[Bands]] (near-identical vectors, θ → 0, collide almost
-    * surely — the SemDeDup regime); the oracle replays the identical
-    * sketch → band → verify pipeline bit-for-bit.
-    */
-  def semanticDedupSrp(df: DataFrame, id: String, vec: String, dim: Int,
-                       threshold: Double): DataFrame =
-    semanticDedupSrpWidth(df, id, vec, dim, threshold, RowsPerBand)
-
-  def semanticDedupSrpWidth(df: DataFrame, id: String, vec: String, dim: Int,
-                            threshold: Double, rowsPerBand: Int): DataFrame = {
-    val p = Similarity.prepare(df, id, vec)
-      .select(col(id), col("q"), col("n2")).localCheckpoint(false)
-    val bands = bandedRows(p, id, vec, dim, rowsPerBand)
-    val cand = bands.select(col(id).as("id_a"), col("band"))
-      .join(bands.select(col(id).as("id_b"), col("band")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val dupOf = cand
-      .join(p.select(col(id).as("id_a"), col("q").as("qa"), col("n2").as("na")),
-        Seq("id_a"))
-      .join(p.select(col(id).as("id_b"), col("q").as("qb"), col("n2").as("nb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Similarity.cosineQ(Similarity.dotQ(col("qa"), col("qb")),
-          col("na"), col("nb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .groupBy(col("id_b").as(id)).agg(min(col("id_a")).as("dup_of"))
-    df.select(col(id))
-      .join(dupOf, Seq(id), "left")
-      .select(col(id), col("dup_of"), col("dup_of").isNull.as("is_kept"))
-  }
-
-  /** [[semanticDedupSrp]] at a scale-adaptive band width
-    * ([[rowsPerBandFor]]: bucket count tracks n, so bucket occupancy — and
-    * spurious-candidate volume — stays ~constant per vector as the corpus
-    * grows), with the verify run WITHIN the band bucket — the round-10
-    * production form, and the measured winner over both the pair-frame
-    * verify and a hamming-prefilter two-stage form. Returns the chosen
-    * width with the verdict frame so the gate oracle can replay the
-    * identical banding. The pair
-    * problem was never compute (a banded candidate costs one 64-MAC dot,
-    * ~2 s of arithmetic for 50 M candidates on this box) — it was
-    * PAYLOAD: materializing the global candidate-pair list and then
-    * joining a ~0.5 KB quantized vector onto EACH SIDE of every pair
-    * ships pairs×1 KB (32+ GB at 632k → spill cascade). Here the vectors
-    * ride the BAND rows instead — one n·[[Bands]]-row shuffle of ~corpus
-    * volume — and the exact cosine evaluates INSIDE the band self-join's
-    * output projection (whole-stage codegen, never exchanged); only
-    * PASSING pairs reach the distinct. Verdicts are identical to
-    * [[semanticDedupSrpWidth]] bit-for-bit (same banding, same verify,
-    * spec-pinned), so the oracle is the same band+verify replay. Measured
-    * (SCALE.md round 10): 4.4/5.5/14.0 s at 200k/632k/2M — sub-linear,
-    * vs 23/299/— pair-frame and 15/83/— prefilter two-stage; the cheapest
-    * TRAINING-FREE dedup at every measured point.
+    * min-id keeper exactly like [[Similarity.semanticDedup]]; the recall
+    * dial is [[Bands]]. The band width is scale-adaptive
+    * ([[rowsPerBandFor]]: bucket occupancy, and so spurious-candidate
+    * volume, stays ~constant per vector as the corpus grows). Returns the
+    * chosen width with the verdict frame so the gate oracle can replay
+    * the identical banding.
+    *
+    * The verify runs WITHIN the band bucket. The pair problem was never
+    * compute (a banded candidate costs one 64-MAC dot) — it was PAYLOAD:
+    * materializing the global candidate-pair list and joining a ~0.5 KB
+    * quantized vector onto EACH SIDE of every pair ships pairs×1 KB (32+
+    * GB at 632k → spill cascade). Here the vectors ride the BAND rows —
+    * one n·[[Bands]]-row shuffle of ~corpus volume — and the exact cosine
+    * evaluates INSIDE the band self-join's output projection; only PASSING
+    * pairs reach the distinct. Verdicts equal the pair-frame verify's
+    * (spec-pinned against `SpecForms.srpPairFrameDedup`). Measured
+    * (SCALE.md round 10): 4.4/5.5/14.0 s at 200k/632k/2M, vs 23/299/—
+    * pair-frame and 15/83/— prefilter two-stage.
     */
   def semanticDedupSrpBucketAuto(df: DataFrame, id: String, vec: String,
                                  dim: Int, threshold: Double,
@@ -261,8 +214,8 @@ object Srp {
     * [[Similarity.cellNearDupPairs]] over learned cells, completing the
     * pair-tier matrix (hier / tree quantizers both need a
     * k-means build; this needs none). Same declared band + verify
-    * semantics as [[semanticDedupSrpWidth]], same scale shape as
-    * [[semanticDedupSrpBucketWidth]]. Returns the captured width for the
+    * semantics and scale shape as [[semanticDedupSrpBucketWidth]]. Returns
+    * the captured width for the
     * oracle replay.
     */
   def nearDupPairsSrpAuto(df: DataFrame, id: String, vec: String, dim: Int,
@@ -311,6 +264,12 @@ object Srp {
       .filter(col("cosine") >= threshold)
   }
 
+  /** SRP-bucketed approximate top-k: candidates from the band-bucket join
+    * (queries broadcast), exact integer-cosine re-rank, k per query with
+    * deterministic ties. Same output shape as [[Similarity.cosineTopK]];
+    * queries whose buckets hold fewer than k candidates return fewer rows
+    * (the recall dial is [[Bands]]).
+    */
   def annTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
               dim: Int, k: Int): DataFrame = {
     val pc = Similarity.prepare(corpus, id, vec)

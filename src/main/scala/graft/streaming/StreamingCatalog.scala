@@ -119,14 +119,14 @@ object StreamingCatalog extends Catalog {
   /** In-flight IVF-PQ encoding of an embedding stream: the 100 TB ingest
     * shape — embeddings land continuously and the stored index artifact
     * `(leaf cell, M-int code word)` is computed as they arrive, one
-    * stateless codegen'd projection per row (two-level argmin → residual
+    * stateless codegen'd projection per row (tree argmins → residual
     * → M sliced code argmins), appended exactly-once through the
     * checkpointed file sink. No state store: encoding against a FITTED
     * model is embarrassingly per-row, which is exactly why an index build
     * separates fit (batch, control-plane) from encode (stream, data-plane).
     */
   def replayIvfPqEncode(s: SparkSession, d: String,
-                        model: graft.llm.Similarity.IvfPqModel): DataFrame = {
+                        model: graft.llm.Similarity.TreeIvfPqModel): DataFrame = {
     val encoded = s.readStream.schema(embSchema)
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(d)
@@ -156,7 +156,7 @@ object StreamingCatalog extends Catalog {
     * (embeddings pre-split, maxFilesPerTrigger=1).
     */
   def replayIvfPqIndex(s: SparkSession, d: String,
-                       model: graft.llm.Similarity.IvfPqModel): DataFrame = {
+                       model: graft.llm.Similarity.TreeIvfPqModel): DataFrame = {
     val base = graft.engine.TempDirs.create("graft-ivfpq-index")
     val src = graft.engine.FixtureDirs("embeddings-split4", d) { tmp =>
       graft.engine.Tables(s, d).embeddings.repartition(4)

@@ -188,15 +188,6 @@ class LlmSpec extends SparkSpec {
     assert(rounds <= 8, s"logarithmic convergence, got $rounds rounds")
   }
 
-  test("dupClustersAlternating equals dupClusters on the corpus") {
-    val docs = Tables(spark, sf).documents
-    val a = graft.llm.Dedup.dupClustersAlternating(docs, "doc_id", "text", 0.8)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = Dedup.dupClusters(docs, "doc_id", "text", 0.8)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(a === b)
-  }
-
   test("dupClusters propagates the minimum id through chains") {
     // 1~2, 2~3 (chain), 5~6, 9 isolated: components {1,2,3}, {5,6}, {9}.
     // Near-dups differ by one token over 20 (jaccard ~0.85, inside the
@@ -218,10 +209,12 @@ class LlmSpec extends SparkSpec {
   }
 
   test("dupClusters fails loudly when maxIter cannot reach convergence") {
-    // any connected pair needs 2 iterations (propagate, then confirm);
-    // maxIter=1 must throw rather than silently return unconverged labels
+    // three mutual near-dups: the edge 3~2 is not yet a star onto the
+    // minimum, so round 1 rewrites the edge frame and only round 2 can
+    // confirm the fixpoint; maxIter=1 must throw rather than silently
+    // return unconverged labels
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
-    val df = Seq((1L, base), (2L, base + " extra"))
+    val df = Seq((1L, base), (2L, base + " extra"), (3L, base + " more"))
       .toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
       Dedup.dupClusters(df, "doc_id", "text", 0.6, maxIter = 1).collect()
@@ -268,7 +261,7 @@ class LlmSpec extends SparkSpec {
       "IVF candidates come from the query's cell"))
   }
 
-  test("kmeansAssign recovers well-separated clusters deterministically") {
+  test("kmeansFit recovers well-separated clusters deterministically") {
     // three tight clusters far apart; members must co-assign
     val rnd = new scala.util.Random(7)
     def jitter(base: Array[Float]): Seq[Float] =
@@ -279,10 +272,10 @@ class LlmSpec extends SparkSpec {
       (5 until 10).map(i => (i.toLong, jitter(b2))) ++
       (10 until 15).map(i => (i.toLong, jitter(b3)))
     val df = rows.toDF("vec_id", "embedding")
-    val once = Similarity.kmeansAssign(df, "vec_id", "embedding", k = 3, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val again = Similarity.kmeansAssign(df, "vec_id", "embedding", k = 3, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    def fitAssign() = Similarity.kmeansFit(df, "vec_id", "embedding", k = 3, iters = 4)
+      .assign(df).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val once = fitAssign()
+    val again = fitAssign()
     assert(once === again, "integer k-means is run-deterministic")
     def clusterOf(ids: Seq[Long]) = ids.map(once).distinct
     assert(clusterOf(0L until 5L).length === 1)
@@ -291,11 +284,11 @@ class LlmSpec extends SparkSpec {
     assert(Seq(once(0L), once(5L), once(10L)).distinct.length === 3)
   }
 
-  test("ivfTopKAuto searches inside fitted k-means cells end-to-end") {
+  test("single-probe IVF searches inside fitted k-means cells end-to-end") {
     val t = Tables(spark, sf)
     val q = t.embeddings.filter(col("vec_id") < 3)
-    val res = Similarity.ivfTopKAuto(t.embeddings, q, "vec_id", "embedding",
-      k = 5, cells = 4, iters = 2)
+    val res = Similarity.ivfTopKMultiProbe(t.embeddings, q, "vec_id", "embedding",
+      k = 5, cells = 4, probes = 1, iters = 2)
     val rows = res.collect()
     assert(rows.nonEmpty)
     assert(rows.groupBy(_.getLong(0)).values.forall(_.length <= 5))
@@ -323,26 +316,6 @@ class LlmSpec extends SparkSpec {
     val b1 = best(run(1)); val b2 = best(run(2))
     b2.foreach { case (qid, c2) => assert(c2 >= b1(qid) - 1e-12,
       s"query $qid: widening probes lowered the best cosine") }
-  }
-
-  test("adaptive probing spans single-probe to exact brute force") {
-    val t = Tables(spark, sf)
-    val q = t.embeddings.filter(col("vec_id") < 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "nn_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // alpha = 1: only distance-tied cells probe — same results as the
-    // fixed single-probe path
-    val single = rows(Similarity.ivfTopKAuto(t.embeddings, q, "vec_id", "embedding",
-      k = 5, cells = 4, iters = 2))
-    val tight = rows(Similarity.ivfTopKAdaptive(t.embeddings, q, "vec_id", "embedding",
-      k = 5, cells = 4, alpha = 1.0, maxProbes = 1, iters = 2))
-    assert(tight === single)
-    // an unbounded margin with all cells allowed is exact brute force
-    val wide = rows(Similarity.ivfTopKAdaptive(t.embeddings, q, "vec_id", "embedding",
-      k = 5, cells = 4, alpha = Double.MaxValue, maxProbes = 4, iters = 2))
-    val brute = rows(Similarity.cosineTopK(t.embeddings, q, "vec_id", "embedding", 5))
-    assert(wide === brute)
   }
 
   test("cellNearDupPairs stays exact when one cell holds nearly everything") {

@@ -263,18 +263,13 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("uncapped-width SRP dedup still collapses identical vectors") {
     // identical twins agree on every sketch bit, so they collide on every
-    // band at ANY width — including past the old 15-bit packing ceiling —
-    // in both the pair-frame and the within-bucket verify pipelines
+    // band at ANY width — including past the old 15-bit packing ceiling
     val base = (0 until 64).map(i => ((i * 37 % 19) - 9).toFloat / 10f)
     val far = (0 until 64).map(i => (((i * 53 + 7) % 17) - 8).toFloat / 9f)
     val df = Seq((1L, base), (2L, base), (9L, far)).toDF("vec_id", "embedding")
-    for (pipeline <- Seq(
-        Srp.semanticDedupSrpWidth(df, "vec_id", "embedding", 64, 0.85, 20),
-        Srp.semanticDedupSrpBucketWidth(df, "vec_id", "embedding", 64, 0.85, 20))) {
-      val out = pipeline.collect()
-        .map(r => (r.getLong(0), Option(r.get(1)))).toMap
-      assert(out(2L) === Some(1L) && out(1L) === None && out(9L) === None)
-    }
+    val out = Srp.semanticDedupSrpBucketWidth(df, "vec_id", "embedding", 64, 0.85, 20)
+      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toMap
+    assert(out(2L) === Some(1L) && out(1L) === None && out(9L) === None)
   }
 
   test("adaptive-width SRP dedup still collapses identical vectors") {
@@ -321,53 +316,16 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("treeFit at depth 2 with hierarchicalFit's split is the identical fit") {
-    // the depth-d generalization must DEGENERATE exactly: same level-1
-    // kmeans, same per-node seeding, same grouped-Lloyd rounds — so with
-    // hierarchicalFit's (k1, k2) split the two fits are the same model
-    val n = emb.count()
-    val kTotal = Similarity.cellCountFor(n, 64L)
-    val k1 = math.max(2, math.ceil(math.sqrt(kTotal.toDouble)).toInt)
-    val k2 = math.max(1L, (kTotal + k1 - 1L) / k1).toInt
-    val hier = Similarity.hierarchicalFit(emb, "vec_id", "embedding", 64L, 3)
-    val tree = Similarity.treeFit(emb, "vec_id", "embedding", 64L,
-      depth = 2, iters = 3, fanouts = Seq(k1, k2))
-    assert(tree.root === hier.coarse)
-    assert(tree.subLevels.head === hier.sub)
-    val ha = hier.assign(emb).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val ta = tree.assign(emb).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(ta === ha)
-  }
-
-  test("tree-coarse IVF-PQ at depth 2 with hierarchicalFit's split is the identical index") {
-    // the serving build must degenerate exactly like the fit: same coarse
-    // quantizer => same residuals => same codebooks => identical stored
-    // artifact and identical ADC ranking (the shared ivfAdcTopK tail is
-    // then trivially equal — this pins the ENCODE chains against each
-    // other, where the two implementations genuinely differ)
-    val n = emb.count()
-    val kTotal = Similarity.cellCountFor(n, 64L)
-    val k1 = math.max(2, math.ceil(math.sqrt(kTotal.toDouble)).toInt)
-    val k2 = math.max(1L, (kTotal + k1 - 1L) / k1).toInt
-    val ivf = Similarity.ivfPqFit(emb, "vec_id", "embedding", 64L, 8, 16, 3)
-    val tree = Similarity.treeIvfPqFit(emb, "vec_id", "embedding", 64L,
-      depth = 2, m = 8, ks = 16, iters = 3, fanouts = Seq(k1, k2))
-    assert(tree.tree.root === ivf.hier.coarse)
-    assert(tree.tree.subLevels.head === ivf.hier.sub)
-    assert(tree.pq.codebooks === ivf.pq.codebooks,
-      "residual codebooks must coincide when the coarse quantizers do")
-    def enc(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cell"), col("codes"))
-        .collect().map(r => (r.getLong(0), (r.getInt(1), r.getSeq[Int](2)))).toMap
-    assert(enc(tree.encode(emb)) === enc(ivf.encode(emb)))
-  }
-
   test("depth-3 treeFit is partitioning-invariant and its leaf ids encode ancestry") {
+    for (depth <- Seq(2, 3)) {
+      val a = Similarity.treeFit(emb, "vec_id", "embedding", 64L, depth = depth, iters = 2)
+      val b = Similarity.treeFit(emb.repartition(7), "vec_id", "embedding", 64L,
+        depth = depth, iters = 2)
+      assert(a.root === b.root, s"depth $depth: root codebook depends on partitioning")
+      assert(a.subLevels === b.subLevels,
+        s"depth $depth: sub levels depend on partitioning")
+    }
     val t1 = Similarity.treeFit(emb, "vec_id", "embedding", 64L, depth = 3, iters = 2)
-    val t2 = Similarity.treeFit(emb.repartition(7), "vec_id", "embedding", 64L,
-      depth = 3, iters = 2)
-    assert(t1.root === t2.root, "root codebook must not depend on partitioning")
-    assert(t1.subLevels === t2.subLevels, "sub levels must not depend on partitioning")
     assert(t1.depth === 3)
     // child = parent * f + j: every level-(L) id must decode to a parent
     // present at level L-1
@@ -392,7 +350,7 @@ class PipelineOpsSpec extends SparkSpec {
     // bit-for-bit at every width, including past the old 15-bit packing cap
     import graft.llm.Srp
     for (rpb <- Seq(Srp.rowsPerBandFor(emb.count(), 64L), 16)) {
-      val pairForm = Srp.semanticDedupSrpWidth(emb, "vec_id", "embedding", 64, 0.35, rpb)
+      val pairForm = graft.llm.SpecForms.srpPairFrameDedup(emb, "vec_id", "embedding", 64, 0.35, rpb)
         .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
       val bucketForm = Srp.semanticDedupSrpBucketWidth(emb, "vec_id", "embedding", 64, 0.35, rpb)
         .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
@@ -404,22 +362,11 @@ class PipelineOpsSpec extends SparkSpec {
     // the training-free pair query must emit EXACTLY the banded candidates
     // that pass the exact cosine verify — reference composition: band rows
     // -> distinct candidate pairs -> join full vectors -> score
-    import graft.llm.{Similarity, Srp}
+    import graft.llm.Srp
     val (rpb, got0) = Srp.nearDupPairsSrpAuto(emb, "vec_id", "embedding", 64, 0.35)
     val got = got0.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val p = Similarity.prepare(emb, "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("n2"))
-    val bands = Srp.bandedRows(p, "vec_id", "embedding", 64, rpb)
-    val expected = bands.select(col("vec_id").as("id_a"), col("band"))
-      .join(bands.select(col("vec_id").as("id_b"), col("band")), Seq("band"))
-      .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
-      .join(p.select(col("vec_id").as("id_a"), col("q").as("qa"), col("n2").as("na")), Seq("id_a"))
-      .join(p.select(col("vec_id").as("id_b"), col("q").as("qb"), col("n2").as("nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Similarity.cosineQ(Similarity.dotQ(col("qa"), col("qb")),
-          col("na"), col("nb")).as("cosine"))
-      .filter(col("cosine") >= 0.35)
+    val expected = graft.llm.SpecForms.srpPairFramePairs(emb, "vec_id", "embedding", 64, 0.35, rpb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === expected)
     assert(got.nonEmpty, "fixture should contain at least one passing pair")
@@ -547,30 +494,39 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got(3L) === ((None, true)), "cells block the pair search")
   }
 
-  test("semanticDedupHier matches semanticDedup over its own fitted leaves") {
+  test("depth-2 treeFit dedup matches semanticDedup over its leaves") {
     val t = graft.engine.Tables(spark, sf)
     val e = t.embeddings
-    val (model, hier) = Similarity.semanticDedupHier(e, "vec_id", "embedding", 0.35)
-    val manual = Similarity.semanticDedup(
-      e.join(model.assign(e), Seq("vec_id")), "vec_id", "embedding", "cluster", 0.35)
-    assert(hier.orderBy("vec_id").collect().toSeq
-      === manual.orderBy("vec_id").collect().toSeq)
+    val model = Similarity.treeFit(e, "vec_id", "embedding", 64L, depth = 2)
+    val assigned = model.assign(e)
+    // the dedup over the leaves blocks on the leaf id exactly like a
+    // pinned cell column: same verdicts as the all-pairs verify restricted
+    // to same-leaf pairs
+    val dedup = Similarity.semanticDedup(e.join(assigned, Seq("vec_id")),
+        "vec_id", "embedding", "cluster", 0.35)
+      .collect().map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
+    val leafOf = assigned.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val allPairs = Similarity.cellNearDupPairs(e.withColumn("one", lit(0)),
+        "vec_id", "embedding", "one", 0.35)
+      .collect().map(r => (r.getLong(1), r.getLong(2)))
+      .filter { case (a, b) => leafOf(a) == leafOf(b) }
+    val expected = allPairs.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap
+    assert(dedup === leafOf.keys.map(id => id -> expected.get(id)).toMap)
     // k tracks corpus size at constant target cell size
     assert(Similarity.cellCountFor(500L, 64L) === 8)
     assert(Similarity.cellCountFor(5000L, 64L) === 79)
     assert(Similarity.cellCountFor(10L, 64L) === 8, "floor holds for tiny corpora")
-    // the two-level split reaches the same leaf-count regime as a flat
-    // k ∝ n fit (k₁·k₂ ≥ k leaves available) at √k-sized argmin tables
+    // depth 2 reaches the same leaf-count regime as a flat k ∝ n fit
+    // (f² ≥ k leaves available) at √k-sized argmin tables
     val kTotal = Similarity.cellCountFor(e.count(), 64L)
-    val k1 = math.max(2, math.ceil(math.sqrt(kTotal.toDouble)).toInt)
-    assert(model.coarse.size === k1)
-    assert(model.sub.map(_._1).distinct.forall(c => c >= 0 && c < k1))
-    assert(model.sub.map(_._2).distinct.size === model.sub.size,
-      "leaf ids are globally unique")
+    val f = math.ceil(math.sqrt(kTotal.toDouble)).toInt
+    assert(model.root.size === f)
+    val sub = model.subLevels.head
+    assert(sub.map(_._1).distinct.forall(c => c >= 0 && c < f))
+    assert(sub.map(_._2).distinct.size === sub.size, "leaf ids are globally unique")
     // every assigned leaf is a fitted leaf (no nulls escape the assign)
-    val assigned = model.assign(e)
     assert(assigned.filter(col("cluster").isNull).count() === 0)
-    val leaves = model.sub.map(_._2).toSet
+    val leaves = sub.map(_._2).toSet
     assert(assigned.select("cluster").distinct().collect()
       .forall(r => leaves(r.getInt(0))))
     // null contract: a null embedding argmins to null and its row is dropped
@@ -582,7 +538,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("hierarchical dedup collapses identical vectors across a real fit") {
     // 60 vectors in 3 tight direction families + one exact duplicate pair:
     // whatever leaves the fit lands on, the exact duplicates MUST share a
-    // leaf (identical input → identical two-level argmin) and dedup
+    // leaf (identical input → identical depth-2 argmin) and dedup
     val rnd = new scala.util.Random(23)
     val base = Seq(Seq(1f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f), Seq(0f, 0f, 1f, 0f))
     val df = ((0 until 60).map { i =>
@@ -590,8 +546,9 @@ class PipelineOpsSpec extends SparkSpec {
       (i.toLong, b.map(x => x + rnd.nextFloat() * 0.01f))
     } ++ Seq((100L, Seq(0.7f, 0.7f, 0f, 0f)), (101L, Seq(0.7f, 0.7f, 0f, 0f))))
       .toDF("vec_id", "embedding")
-    val (_, out) = Similarity.semanticDedupHier(df, "vec_id", "embedding", 0.999,
-      targetCellSize = 8L)
+    val model = Similarity.treeFit(df, "vec_id", "embedding", targetCellSize = 8L, depth = 2)
+    val out = Similarity.semanticDedup(df.join(model.assign(df), Seq("vec_id")),
+      "vec_id", "embedding", "cluster", 0.999)
     val got = out.filter(col("vec_id") >= 100L).orderBy("vec_id").collect()
       .map(r => r.getLong(0) ->
         ((if (r.isNullAt(2)) None else Some(r.getLong(2))), r.getBoolean(3))).toMap
@@ -657,18 +614,19 @@ class PipelineOpsSpec extends SparkSpec {
       s"ADC neighbors of a cluster-A query must be cluster-A members: ${got.toSeq}")
   }
 
-  test("ivfPqFit is partitioning-invariant (both levels AND residual codebooks)") {
-    val a = Similarity.ivfPqFit(emb, "vec_id", "embedding",
-      targetCellSize = 64L, m = 4, ks = 8, iters = 2)
-    val b = Similarity.ivfPqFit(emb.repartition(7), "vec_id", "embedding",
-      targetCellSize = 64L, m = 4, ks = 8, iters = 2)
-    assert(a.hier.coarse === b.hier.coarse)
-    assert(a.hier.sub === b.hier.sub)
+  test("depth-2 treeIvfPqFit is partitioning-invariant") {
+    // both tree levels AND the residual codebooks
+    val a = Similarity.treeIvfPqFit(emb, "vec_id", "embedding",
+      targetCellSize = 64L, depth = 2, m = 4, ks = 8, iters = 2)
+    val b = Similarity.treeIvfPqFit(emb.repartition(7), "vec_id", "embedding",
+      targetCellSize = 64L, depth = 2, m = 4, ks = 8, iters = 2)
+    assert(a.tree.root === b.tree.root)
+    assert(a.tree.subLevels === b.tree.subLevels)
     assert(a.pq.codebooks === b.pq.codebooks)
   }
 
   test("ivfPq topK prunes to probed leaves and keeps cluster structure") {
-    // 3 far-apart direction clusters: whatever leaves the two-level fit
+    // 3 far-apart direction clusters: whatever leaves the depth-2 fit
     // lands on, a cluster-A query's ADC neighbors must come from cluster A
     // at ANY probe width — cross-cluster reconstruction distances dwarf
     // within-cluster ones on this fixture
@@ -679,8 +637,8 @@ class PipelineOpsSpec extends SparkSpec {
       val b = base(i / 40)
       (i.toLong, b.map(x => x + rnd.nextFloat() * 0.05f))
     }.toDF("vec_id", "embedding")
-    val model = Similarity.ivfPqFit(df, "vec_id", "embedding",
-      targetCellSize = 16L, m = 4, ks = 8, iters = 2)
+    val model = Similarity.treeIvfPqFit(df, "vec_id", "embedding",
+      targetCellSize = 16L, depth = 2, m = 4, ks = 8, iters = 2)
     val codes = model.encode(df)
     assert(codes.count() === 120)
     assert(codes.filter(col("cell").isNull || col("codes").isNull).count() === 0)
@@ -696,8 +654,8 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("streamed IVF-PQ encode lands the same artifact as the batch encode") {
-    val model = Similarity.ivfPqFit(emb, "vec_id", "embedding",
-      targetCellSize = 64L, m = 4, ks = 8, iters = 2)
+    val model = Similarity.treeIvfPqFit(emb, "vec_id", "embedding",
+      targetCellSize = 64L, depth = 2, m = 4, ks = 8, iters = 2)
     val streamed = graft.streaming.StreamingCatalog.replayIvfPqEncode(spark, sf, model)
     // the gate boundary stringifies the code word; the stored array-typed
     // artifact is asserted equivalent by re-splitting the joined string
@@ -715,8 +673,8 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("stream-maintained IVF-PQ index snapshot equals the batch rebuild") {
-    val model = Similarity.ivfPqFit(emb, "vec_id", "embedding",
-      targetCellSize = 64L, m = 4, ks = 8, iters = 2)
+    val model = Similarity.treeIvfPqFit(emb, "vec_id", "embedding",
+      targetCellSize = 64L, depth = 2, m = 4, ks = 8, iters = 2)
     val streamed = graft.streaming.StreamingCatalog.replayIvfPqIndex(spark, sf, model)
     val batch = model.encode(emb)
       .select(col("vec_id"), col("cell"),
@@ -741,7 +699,8 @@ class PipelineOpsSpec extends SparkSpec {
       (1L, Seq(1f, 0.2f, 0f, 0.5f)),   // identical → every band collides → dup of 0
       (2L, Seq(-1f, -0.2f, 0f, -0.5f)) // antipodal → every sketch bit flips → kept
     ).toDF("vec_id", "embedding")
-    val got = graft.llm.Srp.semanticDedupSrp(df, "vec_id", "embedding", 4, 0.9)
+    val got = graft.llm.Srp.semanticDedupSrpBucketWidth(df, "vec_id", "embedding", 4, 0.9,
+        graft.llm.Srp.RowsPerBand)
       .orderBy("vec_id").collect()
       .map(r => r.getLong(0) ->
         ((if (r.isNullAt(1)) None else Some(r.getLong(1))), r.getBoolean(2)))

@@ -112,6 +112,14 @@ class ShingleQSpec extends SparkSpec {
     }
   }
 
+  test("property: WinnowKeys equals the md5-key + min-window + distinct chain") {
+    DocGen.check(spark) { df =>
+      Seq((3, 2), (5, 4)).foreach { case (k, w) =>
+        assertSetEqual(kernelWinnowKeys(df, k, w), chainWinnowKeys(df, k, w))
+      }
+    }
+  }
+
   test("kernel frames carry no exchange (the optimization's plan claim)") {
     Seq(kernelShingles(docs, 3), kernelWinnowKeys(docs, 8, 4)).foreach { df =>
       val plan = df.queryExecution.executedPlan.toString()

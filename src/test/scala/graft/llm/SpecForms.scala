@@ -4,9 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reference (spec-only) forms of operators whose production paths are
-  * native kernels: the shingle-row MinHash chain ([[Dedup.kernelSignatures]]'
-  * aggregate form, its banding and LSH candidates) and the loop-form BPE
-  * encode ([[TextOps.bpeEncodeStatsKernel]]'s relational value oracle).
+  * native kernels or fused pipelines: the shingle-row MinHash chain
+  * ([[Dedup.kernelSignatures]]' aggregate form, its banding and LSH
+  * candidates), the loop-form BPE encode
+  * ([[TextOps.bpeEncodeStatsKernel]]'s relational value oracle) and the
+  * SRP pair-frame verify (the within-bucket verify's reference).
   * Only specs call them, so they live on the test side; they stay in
   * `graft.llm` to share the declared hash family and merge step with the
   * production code.
@@ -56,5 +58,40 @@ object SpecForms {
       .localCheckpoint(false)
     merges.foreach { case (a, b) => toks = TextOps.applyMerge(toks, id, a, b) }
     TextOps.encodeStatsFrom(df, id, textCol, toks)
+  }
+
+  /** SRP near-dup pairs by the PAIR-FRAME verify: distinct banded
+    * candidate pairs (id_a < id_b), both full vectors joined onto each
+    * pair, exact quantized cosine, `(id_a, id_b, cosine)` at or above
+    * `threshold`. [[Srp.nearDupPairsSrpAuto]] and
+    * [[Srp.semanticDedupSrpBucketWidth]] evaluate the same verify inside
+    * the band self-join instead; specs pin them against this form.
+    */
+  def srpPairFramePairs(df: DataFrame, id: String, vec: String, dim: Int,
+                        threshold: Double, rowsPerBand: Int): DataFrame = {
+    val p = Similarity.prepare(df, id, vec).select(col(id), col("q"), col("n2"))
+    val bands = Srp.bandedRows(p, id, vec, dim, rowsPerBand)
+    bands.select(col(id).as("id_a"), col("band"))
+      .join(bands.select(col(id).as("id_b"), col("band")), Seq("band"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+      .join(p.select(col(id).as("id_a"), col("q").as("qa"), col("n2").as("na")), Seq("id_a"))
+      .join(p.select(col(id).as("id_b"), col("q").as("qb"), col("n2").as("nb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        Similarity.cosineQ(Similarity.dotQ(col("qa"), col("qb")),
+          col("na"), col("nb")).as("cosine"))
+      .filter(col("cosine") >= threshold)
+  }
+
+  /** SemDeDup verdicts `(id, dup_of, is_kept)` over [[srpPairFramePairs]]:
+    * every vector names its min-id passing neighbor, or keeps.
+    */
+  def srpPairFrameDedup(df: DataFrame, id: String, vec: String, dim: Int,
+                        threshold: Double, rowsPerBand: Int): DataFrame = {
+    val dupOf = srpPairFramePairs(df, id, vec, dim, threshold, rowsPerBand)
+      .groupBy(col("id_b").as(id)).agg(min(col("id_a")).as("dup_of"))
+    df.select(col(id))
+      .join(dupOf, Seq(id), "left")
+      .select(col(id), col("dup_of"), col("dup_of").isNull.as("is_kept"))
   }
 }
