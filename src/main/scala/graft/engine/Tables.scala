@@ -1,16 +1,21 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Lazy loaders for the driver testdata tables (TESTDATA.md).
   *
-  * Each accessor is a fresh parquet scan: Catalyst prunes columns and pushes
-  * predicates into the scan per-query, so sharing a cached DataFrame here
-  * would only hurt (it would pin the widest schema). At cluster scale these
-  * reads are distributed parquet scans; nothing here collects to the driver.
+  * Each accessor is still a fresh parquet scan: Catalyst prunes columns and
+  * pushes predicates into the scan per-query, so sharing a cached DataFrame
+  * here would only hurt (it would pin the widest schema). Only the footer
+  * schema is shared, through [[Tables.read]], so building a frame launches
+  * no schema-inference job once its file has been read. At cluster scale
+  * these reads are distributed parquet scans; nothing here collects to the
+  * driver.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -28,6 +33,38 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (StructType, String)]()
+
+  /** The footer schema of the parquet table at `path`, inferred once per
+    * JVM. A footer is a fact about a file, so sessions share the entry. The
+    * key is the path and the file's modification time and length (a
+    * driver-side `getFileStatus`, no job), so a rewritten file is
+    * re-resolved. The session's `nanosAsLong` decides the inferred type of a
+    * TIMESTAMP(NANOS) column, so an entry inferred with it on serves only
+    * sessions that have it on; one inferred with it off proves the file has
+    * no such column (inference rejects one) and serves every session. A
+    * missing file throws and caches nothing.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (path, st.getModificationTime, st.getLen)
+    val nanos = spark.conf.get(NanosAsLong, "false")
+    footers.get(key) match {
+      case (schema, under) if under == "false" || under == nanos => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        footers.put(key, (schema, nanos))
+        schema
+    }
+  }
+
+  /** A parquet scan of `path` under its resolved footer schema. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
   /** events.parquet has shipped `ts` two ways across testdata generations:
     * TIMESTAMP(NANOS) — which Spark's vectorized reader rejects, so it is
     * read as nanos-since-epoch longs (`nanosAsLong`) and converted with

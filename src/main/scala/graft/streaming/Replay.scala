@@ -27,11 +27,12 @@ object Replay {
       .start()
 
   /** Replay `df` into the parquet sink at `$base/sink` (checkpoint at
-    * `$base/ckpt`) and read the completed sink back.
+    * `$base/ckpt`) and read the completed sink back under `df`'s schema,
+    * which is what was written, so the read-back infers nothing.
     */
   def toParquet(df: DataFrame, base: String): DataFrame = {
     await(appendParquet(df, s"$base/sink", s"$base/ckpt"))
-    df.sparkSession.read.parquet(s"$base/sink")
+    df.sparkSession.read.schema(df.schema).parquet(s"$base/sink")
   }
 
   /** Replay `df` into a uniquely named memory sink and return its rows. The

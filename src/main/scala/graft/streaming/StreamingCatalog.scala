@@ -41,25 +41,25 @@ object StreamingCatalog extends Catalog {
 
   /** The raw event replay stream: watch the testdata dir filtered down to
     * the events table file (the file stream source wants a directory).
-    * Streams must declare schemas up front, so peek at the batch reader's
-    * footer-derived `ts` type (driver-side metadata read, no data scan) and
-    * declare [[Streams.eventSchema]] with that `ts` encoding; both
-    * generations then normalize like the batch read
+    * Streams must declare schemas up front, so take the footer-derived `ts`
+    * type from the batch tables' resolver ([[graft.engine.Tables.schemaOf]],
+    * inferred once per file) and declare [[Streams.eventSchema]] with that
+    * `ts` encoding; both generations then normalize like the batch read
     * ([[graft.engine.Tables.normalizeEventTs]]).
     */
   private def replayStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // if the events file has not landed yet (the generic file-watch case —
-    // the batch peek can only see files already present), DEFER the stream
-    // definition with a bounded poll until the first file appears, then
-    // peek authoritatively. Guessing an encoding here would declare a
+    // the footer can only be read from a file already present), DEFER the
+    // stream definition with a bounded poll until the file appears, then
+    // resolve authoritatively. Guessing an encoding here would declare a
     // schema that a later-arriving file's footer can contradict, failing
-    // (or misreading) the stream mid-flight — refuse rather than guess.
+    // (or misreading) the stream mid-flight — refuse rather than guess. A
+    // missing file is a miss to poll: the resolver caches nothing for it.
     val tsType = {
       def peek() =
-        try Some(s.read.option("pathGlobFilter", "events.parquet")
-          .parquet(d).schema("ts").dataType)
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
+        try Some(graft.engine.Tables.schemaOf(s, s"$d/events.parquet")("ts").dataType)
+        catch { case _: java.io.FileNotFoundException => None }
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var t = peek()
       while (t.isEmpty && System.nanoTime() < deadline) {

@@ -106,8 +106,9 @@ object Streams {
       batch.write.mode("append").parquet(sinkDir)
       // refresh against the CALLER's session: foreachBatch runs in an
       // isolated session clone, where temp-view registrations would be
-      // invisible to the application
-      refresh(spark.read.parquet(sinkDir))
+      // invisible to the application. The sink holds only frames of this
+      // schema, so the read-back declares it instead of inferring it.
+      refresh(spark.read.schema(batch.schema).parquet(sinkDir))
     }
 
   /** Incremental event-time aggregation (the shape the dashboard's hourly

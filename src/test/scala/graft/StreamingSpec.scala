@@ -44,16 +44,9 @@ class StreamingSpec extends SparkSpec {
     assert(streamRows.toSeq === batchRows.toSeq)
   }
 
-  /** Drop a DataFrame into the watched dir as ONE flat parquet file (the
-    * file stream source does not recurse into subdirectories).
-    */
-  private def addFile(df: org.apache.spark.sql.DataFrame, dir: String, name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft-addfile").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    Files.move(part.toPath, java.nio.file.Paths.get(dir, name))
-  }
+  /** Drop a DataFrame into the watched dir as ONE flat parquet file. */
+  private def addFile(df: org.apache.spark.sql.DataFrame, dir: String, name: String): Unit =
+    writeParquetFile(df, java.nio.file.Paths.get(dir, name))
 
   test("foreachBatch consumer appends to sink and refreshes views per batch") {
     val base = Files.createTempDirectory("graft-stream").toString
