@@ -25,8 +25,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeEventTs(t("events"))
+    val path = s"$dir/events.parquet"
+    Tables.normalizeEventTs(spark.read.schema(Tables.eventsSchemaOf(spark, path)).parquet(path))
   }
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
@@ -35,7 +35,7 @@ final case class Tables(spark: SparkSession, dir: String) {
 object Tables {
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   private val footers =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (StructType, String)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (StructType, Boolean)]()
 
   /** The footer schema of the parquet table at `path`, inferred once per
     * JVM. A footer is a fact about a file, so sessions share the entry. The
@@ -47,15 +47,29 @@ object Tables {
     * no such column (inference rejects one) and serves every session. A
     * missing file throws and caches nothing.
     */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    resolve(spark, path, spark.conf.get(NanosAsLong, "false").toBoolean)
+
+  /** The footer schema of an events file, inferred with `nanosAsLong` on so
+    * a TIMESTAMP(NANOS) `ts` resolves to longs ([[normalizeEventTs]]). Only
+    * inference needs the setting: a scan that declares the long column
+    * reads it under any session. So a miss infers in a fresh session with
+    * the setting on, and the caller's session conf is never changed.
+    */
+  def eventsSchemaOf(spark: SparkSession, path: String): StructType =
+    resolve(spark, path, nanos = true)
+
+  private def resolve(spark: SparkSession, path: String, nanos: Boolean): StructType = {
     val p = new Path(path)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
     val key = (path, st.getModificationTime, st.getLen)
-    val nanos = spark.conf.get(NanosAsLong, "false")
     footers.get(key) match {
-      case (schema, under) if under == "false" || under == nanos => schema
+      case (schema, under) if !under || under == nanos => schema
       case _ =>
-        val schema = spark.read.parquet(path).schema
+        val inferring =
+          if (nanos == spark.conf.get(NanosAsLong, "false").toBoolean) spark
+          else { val s = spark.newSession(); s.conf.set(NanosAsLong, nanos.toString); s }
+        val schema = inferring.read.parquet(path).schema
         footers.put(key, (schema, nanos))
         schema
     }

@@ -60,12 +60,12 @@ object EnrichCatalog extends Catalog {
     */
   def segmentRevenue(t: Tables): DataFrame = {
     val e = Enrich.enrich(t.events, processedTime = col("ts"))
-    e.groupBy(col("customer_segment"))
+    Views.groupTail(e.groupBy(col("customer_segment"))
       .agg(
         count(lit(1)).as("n_orders"),
         Relational.moneySum(col("value")).as("revenue"),
         Relational.moneyAvg(col("value")).as("avg_order"),
-        sum6(col("estimated_profit_usd")).as("total_profit"))
+        sum6(col("estimated_profit_usd")).as("total_profit")))
       .orderBy(col("revenue").desc, col("customer_segment"))
   }
 
@@ -75,14 +75,14 @@ object EnrichCatalog extends Catalog {
     */
   def vipCategoryBreakdown(t: Tables): DataFrame = {
     val e = Enrich.enrich(t.events, processedTime = col("ts"))
-    e.filter(col("customer_segment") === "VIP" && col("amount_category") === "Premium")
-      .groupBy(col("event_type").as("category"))
+    val vip = e.filter(col("customer_segment") === "VIP" && col("amount_category") === "Premium")
+    Views.groupTail(vip.groupBy(col("event_type").as("category"))
       .agg(
         count(lit(1)).as("n_orders"),
         Relational.moneySum(col("value")).as("total_revenue"),
         Relational.moneyAvg(col("value")).as("avg_amount"),
         round(sum(col("estimated_clv").cast("decimal(20,4)")).cast("double")
-          / count(lit(1)), 4).as("avg_clv"))
+          / count(lit(1)), 4).as("avg_clv")))
       .orderBy(col("total_revenue").desc, col("category"))
   }
 
@@ -123,10 +123,10 @@ object EnrichCatalog extends Catalog {
     * descending. `event_type` plays the product category in the enrich tier.
     */
   def anomalyByCategory(t: Tables): DataFrame =
-    anomalies(t)
+    Views.groupTail(anomalies(t)
       .groupBy(col("event_type").as("category"))
       .agg(count(lit(1)).as("n_anomalies"),
-        Relational.moneySum(col("value")).as("total_amount"))
+        Relational.moneySum(col("value")).as("total_amount")))
       .orderBy(col("total_amount").desc, col("category"))
 
   /** Top-15 anomaly locations (streamlit_app.py:798-801): location joins in
@@ -159,7 +159,7 @@ object EnrichCatalog extends Catalog {
     // schema is fixed (the oracle contract needs a deterministic column
     // set); the pivot's level discovery stays dynamic
     val ordered = ordinal.map(l => if (present(l)) col(s"`$l`") else lit(0L).as(l))
-    piv.select(col("category") +: ordered: _*)
+    Views.groupTail(piv.select(col("category") +: ordered: _*))
       .orderBy("category")
   }
 

@@ -22,10 +22,13 @@ import graft.ops.Relational
   *  - The base is declared as plain inner joins; AQE broadcasts
   *    customer/nation at test scale and falls back to shuffled hash join
   *    when the build side is large. Nothing is hand-pinned.
-  *  - Each view is aggregate-first, window-second (two exchanges), matching
+  *  - Each view is aggregate-first, window-second (one exchange), matching
   *    BigQuery's QUALIFY-over-aggregate semantics (SURVEY.md §4). The window
   *    input is the *aggregated* table (|groups| rows, not |orders|), so the
-  *    row_number partition never sees raw-fact cardinality.
+  *    row_number partition never sees raw-fact cardinality, and the windows,
+  *    the top-k fold and the final sort run in the cube's one reduce task
+  *    ([[groupTail]]): one fact scan plus one shuffle, two Spark jobs
+  *    besides the dimension broadcasts.
   *  - All floats are rounded to 4 decimals and every output is fully sorted:
   *    determinism for the DuckDB oracle (SURVEY.md §7.6).
   */
@@ -92,15 +95,31 @@ object Views {
         sum(Relational.moneyDec(col("amount"))).as("amount_dec"),
         sum(col("rating")).as("rating_sum"))
 
+  /** The group-cardinality tail of a dimension-keyed aggregate: `groups`
+    * in one partition, so whatever follows it (windows, a top-k fold, the
+    * final global sort) runs in the aggregate's reduce task with no window
+    * exchange, no range-sort sampling job and no range exchange.
+    *
+    * Precondition: `groups` is keyed by dimension-domain values (age
+    * buckets, segments, categories, locations — |groups| ≤ ~125 here), never
+    * by fact-table keys. Trade-off: the aggregate's final merge runs in one
+    * task over (scan tasks × |groups|) partial rows instead of one task per
+    * shuffle partition; at dimension cardinality that is a few thousand rows
+    * at any fact scale, and it saves three jobs per view. Generic operators
+    * whose callers choose the key (`Relational.valueCounts`, `histogram`,
+    * `pivotSum`) keep their parallel shape.
+    */
+  private[shopping] def groupTail(groups: DataFrame): DataFrame = groups.coalesce(1)
+
   /** Per-key stats AND top-k from ONE cube pass, via windows over the
     * tiny (key, category) intermediate instead of a stats ⟕ top self-join:
     * the round-1 join shape made Catalyst plan the cube twice (column
     * pruning specializes each branch, defeating ReuseExchange), i.e. two
     * fact scans per view. Here the physical plan is scan → cube aggregate →
-    * one window exchange on `key` — decimal/integral window sums re-
-    * aggregate exactly, so values are identical to the join shape.
-    * (Top-k per key always exists — every key row carries a category — so
-    * the reference's LEFT join degenerates safely.)
+    * windows in the cube's reduce task ([[groupTail]]) — decimal/integral
+    * window sums re-aggregate exactly, so values are identical to the join
+    * shape. (Top-k per key always exists — every key row carries a
+    * category — so the reference's LEFT join degenerates safely.)
     */
   private def withKeyWindows(cube: DataFrame, key: String, withRating: Boolean): DataFrame = {
     val w = Window.partitionBy(key)
@@ -110,7 +129,7 @@ object Views {
       if (withRating)
         Seq(round(sum(col("rating_sum")).over(w) / orders, 4).as("avg_rating"))
       else Nil
-    cube.select(
+    groupTail(cube).select(
       col(key) +:
         col("category") +:
         col("cnt") +:
@@ -160,8 +179,8 @@ object Views {
 
   /** v_age_gender_category (bigquery_views.sql:103-126): 3-key aggregate. */
   def ageGenderCategory(t: Tables): DataFrame =
-    base(t)
+    groupTail(base(t)
       .groupBy(col("age_bucket"), col("gender"), col("category"))
-      .agg(count(lit(1)).as("orders"), Relational.moneyAvg(col("amount")).as("avg_spend"))
+      .agg(count(lit(1)).as("orders"), Relational.moneyAvg(col("amount")).as("avg_spend")))
       .orderBy("age_bucket", "gender", "category")
 }

@@ -42,13 +42,13 @@ object StreamingCatalog extends Catalog {
   /** The raw event replay stream: watch the testdata dir filtered down to
     * the events table file (the file stream source wants a directory).
     * Streams must declare schemas up front, so take the footer-derived `ts`
-    * type from the batch tables' resolver ([[graft.engine.Tables.schemaOf]],
-    * inferred once per file) and declare [[Streams.eventSchema]] with that
+    * type from the batch tables' resolver
+    * ([[graft.engine.Tables.eventsSchemaOf]], inferred once per file without
+    * touching the session's conf) and declare [[Streams.eventSchema]] with that
     * `ts` encoding; both generations then normalize like the batch read
     * ([[graft.engine.Tables.normalizeEventTs]]).
     */
   private def replayStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // if the events file has not landed yet (the generic file-watch case —
     // the footer can only be read from a file already present), DEFER the
     // stream definition with a bounded poll until the file appears, then
@@ -58,7 +58,7 @@ object StreamingCatalog extends Catalog {
     // missing file is a miss to poll: the resolver caches nothing for it.
     val tsType = {
       def peek() =
-        try Some(graft.engine.Tables.schemaOf(s, s"$d/events.parquet")("ts").dataType)
+        try Some(graft.engine.Tables.eventsSchemaOf(s, s"$d/events.parquet")("ts").dataType)
         catch { case _: java.io.FileNotFoundException => None }
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var t = peek()

@@ -97,6 +97,14 @@ object Streams {
   /** [[startConsumerWithViewRefresh]] over an already-prepared raw stream
     * (for sources whose schema needs adapting before enrichment, e.g. the
     * gate's nanosecond-timestamp replay).
+    *
+    * Per micro-batch: one job for the sink append, then whatever `refresh`
+    * runs over the read-back sink. The read-back declares its schema, so it
+    * adds no schema-inference job; a view derived through
+    * [[graft.shopping.Views]] (e.g. `StreamingCatalog.streamViewState`)
+    * costs 2 jobs when collected: the sink scan with the cube's partial
+    * aggregate, then the cube's one reduce task, which also runs the
+    * windows and the final sort.
     */
   def consumeWithViewRefresh(spark: SparkSession, raw: DataFrame,
                              sinkDir: String, checkpointDir: String,

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.engine.{Tables, ViewRegistry}
-import graft.streaming.{Replay, Streams}
+import graft.streaming.{Replay, StreamingCatalog, Streams}
 
 /** The footer-schema resolver ([[Tables.schemaOf]]) and the declared-schema
   * sink read-backs: reads launch no schema-inference job once a file's
@@ -134,7 +134,7 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
 
     val nanos = Tables(spark, nanosDir.toString).events
     val us = Tables(spark, microsDir.toString).events
-    assert(Tables.schemaOf(spark, s"$nanosDir/events.parquet")("ts").dataType === LongType)
+    assert(Tables.eventsSchemaOf(spark, s"$nanosDir/events.parquet")("ts").dataType === LongType)
     // the resolver shares an entry inferred with nanosAsLong off with every
     // session only because inference rejects a NANOS column then
     val off = spark.newSession()
@@ -147,12 +147,23 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(ts(us).map(t => t.getTime * 1000 + t.getNanos / 1000 % 1000) === micros)
   }
 
+  test("Tables.events leaves the caller's session conf unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(Tables(s, sf).events.count() > 0)
+    StreamingCatalog.replayEnriched(s, sf)
+    assert(s.conf.getAll === before)
+    assert(s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ == "false"))
+  }
+
   test("no catalog_pass query or registerAll grows its steady-state job count (snapshot)") {
     // jobs launched by the second call of each query of the benchmark's
-    // catalog slice (to the noop sink) and of ViewRegistry.registerAll: a
-    // rise is an extra job per query at any scale. Deliberate changes:
-    // GRAFT_REGEN_PLANS=1 sbt "testOnly graft.EngineSpec" and commit the
-    // regenerated file.
+    // catalog slice (to the noop sink), of the three views outside it, of
+    // ViewRegistry.registerAll, and of the live consumer's view refresh
+    // (streamViewState collected over a multi-file sink read back under its
+    // declared schema): a rise is an extra job per query at any scale.
+    // Deliberate changes: GRAFT_REGEN_PLANS=1 sbt "testOnly graft.EngineSpec"
+    // and commit the regenerated file.
     val snap = Paths.get("src/test/resources/job_counts.tsv")
     val names = scala.io.Source.fromFile("perfbench/expected/catalog_queries.txt")
       .getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
@@ -162,9 +173,16 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
     val s = spark.newSession()
     def release(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val sink = tmp("graft-engine-refresh").resolve("sink").toString
+    val appended = Streams.enriched(Tables(s, sf).events)
+    appended.repartition(3).write.parquet(sink)
+    val views = Seq("v_age_preferences", "v_gender_preferences", "v_age_gender_category")
     val calls: Seq[(String, () => Unit)] =
       ("registerAll" -> (() => ViewRegistry.registerAll(Tables(s, sf)))) +:
-        names.map(n => n -> (() =>
+        ("streamViewState" -> (() =>
+          StreamingCatalog.streamViewState(s.read.schema(appended.schema).parquet(sink))
+            .collect(): Unit)) +:
+        (names ++ views).map(n => n -> (() =>
           SparkEntry.queries(n)(s, sf).write.format("noop").mode("overwrite").save()))
     val actual = calls.map { case (n, call) =>
       release(); call()

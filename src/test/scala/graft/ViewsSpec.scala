@@ -1,12 +1,104 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.engine.Tables
-import graft.shopping.Views
+import graft.ops.Relational
+import graft.shopping.{EnrichCatalog, Views}
+import graft.streaming.StreamingCatalog
 
 class ViewsSpec extends SparkSpec {
   lazy val t: Tables = Tables(spark, sf)
+
+  /** The view tail before it ran in one partition: the key windows
+    * exchange on the key, the final sort range-partitions. The reference
+    * the single-partition tail is held to, row for row and in order.
+    */
+  private object WindowForm {
+    private def withKeyWindows(cube: DataFrame, key: String, withRating: Boolean): DataFrame = {
+      val w = Window.partitionBy(key)
+      val ordered = Window.partitionBy(key).orderBy(col("cnt").desc, col("category").asc)
+      val orders = sum(col("cnt")).over(w)
+      val rated =
+        if (withRating)
+          Seq(round(sum(col("rating_sum")).over(w) / orders, 4).as("avg_rating"))
+        else Nil
+      cube.select(
+        col(key) +:
+          col("category") +:
+          col("cnt") +:
+          orders.as("orders") +:
+          round(sum(col("amount_dec")).over(w).cast("double") / orders, 4).as("avg_spend") +:
+          (rated :+ row_number().over(ordered).as("__rn")): _*)
+    }
+
+    def preferencesFromCube(cube: DataFrame, key: String, withRating: Boolean): DataFrame = {
+      val rated = if (withRating) Seq(col("avg_rating")) else Nil
+      withKeyWindows(cube, key, withRating).filter(col("__rn") === 1)
+        .select(col(key) +: col("orders") +: col("avg_spend") +: rated :+
+          col("category").as("top_category"): _*)
+        .orderBy(key)
+    }
+
+    def topCategoriesFromCube(cube: DataFrame, key: String, k: Int): DataFrame =
+      withKeyWindows(cube, key, withRating = false)
+        .filter(col("__rn") <= k)
+        .groupBy(col(key), col("orders"), col("avg_spend"))
+        .agg(Relational.orderedArrayAggDesc(col("cnt"), col("category"))
+          .as("top_categories"))
+        .orderBy(key)
+  }
+
+  test("view derivations plan one shuffle and no range sort") {
+    // frames other suites cached would splice their own plans in
+    spark.catalog.clearCache()
+    val cube = Views.categoryCube(Views.base(t), Seq("location"))
+    Seq(
+      "preferencesFromCube" -> Views.preferencesFromCube(cube, "location", withRating = true),
+      "topCategoriesFromCube" -> Views.topCategoriesFromCube(cube, "location", 3),
+      "streamViewState" -> StreamingCatalog.streamViewState(EnrichCatalog.enrichedFrame(t.events))
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      val shuffles = plan.linesIterator.count(l =>
+        l.contains("Exchange ") && !l.contains("BroadcastExchange") && !l.contains("ReusedExchange"))
+      assert(shuffles === 1, s"$name:\n$plan")
+      assert(!plan.contains("rangepartitioning"), s"$name:\n$plan")
+    }
+  }
+
+  test("the single-partition view tail equals the window form on tied cubes (fixed seeds)") {
+    val schema = StructType(Seq(
+      StructField("key", StringType), StructField("category", StringType),
+      StructField("cnt", LongType), StructField("amount_dec", DecimalType(28, 2)),
+      StructField("rating_sum", DoubleType)))
+    (1 to 8).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // counts from 1..3 over up to 6 categories: most keys tie on cnt, so
+      // the category tie-break decides the top-k
+      val rows = for {
+        k <- 0 until 1 + rnd.nextInt(7)
+        c <- rnd.shuffle((0 until 6).toList).take(1 + rnd.nextInt(6))
+      } yield {
+        val cnt = 1L + rnd.nextInt(3)
+        Row(s"k$k", s"c$c", cnt, java.math.BigDecimal.valueOf(rnd.nextInt(100000).toLong, 2),
+          (cnt * (1 + rnd.nextInt(5))).toDouble)
+      }
+      val cube = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      def same(what: String, got: DataFrame, want: DataFrame): Unit =
+        assert(got.collect().toSeq === want.collect().toSeq, s"seed $seed, $what")
+      Seq(true, false).foreach { r =>
+        same(s"preferences withRating=$r", Views.preferencesFromCube(cube, "key", r),
+          WindowForm.preferencesFromCube(cube, "key", r))
+      }
+      Seq(1, 3).foreach { k =>
+        same(s"top-$k", Views.topCategoriesFromCube(cube, "key", k),
+          WindowForm.topCategoriesFromCube(cube, "key", k))
+      }
+    }
+  }
 
   test("agePreferences: one row per bucket, counts sum to base") {
     val rows = Views.agePreferences(t).collect()
