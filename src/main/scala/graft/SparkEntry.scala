@@ -38,7 +38,7 @@ object SparkEntry {
     * query, bigquery_views.sql:2-43).
     */
   def entry(spark: SparkSession): DataFrame =
-    Views.agePreferences(Tables(spark, "/root/testdata/sf0.001"))
+    Views.agePreferences(Views.base(Tables(spark, "/root/testdata/sf0.001")))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     val all = catalogs.flatMap(_.queries)

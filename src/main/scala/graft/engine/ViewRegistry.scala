@@ -25,10 +25,11 @@ object ViewRegistry {
     ).foreach { case (n, df) => df.createOrReplaceTempView(n) }
 
   def registerViews(t: Tables): Unit = {
-    Views.agePreferences(t).createOrReplaceTempView("v_age_preferences")
-    Views.genderPreferences(t).createOrReplaceTempView("v_gender_preferences")
-    Views.locationPreferences(t).createOrReplaceTempView("v_location_preferences")
-    Views.ageGenderCategory(t).createOrReplaceTempView("v_age_gender_category")
+    val b = Views.base(t)
+    Views.agePreferences(b).createOrReplaceTempView("v_age_preferences")
+    Views.genderPreferences(b).createOrReplaceTempView("v_gender_preferences")
+    Views.locationPreferences(b).createOrReplaceTempView("v_location_preferences")
+    Views.ageGenderCategory(b).createOrReplaceTempView("v_age_gender_category")
   }
 
   def registerAll(t: Tables): Unit = { registerTables(t); registerViews(t) }
@@ -54,9 +55,7 @@ final class TtlCache(build: () => DataFrame, ttlMillis: Long,
     }
   }
 
-  /** Number of rebuilds so far would be observable via Spark's storage UI;
-    * tests use [[isFresh]] instead.
-    */
+  /** Whether [[get]] would serve the held frame without a rebuild. */
   def isFresh: Boolean = state.exists { case (_, at) => clock() - at < ttlMillis }
 
   def invalidate(): Unit = synchronized {

@@ -6,11 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Catalog, Tables}
 import graft.ops.Relational
 
-/** Driver-contract registration of the enrichment pipeline (SURVEY §2.4).
+/** Driver-contract registration of the enrichment pipeline (SURVEY §2.4)
+  * and the dashboard panels over its output.
   *
   * The batch-deterministic variant pins `processed_time` to the event time
   * so the DuckDB oracle can reproduce it; the live stream uses
   * `current_timestamp()` (graft.streaming.Streams).
+  *
+  * Every panel function reads the enriched frame `e` it is handed
+  * (`Enrich.enrich` over events), so the caller chooses the snapshot: the
+  * registered queries enrich a fresh `events` scan per call, and
+  * [[Dashboard]] passes its TTL-cached `enrichedOrders` frame, so all of one
+  * refresh's panels read the same in-memory snapshot. Enrichment is a pure
+  * projection, so a panel over a fresh scan prunes back to the raw columns
+  * it uses.
   */
 object EnrichCatalog extends Catalog {
 
@@ -23,15 +32,11 @@ object EnrichCatalog extends Catalog {
       .withColumn("ts", Relational.tsStr(col("ts")))
       .withColumn("processed_time", Relational.tsStr(col("processed_time")))
 
-  def enrichedEvents(t: Tables): DataFrame =
-    enrichedFrame(t.events).orderBy("event_id")
-
   /** Metric-tile aggregates over the enriched stream
     * (streamlit_app.py:333-352 "Revenus", "Transactions Suspectes", VIP
     * revenue, anomaly rate) — one pass, no round-trips.
     */
-  def enrichedMetrics(t: Tables): DataFrame = {
-    val e = Enrich.enrich(t.events, processedTime = col("ts"))
+  def enrichedMetrics(e: DataFrame): DataFrame =
     e.agg(
       count(lit(1)).as("n_orders"),
       Relational.moneySum(col("value")).as("raw_revenue"),
@@ -40,7 +45,6 @@ object EnrichCatalog extends Catalog {
       Relational.countIf(col("is_anomaly")).as("n_anomalies"),
       (Relational.countIf(col("is_anomaly")) * lit(100.0) / count(lit(1))).as("anomaly_rate_pct"),
       Relational.countIf(col("customer_segment") === "VIP").as("n_vip_orders"))
-  }
 
   /** Exact sum for enrichment-derived 4-decimal money doubles: the double →
     * DECIMAL(18,4) cast recovers the exact decimal the pipeline computed, so
@@ -58,8 +62,7 @@ object EnrichCatalog extends Catalog {
   /** Segment breakdown (streamlit_app.py:830-836): orders / revenue /
     * average per customer segment, revenue-descending.
     */
-  def segmentRevenue(t: Tables): DataFrame = {
-    val e = Enrich.enrich(t.events, processedTime = col("ts"))
+  def segmentRevenue(e: DataFrame): DataFrame =
     Views.groupTail(e.groupBy(col("customer_segment"))
       .agg(
         count(lit(1)).as("n_orders"),
@@ -67,14 +70,12 @@ object EnrichCatalog extends Catalog {
         Relational.moneyAvg(col("value")).as("avg_order"),
         sum6(col("estimated_profit_usd")).as("total_profit")))
       .orderBy(col("revenue").desc, col("customer_segment"))
-  }
 
   /** VIP ∧ Premium per-category breakdown (streamlit_app.py:703-708):
     * count / revenue / mean amount / mean CLV per category, revenue
     * descending.
     */
-  def vipCategoryBreakdown(t: Tables): DataFrame = {
-    val e = Enrich.enrich(t.events, processedTime = col("ts"))
+  def vipCategoryBreakdown(e: DataFrame): DataFrame = {
     val vip = e.filter(col("customer_segment") === "VIP" && col("amount_category") === "Premium")
     Views.groupTail(vip.groupBy(col("event_type").as("category"))
       .agg(
@@ -89,41 +90,31 @@ object EnrichCatalog extends Catalog {
   /** Anomaly amount distribution (streamlit_app.py:787-795 nbins=30): the
     * histogram op over the anomalous rows only.
     */
-  def anomalyHistogram(t: Tables): DataFrame =
-    Relational.histogram(anomalies(t), col("value"), 10.0)
+  def anomalyHistogram(e: DataFrame): DataFrame =
+    Relational.histogram(e.filter(col("is_anomaly")), col("value"), 10.0)
 
   /** Satisfaction × amount-tier crosstab (streamlit_app.py:873-894), with
     * the ordinal column order the reference reindexes to.
     */
-  def satisfactionPivot(t: Tables): DataFrame = {
-    val e = Enrich.enrich(t.events, processedTime = col("ts"))
+  def satisfactionPivot(e: DataFrame): DataFrame =
     Relational.pivotSum(
       e.withColumn("one", lit(1L)), "satisfaction_level", "amount_category",
       Seq("Low", "Medium", "High", "Premium"), "one")
-  }
 
   /** Anomalous-transaction analysis per hour (streamlit_app.py:769-800). */
-  def anomalyHourly(t: Tables): DataFrame = {
-    val e = Enrich.enrich(t.events, processedTime = col("ts"))
+  def anomalyHourly(e: DataFrame): DataFrame =
     Relational.timeBucketAgg(
         e.filter(col("is_anomaly")), col("ts"), "hour",
         Seq(count(lit(1)).as("n_anomalies"),
           Relational.moneySum(col("value")).as("anomaly_value")))
       .select(Relational.tsStr(col("bucket")).as("bucket"),
         col("n_anomalies"), col("anomaly_value"))
-  }
-
-  /** Anomalous rows only — shared by the per-category / per-location
-    * breakdowns (streamlit_app.py:769-801 `anomalies_df`).
-    */
-  private def anomalies(t: Tables): DataFrame =
-    Enrich.enrich(t.events, processedTime = col("ts")).filter(col("is_anomaly"))
 
   /** Anomaly amount/count per category (streamlit_app.py:769-771), amount
     * descending. `event_type` plays the product category in the enrich tier.
     */
-  def anomalyByCategory(t: Tables): DataFrame =
-    Views.groupTail(anomalies(t)
+  def anomalyByCategory(e: DataFrame): DataFrame =
+    Views.groupTail(e.filter(col("is_anomaly"))
       .groupBy(col("event_type").as("category"))
       .agg(count(lit(1)).as("n_anomalies"),
         Relational.moneySum(col("value")).as("total_amount")))
@@ -133,63 +124,48 @@ object EnrichCatalog extends Catalog {
     * from the nation dimension (broadcast — the dim is tiny by contract),
     * keyed deterministically off the customer id.
     */
-  def anomalyByLocation(t: Tables): DataFrame =
-    anomalies(t)
-      .join(broadcast(t.nation), pmod(col("user_id"), lit(25)) === col("n_nationkey"))
+  def anomalyByLocation(e: DataFrame, nation: DataFrame): DataFrame =
+    e.filter(col("is_anomaly"))
+      .join(broadcast(nation), pmod(col("user_id"), lit(25)) === col("n_nationkey"))
       .groupBy(col("n_name").as("location"))
       .agg(count(lit(1)).as("n_anomalies"),
         Relational.moneySum(col("value")).as("total_amount"))
       .orderBy(col("total_amount").desc, col("location"))
       .limit(15)
 
-  /** Category × satisfaction crosstab with DYNAMIC pivot columns
-    * (streamlit_app.py:882-894): pivot over whatever satisfaction levels
-    * exist in the data, then reorder to the ordinal order intersected with
-    * the levels present — the reference's reindex semantics, not a declared
-    * column list.
+  /** Category × satisfaction crosstab (streamlit_app.py:882-894), columns
+    * in the ordinal order the reference reindexes to. The pivot declares
+    * the four levels [[Enrich]] can emit, so the output schema is fixed
+    * and building the frame runs no level-discovery job; a (category,
+    * level) pair absent from the data counts 0.
     */
-  def categorySatisfactionPivot(t: Tables): DataFrame = {
-    val piv = Enrich.enrich(t.events, processedTime = col("ts"))
-      .groupBy(col("event_type").as("category"))
-      .pivot("satisfaction_level") // dynamic: Spark discovers the levels
-      .count().na.fill(0)
-    val ordinal = Seq("Very Satisfied", "Satisfied", "Neutral", "Dissatisfied")
-    val present = piv.columns.toSet
-    // levels absent from the data surface as zero columns so the output
-    // schema is fixed (the oracle contract needs a deterministic column
-    // set); the pivot's level discovery stays dynamic
-    val ordered = ordinal.map(l => if (present(l)) col(s"`$l`") else lit(0L).as(l))
-    Views.groupTail(piv.select(col("category") +: ordered: _*))
+  def categorySatisfactionPivot(e: DataFrame): DataFrame =
+    Views.groupTail(e.groupBy(col("event_type").as("category"))
+      .pivot("satisfaction_level", Seq("Very Satisfied", "Satisfied", "Neutral", "Dissatisfied"))
+      .count().na.fill(0))
       .orderBy("category")
-  }
-
-  /** Enriched frame shared by the distribution tiles below. */
-  private def enriched(t: Tables): DataFrame =
-    Enrich.enrich(t.events, processedTime = col("ts"))
 
   /** Amount-tier order counts (streamlit_app.py:950-957 value_counts bar). */
-  def amountCategoryCounts(t: Tables): DataFrame =
-    Relational.valueCounts(enriched(t), "amount_category")
+  def amountCategoryCounts(e: DataFrame): DataFrame =
+    Relational.valueCounts(e, "amount_category")
 
   /** Frequency-tier order counts (streamlit_app.py:961-966 pie). */
-  def frequencyCategoryCounts(t: Tables): DataFrame =
-    Relational.valueCounts(enriched(t), "frequency_category")
+  def frequencyCategoryCounts(e: DataFrame): DataFrame =
+    Relational.valueCounts(e, "frequency_category")
 
   /** Loyalty-score distribution of VIP ∧ Premium orders
     * (streamlit_app.py:727-733 donut).
     */
-  def vipLoyaltyCounts(t: Tables): DataFrame =
+  def vipLoyaltyCounts(e: DataFrame): DataFrame =
     Relational.valueCounts(
-      enriched(t).filter(col("customer_segment") === "VIP" &&
-        col("amount_category") === "Premium"),
+      e.filter(col("customer_segment") === "VIP" && col("amount_category") === "Premium"),
       "loyalty_score")
 
   /** Top-10 categories by revenue (streamlit_app.py:440-449): group-sum,
     * revenue-descending, bounded — TakeOrderedAndProject, no global sort.
     */
-  def categoryRevenueTop10(t: Tables): DataFrame =
-    t.events
-      .groupBy(col("event_type").as("category"))
+  def categoryRevenueTop10(e: DataFrame): DataFrame =
+    e.groupBy(col("event_type").as("category"))
       .agg(Relational.moneySum(col("value")).as("revenue"))
       .orderBy(col("revenue").desc, col("category"))
       .limit(10)
@@ -197,26 +173,31 @@ object EnrichCatalog extends Catalog {
   /** All-orders amount distribution (streamlit_app.py:455-462 nbins=50):
     * the histogram op bound to the full table, not just the anomaly subset.
     */
-  def amountHistogram(t: Tables): DataFrame =
-    Relational.histogram(t.events, col("value"), 10.0)
+  def amountHistogram(e: DataFrame): DataFrame =
+    Relational.histogram(e, col("value"), 10.0)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "enriched_orders"    -> ((s, d) => enrichedEvents(Tables(s, d))),
-    "enriched_metrics"   -> ((s, d) => enrichedMetrics(Tables(s, d))),
-    "segment_revenue"    -> ((s, d) => segmentRevenue(Tables(s, d))),
-    "satisfaction_pivot" -> ((s, d) => satisfactionPivot(Tables(s, d))),
-    "anomaly_hourly"     -> ((s, d) => anomalyHourly(Tables(s, d))),
-    "anomaly_by_category" -> ((s, d) => anomalyByCategory(Tables(s, d))),
-    "anomaly_by_location" -> ((s, d) => anomalyByLocation(Tables(s, d))),
-    "category_satisfaction_pivot" -> ((s, d) => categorySatisfactionPivot(Tables(s, d))),
-    "vip_category_breakdown" -> ((s, d) => vipCategoryBreakdown(Tables(s, d))),
-    "anomaly_histogram" -> ((s, d) => anomalyHistogram(Tables(s, d))),
-    "amount_category_counts" -> ((s, d) => amountCategoryCounts(Tables(s, d))),
-    "frequency_category_counts" -> ((s, d) => frequencyCategoryCounts(Tables(s, d))),
-    "vip_loyalty_counts" -> ((s, d) => vipLoyaltyCounts(Tables(s, d))),
-    "category_revenue_top10" -> ((s, d) => categoryRevenueTop10(Tables(s, d))),
-    "amount_histogram" -> ((s, d) => amountHistogram(Tables(s, d))),
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+    // each call enriches a fresh, batch-deterministic events scan
+    def panel(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
+      (s, d) => f(Enrich.enrich(Tables(s, d).events, processedTime = col("ts")))
+    Map(
+      "enriched_orders"    -> ((s, d) => enrichedFrame(Tables(s, d).events).orderBy("event_id")),
+      "enriched_metrics"   -> panel(enrichedMetrics),
+      "segment_revenue"    -> panel(segmentRevenue),
+      "satisfaction_pivot" -> panel(satisfactionPivot),
+      "anomaly_hourly"     -> panel(anomalyHourly),
+      "anomaly_by_category" -> panel(anomalyByCategory),
+      "anomaly_by_location" -> ((s, d) => panel(anomalyByLocation(_, Tables(s, d).nation))(s, d)),
+      "category_satisfaction_pivot" -> panel(categorySatisfactionPivot),
+      "vip_category_breakdown" -> panel(vipCategoryBreakdown),
+      "anomaly_histogram" -> panel(anomalyHistogram),
+      "amount_category_counts" -> panel(amountCategoryCounts),
+      "frequency_category_counts" -> panel(frequencyCategoryCounts),
+      "vip_loyalty_counts" -> panel(vipLoyaltyCounts),
+      "category_revenue_top10" -> panel(categoryRevenueTop10),
+      "amount_histogram" -> panel(amountHistogram),
+    )
+  }
 
   /** The customer-segment CASE in DuckDB SQL — one source of truth for
     * every oracle that groups or filters by segment.

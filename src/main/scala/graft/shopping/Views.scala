@@ -31,6 +31,12 @@ import graft.ops.Relational
   *    besides the dimension broadcasts.
   *  - All floats are rounded to 4 decimals and every output is fully sorted:
   *    determinism for the DuckDB oracle (SURVEY.md §7.6).
+  *
+  * The four views read the [[base]] frame they are handed, so the caller
+  * chooses the snapshot: the registered queries and [[graft.engine.ViewRegistry]]
+  * pass a fresh `base(t)` (one per registration), and [[Dashboard]] passes
+  * its TTL-cached base, so one view TTL window serves all four from one
+  * in-memory join.
   */
 object Views {
 
@@ -73,12 +79,12 @@ object Views {
   /** v_age_preferences (bigquery_views.sql:2-43): per-age-bucket stats +
     * top-1 category via aggregate-then-window, left-joined back.
     */
-  def agePreferences(t: Tables): DataFrame =
-    preferences(base(t), "age_bucket", withRating = true)
+  def agePreferences(b: DataFrame): DataFrame =
+    preferences(b, "age_bucket", withRating = true)
 
   /** v_gender_preferences (bigquery_views.sql:46-72). */
-  def genderPreferences(t: Tables): DataFrame =
-    preferences(base(t), "gender", withRating = true)
+  def genderPreferences(b: DataFrame): DataFrame =
+    preferences(b, "gender", withRating = true)
 
   /** Single-scan core shared by every view: ONE pass over the fact table to
     * `(key..., category) -> (cnt, amount decimal-sum, rating sum)`. Both the
@@ -174,12 +180,12 @@ object Views {
     * top-3 categories, re-aggregated into an ordered ARRAY<STRING> — same
     * single-scan window shape, then one fold of the ≤3 rows per location.
     */
-  def locationPreferences(t: Tables): DataFrame =
-    topCategoriesFromCube(categoryCube(base(t), Seq("location")), "location", 3)
+  def locationPreferences(b: DataFrame): DataFrame =
+    topCategoriesFromCube(categoryCube(b, Seq("location")), "location", 3)
 
   /** v_age_gender_category (bigquery_views.sql:103-126): 3-key aggregate. */
-  def ageGenderCategory(t: Tables): DataFrame =
-    groupTail(base(t)
+  def ageGenderCategory(b: DataFrame): DataFrame =
+    groupTail(b
       .groupBy(col("age_bucket"), col("gender"), col("category"))
       .agg(count(lit(1)).as("orders"), Relational.moneyAvg(col("amount")).as("avg_spend")))
       .orderBy("age_bucket", "gender", "category")

@@ -16,12 +16,12 @@ import graft.engine.Catalog.moneyAvgSql
 object ViewsCatalog extends Catalog {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v_age_preferences"      -> ((s, d) => Views.agePreferences(Tables(s, d))),
-    "v_gender_preferences"   -> ((s, d) => Views.genderPreferences(Tables(s, d))),
+    "v_age_preferences"      -> ((s, d) => Views.agePreferences(Views.base(Tables(s, d)))),
+    "v_gender_preferences"   -> ((s, d) => Views.genderPreferences(Views.base(Tables(s, d)))),
     "v_location_preferences" -> ((s, d) =>
-      Views.locationPreferences(Tables(s, d))
+      Views.locationPreferences(Views.base(Tables(s, d)))
         .withColumn("top_categories", concat_ws(",", col("top_categories")))),
-    "v_age_gender_category"  -> ((s, d) => Views.ageGenderCategory(Tables(s, d))),
+    "v_age_gender_category"  -> ((s, d) => Views.ageGenderCategory(Views.base(Tables(s, d)))),
 
     // the reference's actual query interface: SQL over registered view names
     // (streamlit_app.py:223-226) — prove the spark.sql surface end-to-end

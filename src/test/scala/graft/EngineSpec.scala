@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.engine.{Tables, ViewRegistry}
+import graft.shopping.Dashboard
 import graft.streaming.{Replay, StreamingCatalog, Streams}
 
 /** The footer-schema resolver ([[Tables.schemaOf]]) and the declared-schema
@@ -158,10 +159,12 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("no catalog_pass query or registerAll grows its steady-state job count (snapshot)") {
     // jobs launched by the second call of each query of the benchmark's
-    // catalog slice (to the noop sink), of the three views outside it, of
-    // ViewRegistry.registerAll, and of the live consumer's view refresh
+    // catalog slice (to the noop sink), of four queries outside it, of
+    // ViewRegistry.registerAll, of the live consumer's view refresh
     // (streamViewState collected over a multi-file sink read back under its
-    // declared schema): a rise is an extra job per query at any scale.
+    // declared schema) and of one full dashboard refresh (every fetcher
+    // through fetchPage, the clock past both TTLs): a rise is an extra job
+    // per query at any scale.
     // Deliberate changes: GRAFT_REGEN_PLANS=1 sbt "testOnly graft.EngineSpec"
     // and commit the regenerated file.
     val snap = Paths.get("src/test/resources/job_counts.tsv")
@@ -176,18 +179,34 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
     val sink = tmp("graft-engine-refresh").resolve("sink").toString
     val appended = Streams.enriched(Tables(s, sf).events)
     appended.repartition(3).write.parquet(sink)
-    val views = Seq("v_age_preferences", "v_gender_preferences", "v_age_gender_category")
+    val others = Seq("v_age_preferences", "v_gender_preferences", "v_age_gender_category",
+      "category_satisfaction_pivot")
+    var now = 0L
+    val dash = new Dashboard(s, sf, clock = () => now)
+    val fetchers: Seq[() => DataFrame] = Seq(
+      () => dash.latestOrders(), () => dash.agePreferences(), () => dash.genderPreferences(),
+      () => dash.locationPreferences(), () => dash.ageGenderCategory(), () => dash.metrics(),
+      () => dash.hourlyActivity(), () => dash.segmentRevenue(), () => dash.satisfactionPivot(),
+      () => dash.anomalyHourly(), () => dash.anomalyByCategory(), () => dash.anomalyByLocation(),
+      () => dash.anomalyHistogram(), () => dash.categorySatisfactionPivot(),
+      () => dash.vipCategoryBreakdown(), () => dash.topCategoriesByVolume(),
+      () => dash.topCategoriesByRevenue(), () => dash.amountHistogram(),
+      () => dash.amountCategoryCounts(), () => dash.frequencyCategoryCounts(),
+      () => dash.vipLoyaltyCounts(), () => dash.eventTypes(), () => dash.segments())
     val calls: Seq[(String, () => Unit)] =
       ("registerAll" -> (() => ViewRegistry.registerAll(Tables(s, sf)))) +:
         ("streamViewState" -> (() =>
           StreamingCatalog.streamViewState(s.read.schema(appended.schema).parquet(sink))
             .collect(): Unit)) +:
-        (names ++ views).map(n => n -> (() =>
-          SparkEntry.queries(n)(s, sf).write.format("noop").mode("overwrite").save()))
+        (names ++ others).map(n => n -> (() =>
+          SparkEntry.queries(n)(s, sf).write.format("noop").mode("overwrite").save())) :+
+        // last: the dashboard's snapshots would serve the queries above from memory
+        ("dashboard_refresh" -> (() => { now += 30000; fetchers.foreach(f => dash.fetchPage(f())) }))
     val actual = calls.map { case (n, call) =>
       release(); call()
       release(); n -> jobsOf(call())
     }.toMap
+    dash.invalidate()
     if (sys.env.contains("GRAFT_REGEN_PLANS")) {
       val body = actual.toSeq.sortBy(_._1).map { case (n, j) => s"$n\t$j" }
         .mkString("", "\n", "\n")

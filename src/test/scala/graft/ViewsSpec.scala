@@ -101,7 +101,7 @@ class ViewsSpec extends SparkSpec {
   }
 
   test("agePreferences: one row per bucket, counts sum to base") {
-    val rows = Views.agePreferences(t).collect()
+    val rows = Views.agePreferences(Views.base(t)).collect()
     val buckets = rows.map(_.getString(0))
     assert(buckets.distinct.length === buckets.length)
     assert(rows.map(_.getLong(1)).sum === Views.base(t).count())
@@ -109,13 +109,13 @@ class ViewsSpec extends SparkSpec {
   }
 
   test("genderPreferences: 5 market segments") {
-    val rows = Views.genderPreferences(t).collect()
+    val rows = Views.genderPreferences(Views.base(t)).collect()
     assert(rows.length === 5)
     assert(rows.map(_.getString(0)).toSeq === rows.map(_.getString(0)).toSeq.sorted)
   }
 
   test("locationPreferences: top_categories has <= 3 entries, ordered by count desc") {
-    val rows = Views.locationPreferences(t).collect()
+    val rows = Views.locationPreferences(Views.base(t)).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val cats = r.getSeq[String](3)
@@ -125,7 +125,7 @@ class ViewsSpec extends SparkSpec {
   }
 
   test("ageGenderCategory: grouped counts sum to base count") {
-    val rows = Views.ageGenderCategory(t).collect()
+    val rows = Views.ageGenderCategory(Views.base(t)).collect()
     assert(rows.map(_.getLong(3)).sum === Views.base(t).count())
   }
 
@@ -144,7 +144,7 @@ class ViewsSpec extends SparkSpec {
         org.apache.spark.sql.functions.sum("amount_dec").as("amount_dec"),
         org.apache.spark.sql.functions.sum("rating_sum").as("rating_sum"))
     val fromCube = Views.preferencesFromCube(merged, "age_bucket", withRating = true)
-    assert(fromCube.collect().toSeq === Views.agePreferences(t).collect().toSeq)
+    assert(fromCube.collect().toSeq === Views.agePreferences(Views.base(t)).collect().toSeq)
   }
 
   test("entry flagship returns rows") {
