@@ -23,7 +23,7 @@ object CorpusCatalog extends Catalog {
   val DefaultTargetShare = 0.1
   val BenchmarkSource = "src0" // the held-out eval slice in the fixture data
   val BenchmarkMod = 10L       // embeddings benchmark: vec_id % 10 = 0
-  val FixedBenchmarkCap = 2000L // the fixed-benchmark variant's id ceiling
+  val FixedBenchmarkCap = 2000L // the fixed benchmark set's id ceiling
   val EmbContamCos = 0.35      // near-orthogonal fixture vectors; >0.35 is close
   /** Per-source quota: below the fixture's 25 docs/source so the cap binds. */
   val SourceCap = 12
@@ -116,22 +116,13 @@ object CorpusCatalog extends Catalog {
         .orderBy("doc_id", "span_id")
     }),
 
-    "embedding_contamination" -> ((s, d) => {
-      val emb = Tables(s, d).embeddings
-      Corpus.embeddingContamination(
-          emb.filter(pmod(col("vec_id"), lit(BenchmarkMod)) =!= 0),
-          emb.filter(pmod(col("vec_id"), lit(BenchmarkMod)) === 0),
-          "vec_id", "embedding", EmbContamCos)
-        .orderBy("vec_id")
-    }),
-
     // the production contamination shape: the benchmark is a FIXED id set
-    // (real eval benchmarks don't grow with the training corpus). The
-    // registration above derives its benchmark from the corpus by modulus,
-    // so BOTH join sides scale with sf and its cost is quadratic BY
-    // FIXTURE (measured 21× on 10× data even at constant duplication
-    // rate); with the benchmark pinned below FixedBenchmarkCap the same
-    // operator is one broadcast pass, linear in the corpus.
+    // (real eval benchmarks don't grow with the training corpus). A
+    // benchmark derived from the corpus by modulus alone makes BOTH join
+    // sides scale with sf, so the cost is quadratic BY FIXTURE (measured
+    // 21× on 10× data even at constant duplication rate); with the
+    // benchmark pinned below FixedBenchmarkCap the same operator is one
+    // broadcast pass, linear in the corpus.
     "embedding_contamination_fixed" -> ((s, d) => {
       val emb = Tables(s, d).embeddings
       val isBench = pmod(col("vec_id"), lit(BenchmarkMod)) === 0 &&
@@ -362,21 +353,6 @@ object CorpusCatalog extends Catalog {
          |WHERE ${OracleSql.h60("'mix:' || CAST(doc_id AS VARCHAR)")} % 1000 < keep_mil
          |ORDER BY doc_id""".stripMargin
     },
-
-    "embedding_contamination" ->
-      s"""WITH ${SimilarityCatalog.prepSql},
-         |scored AS (
-         |  SELECT c.vec_id, c.n2 AS cn2, b.n2 AS bn2,
-         |    (SELECT CAST(sum(x * y) AS BIGINT)
-         |     FROM (SELECT unnest(c.q) AS x, unnest(b.q) AS y)) AS dot
-         |  FROM pn c JOIN pn b
-         |    ON b.vec_id % $BenchmarkMod = 0 AND c.vec_id % $BenchmarkMod <> 0),
-         |per AS (SELECT vec_id,
-         |    max(CAST(dot AS DOUBLE) /
-         |        (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(bn2 AS DOUBLE)))) AS max_cosine
-         |  FROM scored GROUP BY vec_id)
-         |SELECT vec_id, max_cosine, max_cosine >= $EmbContamCos AS is_contaminated
-         |FROM per ORDER BY vec_id""".stripMargin,
 
     "embedding_contamination_fixed" ->
       s"""WITH ${SimilarityCatalog.prepSql},

@@ -64,7 +64,7 @@ object SimilarityCatalog extends Catalog {
     // argmin levels are native codegen'd kernels; the oracle replays the
     // captured centroid tables (hierOracle below).
     "semantic_dedup_hier" -> ((s, d) => {
-      val model = treeFit(s, d, depth = 2)
+      val model = treeFit(s, d)
       hierCapture = Some((model.root, model.subLevels))
       val df = Tables(s, d).embeddings
       Similarity.semanticDedup(df.join(model.assign(df), Seq("vec_id")),
@@ -80,27 +80,8 @@ object SimilarityCatalog extends Catalog {
     // shape the 100 TB run uses. Oracle replays both captured argmin
     // levels + the within-leaf pair scoring (nearDupOracle).
     "embedding_near_dup_hier" -> ((s, d) => {
-      val model = treeFit(s, d, depth = 2)
+      val model = treeFit(s, d)
       nearDupHierCapture = Some((model.root, model.subLevels))
-      val df = Tables(s, d).embeddings
-      Similarity.cellNearDupPairs(df.join(model.assign(df), Seq("vec_id")),
-          "vec_id", "embedding", "cluster", NearDupCos)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // the LOG-DEPTH tree quantizer under the near-dup pair search: the
-    // depth-2 form's n·2√k assignment is itself n^1.5 once the data term
-    // binds (k ∝ n keeps occupancy — and pair volume — constant, so the
-    // per-vector √k grows); a depth-d tree reaches the same leaf count at
-    // n·d·f dots, f = k^(1/d) — per-vector cost ~flat per decade once
-    // depth tracks log n. Registered at depth 3 (the exponent step the
-    // vec-decade measurement isolates); oracle replays all three captured
-    // argmin levels. Dedup blocking is recall-tolerant by construction (a
-    // missed boundary pair costs one surviving duplicate, not a wrong
-    // answer); the depth-3 ANN index is recall-gated by `ann_recall`.
-    "embedding_near_dup_tree" -> ((s, d) => {
-      val model = treeFit(s, d, depth = 3)
-      nearDupTreeCapture = Some((model.root, model.subLevels))
       val df = Tables(s, d).embeddings
       Similarity.cellNearDupPairs(df.join(model.assign(df), Seq("vec_id")),
           "vec_id", "embedding", "cluster", NearDupCos)
@@ -216,8 +197,8 @@ object SimilarityCatalog extends Catalog {
 
     // the training-free near-dup PAIR search: the within-bucket verify
     // emitting the passing pairs themselves -- the fit-free sibling of
-    // embedding_near_dup_hier/_tree (both of which need a k-means
-    // build; this needs one sketch pass). Same declared band + verify
+    // embedding_near_dup_hier (which needs a k-means build; this needs
+    // one sketch pass). Same declared band + verify
     // semantics as the srp dedups; oracle replays band -> exact cosine
     // at the captured width and emits the scored pairs.
     "embedding_near_dup_srp" -> ((s, d) => {
@@ -322,21 +303,6 @@ object SimilarityCatalog extends Catalog {
         .orderBy("query_id", "nn_id")
     }),
 
-    // the LOG-DEPTH coarse quantizer under the full serving shape: same
-    // residual-PQ + ADC tail as ivfpq_topk, but corpus-side leaf routing
-    // descends the depth-3 tree (n·d·f dots, the only coarse shape still
-    // usable once √k is itself large — see TreeKMeansModel). Registered
-    // TOGETHER with its recall gate: ann_recall scores this pipeline
-    // against exact-L2 next to flat PQ and depth-2 IVF-PQ, closing the
-    // round-9 BACKLOG condition for fronting an ANN index with the tree.
-    "tree_ivfpq_topk" -> ((s, d) => {
-      val model = treeIvfPqFit(s, d, depth = 3)
-      treeIvfPqCapture = Some(levelsOf(model))
-      val t = Tables(s, d)
-      model.topK(model.encode(corpus(t)), queriesDf(t), IvfPqProbes, K)
-        .orderBy("query_id", "nn_id")
-    }),
-
     // the index's INGEST path: embeddings arrive through a real
     // checkpointed file-source stream and the stored (leaf, code word)
     // artifact is computed in-flight — encode is stateless per-row once
@@ -413,21 +379,16 @@ object SimilarityCatalog extends Catalog {
     */
   @volatile private var nearDupHierCapture: Option[Levels] = None
 
-  /** Captured depth-3 levels of the last `embedding_near_dup_tree` run —
-    * the oracle replays every argmin level (nearDupOracle).
-    */
-  @volatile private var nearDupTreeCapture: Option[Levels] = None
-
-  /** Once-per-(JVM, sfDir, depth) memo of the tree fit — fit once,
+  /** Once-per-(JVM, sfDir) memo of the depth-2 tree fit — fit once,
     * consume many (bench repetitions measure assignment + dedup, not a
     * re-fit).
     */
   private val treeFits =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Similarity.TreeKMeansModel]
-  private def treeFit(s: SparkSession, d: String, depth: Int): Similarity.TreeKMeansModel =
-    treeFits.getOrElseUpdate((d, depth),
+    scala.collection.concurrent.TrieMap.empty[String, Similarity.TreeKMeansModel]
+  private def treeFit(s: SparkSession, d: String): Similarity.TreeKMeansModel =
+    treeFits.getOrElseUpdate(d,
       Similarity.treeFit(Tables(s, d).embeddings, "vec_id", "embedding",
-        targetCellSize = 64L, depth = depth, iters = 3))
+        targetCellSize = 64L, depth = 2, iters = 3))
 
   /** Captured codebooks of the last PQ fit — the pq_codes/pq_topk oracles
     * replay the per-subspace argmin and ADC scoring from them.
@@ -459,9 +420,8 @@ object SimilarityCatalog extends Catalog {
     */
   @volatile private var ivfPqIndexCapture: Option[IvfPqLevels] = None
 
-  /** Captured depth-3 index of the last `tree_ivfpq_topk` / `ann_recall`
-    * run — the oracles replay the depth-d argmin chain + residual ADC
-    * from it.
+  /** Captured depth-3 index of the last `ann_recall` run — the oracle
+    * replays the depth-d argmin chain + residual ADC from it.
     */
   @volatile private var treeIvfPqCapture: Option[IvfPqLevels] = None
 
@@ -738,13 +698,13 @@ object SimilarityCatalog extends Catalog {
          |ORDER BY pc.vec_id""".stripMargin
   }
 
-  /** embedding_near_dup_hier / _tree oracle: the leaf assignment chain
-    * over the query's captured levels, then the same within-cell pair
-    * scoring as the `embedding_near_dup` oracle, blocked on the LEAF cell.
+  /** embedding_near_dup_hier oracle: the leaf assignment chain over the
+    * captured levels, then the same within-cell pair scoring as the
+    * `embedding_near_dup` oracle, blocked on the LEAF cell.
     */
-  private def nearDupOracle(name: String, capture: Option[Levels]): Option[(String, String)] =
-    capture.map { case (root, subLevels) =>
-      name ->
+  private def nearDupOracle: Option[(String, String)] =
+    nearDupHierCapture.map { case (root, subLevels) =>
+      "embedding_near_dup_hier" ->
         s"""WITH ${treeAssignCtes(root, subLevels)},
            |nd_scored AS (
            |  SELECT x.cluster, x.vec_id AS id_a, y.vec_id AS id_b, x.n2 AS na, y.n2 AS nb,
@@ -956,7 +916,7 @@ object SimilarityCatalog extends Catalog {
     chain.toString
   }
 
-  /** ivfpq_topk / tree_ivfpq_topk oracle: the ENTIRE captured index
+  /** ivfpq_topk oracle: the ENTIRE captured index
     * replayed, then the per-query top-K on the ADC distance with the
     * lower-nn_id tie-break.
     */
@@ -1108,13 +1068,11 @@ object SimilarityCatalog extends Catalog {
   def oracleSql: Map[String, String] =
     kmeansOracle.toMap ++ purityOracle.toMap ++ srpBucketOracle.toMap ++
       nearDupSrpOracle.toMap ++ hierOracle.toMap ++
-      nearDupOracle("embedding_near_dup_hier", nearDupHierCapture).toMap ++
-      nearDupOracle("embedding_near_dup_tree", nearDupTreeCapture).toMap ++
+      nearDupOracle.toMap ++
       pqOracles ++ annRecallOracle.toMap ++
       ivfPqCapture.map(c => "ivfpq_topk" -> ivfPqTopKSql(c)).toMap ++
       ivfPqCapture.map(c => "stream_ivfpq_encode" -> ivfPqEncodeSql(c)).toMap ++
-      ivfPqIndexCapture.map(c => "stream_ivfpq_index" -> ivfPqEncodeSql(c)).toMap ++
-      treeIvfPqCapture.map(c => "tree_ivfpq_topk" -> ivfPqTopKSql(c)).toMap ++ Map(
+      ivfPqIndexCapture.map(c => "stream_ivfpq_index" -> ivfPqEncodeSql(c)).toMap ++ Map(
 
     "embedding_pca" ->
       s"""WITH $pcaCtes

@@ -18,7 +18,7 @@ object CdcCatalog extends Catalog {
       "o_orderdate", "o_orderpriority")
 
   /** The deterministic change batch: one row per touched key. */
-  private def changeBatch(o: DataFrame): DataFrame = {
+  private[graft] def changeBatch(o: DataFrame): DataFrame = {
     val updates = o.filter(col("o_orderkey") % 10 === 3)
       .withColumn("o_totalprice", col("o_totalprice") + 1.0)
       .withColumn("is_delete", lit(false))
@@ -37,23 +37,13 @@ object CdcCatalog extends Catalog {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // MERGE INTO semantics: broadcast anti join + union — the snapshot
-    // side never shuffles (the only viable shape at 100 TB)
-    "merge_upsert" -> ((s, d) =>
-      merged(s, d)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"),
-          Relational.tsStr(col("o_orderdate")).as("o_orderdate"),
-          col("o_orderpriority"))
-        .orderBy("o_orderkey")),
-
-    // the production-contract measurement: the change batch held at its
-    // sf0.1 size (keys < 150000 — the sf0.1 order-key domain; dense keys
-    // make this a constant ~45k-row batch at every sf >= 0.1) while the
-    // snapshot grows, so the measured cost is linear in the SNAPSHOT scan
-    // + output sort — the "batch <= snapshot" contract mergeUpsert's
-    // broadcast shape is designed for. The unfiltered merge_upsert above
-    // keeps the batch at 30% of the table, a broadcast-side stress shape
-    // whose cost grows with the batch, not the operator's contract.
+    // side never shuffles (the only viable shape at 100 TB). The change
+    // batch is held at its sf0.1 size (keys < 150000 — the sf0.1
+    // order-key domain; dense keys make this a constant ~45k-row batch at
+    // every sf >= 0.1) while the snapshot grows, so the measured cost is
+    // linear in the SNAPSHOT scan + output sort — the "batch <= snapshot"
+    // contract mergeUpsert's broadcast shape is designed for. CdcSpec
+    // pins the unfiltered batch (30% of the table) as a stress input.
     "merge_upsert_smallbatch" -> ((s, d) => {
       val o = Tables(s, d).orders
       Cdc.mergeUpsert(o, changeBatch(o.filter(col("o_orderkey") < 150000L)),
@@ -120,13 +110,6 @@ object CdcCatalog extends Catalog {
       |)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
-    "merge_upsert" ->
-      s"""WITH $changesSql, $afterSql
-         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-         |  o_orderpriority
-         |FROM after ORDER BY o_orderkey""".stripMargin,
-
     "merge_upsert_smallbatch" ->
       s"""WITH ${changesSqlWhere(" AND o_orderkey < 150000")}, $afterSql
          |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,

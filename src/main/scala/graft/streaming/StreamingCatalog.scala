@@ -757,48 +757,6 @@ object StreamingCatalog extends Catalog {
         "customer_segment", 3)
       .withColumn("top_categories", concat_ws(",", col("top_categories")))
 
-  /** Run a replay under the RocksDB state store as a GATE configuration
-    * (round-5 punch list: the provider was spec-only): set the session
-    * confs, capture streaming progress through a listener, and REQUIRE
-    * that RocksDB-specific state-store metrics actually appeared — a
-    * typo'd provider class or an ignored conf fails the query rather than
-    * silently running on the default heap store. Confs are restored so
-    * the base variants keep the default provider.
-    */
-  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val confs = Streams.RocksDbStateStore
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    val seen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.stateOperators.exists(_.customMetrics.keySet().asScala
-            .exists(_.toLowerCase.contains("rocksdb")))) seen.set(true)
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(listener)
-    try {
-      val r = body
-      // progress events post asynchronously on the listener bus; the
-      // replay's query has already terminated, so just drain briefly
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.get() && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      require(seen.get(),
-        "RocksDB state-store metrics never appeared in streaming progress " +
-          "— provider not engaged")
-      r
-    } finally {
-      s.streams.removeListener(listener)
-      prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-    }
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_enriched_replay"  -> ((s, d) => replayEnriched(s, d)),
     "stream_view_refresh"     -> ((s, d) => replayViewRefresh(s, d)),
@@ -830,17 +788,6 @@ object StreamingCatalog extends Catalog {
     "stream_heavy_hitters"    -> ((s, d) => replayHeavyHitters(s, d,
       graft.llm.TextCatalog.MgK, graft.llm.TextCatalog.MgTopM)),
 
-    // the three heaviest-state replays again under the RocksDB provider
-    // (disk-backed state, the 100 TB posture where state outgrows the
-    // heap): same results, same oracles, provider engagement asserted in
-    // the gate path itself (withRocksDb)
-    "stream_incremental_view_rocksdb" ->
-      ((s, d) => withRocksDb(s)(replayIncrementalView(s, d))),
-    "stream_simhash_dedup_rocksdb" ->
-      ((s, d) => withRocksDb(s)(replaySimHashDedup(s, d))),
-    "stream_session_windows_rocksdb" ->
-      ((s, d) => withRocksDb(s)(replaySessionWindows(s, d))),
-
     // the sliding-window aggregate through the SAME code path streaming
     // uses (withWatermark is a declared no-op on batch input): each event
     // lands in size/slide = 4 overlapping windows
@@ -851,14 +798,7 @@ object StreamingCatalog extends Catalog {
         .orderBy("bucket")),
   )
 
-  def oracleSql: Map[String, String] = {
-    val base = baseOracleSql
-    base ++ Map(
-      "stream_incremental_view_rocksdb" -> base("stream_incremental_view"),
-      "stream_simhash_dedup_rocksdb" -> base("stream_simhash_dedup"))
-  }
-
-  private def baseOracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = Map(
     // identical semantics to the batch path — reuse its oracle verbatim
     "stream_enriched_replay" -> EnrichCatalog.oracleSql("enriched_orders"),
 
@@ -872,11 +812,6 @@ object StreamingCatalog extends Catalog {
     // ingest-side span decontamination unions doc-local results over
     // batches — identical to the batch pass by construction
     "stream_span_decontam" -> graft.llm.CorpusCatalog.oracleSql("span_decontam"),
-
-    // the RocksDB-provider variants compute identical results — the state
-    // store is an execution detail — so each reuses its base oracle
-    "stream_session_windows_rocksdb" ->
-      graft.ops.ServingCatalog.oracleSql("user_sessions"),
 
     // the stream-static join: same modulo mapping, plain batch join
     "stream_dim_join" ->

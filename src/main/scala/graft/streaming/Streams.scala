@@ -146,24 +146,6 @@ object Streams {
         Relational.moneySum(col("value")).as("total_value"))
       .select(col("w.start").as("bucket"), col("n"), col("total_value"))
 
-  /** Opt-in RocksDB state store for the stateful streaming paths
-    * ([[incrementalCube]], [[dedupStream]], [[simHashNearDupFlags]]):
-    * keeps state on native memory + local disk instead of the executor
-    * heap. The default HDFS-backed provider holds each partition's whole
-    * state map on-heap, which caps state size at executor memory — at
-    * 100× the incremental-view cube and the dedup key set outgrow a heap,
-    * while RocksDB spills to disk with bounded block-cache memory.
-    * Session-level confs, read at query start (set them before `start()`,
-    * e.g. `RocksDbStateStore.foreach((spark.conf.set _).tupled)`);
-    * changelog checkpointing keeps per-batch commit cost proportional to
-    * the CHANGED keys, not a full state-file upload.
-    */
-  val RocksDbStateStore: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      "true")
-
   /** Incrementally-maintained view core (north-star extension): the
     * `keys → (cnt, amount_dec)` cube the rating-free analytic views derive
     * from ([[graft.shopping.Views.preferencesFromCube]] /

@@ -29,10 +29,16 @@ class CdcSpec extends SparkSpec {
   }
 
   test("mergeUpsert never shuffles the snapshot (broadcast anti join)") {
-    val plan = Cdc.mergeUpsert(snapshot, changes, "k")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"expected a broadcast anti join, got:\n$plan")
+    // the toy batch, and the stress shape: the test-SF orders table with
+    // its derived change batch (30% of the table)
+    val orders = graft.engine.Tables(spark, sf).orders
+    for ((snap, batch, key) <- Seq((snapshot, changes, "k"),
+        (orders, graft.ops.CdcCatalog.changeBatch(orders), "o_orderkey"))) {
+      val plan = Cdc.mergeUpsert(snap, batch, key)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+        s"expected a broadcast anti join, got:\n$plan")
+    }
   }
 
   private lazy val verSnapshot = Seq(

@@ -494,24 +494,34 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got(3L) === ((None, true)), "cells block the pair search")
   }
 
-  test("depth-2 treeFit dedup matches semanticDedup over its leaves") {
+  test("depth-2 and depth-3 treeFit dedup match semanticDedup over their leaves") {
     val t = graft.engine.Tables(spark, sf)
     val e = t.embeddings
-    val model = Similarity.treeFit(e, "vec_id", "embedding", 64L, depth = 2)
-    val assigned = model.assign(e)
-    // the dedup over the leaves blocks on the leaf id exactly like a
-    // pinned cell column: same verdicts as the all-pairs verify restricted
-    // to same-leaf pairs
-    val dedup = Similarity.semanticDedup(e.join(assigned, Seq("vec_id")),
-        "vec_id", "embedding", "cluster", 0.35)
-      .collect().map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
-    val leafOf = assigned.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val allPairs = Similarity.cellNearDupPairs(e.withColumn("one", lit(0)),
         "vec_id", "embedding", "one", 0.35)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
-      .filter { case (a, b) => leafOf(a) == leafOf(b) }
-    val expected = allPairs.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap
-    assert(dedup === leafOf.keys.map(id => id -> expected.get(id)).toMap)
+    // the pair search and the dedup over the leaves block on the leaf id
+    // exactly like a pinned cell column: the same pairs and verdicts as
+    // the all-pairs verify restricted to same-leaf pairs, at every depth
+    def leafBlocked(depth: Int) = {
+      val model = Similarity.treeFit(e, "vec_id", "embedding", 64L, depth = depth)
+      val assigned = model.assign(e)
+      val cells = e.join(assigned, Seq("vec_id"))
+      val leafOf = assigned.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val sameLeaf = allPairs.filter { case (a, b) => leafOf(a) == leafOf(b) }
+      assert(sameLeaf.nonEmpty, s"depth $depth: no same-leaf pair to check")
+      val pairs = Similarity.cellNearDupPairs(cells, "vec_id", "embedding", "cluster", 0.35)
+        .collect().map(r => (r.getLong(1), r.getLong(2)))
+      assert(pairs.toSet === sameLeaf.toSet, s"depth $depth pairs")
+      val dedup = Similarity.semanticDedup(cells, "vec_id", "embedding", "cluster", 0.35)
+        .collect().map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
+      val expected = sameLeaf.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap
+      assert(dedup === leafOf.keys.map(id => id -> expected.get(id)).toMap,
+        s"depth $depth verdicts")
+      (model, assigned)
+    }
+    leafBlocked(3)
+    val (model, assigned) = leafBlocked(2)
     // k tracks corpus size at constant target cell size
     assert(Similarity.cellCountFor(500L, 64L) === 8)
     assert(Similarity.cellCountFor(5000L, 64L) === 79)

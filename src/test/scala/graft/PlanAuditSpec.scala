@@ -31,10 +31,8 @@ class PlanAuditSpec extends SparkSpec {
       Set("cosine_topk", "ivf_kmeans_assign", "ivf_multiprobe_topk", "sql_cosine_topk",
         "pq_topk",          // broadcast query set × coded corpus (ADC sweep)
         "ivfpq_topk",       // broadcast centroid set in the probe selection
-        "tree_ivfpq_topk",  // same broadcast probe selection (shared ADC tail)
         "l2_topk",          // broadcast query set × corpus (exact ground truth)
-        "ann_recall",       // composes pq/ivfpq/tree_ivfpq_topk + l2_topk
-        "embedding_contamination",
+        "ann_recall",       // composes pq + depth-2/3 IVF-PQ + l2_topk
         "embedding_contamination_fixed", // fixed benchmark set broadcast
         "kmeans_label_purity", // broadcast centroid set in the fit/assign
         "tfidf_top_terms",  // broadcast of the 1-row corpus-count aggregate
@@ -61,6 +59,10 @@ class PlanAuditSpec extends SparkSpec {
         "cooccurrence_lift",    // broadcast of the 1-row total-token count
         "association_rules",    // broadcast of the 1-row total-basket count
         "approx_stats_bounds") // 1-row exact/sketch aggregates broadcast-joined
+    // a declared name must name a registered query: a retirement that
+    // leaves its name here fails instead of going stale
+    assert((intended -- SparkEntry.queries.keySet).isEmpty,
+      s"intended names not registered: ${intended -- SparkEntry.queries.keySet}")
     val offenders = plans.collect {
       case (n, p) if p.contains("BroadcastNestedLoopJoin") && !intended(n) => n
     }

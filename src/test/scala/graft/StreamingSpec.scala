@@ -125,7 +125,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("append-mode session replay drains the COMPLETE batch session set") {
-    val got = graft.streaming.StreamingCatalog
+    def replay() = graft.streaming.StreamingCatalog
       .replaySessionWindows(spark, sf).collect().toSeq
     val want = Streams.userSessions(
         graft.engine.Tables(spark, sf).events, "30 minutes")
@@ -134,8 +134,12 @@ class StreamingSpec extends SparkSpec {
         col("n_events"), col("session_value"))
       .orderBy("user_id", "session_start").collect().toSeq
     assert(want.nonEmpty)
-    assert(got === want,
+    assert(replay() === want,
       "every session emits exactly once through the watermark flush")
+    // the state store is an execution detail: the same replay on the
+    // disk-backed provider drains the same session set
+    assert(withStateStore(RocksDbStateStore)(replay()) === want,
+      "every session emits exactly once on the RocksDB state store")
   }
 
   test("incremental cube state equals the batch cube after multiple batches") {
@@ -171,18 +175,63 @@ class StreamingSpec extends SparkSpec {
       "incremental aggregation state is exact vs batch recompute")
   }
 
+  /** The RocksDB state store for the stateful streaming paths
+    * (`incrementalCube`, `dedupStream`, `simHashNearDupFlags`,
+    * `userSessions`): state on native memory + local disk instead of the
+    * executor heap. The default HDFS-backed provider holds each
+    * partition's whole state map on-heap, which caps state size at
+    * executor memory — at 100× the incremental-view cube and the dedup key
+    * set outgrow a heap, while RocksDB spills to disk with bounded
+    * block-cache memory. Session-level confs, read at query start;
+    * changelog checkpointing keeps per-batch commit cost proportional to
+    * the CHANGED keys, not a full state-file upload.
+    */
+  private val RocksDbStateStore: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** Run `body` with the state-store `confs` set (restored after), and
+    * REQUIRE that a streaming progress event carried a RocksDB-specific
+    * state-operator metric — a typo'd provider class or an ignored conf
+    * fails the test rather than silently running on the default heap
+    * store.
+    */
   private def withStateStore[A](confs: Map[String, String])(body: => A): A = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
     val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    val seen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.stateOperators.exists(_.customMetrics.keySet().asScala
+            .exists(_.toLowerCase.contains("rocksdb")))) seen.set(true)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val r = body
+      // progress events post asynchronously on the listener bus; the
+      // body's queries have already terminated, so just drain briefly
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.get() && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(seen.get(),
+        "RocksDB state-store metrics never appeared in streaming progress")
+      r
+    } finally {
+      spark.streams.removeListener(listener)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
   }
 
   test("incremental cube on the RocksDB state store: exact result, rocksdb metrics present") {
-    withStateStore(Streams.RocksDbStateStore) {
+    withStateStore(RocksDbStateStore) {
       val input = MemoryStream[RawEvent](spark)
       val events = mkEvents(0 until 90)
       input.addData(events: _*)
@@ -195,13 +244,6 @@ class StreamingSpec extends SparkSpec {
           Files.createTempDirectory("graft-cube-rocksdb").toString)
         .trigger(Trigger.AvailableNow()).start()
       run.awaitTermination(60000)
-      // the provider actually engaged: state-operator custom metrics are
-      // RocksDB-specific under this provider (absent on the HDFS store)
-      import scala.jdk.CollectionConverters._
-      val custom = run.lastProgress.stateOperators.head.customMetrics
-        .keySet.asScala
-      assert(custom.exists(_.toLowerCase.contains("rocksdb")),
-        s"expected rocksdb state-store metrics, got: $custom")
       val streamed = spark.table("stream_cube_rocksdb")
         .select(col("event_type"), col("customer_segment"), col("cnt"),
           col("amount_dec").cast("double").as("amt"))
@@ -218,7 +260,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup on the RocksDB state store drops the replayed keys") {
-    withStateStore(Streams.RocksDbStateStore) {
+    withStateStore(RocksDbStateStore) {
       val input = MemoryStream[RawEvent](spark)
       val base = mkEvents(0 until 20)
       input.addData(base: _*)
@@ -283,7 +325,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming simhash near-dup flags on the RocksDB state store") {
     // the third stateful path on the RocksDB provider: the same mixed
     // original/near-dup/fresh fixture as the HDFS-store test above
-    withStateStore(Streams.RocksDbStateStore) {
+    withStateStore(RocksDbStateStore) {
       def mix(i: Long): Long = {
         var z = i * 0x9E3779B97F4A7C15L
         z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -301,11 +343,6 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("memory").queryName("stream_simhash_rocksdb")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(60000)
-      import scala.jdk.CollectionConverters._
-      val custom = q.lastProgress.stateOperators.head.customMetrics
-        .keySet.asScala
-      assert(custom.exists(_.toLowerCase.contains("rocksdb")),
-        s"expected rocksdb state-store metrics, got: $custom")
       val verdicts = Streams
         .nearDupVerdicts(spark.table("stream_simhash_rocksdb"))
         .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap

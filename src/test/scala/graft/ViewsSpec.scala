@@ -161,12 +161,14 @@ class ViewsSpec extends SparkSpec {
       "stream_ivfpq_encode",     // same capture mechanism (shared IVF-PQ fit)
       "stream_ivfpq_index",      // same capture mechanism (shared IVF-PQ fit)
       "embedding_near_dup_hier", // same capture mechanism (two-level fit)
-      "embedding_near_dup_tree", // same capture mechanism (depth-3 tree fit)
-      "tree_ivfpq_topk",         // same capture mechanism (tree fit + codebooks)
-      "ann_recall",              // needs BOTH pq and ivfpq captures
+      "ann_recall",              // needs the pq and both tree IVF-PQ captures
       "semantic_dedup_srp_bucket", // captures its chosen band width
       "embedding_near_dup_srp",  // same capture mechanism (band width)
       "pipeline_end_to_end")     // same capture mechanism (srp band width)
+    // a declared name must name a registered query: a retirement that
+    // leaves its name here fails instead of going stale
+    assert((rowsOnly -- SparkEntry.queries.keySet).isEmpty,
+      s"rows-only names not registered: ${rowsOnly -- SparkEntry.queries.keySet}")
     // subset, not equality: the capture-based oracles APPEAR once another
     // test in the same JVM has run their fit, so `missing` legitimately
     // shrinks below the declared set mid-suite

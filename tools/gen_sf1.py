@@ -18,7 +18,7 @@ than the fuzzy tier's edit distance (in-copy distance-1 pairs preserved),
 and copy i>0 embeddings are fresh hash-derived draws. Duplicate-family
 size then stays CONSTANT as sf grows, so the output-bound pair queries
 (jaccard_prefix_pairs, containment_pairs, fuzzy_customer_pairs,
-embedding_contamination) should scale ~linearly -- the measurement that
+embedding_contamination_fixed) should scale ~linearly -- the measurement that
 separates "query is super-linear" from "fixture's output is".
 
 With --src=<dir> --base=<m>, the source is a previously generated dir

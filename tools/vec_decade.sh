@@ -5,7 +5,7 @@
 # /tmp. Fixtures from tools/gen_vecs.py (gitignored). Run on an IDLE box.
 set -e
 cd /root/repo
-HIER=embedding_near_dup_hier,semantic_dedup_hier,embedding_near_dup_tree,semantic_dedup_srp_bucket
+HIER=embedding_near_dup_hier,semantic_dedup_hier,semantic_dedup_srp_bucket
 
 run() { # dir tag queries
   SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$3" \
