@@ -1,39 +1,45 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Second-level (sub-cell) nearest-centroid assignment for a hierarchical
-  * quantizer, as ONE native codegen'd expression: given a quantized
-  * `array<bigint>` vector and its already-assigned coarse cell id, argmin
-  * over ONLY that coarse cell's sub-centroids.
+/** Nearest-centroid assignment of a quantized `array<bigint>` vector as ONE
+  * native codegen'd expression, scoped by a cell id: given the vector and
+  * its cell, argmin over ONLY that cell's centroids. Every exact-integer
+  * argmin in the vector tier runs through it:
   *
-  * This is the piece that makes a two-level IVF/SemDeDup build linear-ish
-  * in the corpus: a flat k ∝ n assignment costs n·k dots (n²/target — the
-  * measured 12× super-linear term of the auto-dedup tier at the sf1cr→
-  * sf10cr decade), while coarse k₁ ≈ √k plus per-cell k₂ ≈ √k sub-cells
-  * costs n·(k₁+k₂) = n·2√k dots for the SAME leaf-cell count and
-  * occupancy — the standard coarse-quantizer shape a 100 TB ANN/dedup
-  * corpus is built on (cf. faiss IVF / inverted multi-index).
+  *  - flat k-means assignment ([[NearestSubCellQ.flat]]: the whole table is
+  *    cell 0 and the cell column is `lit(0)`) — replaces the
+  *    `crossJoin(broadcast(centroids)) → n·k dist rows → groupBy(id)
+  *    argmin` shape with a narrow per-row projection: zero exploded rows,
+  *    zero shuffle (the crossJoin's n·k shuffled rows were the measured
+  *    super-linear term of the sf1-constrate auto-dedup tier);
+  *  - a tree quantizer's deeper levels (the cell is the parent node's
+  *    argmin): a flat k ∝ n assignment costs n·k dots, coarse k₁ ≈ √k plus
+  *    per-cell k₂ ≈ √k sub-cells cost n·2√k dots for the SAME leaf count —
+  *    the coarse-quantizer shape of faiss IVF / the inverted multi-index;
+  *  - PQ encode (the cell is the subspace, `lit(mm)`, over the
+  *    `(subspace, code, centroid)` codebook table — Jégou et al., TPAMI
+  *    2011).
   *
-  * Semantics mirror [[NearestCellQ]] exactly, scoped to one coarse cell:
-  * exact integer comparison key `cn2 − 2·dot` over longs, strict-improve
+  * Exact integer comparison key `cn2 − 2·dot` over longs (`n2x` is
+  * constant per row, so the ordering is the full distance's), strict-improve
   * argmin so ties break to the LOWEST sub-cell id (sub ids are required
-  * ascending per coarse cell). Null input array, null element, dimension
-  * mismatch, null coarse id, or a coarse id with no sub-cell table all
-  * yield null.
+  * ascending per cell). Null input array, null element, dimension
+  * mismatch, null cell id, or a cell id with no sub-cell table all yield
+  * null.
   *
-  * The per-coarse-cell centroid tables ride inside the node as reference
-  * objects indexed by coarse cid (dense 0..k₁−1 — the fit numbers them),
-  * never inlined source (k·dim literals would blow the 64 KB method
-  * bytecode limit). The input vector is copied once per row into a
-  * per-partition primitive scratch buffer so the k₂·dim inner loop runs
-  * on `long[]` — the accessor hoist the sf10 bench measured at 25-40×
-  * on the flat kernel.
+  * The per-cell centroid tables ride inside the node as reference objects
+  * indexed by cell id (dense 0..k₁−1), never inlined source (k·dim
+  * literals would blow the 64 KB method bytecode limit). The input vector
+  * is copied once per row into a per-partition primitive scratch buffer so
+  * the k₂·dim inner loop runs on `long[]`, not ArrayData's per-element
+  * accessor (sf10: ~100 s -> ~2 s per assignment pass after this hoist).
   */
 case class NearestSubCellQ(left: Expression, right: Expression,
                            subCids: Array[Array[Int]],
@@ -136,8 +142,8 @@ case class NearestSubCellQ(left: Expression, right: Expression,
                                                  newRight: Expression): NearestSubCellQ =
     copy(left = newLeft, right = newRight)
 
-  // content-based equality so structurally identical assignments dedupe in
-  // the plan (same contract as NearestCellQ)
+  // the centroid payload participates in equality via its content, not
+  // array identity, so structurally identical assignments dedupe in the plan
   override def equals(o: Any): Boolean = o match {
     case n: NearestSubCellQ =>
       n.left == left && n.right == right &&
@@ -179,4 +185,11 @@ object NearestSubCellQ {
       cqs,
       cqs.map(_.map(a => a.map(x => x * x).sum))))
   }
+
+  /** Flat entry point: assign `q` to its nearest centroid over the whole
+    * table, as cell 0 of the per-cell kernel. `centroids` are
+    * `(cid, quantized components)` with distinct cids.
+    */
+  def flat(q: Column, centroids: Seq[(Int, Seq[Long])]): Column =
+    apply(q, lit(0), centroids.map { case (cid, cq) => (0, cid, cq) })
 }

@@ -43,7 +43,7 @@ case class SrpSketchQ(child: Expression, signs: Array[Array[Int]])
     val x = a.asInstanceOf[ArrayData]
     if (x.numElements() != dim) return null
     // validating copy to a primitive array once per row, pure long[]
-    // math after — same accessor-hoist as NearestCellQ
+    // math after — same accessor-hoist as NearestSubCellQ
     val xs = new Array[Long](dim)
     var i = 0
     while (i < dim) {

@@ -53,11 +53,16 @@ object Pipeline {
     *         curated-survivor count; the oracle replays it bit-for-bit.
     *         Manifest: `(split, lang, shard_id, n_docs, n_tokens,
     *         first_doc, last_doc)` ordered.
+    *
+    * `stage` sees each inter-stage frame (`curate`, `semantic_dedup`,
+    * `decontam`, `split`) and returns the frame the next stage reads: the
+    * gate passes it through untouched, [[stageTimings]] forces each one.
     */
   def endToEnd(docs: DataFrame, emb: DataFrame,
                benchmarkSource: String, dim: Int, dedupCos: Double,
                contamMax: Double, fractions: Seq[(String, Double)],
-               tokensPerShard: Long): (Int, DataFrame) = {
+               tokensPerShard: Long,
+               stage: (String, DataFrame) => DataFrame = (_, df) => df): (Int, DataFrame) = {
     val corp = docs.filter(col("source") =!= benchmarkSource)
     val bench = docs.filter(col("source") === benchmarkSource)
 
@@ -70,7 +75,8 @@ object Pipeline {
     // per gate run. The checkpoint materializes survivors once; it is
     // ID-frame-sized by the tier's design, and the composed VALUES — what
     // the end-to-end oracle hash verifies — are untouched.
-    val cur = Curation.curate(corp, "doc_id", "text").localCheckpoint(false)
+    val cur = stage("curate",
+      Curation.curate(corp, "doc_id", "text").localCheckpoint(false))
 
     // 3. semantic dedup over the survivors' vectors; losers are dup-count
     // sized, so the drop is an anti join against a small frame — and a doc
@@ -84,8 +90,8 @@ object Pipeline {
     // pinned like `cur`: `sem` feeds the decontamination semi-join AND the
     // clean anti join — unpinned, the SRP band self-join re-executed per
     // branch. Same ID-frame size argument.
-    val sem = cur.join(dupLosers, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+    val sem = stage("semantic_dedup",
+      cur.join(dupLosers, Seq("doc_id"), "left_anti").localCheckpoint(false))
 
     // 4. decontamination: benchmark-shingle containment over survivors only
     val contaminated = Corpus.contaminationScores(
@@ -94,12 +100,12 @@ object Pipeline {
         bench, "doc_id", "text")
       .filter(col("containment") > contamMax)
       .select("doc_id")
-    val clean = sem.join(contaminated, Seq("doc_id"), "left_anti")
+    val clean = stage("decontam", sem.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // 5. split: a pure hash expression over the id — no corpus join; lang
     // rides in from the corpus scan for the packing strata
-    val sp = clean.join(corp.select("doc_id", "lang"), Seq("doc_id"))
-      .withColumn("split", Corpus.splitExpr(col("doc_id"), fractions)._2)
+    val sp = stage("split", clean.join(corp.select("doc_id", "lang"), Seq("doc_id"))
+      .withColumn("split", Corpus.splitExpr(col("doc_id"), fractions)._2))
 
     // 6. pack: the running-token window over curation's token counts
     // (no re-tokenization — n_tokens is already the declared count), then
@@ -117,15 +123,21 @@ object Pipeline {
   }
 
   /** Per-stage wall-time attribution for the composition gate (round-11
-    * verdict #4): the same stage chain as [[endToEnd]], but each stage is
-    * FORCED at its boundary (eager localCheckpoint), so a regression in the
-    * 6-stage gate's total is attributable to a stage instead of adjudicated
-    * by elimination. This is a measurement replay, not the gate itself —
-    * the gate query stays the single lazy composed plan (barriers would
-    * change what the hash verifies: Catalyst's right to fuse across
+    * verdict #4): [[endToEnd]]'s own stage chain with each inter-stage
+    * frame FORCED at its boundary (eager localCheckpoint), so a regression
+    * in the 6-stage gate's total is attributable to a stage instead of
+    * adjudicated by elimination. A stage's time runs from the previous
+    * boundary to its own, so the driver-side work between two frames (the
+    * SRP band-width count) lands in the stage it belongs to; `pack` is the
+    * manifest's noop write. This is a measurement replay, not the gate
+    * itself — the gate query stays the single lazy composed plan (barriers
+    * would change what the hash verifies: Catalyst's right to fuse across
     * stages). Checkpointed inter-stage frames are the same ID frames the
     * lazy plan exchanges, so per-stage times sum to within buffer-copy
-    * noise of the composed run.
+    * noise of the composed run. The checkpointed frames stay in the block
+    * manager until the caller releases persistent RDDs
+    * ([[graft.SparkEntry.release]]; `Dataset.unpersist` does not reach a
+    * checkpoint's RDD).
     *
     * @return (stage name, seconds) in execution order.
     */
@@ -134,53 +146,20 @@ object Pipeline {
                    contamMax: Double, fractions: Seq[(String, Double)],
                    tokensPerShard: Long): Seq[(String, Double)] = {
     val buf = scala.collection.mutable.ListBuffer[(String, Double)]()
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      buf += name -> (System.nanoTime() - t0) / 1e9
-      r
+    var t0 = System.nanoTime()
+    def lap(name: String): Unit = {
+      val t = System.nanoTime()
+      buf += name -> (t - t0) / 1e9
+      t0 = t
     }
-    val corp = docs.filter(col("source") =!= benchmarkSource)
-    val bench = docs.filter(col("source") === benchmarkSource)
-
-    val cur = timed("curate") {
-      Curation.curate(corp, "doc_id", "text").localCheckpoint(true)
-    }
-    val sem = timed("semantic_dedup") {
-      val embS = emb.join(cur.select(col("doc_id").as("vec_id")),
-        Seq("vec_id"), "left_semi")
-      val (_, verdicts) =
-        Srp.semanticDedupSrpBucketAuto(embS, "vec_id", "embedding", dim, dedupCos)
-      val dupLosers = verdicts.filter(!col("is_kept"))
-        .select(col("vec_id").as("doc_id"))
-      cur.join(dupLosers, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    }
-    val clean = timed("decontam") {
-      val contaminated = Corpus.contaminationScores(
-          corp.join(sem.select("doc_id"), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("text")),
-          bench, "doc_id", "text")
-        .filter(col("containment") > contamMax)
-        .select("doc_id")
-      sem.join(contaminated, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    }
-    val sp = timed("split") {
-      clean.join(corp.select("doc_id", "lang"), Seq("doc_id"))
-        .withColumn("split", Corpus.splitExpr(col("doc_id"), fractions)._2)
-        .localCheckpoint(true)
-    }
-    timed("pack") {
-      val w = Window.partitionBy(col("split"), col("lang")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val run: Column = coalesce(sum(col("n_tokens")).over(w), lit(0L))
-      sp.withColumn("shard_id", floor(run / lit(tokensPerShard)))
-        .groupBy(col("split"), col("lang"), col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        .orderBy(col("split"), col("lang"), col("shard_id"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    Seq(cur, sem, clean, sp).foreach(_.unpersist(blocking = false))
+    val (_, manifest) = endToEnd(docs, emb, benchmarkSource, dim, dedupCos,
+      contamMax, fractions, tokensPerShard, (name, df) => {
+        val forced = df.localCheckpoint(true)
+        lap(name)
+        forced
+      })
+    manifest.write.format("noop").mode("overwrite").save()
+    lap("pack")
     buf.toSeq
   }
 }

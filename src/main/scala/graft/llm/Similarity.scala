@@ -172,22 +172,12 @@ object Similarity {
         (col("s").cast("double") / (col("n_vecs").cast("double") * QScale.toDouble))
           .as("centroid"))
 
-  /** IVF coarse-quantizer build: Lloyd k-means over the QUANTIZED vectors,
-    * entirely in integer arithmetic so every run assigns identically:
-    * distances are `n2x - 2·dot + n2c` over exact longs, ties break on the
-    * lower centroid id via struct-min, and centroid updates are integer
-    * floor-divided sums. Initialization is deterministic sample-based
-    * farthest-point (see kmeansFit). The driver loop only controls the
-    * `iters` rounds and
-    * collects the k×dim centroid table (tiny) between them; assignment is
-    * a broadcast join of k centroid rows against the corpus.
-    */
   /** A fitted coarse quantizer: integer centroids + an `assign` that tags
-    * any embedding frame with its nearest cell (broadcast join, narrow).
+    * any embedding frame with its nearest cell (one narrow projection).
     */
   final case class KMeansModel(centroids: Seq[(Int, Seq[Long])], id: String, vec: String) {
     def assign(df: DataFrame): DataFrame =
-      // one narrow codegen'd projection ([[graft.functions.NearestCellQ]]):
+      // one narrow codegen'd projection ([[graft.functions.NearestSubCellQ.flat]]):
       // the same exact integer argmin + lowest-cid tie-break the former
       // crossJoin→groupBy shape computed, without exploding n·k dist rows
       // through a shuffle — the term the sf1-constrate run measured as the
@@ -198,7 +188,7 @@ object Similarity {
       // in-codegen, no exchange added
       prepare(df, id, vec)
         .select(col(id),
-          graft.functions.NearestCellQ(col("q"), centroids).as("cluster"))
+          graft.functions.NearestSubCellQ.flat(col("q"), centroids).as("cluster"))
         .filter(col("cluster").isNotNull)
 
     /** The `p` nearest cells per row (multi-probe assignment): `p` rows per
@@ -240,6 +230,15 @@ object Similarity {
     ivfTopK(c, q, id, vec, "cluster", k)
   }
 
+  /** IVF coarse-quantizer build: Lloyd k-means over the QUANTIZED vectors,
+    * entirely in integer arithmetic so every run assigns identically: each
+    * round's argmin is the exact-integer nearest-centroid kernel (ties
+    * break on the lower centroid id) and centroid updates are integer
+    * floor-divided sums. Initialization is deterministic sample-based
+    * mass-proportional seeding (below). The driver loop only controls the
+    * `iters` rounds and collects the k×dim centroid table (tiny) between
+    * them.
+    */
   def kmeansFit(df: DataFrame, id: String, vec: String, k: Int,
                 iters: Int = 5): KMeansModel = {
     val p = prepare(df, id, vec).select(col(id), col("q"), col("n2"))
@@ -306,7 +305,7 @@ object Similarity {
       // p paid a hash join, i.e. two exchanges, per Lloyd round; same
       // fold treeFit's per-level loop uses)
       val sums = p
-        .select(graft.functions.NearestCellQ(col("q"), centroids).as("cluster"),
+        .select(graft.functions.NearestSubCellQ.flat(col("q"), centroids).as("cluster"),
           posexplode(col("q")).as(Seq("dim", "x")))
         .groupBy(col("cluster"), col("dim"))
         .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
@@ -525,8 +524,8 @@ object Similarity {
   def cellCountFor(n: Long, target: Long, minK: Int = 8): Int =
     math.max(minK.toLong, (n + target - 1) / target).toInt
 
-  /** A depth-d tree quantizer: `root` is the root codebook
-    * ([[graft.functions.NearestCellQ]]), each deeper level a
+  /** A depth-d tree quantizer: `root` is the root codebook (the flat
+    * argmin, [[graft.functions.NearestSubCellQ.flat]]), each deeper level a
     * `(parent, child, centroid)` table scoped by the previous level's
     * argmin ([[graft.functions.NearestSubCellQ]]). Assignment chains the
     * d argmins in ONE narrow codegen projection — n·d·f dots for f^d
@@ -544,7 +543,7 @@ object Similarity {
                                    id: String, vec: String) {
     def depth: Int = 1 + subLevels.size
     private[llm] def nodeCol: Column =
-      subLevels.foldLeft(graft.functions.NearestCellQ(col("q"), root): Column) {
+      subLevels.foldLeft(graft.functions.NearestSubCellQ.flat(col("q"), root): Column) {
         (parent, tbl) => graft.functions.NearestSubCellQ(col("q"), parent, tbl)
       }
     def assign(df: DataFrame): DataFrame =
@@ -605,7 +604,7 @@ object Similarity {
 
     var p = prepare(df, id, vec)
       .select(col(id), col("q"),
-        graft.functions.NearestCellQ(col("q"), root).as("node"))
+        graft.functions.NearestSubCellQ.flat(col("q"), root).as("node"))
       .localCheckpoint(false)
     val dim = p.select(size(col("q"))).head().getInt(0)
 
@@ -658,20 +657,19 @@ object Similarity {
   /** A fitted product quantizer: M per-subspace codebooks over the
     * quantized vector's contiguous ds-dim slices, codes dense `0..ks−1`
     * per subspace (Jégou et al., TPAMI 2011). `encode` is ONE narrow
-    * codegen'd projection — M sliced [[graft.functions.NearestCellQ]]
-    * argmins — producing the M-int code word: the STORED representation an
+    * codegen'd projection — M sliced [[graft.functions.NearestSubCellQ]]
+    * argmins, each scoped to its subspace's codebook (the subspace is the
+    * cell) — producing the M-int code word: the STORED representation an
     * ADC scan reads instead of the raw embedding (a 64-dim float vector
     * becomes 8 ints; at 100 TB that is the difference between an ANN sweep
     * bounded by raw-vector I/O and one bounded by the code column).
     */
   final case class PqModel(codebooks: Seq[(Int, Int, Seq[Long])],
                            m: Int, ds: Int, id: String, vec: String) {
-    private def cbFor(mm: Int): Seq[(Int, Seq[Long])] =
-      codebooks.filter(_._1 == mm).map { case (_, code, cq) => (code, cq) }
     /** The code-word column over a prepared frame's `q`. */
     private[llm] def codesCol: Column =
       array((0 until m).map { mm =>
-        graft.functions.NearestCellQ(slice(col("q"), mm * ds + 1, ds), cbFor(mm))
+        graft.functions.NearestSubCellQ(slice(col("q"), mm * ds + 1, ds), lit(mm), codebooks)
       }: _*)
     def encode(df: DataFrame): DataFrame =
       prepare(df, id, vec).select(col(id), codesCol.as("codes"))

@@ -718,13 +718,6 @@ object SimilarityCatalog extends Catalog {
            |ORDER BY id_a, id_b""".stripMargin
     }
 
-  /** pq_codes / pq_topk oracles: replay the captured per-subspace
-    * codebooks — the same sliced argmin (`list_slice`, exact-integer
-    * comparison key, lower-code tie-break) as
-    * [[graft.functions.NearestCellQ]] over slices, then for top-k the same
-    * ADC reconstruction distance as [[graft.functions.PqAdcQ]] summed over
-    * subspaces with the lower-nn_id tie-break.
-    */
   /** The PQ encode chain (codebook VALUES → per-subspace sliced argmin),
     * CTE names prefixed with `p` so independently-parameterized chains can
     * share one statement (ann_recall). Depends on prepSql's `pn`; ends in
@@ -782,7 +775,7 @@ object SimilarityCatalog extends Catalog {
   /** pq_codes / pq_topk oracles: replay the captured per-subspace
     * codebooks — the same sliced argmin (`list_slice`, exact-integer
     * comparison key, lower-code tie-break) as
-    * [[graft.functions.NearestCellQ]] over slices, then for top-k the same
+    * [[graft.functions.NearestSubCellQ]] per subspace, then for top-k the same
     * ADC reconstruction distance as [[graft.functions.PqAdcQ]] summed over
     * subspaces with the lower-nn_id tie-break.
     */

@@ -47,45 +47,7 @@ object TextOps {
   val RollP = 2147483647L // 2^31 - 1: keeps acc*B + h inside 2^63
   val RollB = 131L
 
-  /** Order-sensitive document fingerprint: left fold of a polynomial hash
-    * over the token stream (content-defined, unlike the bag-of-words
-    * SimHash). Single pass over the token array, no shuffle.
-    */
-  def rollingHash(c: Column): Column =
-    aggregate(
-      transform(tokens(c), t => hash60(t) % RollP),
-      lit(0L),
-      (acc, h) => (acc * RollB + h) % RollP)
-
-  /** 60-bit SimHash over the token bag: per bit j, tokens vote +1/-1 with
-    * bit j of their hash; the sign of the vote total becomes bit j. Near-dup
-    * docs differ in few bits (small hamming distance).
-    *
-    * Single narrow pass: ONE aggregate with a 60-long vote-vector
-    * accumulator (60 separate aggregate expressions make Catalyst re-walk
-    * the token array per bit and blow up plan optimization). Per-token bit
-    * extraction rides `bin()` → char array, because lambda-variable shift
-    * amounts aren't expressible in the column DSL; `pow(2, j)` is exact for
-    * j ≤ 59, so the final bit reassembly stays in integer-exact doubles.
-    */
-  def simHash(c: Column): Column = {
-    val hs = transform(tokens(c), t => hash60(t))
-    val votes = aggregate(
-      hs,
-      array_repeat(lit(0L), 60),
-      (acc, h) => zip_with(
-        acc,
-        // split("") leaves a zero-width trailing match → drop empties so the
-        // char array is exactly 60 long, then reverse to LSB-first
-        reverse(filter(split(lpad(bin(h), 60, "0"), ""), s => s =!= "")),
-        (a, bit) => a + when(bit === "1", 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(59)),
-        (v, j) => when(v > 0, pow(lit(2.0), j).cast("long")).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
-
-  /** Relational rolling hash: the [[rollingHash]] fold (= sum(h_i *
+  /** Relational rolling hash: the polynomial fold (= sum(h_i *
     * B^(n-1-i)) mod P) as ONE narrow codegen'd pass over the token array
     * ([[graft.functions.RollingHashDoc]], round-13) — the former posexplode
     * → doc-id window (count) → polyPow-term projection → DECIMAL(38) hash
@@ -93,8 +55,8 @@ object TextOps {
     * per corpus TOKEN to fold an order the source array already has
     * (optimization guide §2.4/§4); the kernel is bit-identical
     * (spec-pinned by DocHashQSpec against the verbatim old chain and the
-    * column-level fold). Null-text parity and the unique-id precondition
-    * as in [[simHashAgg]].
+    * column-level fold, `SpecForms.rollingHash`). Null-text parity and the
+    * unique-id precondition as in [[simHashAgg]].
     */
   def rollingHashAgg(df: org.apache.spark.sql.DataFrame, id: String, textCol: String): org.apache.spark.sql.DataFrame =
     df.filter(col(textCol).isNotNull)
@@ -132,7 +94,7 @@ object TextOps {
     * corpus TOKEN to fold adjacency-free math the source row already holds
     * (optimization guide §2.4/§4); the kernel is bit-identical (spec-pinned
     * by DocHashQSpec against the verbatim old chain and by LlmSpec against
-    * the column-level [[simHash]] fold). The aggregate form DROPPED
+    * the column-level fold, `SpecForms.simHash`). The aggregate form DROPPED
     * null-text docs (explode of a null token array yields no group) — the
     * filter keeps that contract. Requires unique `id` per input row (the
     * aggregate merged duplicate-id rows into one bag; callers here are

@@ -42,8 +42,8 @@ final case class SimHashBandState(fps: List[Long])
   *    `foreachBatch` + full recompute is both the faithful and the only
   *    shape — documented SURVEY §7.6.
   *  - True incremental streaming aggregation is provided where Spark
-  *    supports it: watermarked event-time tumbling windows
-  *    ([[hourlyWindowCounts]]).
+  *    supports it: watermarked event-time tumbling and sliding windows
+  *    ([[slidingWindowCounts]]).
   *
   * Scale: the enrich stage is narrow (scales with input splits); the sink is
   * an append-only parquet table; per-batch view recompute cost is the batch
@@ -119,23 +119,13 @@ object Streams {
       refresh(spark.read.schema(batch.schema).parquet(sinkDir))
     }
 
-  /** Incremental event-time aggregation (the shape the dashboard's hourly
-    * chart needs, streamlit_app.py:374-379): watermarked tumbling window,
-    * valid in streaming append mode — late data beyond 1 hour is dropped,
-    * which the reference's full-recompute model never notices but a true
-    * stream must declare.
-    */
-  def hourlyWindowCounts(stream: DataFrame): DataFrame =
-    stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"),
-        Relational.moneySum(col("value")).as("total_value"))
-      .select(col("w.start").as("bucket"), col("n"), col("total_value"))
-
-  /** Sliding event-time window (north-star extension, SURVEY §7.5): each
-    * event lands in `size/slide` overlapping windows — e.g. hourly totals
-    * refreshed every 15 minutes.
+  /** Incremental event-time aggregation over a watermarked sliding window
+    * (north-star extension, SURVEY §7.5), valid in streaming append mode:
+    * each event lands in `size/slide` overlapping windows — e.g. hourly
+    * totals refreshed every 15 minutes — and late data beyond 1 hour is
+    * dropped, which the reference's full-recompute model never notices but
+    * a true stream must declare. `size == slide` is the tumbling window the
+    * dashboard's hourly chart needs (streamlit_app.py:374-379).
     */
   def slidingWindowCounts(stream: DataFrame, size: String = "1 hour",
                           slide: String = "15 minutes"): DataFrame =

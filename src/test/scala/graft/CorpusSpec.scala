@@ -229,4 +229,20 @@ class CorpusSpec extends SparkSpec {
     assert(got(1).getDouble(3) === 0.0 && got(2).getDouble(3) === 0.0)
     assert(got(3).getLong(1) === 0L && got(3).isNullAt(3))
   }
+
+  test("stage timings force the gate's own chain: five named stages, same manifest") {
+    import graft.llm.{CorpusCatalog => C, Pipeline, SimilarityCatalog}
+    val t = Tables(spark, sf)
+    def gate(stage: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) =
+      Pipeline.endToEnd(t.documents, t.embeddings, C.BenchmarkSource,
+        SimilarityCatalog.Dim, SimilarityCatalog.NearDupCos, C.PipelineContamMax,
+        C.SplitFractions, C.TokensPerShard, stage)._2.collect().toSeq
+    val seen = scala.collection.mutable.ListBuffer[String]()
+    val forced = gate((name, df) => { seen += name; df.localCheckpoint(true) })
+    assert(seen.toSeq === Seq("curate", "semantic_dedup", "decontam", "split"))
+    assert(forced.nonEmpty && forced === gate((_, df) => df),
+      "forcing the stage boundaries changes no manifest row")
+    assert(C.pipelineStageTimings(spark, sf).map(_._1) ===
+      Seq("curate", "semantic_dedup", "decontam", "split", "pack"))
+  }
 }

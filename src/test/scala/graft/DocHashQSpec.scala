@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.llm.TextOps
+import graft.llm.{SpecForms, TextOps}
 
 /** The round-13 per-document fingerprint/scoring kernels must be
   * value-identical to the explode → aggregate chains they replaced (kept
@@ -138,7 +138,7 @@ class DocHashQSpec extends SparkSpec {
     Seq(docs, synth).foreach { df =>
       val both = df.select(
         graft.functions.RollingHashQ(TextOps.tokens(col("text"))).as("k"),
-        TextOps.rollingHash(col("text")).as("c"))
+        SpecForms.rollingHash(col("text")).as("c"))
       assert(both.filter(col("k") =!= col("c")).isEmpty)
     }
   }

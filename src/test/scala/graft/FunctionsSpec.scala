@@ -76,7 +76,7 @@ class FunctionsSpec extends SparkSpec {
     assert(out === Map(1L -> null, 2L -> null, 3L -> null))
   }
 
-  /** The crossJoin→groupBy argmin shape NearestCellQ replaced stays here
+  /** The crossJoin→groupBy argmin shape the flat kernel replaced stays here
     * as its executable spec: exact integer distances, argmin, lowest-cid
     * tie-break.
     */
@@ -92,7 +92,7 @@ class FunctionsSpec extends SparkSpec {
       .agg(min(struct(col("dist"), col("cid"))).getField("cid").as("cluster"))
   }
 
-  test("NearestCellQ equals the crossJoin argmin, including exact-tie rows") {
+  test("flat NearestSubCellQ equals the crossJoin argmin, including exact-tie rows") {
     val rnd = new scala.util.Random(17)
     val dim = 8
     val cents: Seq[(Int, Seq[Long])] =
@@ -106,7 +106,7 @@ class FunctionsSpec extends SparkSpec {
         Seq(900L -> cents(2)._2, 901L -> cents(5)._2, 902L -> mid)
     val df = vecs.toDF("id", "q")
     val fast = df.select(col("id"),
-        graft.functions.NearestCellQ(col("q"), cents).as("cluster"))
+        graft.functions.NearestSubCellQ.flat(col("q"), cents).as("cluster"))
     val ref = crossJoinAssign(df, cents)
     assert(fast.join(ref.withColumnRenamed("cluster", "ref"), Seq("id"))
       .filter(not(col("cluster") <=> col("ref"))).count() === 0)
@@ -114,14 +114,14 @@ class FunctionsSpec extends SparkSpec {
     assert(fast.filter(col("id") === 902L).head.getInt(1) === 0)
   }
 
-  test("NearestCellQ nulls out on dim mismatch and null elements") {
+  test("flat NearestSubCellQ nulls out on dim mismatch and null elements") {
     val cents: Seq[(Int, Seq[Long])] = Seq(0 -> Seq(1L, 2L), 1 -> Seq(3L, 4L))
     val df = Seq(
       (1L, Seq[java.lang.Long](1L, 2L, 3L)),
       (2L, Seq[java.lang.Long](1L, null)),
       (3L, null)).toDF("id", "q")
     val out = df.select(col("id"),
-        graft.functions.NearestCellQ(col("q"), cents).as("c"))
+        graft.functions.NearestSubCellQ.flat(col("q"), cents).as("c"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getInt(1))).toMap
     assert(out === Map(1L -> null, 2L -> null, 3L -> null))
   }
@@ -169,6 +169,34 @@ class FunctionsSpec extends SparkSpec {
       "equidistant sub-centroids break to the lower leaf id")
     assert(fast.filter(col("id") === 901L).head.getInt(1) === 8,
       "an exact sub-centroid copy lands on it")
+
+    // PQ encode: the cell is the subspace (`lit(mm)`) over the whole
+    // (subspace, code, centroid) codebook table, the input the subspace's
+    // slice — against the per-subspace join argmin of the same slice
+    val m = 2; val ds = dim / m
+    val codebooks: Seq[(Int, Int, Seq[Long])] = for {
+      mm <- 0 until m; code <- 0 until 4
+    } yield (mm, code, Seq.fill(ds)((rnd.nextLong() % 1000L) * 4L))
+    // subspace 0's slice of row 910 is the midpoint of codes 1 and 2:
+    // equidistant → must break to the LOWER code (1) on both paths
+    val c01 = codebooks(1)._3; val c02 = codebooks(2)._3
+    val pqVecs: Seq[(Long, Seq[Long])] =
+      (0 until 200).map(i => i.toLong -> Seq.fill(dim)(rnd.nextLong() % 4000L)) :+
+        (910L -> ((0 until ds).map(i => (c01(i) + c02(i)) / 2) ++
+          Seq.fill(ds)(rnd.nextLong() % 4000L)))
+    val pdf = pqVecs.toDF("id", "v")
+    (0 until m).foreach { mm =>
+      val sq = pdf.select(col("id"), slice(col("v"), mm * ds + 1, ds).as("q"))
+      val pqFast = sq.select(col("id"),
+        graft.functions.NearestSubCellQ(col("q"), lit(mm), codebooks).as("cluster"))
+      val pqRef = subCrossJoinAssign(sq.withColumn("coarse", lit(mm)), codebooks)
+      assert(pqFast.join(pqRef.withColumnRenamed("cluster", "ref"), Seq("id"))
+        .filter(not(col("cluster") <=> col("ref"))).count() === 0,
+        s"subspace $mm codes differ from the per-subspace join argmin")
+    }
+    assert(pdf.filter(col("id") === 910L).select(graft.functions.NearestSubCellQ(
+        slice(col("v"), 1, ds), lit(0), codebooks)).head.getInt(0) === 1,
+      "equidistant PQ codes break to the lower code")
   }
 
   test("NearestSubCellQ nulls out on bad vectors and out-of-range coarse ids") {

@@ -14,7 +14,7 @@ class LlmSpec extends SparkSpec {
   test("relational simHashAgg equals the column-level simHash") {
     val viaAgg = TextOps.simHashAgg(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCol = docs.select(col("doc_id"), TextOps.simHash(col("text")))
+    val viaCol = docs.select(col("doc_id"), SpecForms.simHash(col("text")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaAgg === viaCol)
   }
@@ -22,7 +22,7 @@ class LlmSpec extends SparkSpec {
   test("relational rollingHashAgg equals the fold-based rollingHash") {
     val viaAgg = TextOps.rollingHashAgg(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaFold = docs.select(col("doc_id"), TextOps.rollingHash(col("text")))
+    val viaFold = docs.select(col("doc_id"), SpecForms.rollingHash(col("text")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaAgg === viaFold)
   }

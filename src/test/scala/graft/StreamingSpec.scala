@@ -450,7 +450,7 @@ class StreamingSpec extends SparkSpec {
     val events = mkEvents(0 until 80)
     input.addData(events: _*)
 
-    val q = Streams.hourlyWindowCounts(input.toDF())
+    val q = Streams.slidingWindowCounts(input.toDF(), "1 hour", "1 hour")
       .writeStream.format("memory").queryName("stream_hourly")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -467,7 +467,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rows behind the watermark are dropped AND accounted in query progress") {
     val input = MemoryStream[RawEvent](spark)
-    val q = Streams.hourlyWindowCounts(input.toDF())
+    val q = Streams.slidingWindowCounts(input.toDF(), "1 hour", "1 hour")
       .writeStream.format("memory").queryName("stream_late")
       .outputMode("update").start()
     try {

@@ -1,20 +1,62 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference (spec-only) forms of operators whose production paths are
   * native kernels or fused pipelines: the shingle-row MinHash chain
   * ([[Dedup.kernelSignatures]]' aggregate form, its banding and LSH
   * candidates), the loop-form BPE encode
-  * ([[TextOps.bpeEncodeStatsKernel]]'s relational value oracle) and the
-  * SRP pair-frame verify (the within-bucket verify's reference).
+  * ([[TextOps.bpeEncodeStatsKernel]]'s relational value oracle), the
+  * SRP pair-frame verify (the within-bucket verify's reference) and the
+  * column-level folds of the rolling-hash and SimHash fingerprints (the
+  * [[graft.functions.RollingHashQ]] / [[graft.functions.SimHashQ]]
+  * kernels' references).
   * Only specs call them, so they live on the test side; they stay in
   * `graft.llm` to share the declared hash family and merge step with the
   * production code.
   */
 object SpecForms {
   import Dedup.{Bands, K, P, Rows, permA, permB}
+  import TextOps.{RollB, RollP, hash60, tokens}
+
+  /** Order-sensitive document fingerprint: left fold of a polynomial hash
+    * over the token stream (content-defined, unlike the bag-of-words
+    * SimHash). Single pass over the token array, no shuffle.
+    */
+  def rollingHash(c: Column): Column =
+    aggregate(
+      transform(tokens(c), t => hash60(t) % RollP),
+      lit(0L),
+      (acc, h) => (acc * RollB + h) % RollP)
+
+  /** 60-bit SimHash over the token bag: per bit j, tokens vote +1/-1 with
+    * bit j of their hash; the sign of the vote total becomes bit j. Near-dup
+    * docs differ in few bits (small hamming distance).
+    *
+    * Single narrow pass: ONE aggregate with a 60-long vote-vector
+    * accumulator (60 separate aggregate expressions make Catalyst re-walk
+    * the token array per bit and blow up plan optimization). Per-token bit
+    * extraction rides `bin()` → char array, because lambda-variable shift
+    * amounts aren't expressible in the column DSL; `pow(2, j)` is exact for
+    * j ≤ 59, so the final bit reassembly stays in integer-exact doubles.
+    */
+  def simHash(c: Column): Column = {
+    val hs = transform(tokens(c), t => hash60(t))
+    val votes = aggregate(
+      hs,
+      array_repeat(lit(0L), 60),
+      (acc, h) => zip_with(
+        acc,
+        // split("") leaves a zero-width trailing match → drop empties so the
+        // char array is exactly 60 long, then reverse to LSB-first
+        reverse(filter(split(lpad(bin(h), 60, "0"), ""), s => s =!= "")),
+        (a, bit) => a + when(bit === "1", 1L).otherwise(-1L)))
+    aggregate(
+      zip_with(votes, sequence(lit(0), lit(59)),
+        (v, j) => when(v > 0, pow(lit(2.0), j).cast("long")).otherwise(lit(0L))),
+      lit(0L), (acc, x) => acc + x)
+  }
 
   /** MinHash signatures from shingle rows: ONE wide hash aggregate with K
     * codegen'd `min` columns (sig_0 … sig_63) — partial-aggregated
