@@ -212,9 +212,7 @@ object CorpusCatalog extends Catalog {
          |cur AS (
          |  WITH ${TextCatalog.curationKeptCtesFrom("cd")}
          |  SELECT doc_id, text, len(w) AS n_tokens FROM k
-         |  WHERE len(w) >= 20
-         |    AND ${TextCatalog.qualitySql}
-         |      >= 0.5),
+         |  WHERE ${TextCatalog.qualityGateSql}),
          |sdup AS (
          |  WITH p AS (SELECT vec_id,
          |      list_transform(embedding, x ->

@@ -9,47 +9,30 @@ import org.apache.spark.sql.functions._
   * elsewhere ([[Dedup]], [[TextOps]]); this composes them in the canonical
   * order (dedup before quality, so quality never resurrects a duplicate's
   * twin) and is verified end-to-end against a DuckDB oracle of the same
-  * composition.
+  * composition. The thresholds are fixed engine constants, read by the
+  * oracles through [[TextCatalog.qualityGateSql]].
   */
 object Curation {
 
-  /** @param minTokens    drop docs shorter than this many tokens
-    * @param minQuality   drop docs scoring below [[TextOps.qualityScore]]
-    * @param nearDupJaccard near-dup threshold for the keep-first drop
+  /** Drop docs shorter than this many tokens. */
+  val MinTokens = 20
+  /** Drop docs scoring below this [[TextOps.qualityScore]]. */
+  val MinQuality = 0.5
+  /** Near-dup threshold for the keep-first drop. */
+  val NearDupJaccard = 0.8
+
+  /** The quality gate over `(n_tokens, quality_score)` — Column mirror of
+    * [[TextCatalog.qualityGateSql]]; the streaming replay flags with it too.
     */
-  def curate(df: DataFrame, id: String, textCol: String,
-             minTokens: Int = 20, minQuality: Double = 0.5,
-             nearDupJaccard: Double = 0.8): DataFrame = {
+  val qualityGate: Column =
+    col("n_tokens") >= MinTokens && col("quality_score") >= MinQuality
+
+  def curate(df: DataFrame, id: String, textCol: String): DataFrame = {
     val base = featuredNarrow(df, id, textCol)
-    val nearL = Dedup.nearDupPairs(exactSurvivorText(df, base, id, textCol),
-        id, textCol, nearDupJaccard)
-      .select(col("id_b").as(id)).distinct()
     base.filter(!col("exact_loser"))
-      .join(nearL, Seq(id), "left_anti")
-      .filter(col("n_tokens") >= minTokens && col("quality_score") >= minQuality)
+      .join(nearLosers(df, base, id, textCol), Seq(id), "left_anti")
+      .filter(qualityGate)
       .select(col(id), col("n_tokens"), col("quality_score"))
-  }
-
-  /** The per-stage builders [[curateResumable]] persists one at a time
-    * (the non-resumable paths fuse them via [[featuredNarrow]] instead).
-    */
-  private def exactStage(df: DataFrame, id: String, textCol: String): DataFrame =
-    df.join(
-      Dedup.exactDedupMap(df, id, textCol)
-        .filter(!col("is_duplicate")).select(col(id)),
-      Seq(id), "left_semi")
-
-  private def nearStage(df: DataFrame, id: String, textCol: String,
-                        nearDupJaccard: Double): DataFrame =
-    Dedup.dropNearDups(df, id, textCol, nearDupJaccard)
-
-  private def qualityStage(df: DataFrame, id: String, textCol: String,
-                           minTokens: Int, minQuality: Double): DataFrame = {
-    val text: Column = col(textCol)
-    df.select(col(id),
-        TextOps.tokenCount(text).as("n_tokens"),
-        TextOps.qualityScore(text).as("quality_score"))
-      .filter(col("n_tokens") >= minTokens && col("quality_score") >= minQuality)
   }
 
   /** Resumable curation: every stage persists its survivors under
@@ -58,19 +41,20 @@ object Curation {
     * marker, so the same code short-circuits on HDFS/object stores at
     * cluster scale). The re-run cost of a 100 TB curation job after a
     * downstream-stage failure is then the failed stage only, not the
-    * whole dedup chain.
+    * whole dedup chain. The stages are [[curate]]'s chain cut at its
+    * boundaries: exact survivors' `(id, text)`, minus the near-dup losers,
+    * then the quality gate.
     */
-  def curateResumable(df: DataFrame, id: String, textCol: String, stageDir: String,
-                      minTokens: Int = 20, minQuality: Double = 0.5,
-                      nearDupJaccard: Double = 0.8): DataFrame = {
+  def curateResumable(df: DataFrame, id: String, textCol: String,
+                      stageDir: String): DataFrame = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     // a stageDir binds to one (input, thresholds) run, like a streaming
     // checkpoint dir; the threshold fingerprint is enforced so a re-run
-    // with different parameters fails fast instead of silently returning
+    // under different constants fails fast instead of silently returning
     // stages persisted under the old ones (the input is the caller's
     // responsibility — fingerprinting 100 TB of text is not)
-    val params = s"minTokens=$minTokens,minQuality=$minQuality,nearDupJaccard=$nearDupJaccard"
+    val params = s"minTokens=$MinTokens,minQuality=$MinQuality,nearDupJaccard=$NearDupJaccard"
     val pMarker = new org.apache.hadoop.fs.Path(stageDir, "_params")
     val fs = pMarker.getFileSystem(conf)
     if (fs.exists(pMarker)) {
@@ -91,9 +75,15 @@ object Curation {
       if (!done(stage)) build.write.mode("overwrite").parquet(path(stage))
       spark.read.parquet(path(stage))
     }
-    val exact = materialize("exact_dedup", exactStage(df, id, textCol))
-    val near = materialize("near_dedup", nearStage(exact, id, textCol, nearDupJaccard))
-    materialize("quality_gate", qualityStage(near, id, textCol, minTokens, minQuality))
+    val exact = materialize("exact_dedup",
+      exactSurvivorText(df, featuredNarrow(df, id, textCol), id, textCol))
+    val near = materialize("near_dedup", exact.join(
+      Dedup.nearDupLoserIds(exact, id, textCol, NearDupJaccard), Seq(id), "left_anti"))
+    val text: Column = col(textCol)
+    materialize("quality_gate", near.select(col(id),
+        TextOps.tokenCount(text).as("n_tokens"),
+        TextOps.qualityScore(text).as("quality_score"))
+      .filter(qualityGate))
   }
 
   /** The exact-dedup-labelled stats frame every non-resumable entry point
@@ -132,28 +122,11 @@ object Curation {
     df.select(col(id), col(textCol))
       .join(base.filter(col("exact_loser")).select(col(id)), Seq(id), "left_anti")
 
-  /** [[curate]] under a per-doc near-dup verify budget
-    * ([[Dedup.nearDupLoserIdsCapped]]): identical rows to [[curate]] on
-    * ANY input — the overflow fallback keeps the drop set exact, so the
-    * same DuckDB oracle verifies both — but the verify stage over a
-    * duplication-SATURATED region costs O(budget·n) instead of O(Σ
-    * family²). This is the operating mode for the saturated tails a
-    * 100 TB curation run meets (SCALE.md sf10: 359 s saturated vs 28.9 s
-    * constant-rate for the uncapped form — the entire gap is family-pair
-    * verify mass, which the budget removes).
-    */
-  def curateCapped(df: DataFrame, id: String, textCol: String,
-                   minTokens: Int = 20, minQuality: Double = 0.5,
-                   nearDupJaccard: Double = 0.8, budget: Int = 8): DataFrame = {
-    val base = featuredNarrow(df, id, textCol)
-    val losers = Dedup.nearDupLoserIdsCapped(
-      exactSurvivorText(df, base, id, textCol), id, textCol, nearDupJaccard,
-      budget = budget)
-    base.filter(!col("exact_loser"))
-      .join(losers, Seq(id), "left_anti")
-      .filter(col("n_tokens") >= minTokens && col("quality_score") >= minQuality)
-      .select(col(id), col("n_tokens"), col("quality_score"))
-  }
+  /** Near-dup loser ids among the exact survivors of `base`. */
+  private def nearLosers(df: DataFrame, base: DataFrame, id: String,
+                         textCol: String): DataFrame =
+    Dedup.nearDupLoserIds(exactSurvivorText(df, base, id, textCol), id, textCol,
+      NearDupJaccard)
 
   /** Every doc labelled with the FIRST pipeline stage that drops it
     * (`exact_dup_loser` → `near_dup_loser` → `quality_fail`) or
@@ -163,94 +136,34 @@ object Curation {
     * window three times, the LSH verify chain twice), every upstream job
     * here runs once ([[featuredNarrow]] + one LSH chain).
     */
-  /** Exit-stage labels WITH the per-doc features (internal: exitStages
-    * projects the gate contract's two columns; curateObserved keeps the
-    * features so survivors need no re-join).
-    */
-  private def labeledStages(df: DataFrame, id: String, textCol: String,
-                            minTokens: Int, minQuality: Double,
-                            nearDupJaccard: Double): DataFrame = {
+  def exitStages(df: DataFrame, id: String, textCol: String): DataFrame = {
     val base = featuredNarrow(df, id, textCol)
-    val nearL = Dedup.nearDupPairs(exactSurvivorText(df, base, id, textCol),
-        id, textCol, nearDupJaccard)
-      .select(col("id_b").as(id)).distinct()
-    base.join(nearL.withColumn("near_loser", lit(true)), Seq(id), "left")
-      .select(col(id), col("n_tokens"), col("quality_score"),
+    base.join(nearLosers(df, base, id, textCol).withColumn("near_loser", lit(true)),
+        Seq(id), "left")
+      .select(col(id),
         when(col("exact_loser"), lit("exact_dup_loser"))
           .when(coalesce(col("near_loser"), lit(false)), lit("near_dup_loser"))
-          .when(!(col("n_tokens") >= minTokens &&
-            col("quality_score") >= minQuality), lit("quality_fail"))
+          .when(!qualityGate, lit("quality_fail"))
           .otherwise(lit("survivor")).as("exit_stage"))
   }
 
-  def exitStages(df: DataFrame, id: String, textCol: String,
-                 minTokens: Int = 20, minQuality: Double = 0.5,
-                 nearDupJaccard: Double = 0.8): DataFrame =
-    labeledStages(df, id, textCol, minTokens, minQuality, nearDupJaccard)
-      .select(col(id), col("exit_stage"))
-
-  /** [[curate]] with free telemetry: the returned frame carries an
-    * `Observation` whose funnel counters (input / exact_dedup / near_dedup
-    * / quality_gate) are recorded ON THE SAME ACTION that materializes the
-    * result — the accumulators ride the job, so a production curation run
-    * gets its stage accounting with ZERO extra jobs (vs [[curateStats]]'
-    * separate aggregate). Read `observation.get` after any full action on
-    * the frame.
+  /** The funnel as ONE DataFrame (`stage, n_docs`): each stage's survivor
+    * count is the docs that made it PAST every earlier drop — a running
+    * subtraction expressed as conditional counts over the exit-stage
+    * labels, so the whole funnel is one aggregate row pivoted to four rows,
+    * no driver-side actions.
     */
-  def curateObserved(df: DataFrame, id: String, textCol: String,
-                     minTokens: Int = 20, minQuality: Double = 0.5,
-                     nearDupJaccard: Double = 0.8): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val result = labeledStages(df, id, textCol, minTokens, minQuality, nearDupJaccard)
-      .observe(obs,
+  def funnel(df: DataFrame, id: String, textCol: String): DataFrame = {
+    val stage = col("exit_stage")
+    exitStages(df, id, textCol)
+      .agg(
         count(lit(1)).as("input"),
-        count(when(col("exit_stage") =!= "exact_dup_loser", lit(1)))
-          .as("exact_dedup"),
-        count(when(!col("exit_stage").isin("exact_dup_loser", "near_dup_loser"),
-          lit(1))).as("near_dedup"),
-        count(when(col("exit_stage") === "survivor", lit(1))).as("quality_gate"))
-      .filter(col("exit_stage") === "survivor")
-      .select(col(id), col("n_tokens"), col("quality_score"))
-    (result, obs)
-  }
-
-  /** The four funnel counts as ONE aggregate row over the exit-stage
-    * labels: each stage's survivor count is the docs that made it PAST
-    * every earlier drop — a running subtraction expressed as conditional
-    * counts, so the whole funnel is one job.
-    */
-  private def funnelAgg(labels: DataFrame): DataFrame =
-    labels.agg(
-      count(lit(1)).as("input"),
-      count(when(col("exit_stage") =!= "exact_dup_loser", lit(1))).as("exact_dedup"),
-      count(when(!col("exit_stage").isin("exact_dup_loser", "near_dup_loser"), lit(1)))
-        .as("near_dedup"),
-      count(when(col("exit_stage") === "survivor", lit(1))).as("quality_gate"))
-
-  /** Per-stage survivor counts — the curation funnel a pipeline operator
-    * watches ("silent caps" made loud: how many docs each stage dropped).
-    * ONE action over the single-pass labels, not four sequential counts.
-    */
-  def curateStats(df: DataFrame, id: String, textCol: String,
-                  minTokens: Int = 20, minQuality: Double = 0.5,
-                  nearDupJaccard: Double = 0.8): Seq[(String, Long)] = {
-    val r = funnelAgg(exitStages(df, id, textCol, minTokens, minQuality, nearDupJaccard))
-      .head()
-    Seq("input" -> r.getLong(0), "exact_dedup" -> r.getLong(1),
-      "near_dedup" -> r.getLong(2), "quality_gate" -> r.getLong(3))
-  }
-
-  /** The funnel as ONE DataFrame (`stage, n_docs`) — the single aggregate
-    * row pivoted to four rows, no driver-side actions, so it registers in
-    * the correctness gate and ships as a side output of a curation run.
-    */
-  def funnel(df: DataFrame, id: String, textCol: String,
-             minTokens: Int = 20, minQuality: Double = 0.5,
-             nearDupJaccard: Double = 0.8): DataFrame = {
-    val stageCols = Seq("input", "exact_dedup", "near_dedup", "quality_gate")
-    funnelAgg(exitStages(df, id, textCol, minTokens, minQuality, nearDupJaccard))
-      .select(explode(array(stageCols.map(s =>
-        struct(lit(s).as("stage"), col(s).as("n_docs"))): _*)).as("f"))
+        count(when(stage =!= "exact_dup_loser", lit(1))).as("exact_dedup"),
+        count(when(!stage.isin("exact_dup_loser", "near_dup_loser"), lit(1)))
+          .as("near_dedup"),
+        count(when(stage === "survivor", lit(1))).as("quality_gate"))
+      .select(explode(array(Seq("input", "exact_dedup", "near_dedup", "quality_gate")
+        .map(s => struct(lit(s).as("stage"), col(s).as("n_docs"))): _*)).as("f"))
       .select(col("f.stage"), col("f.n_docs"))
       .orderBy("stage")
   }

@@ -203,44 +203,13 @@ object Dedup {
     verifiedJaccard(kernelCandidates(df, id, textCol, n), sh, counts, id, threshold)
   }
 
-  /** Near-dup LOSER ids under a per-doc verify budget with an exact
-    * overflow fallback — output-identical on ANY input to
-    * `nearDupPairs(...).select(id_b).distinct`, but the verify stage is
-    * cost-capped: per doc, only the `budget` smallest-id candidate
-    * partners are exact-verified up front, and ONLY docs whose whole
-    * capped head failed to produce drop evidence (and that had further
-    * candidates) route their remaining candidates to a second exact
-    * verify. A doc is a loser iff SOME smaller-id partner verifies, so a
-    * head success short-circuits the rest of the family — in a
-    * duplication-saturated region (family size m, every capped candidate a
-    * true family member) verify mass is O(budget·n) instead of O(Σ m²),
-    * which is the whole cost story behind curated_corpus' 359 s vs 28.9 s
-    * saturated/constant-rate sf10 gap (SCALE.md). The fallback keeps the
-    * semantics EXACT (same oracle as the uncapped form), it just re-pays
-    * full verify for docs where every head candidate was a spurious band
-    * collision below the nearest true partner.
+  /** Near-dup LOSER ids `(id)`: the higher id of every verified pair —
+    * the keep-first drop set shared by [[dropNearDups]] and the curation
+    * chain.
     */
-  def nearDupLoserIdsCapped(df: DataFrame, id: String, textCol: String,
-                            threshold: Double, n: Int = 3,
-                            budget: Int = 8): DataFrame = {
-    require(budget >= 1, s"budget >= 1: $budget")
-    val sh = shingleRows(df, id, textCol, n).localCheckpoint(false)
-    val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    // ranked feeds the head verify AND the (usually near-empty) tail —
-    // checkpoint so banding/self-join/distinct run once
-    val ranked = kernelCandidates(df, id, textCol, n)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id_b").orderBy("id_a")))
-      .localCheckpoint(false)
-    val headDropped = verifiedJaccard(
-        ranked.filter(col("rk") <= budget).drop("rk"), sh, counts, id, threshold)
-      .select(col("id_b")).distinct()
-    val tail = ranked.filter(col("rk") > budget).drop("rk")
-    val tailDropped = verifiedJaccard(
-        tail.join(headDropped, Seq("id_b"), "left_anti"), sh, counts, id, threshold)
-      .select(col("id_b")).distinct()
-    headDropped.union(tailDropped).distinct().select(col("id_b").as(id))
-  }
+  def nearDupLoserIds(df: DataFrame, id: String, textCol: String,
+                      threshold: Double, n: Int = 3): DataFrame =
+    nearDupPairs(df, id, textCol, threshold, n).select(col("id_b").as(id)).distinct()
 
   /** EXACT n-gram Jaccard similarity self-join by prefix filtering (the
     * AllPairs/PPJoin family): unlike the banded-LSH path this has 100%
@@ -478,11 +447,8 @@ object Dedup {
     * verified near-duplicate pair (left-anti join — no driver round trip).
     */
   def dropNearDups(df: DataFrame, id: String, textCol: String,
-                   threshold: Double, n: Int = 3): DataFrame = {
-    val losers = nearDupPairs(df, id, textCol, threshold, n)
-      .select(col("id_b").as(id)).distinct()
-    df.join(losers, Seq(id), "left_anti")
-  }
+                   threshold: Double, n: Int = 3): DataFrame =
+    df.join(nearDupLoserIds(df, id, textCol, threshold, n), Seq(id), "left_anti")
 
   /** The alternating-rounds core over a pair frame `(id_a, id_b)`:
     * returns (`(node, root)` for every non-singleton node, rounds run).

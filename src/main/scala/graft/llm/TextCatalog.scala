@@ -181,12 +181,6 @@ object TextCatalog extends Catalog {
     "bpe_pair_counts" -> ((s, d) =>
       TextOps.pairCounts(Tables(s, d).documents, "doc_id", "text", VocabK)),
 
-    // ...and the merge APPLIED: greedy left-to-right accounting of the
-    // argmax pair per doc (overlap-exact in the a=b run case)
-    "bpe_merge_round" -> ((s, d) =>
-      TextOps.mergeRound(Tables(s, d).documents, "doc_id", "text")
-        .orderBy("doc_id")),
-
     // ...and the actual TRAINING loop: argmax → apply → re-count, four
     // rounds, returning the learned merge table. The oracle re-derives
     // every round from scratch (four unrolled window-chain blocks) — the
@@ -302,14 +296,6 @@ object TextCatalog extends Catalog {
       Curation.curate(Tables(s, d).documents, "doc_id", "text")
         .orderBy("doc_id")),
 
-    // same rows as curated_corpus on ANY input (the per-doc verify budget
-    // has an exact overflow fallback — see Curation.curateCapped), so it
-    // shares the oracle; what differs is COST on duplication-saturated
-    // regions: O(budget·n) verify mass instead of O(Σ family²)
-    "curated_corpus_capped" -> ((s, d) =>
-      Curation.curateCapped(Tables(s, d).documents, "doc_id", "text")
-        .orderBy("doc_id")),
-
     "curation_funnel" -> ((s, d) =>
       Curation.funnel(Tables(s, d).documents, "doc_id", "text")),
 
@@ -346,6 +332,15 @@ object TextCatalog extends Catalog {
     """least(CAST(len(w) AS DOUBLE) / CAST(200.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.4 AS DOUBLE)
       |    + (CAST(len(list_distinct(w)) AS DOUBLE) / len(w)) * CAST(0.4 AS DOUBLE)
       |    + (CAST(1.0 AS DOUBLE) - CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE) / length(text)) * CAST(0.2 AS DOUBLE)""".stripMargin
+
+  /** The curation quality gate in DuckDB SQL (mirror of
+    * [[Curation.qualityGate]]) over the same frame — one source of truth
+    * for every curation oracle and the streaming gate's.
+    */
+  private[graft] val qualityGateSql: String =
+    s"""(len(w) >= ${Curation.MinTokens}
+       |  AND $qualitySql
+       |    >= ${Curation.MinQuality})""".stripMargin
 
   /** CTE chain `t → c → ch` ending in `ch(doc_id, chunk_id, n_tokens,
     * chunk_text)` (mirror of TextOps.chunkRows) — shared by doc_chunks and
@@ -384,7 +379,8 @@ object TextCatalog extends Catalog {
        |${OracleSql.jaccardPairsCtesFrom("ex")},
        |kept AS (
        |  SELECT doc_id, text FROM ex
-       |  WHERE doc_id NOT IN (SELECT id_b FROM pairs WHERE jaccard >= 0.8)),
+       |  WHERE doc_id NOT IN (SELECT id_b FROM pairs
+       |    WHERE jaccard >= ${Curation.NearDupJaccard})),
        |k AS (SELECT doc_id, string_split($norm, ' ') AS w, text FROM kept)""".stripMargin
 
   /** Shared by curated_corpus and its resumable variant (same rows). */
@@ -394,9 +390,7 @@ object TextCatalog extends Catalog {
        |  $qualitySql
        |    AS quality_score
        |FROM k
-       |WHERE len(w) >= 20
-       |  AND $qualitySql
-       |    >= 0.5
+       |WHERE $qualityGateSql
        |ORDER BY doc_id""".stripMargin
 
   /** bpe_train_merges oracle: the whole training loop re-derived from
@@ -980,39 +974,6 @@ object TextCatalog extends Catalog {
          |    / count(*) AS oov_rate
          |FROM tok""".stripMargin,
 
-    // same argmax pair; candidates per doc for a<>b, floor(run/2) summed
-    // over gaps-and-islands runs of `a` for the self-overlapping a=b case
-    "bpe_merge_round" ->
-      s"""WITH t AS ($docTokens),
-         |i AS (SELECT doc_id, w, unnest(range(1, len(w))) AS i FROM t),
-         |pr AS (SELECT doc_id, w[i] AS a, w[i + 1] AS b FROM i),
-         |top AS (SELECT a, b FROM pr GROUP BY a, b
-         |  ORDER BY count(*) DESC, a, b LIMIT 1),
-         |tv AS (SELECT doc_id, pos, w[pos] AS tok
-         |  FROM (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS pos FROM t)),
-         |r AS (SELECT doc_id, tok,
-         |    pos - row_number() OVER (PARTITION BY doc_id, tok ORDER BY pos) AS grp
-         |  FROM tv),
-         |runs AS (SELECT doc_id, count(*) AS cnt FROM r
-         |  WHERE tok = (SELECT a FROM top) GROUP BY doc_id, grp),
-         |runm AS (SELECT doc_id,
-         |    CAST(sum(CAST(floor(cnt / 2.0) AS BIGINT)) AS BIGINT) AS run_merges
-         |  FROM runs GROUP BY doc_id),
-         |cand AS (SELECT pr.doc_id, count(*) AS n_cand
-         |  FROM pr JOIN top USING (a, b) GROUP BY pr.doc_id),
-         |n AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens FROM t),
-         |res AS (
-         |  SELECT n.doc_id, top.a, top.b, n.n_tokens,
-         |    CAST(CASE WHEN top.a = top.b THEN coalesce(runm.run_merges, 0)
-         |              ELSE coalesce(cand.n_cand, 0) END AS BIGINT) AS n_merges
-         |  FROM n CROSS JOIN top
-         |  LEFT JOIN runm USING (doc_id)
-         |  LEFT JOIN cand USING (doc_id))
-         |SELECT doc_id, a, b, n_tokens, n_merges,
-         |  n_tokens - n_merges AS n_tokens_after
-         |FROM res WHERE n_merges > 0
-         |ORDER BY doc_id""".stripMargin,
-
     "vocab_top_terms" ->
       s"""WITH t AS ($docTokens),
          |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
@@ -1059,19 +1020,13 @@ object TextCatalog extends Catalog {
          |FROM documents ORDER BY doc_id""".stripMargin,
 
     "curated_corpus" -> curatedCorpusSql,
-    // the capped variant's overflow fallback makes it row-identical to the
-    // uncapped pipeline — one oracle, two cost shapes
-    "curated_corpus_capped" -> curatedCorpusSql,
     // identical rows by construction — resuming must not change the output
     "curated_corpus_resumed" -> curatedCorpusSql,
 
     // same stage chain as curated_corpus, counted per stage
     "curation_funnel" ->
       s"""WITH $curationKeptCtes,
-         |q AS (SELECT doc_id FROM k
-         |  WHERE len(w) >= 20
-         |    AND $qualitySql
-         |      >= 0.5)
+         |q AS (SELECT doc_id FROM k WHERE $qualityGateSql)
          |SELECT 'input' AS stage, count(*) AS n_docs FROM documents
          |UNION ALL SELECT 'exact_dedup', count(*) FROM ex
          |UNION ALL SELECT 'near_dedup', count(*) FROM kept
@@ -1081,10 +1036,7 @@ object TextCatalog extends Catalog {
     // per-doc first-drop labels: membership in each successive stage CTE
     "curation_exit_stages" ->
       s"""WITH $curationKeptCtes,
-         |q AS (SELECT doc_id FROM k
-         |  WHERE len(w) >= 20
-         |    AND $qualitySql
-         |      >= 0.5)
+         |q AS (SELECT doc_id FROM k WHERE $qualityGateSql)
          |SELECT d.doc_id,
          |  CASE WHEN d.doc_id NOT IN (SELECT doc_id FROM ex) THEN 'exact_dup_loser'
          |       WHEN d.doc_id NOT IN (SELECT doc_id FROM kept) THEN 'near_dup_loser'

@@ -488,52 +488,10 @@ object TextOps {
       .limit(k)
   }
 
-  /** One applied BPE merge round, engine-exact: take the argmax pair from
-    * [[pairCounts]] and account the greedy left-to-right merge per doc —
-    * `(id, a, b, n_tokens, n_merges, n_tokens_after)` for docs with at
-    * least one merge.
-    *
-    * Greedy semantics without sequential scanning: when `a ≠ b`,
-    * pair-start candidates can never overlap (a candidate at i+1 would
-    * need tok(i+1) = a = b), so every candidate merges. When `a = b`, a
-    * run of L copies of `a` merges exactly ⌊L/2⌋ times (disjoint pairs
-    * from the left) — runs come from the same gaps-and-islands chain
-    * [[repetitionAgg]] uses. Both branches are computed relationally and
-    * selected by the broadcast pair, so the whole round is two window
-    * chains on the doc id plus hash aggregates — no iteration, no UDF.
-    */
-  def mergeRound(df: org.apache.spark.sql.DataFrame, id: String,
-                 textCol: String): org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(id).orderBy("pos")
-    val top = pairCounts(df, id, textCol, 1).select(col("a"), col("b"))
-    val prev = lag(col("tok"), 1).over(w)
-    val toks = df
-      .select(col(id), posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-      .join(broadcast(top))
-      .withColumn("nxt", lead(col("tok"), 1).over(w))
-      .withColumn("chg", when(prev.isNull || prev =!= col("tok"), 1).otherwise(0))
-      .withColumn("run_id", sum(col("chg")).over(w))
-    val perDoc = toks.groupBy(col(id), col("a"), col("b"))
-      .agg(count(lit(1)).as("n_tokens"),
-        graft.ops.Relational.countIf(
-          col("tok") === col("a") && col("nxt") === col("b")).as("n_cand"))
-    val runMerges = toks.filter(col("tok") === col("a"))
-      .groupBy(col(id), col("run_id"))
-      .agg(count(lit(1)).as("run_len"))
-      .groupBy(col(id))
-      .agg(sum(floor(col("run_len") / 2)).as("run_merges"))
-    perDoc.join(runMerges, Seq(id), "left")
-      .select(col(id), col("a"), col("b"), col("n_tokens"),
-        when(col("a") === col("b"), coalesce(col("run_merges"), lit(0L)))
-          .otherwise(col("n_cand")).as("n_merges"))
-      .withColumn("n_tokens_after", col("n_tokens") - col("n_merges"))
-      .filter(col("n_merges") > 0)
-  }
-
   /** Exact greedy BPE TRAINING over the corpus: `rounds` iterations of
     * (argmax adjacent pair → apply the merge corpus-wide), returning the
     * learned merge table `(round, a, b, n_pairs)` — the actual tokenizer-
-    * training loop, not a single-round probe like [[mergeRound]].
+    * training loop.
     *
     * Everything is relational; the merge APPLICATION never re-scans
     * strings: candidates are `(tok = a ∧ next = b)` rows, greedy

@@ -16,18 +16,6 @@ import graft.engine.Catalog.{moneyAvgSql, moneySumSql}
   */
 object OpsCatalog extends Catalog {
 
-  import org.apache.spark.sql.Column
-
-  // the shared exact revenue term (Relational.revenueDec ↔
-  // Catalog.revenueSql); `charge` extends it with `· (1 + tax)` → scale 6
-  private def onePlus(c: Column): Column = Relational.onePlusDec(c)
-  private def revDec(price: Column, discount: Column): Column =
-    Relational.revenueDec(price, discount)
-  private val revSql = Catalog.revenueSql
-
-  private def moneyAvg(c: Column): Column =
-    round(sum(Relational.moneyDec(c)).cast("double") / count(lit(1)), 4)
-
   // Benford first-digit probabilities log10(1 + 1/d), d = 1..9, embedded as
   // 17-significant-digit literals (the shortest round-trip form of the
   // double) and mirrored verbatim in the oracle SQL — both engines parse
@@ -130,14 +118,14 @@ object OpsCatalog extends Catalog {
         .agg(
           Relational.moneySum(col("l_quantity")).as("sum_qty"),
           Relational.moneySum(col("l_extendedprice")).as("sum_base_price"),
-          sum(revDec(col("l_extendedprice"), col("l_discount")))
+          sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
             .cast("double").as("sum_disc_price"),
-          sum(revDec(col("l_extendedprice"), col("l_discount")) *
-              onePlus(col("l_tax")))
+          sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")) *
+              Relational.onePlusDec(col("l_tax")))
             .cast("double").as("sum_charge"),
-          moneyAvg(col("l_quantity")).as("avg_qty"),
-          moneyAvg(col("l_extendedprice")).as("avg_price"),
-          moneyAvg(col("l_discount")).as("avg_disc"),
+          Relational.moneyAvg(col("l_quantity")).as("avg_qty"),
+          Relational.moneyAvg(col("l_extendedprice")).as("avg_price"),
+          Relational.moneyAvg(col("l_discount")).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")),
 
@@ -155,7 +143,7 @@ object OpsCatalog extends Catalog {
         .groupBy(col("l_orderkey"),
           Relational.tsStr(col("o_orderdate")).as("o_orderdate"),
           col("o_orderpriority"))
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount")))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
           .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
@@ -177,7 +165,7 @@ object OpsCatalog extends Catalog {
         .join(broadcast(t.region.filter(col("r_name") === "ASIA")),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount")))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
           .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
     }),
@@ -195,7 +183,7 @@ object OpsCatalog extends Catalog {
         .join(t.customer, col("o_custkey") === col("c_custkey"))
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount")))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
           .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
@@ -240,7 +228,7 @@ object OpsCatalog extends Catalog {
     // in double at the end so both engines agree bit-for-bit
     "tpch_q14" -> ((s, d) => {
       val t = Tables(s, d)
-      val rev = revDec(col("l_extendedprice"), col("l_discount"))
+      val rev = Relational.revenueDec(col("l_extendedprice"), col("l_discount"))
       t.lineitem
         .filter(col("l_shipdate") >= lit("1997-03-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
@@ -1346,8 +1334,8 @@ object OpsCatalog extends Catalog {
       s"""SELECT l_returnflag, l_linestatus,
          |  ${moneySumSql("l_quantity")} AS sum_qty,
          |  ${moneySumSql("l_extendedprice")} AS sum_base_price,
-         |  CAST(sum($revSql) AS DOUBLE) AS sum_disc_price,
-         |  CAST(sum($revSql
+         |  CAST(sum(${Catalog.revenueSql}) AS DOUBLE) AS sum_disc_price,
+         |  CAST(sum(${Catalog.revenueSql}
          |    * (CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIMAL(4,2))))
          |    AS DOUBLE) AS sum_charge,
          |  ${moneyAvgSql("l_quantity")} AS avg_qty,
@@ -1363,7 +1351,7 @@ object OpsCatalog extends Catalog {
       s"""SELECT l_orderkey,
          |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
          |  o_orderpriority,
-         |  CAST(sum($revSql) AS DOUBLE) AS revenue
+         |  CAST(sum(${Catalog.revenueSql}) AS DOUBLE) AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
@@ -1375,7 +1363,7 @@ object OpsCatalog extends Catalog {
 
     "tpch_q10" ->
       s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-         |  CAST(sum($revSql) AS DOUBLE) AS revenue
+         |  CAST(sum(${Catalog.revenueSql}) AS DOUBLE) AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
@@ -1389,7 +1377,7 @@ object OpsCatalog extends Catalog {
 
     "tpch_q5" ->
       s"""SELECT n_name,
-         |  CAST(sum($revSql) AS DOUBLE) AS revenue
+         |  CAST(sum(${Catalog.revenueSql}) AS DOUBLE) AS revenue
          |FROM orders
          |JOIN customer ON o_custkey = c_custkey
          |JOIN lineitem ON l_orderkey = o_orderkey
@@ -1427,9 +1415,9 @@ object OpsCatalog extends Catalog {
     "tpch_q14" ->
       s"""SELECT
          |  100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-         |      THEN $revSql
+         |      THEN ${Catalog.revenueSql}
          |      ELSE CAST(0 AS DECIMAL(17,4)) END) AS DOUBLE)
-         |    / CAST(sum($revSql) AS DOUBLE) AS promo_revenue_pct,
+         |    / CAST(sum(${Catalog.revenueSql}) AS DOUBLE) AS promo_revenue_pct,
          |  count(*) AS n_items
          |FROM lineitem
          |JOIN part ON l_partkey = p_partkey

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, Tables}
@@ -31,12 +31,6 @@ import graft.engine.Catalog.{moneySumSql, revenueSql}
   * against DuckDB. Queries with LIMIT order by a total order first.
   */
 object TpchCatalog extends Catalog {
-
-  // one shared definition of the revenue term on both sides of the
-  // contract (Relational.revenueDec ↔ Catalog.revenueSql)
-  private def revDec(price: Column, discount: Column): Column =
-    Relational.revenueDec(price, discount)
-  private val revSql = revenueSql
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q2 minimum-cost supplier: the correlated scalar-min subquery as a
@@ -114,7 +108,7 @@ object TpchCatalog extends Catalog {
           (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount")))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
           .cast("double").as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     }),
@@ -129,7 +123,7 @@ object TpchCatalog extends Catalog {
         col("n_regionkey").as("cn_region"))
       val sn = t.nation.select(col("n_nationkey").as("sn_key"),
         col("n_name").as("supp_nation"))
-      val rev = revDec(col("l_extendedprice"), col("l_discount"))
+      val rev = Relational.revenueDec(col("l_extendedprice"), col("l_discount"))
       t.lineitem
         .join(t.part.filter(col("p_type") === "ECONOMY"),
           col("l_partkey") === col("p_partkey"))
@@ -160,7 +154,7 @@ object TpchCatalog extends Catalog {
       val cost = lit(new java.math.BigDecimal("0.5")).cast("decimal(2,1)") *
         col("p_retailprice").cast("decimal(12,2)") *
         col("l_quantity").cast("decimal(12,2)")
-      val amount = revDec(col("l_extendedprice"), col("l_discount"))
+      val amount = Relational.revenueDec(col("l_extendedprice"), col("l_discount"))
         .cast("decimal(30,6)") - cost.cast("decimal(30,6)")
       t.lineitem
         .join(t.part.filter(col("p_name").contains("bolt")),
@@ -225,7 +219,7 @@ object TpchCatalog extends Catalog {
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey"))
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
         .localCheckpoint()
       perSupp.crossJoin(broadcast(perSupp.agg(max(col("rev_dec")).as("max_dec"))))
         .filter(col("rev_dec") === col("max_dec"))
@@ -289,7 +283,7 @@ object TpchCatalog extends Catalog {
       t.lineitem
         .join(t.part, col("l_partkey") === col("p_partkey"))
         .filter(branch)
-        .agg(sum(revDec(col("l_extendedprice"), col("l_discount")))
+        .agg(sum(Relational.revenueDec(col("l_extendedprice"), col("l_discount")))
           .cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
     }),
@@ -408,7 +402,7 @@ object TpchCatalog extends Catalog {
     "tpch_q7" ->
       s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
          |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-         |  CAST(sum($revSql) AS DOUBLE) AS revenue
+         |  CAST(sum($revenueSql) AS DOUBLE) AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
@@ -424,9 +418,9 @@ object TpchCatalog extends Catalog {
 
     "tpch_q8" ->
       s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         |  CAST(sum(CASE WHEN sn.n_name = 'NATION_3' THEN $revSql
+         |  CAST(sum(CASE WHEN sn.n_name = 'NATION_3' THEN $revenueSql
          |    ELSE CAST(0 AS DECIMAL(17,4)) END) AS DOUBLE)
-         |    / CAST(sum($revSql) AS DOUBLE) AS mkt_share,
+         |    / CAST(sum($revenueSql) AS DOUBLE) AS mkt_share,
          |  count(*) AS n_items
          |FROM lineitem
          |JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
@@ -443,7 +437,7 @@ object TpchCatalog extends Catalog {
 
     "tpch_q9" ->
       s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         |  CAST(sum(CAST($revSql AS DECIMAL(30,6))
+         |  CAST(sum(CAST($revenueSql AS DECIMAL(30,6))
          |    - CAST(CAST(0.5 AS DECIMAL(2,1))
          |        * CAST(p_retailprice AS DECIMAL(12,2))
          |        * CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(30,6)))
@@ -486,7 +480,7 @@ object TpchCatalog extends Catalog {
 
     "tpch_q15" ->
       s"""WITH r AS (
-         |  SELECT l_suppkey, sum($revSql) AS rev_dec
+         |  SELECT l_suppkey, sum($revenueSql) AS rev_dec
          |  FROM lineitem
          |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
          |    AND l_shipdate < TIMESTAMP '1996-04-01'
@@ -528,7 +522,7 @@ object TpchCatalog extends Catalog {
         |WHERE l_quantity < 0.2 * avg_qty""".stripMargin,
 
     "tpch_q19" ->
-      s"""SELECT CAST(sum($revSql) AS DOUBLE) AS revenue,
+      s"""SELECT CAST(sum($revenueSql) AS DOUBLE) AS revenue,
          |  count(*) AS n_items
          |FROM lineitem
          |JOIN part ON l_partkey = p_partkey

@@ -90,6 +90,20 @@ object StreamingCatalog extends Catalog {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** The documents table pre-split into 4 files and replayed one file per
+    * micro-batch (file boundaries never split a doc): the multi-batch doc
+    * stream the span-decontam and heavy-hitter replays share.
+    */
+  private def documentsSplit4(s: SparkSession, d: String): DataFrame = {
+    val src = graft.engine.FixtureDirs("documents-split4", d) { tmp =>
+      graft.engine.Tables(s, d).documents.repartition(4)
+        .write.mode("overwrite").parquet(s"$tmp/docs")
+    }
+    s.readStream.schema(docSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$src/docs")
+  }
+
   /** The streaming-side quality gate: replay the documents table through a
     * file-source readStream → per-doc token count / quality score / gate
     * flag → checkpointed parquet sink. A pure narrow projection (no state,
@@ -105,8 +119,7 @@ object StreamingCatalog extends Catalog {
       .select(col("doc_id"),
         graft.llm.TextOps.tokenCount(text).as("n_tokens"),
         graft.llm.TextOps.qualityScore(text).as("quality_score"))
-      .withColumn("passes_gate",
-        col("n_tokens") >= 20 && col("quality_score") >= 0.5)
+      .withColumn("passes_gate", graft.llm.Curation.qualityGate)
     Replay.toParquet(scored, graft.engine.TempDirs.create("graft-doc-quality"))
       .orderBy("doc_id")
   }
@@ -397,13 +410,7 @@ object StreamingCatalog extends Catalog {
     val benchSrc = graft.llm.CorpusCatalog.BenchmarkSource
     val bench = graft.engine.Tables(s, d).documents
       .filter(col("source") === benchSrc)
-    val src = graft.engine.FixtureDirs("documents-split4", d) { tmp =>
-      graft.engine.Tables(s, d).documents.repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/docs")
-    }
-    val docs = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$src/docs")
+    val docs = documentsSplit4(s, d)
     Replay.await(Replay.eachBatch(docs, s"$base/ckpt") { (batch, _) =>
       graft.llm.Dedup.spanDecontam(
           batch.filter(col("source") =!= benchSrc), bench, "doc_id", "text",
@@ -483,17 +490,9 @@ object StreamingCatalog extends Catalog {
     * `heavy_hitter_bounds` SQL verbatim.
     */
   def replayHeavyHitters(s: SparkSession, d: String, k: Int, topM: Int): DataFrame = {
-    val src = graft.engine.FixtureDirs("docs-split4", d) { tmp =>
-      graft.engine.Tables(s, d).documents.select(col("doc_id"), col("text"))
-        .repartition(4).write.mode("overwrite").parquet(s"$tmp/docs")
-    }
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
     // see withStateParallelism: global agg state is ONE summary buffer
     val sketch = withStateParallelism(s, 8) {
-      Replay.toMemory(s.readStream.schema(docsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/docs")
+      Replay.toMemory(documentsSplit4(s, d)
         .select(explode(graft.llm.TextOps.tokens(col("text"))).as("term"))
         .agg(graft.functions.MgTopK(col("term"), k).as("sketch")), "complete")
     }
@@ -909,9 +908,7 @@ object StreamingCatalog extends Catalog {
          |SELECT doc_id, len(w) AS n_tokens,
          |  ${graft.llm.TextCatalog.qualitySql}
          |    AS quality_score,
-         |  len(w) >= 20 AND
-         |  ${graft.llm.TextCatalog.qualitySql}
-         |    >= 0.5 AS passes_gate
+         |  ${graft.llm.TextCatalog.qualityGateSql} AS passes_gate
          |FROM t ORDER BY doc_id""".stripMargin,
 
     // the view over the enriched stream, derived from raw events with the

@@ -362,10 +362,15 @@ class LlmSpec extends SparkSpec {
     val resumed = Curation.curateResumable(docs.limit(0), "doc_id", "text", dir)
       .orderBy("doc_id").collect()
     assert(resumed.toSeq === first.toSeq)
-    // resuming under DIFFERENT thresholds must fail fast, not silently
-    // return stages persisted under the old ones
+    // a stageDir persisted under DIFFERENT thresholds must fail fast, not
+    // silently return stages built under the old ones
+    // (through the Hadoop FS, so its checksum sidecar is rewritten too)
+    val marker = new org.apache.hadoop.fs.Path(dir, "_params")
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker, true)
+    try out.write("minTokens=20,minQuality=0.9,nearDupJaccard=0.8".getBytes("UTF-8"))
+    finally out.close()
     val e = intercept[IllegalArgumentException] {
-      Curation.curateResumable(docs, "doc_id", "text", dir, minQuality = 0.9)
+      Curation.curateResumable(docs, "doc_id", "text", dir)
     }
     assert(e.getMessage.contains("use a fresh dir"))
   }
@@ -393,28 +398,26 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  test("curateStats reports a monotone survivor funnel") {
-    val stats = Curation.curateStats(
-      Tables(spark, sf).documents, "doc_id", "text").toMap
+  test("funnel reports a monotone survivor funnel") {
+    val stats = Curation.funnel(Tables(spark, sf).documents, "doc_id", "text")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stats("input") === 500)
     assert(stats("exact_dedup") <= stats("input"))
     assert(stats("near_dedup") < stats("exact_dedup"), "seeded near-dups dropped")
     assert(stats("quality_gate") <= stats("near_dedup") && stats("quality_gate") > 0)
   }
 
-  test("curateObserved records the funnel on the result's own action") {
+  test("curate's rows are exactly exitStages' survivors, counted by funnel's quality_gate") {
     val docs = Tables(spark, sf).documents
-    val (result, obs) = Curation.curateObserved(docs, "doc_id", "text")
-    val survivors = result.collect() // the ONE action; counters ride it
-    val m = obs.get
-    val stats = Curation.curateStats(docs, "doc_id", "text").toMap
-    assert(Seq("input", "exact_dedup", "near_dedup", "quality_gate")
-      .forall(k => m(k) === stats(k)), s"observed $m != counted $stats")
-    assert(survivors.length.toLong === m("quality_gate"))
-    // and the observed pipeline's survivors are exactly curate's output
+    val survivors = Curation.exitStages(docs, "doc_id", "text")
+      .filter(col("exit_stage") === "survivor")
+      .select("doc_id").collect().map(_.getLong(0)).sorted
+    val gate = Curation.funnel(docs, "doc_id", "text")
+      .filter(col("stage") === "quality_gate").head().getLong(1)
+    assert(survivors.length.toLong === gate)
     val direct = Curation.curate(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(survivors.map(_.getLong(0)).sorted.toSeq === direct.toSeq)
+    assert(survivors.toSeq === direct.toSeq)
   }
 
   test("bpeEncodeStatsFromMerges equals the re-training encode") {
@@ -426,63 +429,6 @@ class LlmSpec extends SparkSpec {
     val direct = TextOps.bpeEncodeStats(sample, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaFit === direct)
-  }
-
-  test("nearDupLoserIdsCapped equals the uncapped loser set at every budget") {
-    val all = Tables(spark, sf).documents
-    val uncapped = Dedup.nearDupPairs(all, "doc_id", "text", 0.8)
-      .select(col("id_b")).distinct().collect().map(_.getLong(0)).toSet
-    assert(uncapped.nonEmpty, "testdata seeds near-duplicate documents")
-    for (budget <- Seq(1, 2, 8)) {
-      val capped = Dedup.nearDupLoserIdsCapped(all, "doc_id", "text", 0.8,
-          budget = budget)
-        .collect().map(_.getLong(0)).toSet
-      assert(capped === uncapped, s"budget=$budget")
-    }
-  }
-
-  test("capped verify escalates: overflow doc with a failing head is still dropped") {
-    // Pin the fallback BRANCH, not just output equality: doc 3's
-    // smallest-id candidate partner (doc 1) must band-collide but FAIL the
-    // 0.8 verify, while doc 2 is a true near-dup of 3 — at budget=1 the
-    // head verify of 3 is exactly {(1,3)} and only the overflow fallback
-    // can produce 3's drop evidence. Banding is deterministic (seeded
-    // permutations), so search a few crafted mid-similarity doc-1 variants
-    // until one collides; then assert the capped loser set still drops 3.
-    val words = (0 until 40).map(i => s"w$i")
-    val base = words.mkString(" ")                       // doc 3 (and ~2)
-    val near = (words.take(39) :+ "alt39").mkString(" ") // J(2,3) ≈ 0.90
-    val crafted = (0 until 24).to(LazyList).map { v =>
-      (words.take(26) ++ (0 until 14).map(i => s"x${v}_$i")).mkString(" ")
-    }.map { mid =>
-      Seq((1L, mid), (2L, near), (3L, base)).toDF("doc_id", "text")
-    }.find { df =>
-      val sh = Dedup.shingleRows(df, "doc_id", "text")
-      SpecForms.lshCandidates(sh, "doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        .contains((1L, 3L))
-    }
-    assert(crafted.isDefined, "no crafted doc-1 variant band-collided with doc 3")
-    val df = crafted.get
-    // the head pair really fails verify: J(1,3) below the 0.8 threshold
-    val verified = Dedup.nearDupPairs(df, "doc_id", "text", 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!verified.contains((1L, 3L)), "crafted pair must fail the verify")
-    assert(verified.contains((2L, 3L)), "true near-dup pair must verify")
-    val capped = Dedup.nearDupLoserIdsCapped(df, "doc_id", "text", 0.8, budget = 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(capped === Set(3L), "fallback must recover the drop evidence")
-  }
-
-  test("curateCapped equals curate on the corpus fixture") {
-    val all = Tables(spark, sf).documents
-    val direct = Curation.curate(all, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    for (budget <- Seq(1, 8)) {
-      val capped = Curation.curateCapped(all, "doc_id", "text", budget = budget)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-      assert(capped === direct, s"budget=$budget")
-    }
   }
 
   test("labelPurity reports exact plurality shares with lower-label ties") {

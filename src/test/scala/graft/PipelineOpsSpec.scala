@@ -15,20 +15,29 @@ class PipelineOpsSpec extends SparkSpec {
   private lazy val docs = Tables(spark, sf).documents
   private lazy val emb = Tables(spark, sf).embeddings
 
-  // -- BPE merge round ------------------------------------------------------
+  // -- one BPE merge: training round 1 + the encode at one merge ----------
 
-  test("mergeRound merges every non-overlapping candidate (a != b)") {
+  /** Round 1 of the training table — the argmax pair — and the per-doc
+    * `(id, n_tokens, n_merges, n_tokens_after)` of encoding under that one
+    * merge, for docs with at least one merge.
+    */
+  private def firstMerge(df: org.apache.spark.sql.DataFrame) = {
+    val Seq((1, a, b, _)) = TextOps.bpeTrainTable(df, "doc_id", "text", 1)
+    val rows = TextOps.bpeEncodeStatsKernel(df, "doc_id", "text", Seq(a -> b))
+      .filter(col("n_merges_applied") > 0)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getLong(2)))
+    ((a, b), rows.toSeq)
+  }
+
+  test("one learned merge applies to every non-overlapping candidate (a != b)") {
     // argmax pair is (a,b) ×3; doc 1 has 2 disjoint merges, doc 2 has 1,
     // doc 3 has none and is filtered out
     val df = Seq((1L, "a b c a b"), (2L, "x a b y"), (3L, "c c q"))
       .toDF("doc_id", "text")
-    val rows = TextOps.mergeRound(df, "doc_id", "text")
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-    assert(rows.toSeq === Seq(
-      (1L, "a", "b", 5L, 2L, 3L),
-      (2L, "a", "b", 4L, 1L, 3L)))
+    assert(firstMerge(df) === (("a", "b"), Seq(
+      (1L, 5L, 2L, 3L),
+      (2L, 4L, 1L, 3L))))
   }
 
   test("bpeTrain learns the hand-computed merge sequence with exact tie-breaks") {
@@ -56,17 +65,13 @@ class PipelineOpsSpec extends SparkSpec {
       (3, "zz", "zzz", 1L)))
   }
 
-  test("mergeRound is greedy-exact on self-overlapping runs (a == b)") {
+  test("one learned merge is greedy-exact on self-overlapping runs (a == b)") {
     // argmax pair is (z,z) ×5; greedy left-to-right merges floor(L/2) per
     // run: L=4 → 2, L=3 → 1 (NOT the 3 and 2 overlapping candidates)
     val df = Seq((1L, "z z z z q"), (2L, "z z z"), (3L, "q")).toDF("doc_id", "text")
-    val rows = TextOps.mergeRound(df, "doc_id", "text")
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-    assert(rows.toSeq === Seq(
-      (1L, "z", "z", 5L, 2L, 3L),
-      (2L, "z", "z", 3L, 1L, 2L)))
+    assert(firstMerge(df) === (("z", "z"), Seq(
+      (1L, 5L, 2L, 3L),
+      (2L, 3L, 1L, 2L))))
   }
 
   // -- repetitionAgg --------------------------------------------------------

@@ -41,7 +41,6 @@ class PlanAuditSpec extends SparkSpec {
         "corpus_mixture",   // broadcast of the 1-row total-tokens aggregate
         "mixture_resample", // same 1-row total broadcast inside the rates
         "tpch_q22",         // broadcast of the 1-row avg-balance aggregate
-        "bpe_merge_round",  // broadcast of the 1-row argmax-pair frame
         "segment_type_chi2", // level-grid cross + 1-row totals broadcast
         "brand_affinity",    // broadcast of the 1-row basket-count aggregate
         "benford_first_digit", // broadcast of the 1-row total-count aggregate
